@@ -287,33 +287,6 @@ object Bench {
         Caches.release()
       }
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
-    // SPARK_GRAFT_PROFILE=1 prints per-rep Janino codegen compile counts/time
-    // (driver-side JVM metrics) so first-run constants can be attributed.
-    val profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
-    def codegenStats(): (Long, Long) = {
-      val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-      (h.getCount, h.getSnapshot.getValues.sum)
-    }
-    if (profile) {
-      // Decompose the warm per-query constant: (a) the floor of ONE Spark
-      // job (schedule + launch 1 task + noop-commit), (b) one AQE shuffle
-      // round (materialize a shuffle stage, re-plan, run the reduce), both
-      // on a warmed JVM over driver-local data so zero scan/compute cost.
-      import spark.implicits._
-      def floorOf(label: String)(job: () => Unit): Unit = {
-        val ts = (1 to 7).map { _ =>
-          val t0 = System.nanoTime(); job(); (System.nanoTime() - t0) / 1e9
-        }
-        System.err.println(
-          f"[bench-prof] CONSTANT $label floor ${ts.min}%.3f s reps ${ts.map(t => f"$t%.3f").mkString(" ")}")
-      }
-      val one = spark.range(1).cache(); one.count()
-      floorOf("one-job-noop")(() => one.write.format("noop").mode("overwrite").save())
-      val tiny = spark.range(1000).select(($"id" % 7).as("k"), $"id".as("v"))
-      floorOf("shuffle-agg-aqe")(() =>
-        tiny.groupBy("k").sum("v").write.format("noop").mode("overwrite").save())
-      one.unpersist()
-    }
     // A failed query must NEVER fold into the timing columns: its
     // near-zero elapsed would read as a speedup, so a regression that
     // breaks a query would "improve" the sweep. Failures are collected
@@ -328,8 +301,7 @@ object Bench {
       // everything else at the session's volume-gated default.
       spark.conf.set("spark.sql.adaptive.enabled",
         if (SparkEntry.aqeOffQueries(name)) "false" else aqeDefault)
-      val times = (1 to reps).map { r =>
-        val cg0 = if (profile) codegenStats() else (0L, 0L)
+      val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -337,11 +309,6 @@ object Bench {
           failed += name
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (profile) {
-          val cg1 = codegenStats()
-          System.err.println(f"[bench-prof] $name rep$r ${dt}%.3f s, " +
-            f"codegen ${cg1._1 - cg0._1} compiles ~${cg1._2 - cg0._2} ms")
-        }
         // operators route shared-intermediate persists through
         // Caches.scoped; release them so one query's cache can't skew
         // the next timing or accumulate across the sweep — and ENFORCE

@@ -1,1011 +1,55 @@
 package graft
 
-/** Scratch A/B harness (not part of the driver contract): times each
-  * query in SPARK_GRAFT_QUERIES with AQE on vs off in ONE JVM — the
-  * only protocol that survives this host's cross-process noise — using
-  * Bench's noop-sink materialization.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Dev harness (not part of the driver contract) with two jobs over the
+  * queries named in SPARK_GRAFT_QUERIES:
+  *
+  *  - SPARK_GRAFT_EXPLAIN=1 prints each query's formatted physical plan.
+  *  - Otherwise it times each query with AQE on vs off, interleaved in
+  *    ONE JVM — cross-process timing noise swamps the difference — using
+  *    Bench's noop-sink materialization.
   */
 object Profile {
+  /** Materializes `mk()` through the noop sink `reps` times, releasing
+    * operator caches after each rep, and prints the best and every time. */
+  private def best(label: String, reps: Int)(mk: () => DataFrame): Unit = {
+    val ts = (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      noop(mk())
+      Caches.release()
+      (System.nanoTime() - t0) / 1e9
+    }
+    println(f"[prof] $label best ${ts.min}%.3f  " + ts.map(t => f"$t%.3f").mkString(" "))
+  }
+
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf10")
-    val spark = Sessions.driver(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, dir)
+    val spark: SparkSession =
+      Sessions.driver(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, dir)
     val names = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "etl_consolidate")
       .split(",").map(_.trim).filter(_.nonEmpty)
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(4)
-    // SPARK_GRAFT_EXPLAIN=1: print each query's formatted physical plan
-    // and exit — the .explain-audit loop the scale rules prescribe, on
-    // any sf dir. Caveat (r12 ADVICE): plan CONSTRUCTION is not free for
-    // the Bloom-pushdown tiers — q3's cluster tier runs its (footer-
-    // sized, r13) filter-build aggregation job and contamination's bloom
-    // tier its sizing-sum + build jobs while the DataFrame is being
-    // built, so "explain" executes those jobs (seconds at sf10+). That
-    // is the tiers' design, not a leak: the filter must exist before the
-    // probe expression can be planned.
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")) {
+    // Caveat (r12 ADVICE): plan CONSTRUCTION is not free for the
+    // Bloom-pushdown tiers — q3's cluster tier runs its (footer-sized,
+    // r13) filter-build aggregation job and contamination's bloom tier
+    // its sizing-sum + build jobs while the DataFrame is being built, so
+    // "explain" executes those jobs (seconds at sf10+). That is the
+    // tiers' design, not a leak: the filter must exist before the probe
+    // expression can be planned.
+    if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
       for (n <- names) {
         println(s"========== $n ==========")
         SparkEntry.queries(n)(spark, dir).explain("formatted")
       }
-      spark.stop(); return
-    }
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // SPARK_GRAFT_DECOMP=consolidate: stage-by-stage cost decomposition
-    // of etl_consolidate (verdict r8 item 1) — cumulative plans from the
-    // bare scan to the full query, each materialized through noop, so
-    // each stage's delta isolates one component's cost.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("consolidate")) {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val ev = graft.sources.Tables.events(spark, dir)
-      val typed = ev.filter(
-        col("event_type").isin("view", "click", "signup", "error", "purchase"))
-      val stages: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        // first = the Bench-protocol absolute (fresh JVM, entry-warmup
-        // only); repeated last so (first - last) isolates the per-JVM
-        // warm-state constant the intermediate stages then share.
-        "full_registered_first" -> (() => SparkEntry.queries("etl_consolidate")(spark, dir)),
-        "scan5cols" -> (() =>
-          ev.select(col("ts"), col("user_id"), col("props"), col("event_type"), col("value"))),
-        "scan+filter" -> (() =>
-          typed.select(col("ts"), col("user_id"), col("props"), col("event_type"), col("value"))),
-        "scan+pack" -> (() => graft.etl.Marketing.packedRows(ev)),
-        "pack+phase1agg" -> (() => graft.etl.Marketing.packedRows(ev)
-          .groupBy(col("pk")).agg(count(lit(1)).as("cnt"),
-            graft.functions.dsum(col("value")).as("vsum"))),
-        "full_metricsPacked" -> (() =>
-          graft.etl.Consolidate.metricsPacked(ev)),
-        "full_registered" -> (() => SparkEntry.queries("etl_consolidate")(spark, dir)))
-      for ((label, mk) <- stages) {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
+    else {
+      noop(SparkEntry.entry(spark))
+      for (name <- names; aqe <- Seq("true", "false", "true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        best(s"$name aqe=$aqe", reps)(() => SparkEntry.queries(name)(spark, dir))
       }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=q3: stage ladder for q3's cluster tier (r12
-    // verdict item 1 — the 4.13x sf100li flag): bare 3-column lineitem
-    // scan floor → +bloom probe → +partial agg → +join → full. The
-    // qualifying-set count + bloom build are timed as their own stage
-    // (they are eager jobs the registered query pays at construction).
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("q3")) {
-      import org.apache.spark.sql.functions._
-      import graft.functions.{dsum, BloomFilters}
-      val li = graft.sources.Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      def qual = graft.sources.Tables.orders(spark, dir)
-        .filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .join(broadcast(graft.sources.Tables.customer(spark, dir)
-          .filter(col("c_mktsegment") === "BUILDING")),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("o_orderdate"))
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] q3 $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      best("li_scan3cols")(() => noop(li))
-      // footer-sized one-job build vs the registered count-then-build
-      // pair: the r13 sf100li A/B measured the one-job form SLOWER
-      // (7.1/7.8 vs 5.9/6.4 fresh-JVM cells) — the 40%-bigger filter's
-      // per-task agg buffers, shuffle bytes, and probe working set cost
-      // more than the count job saves, so the counted sizing stays.
-      best("qual_bloom_build_1job")(() => {
-        val q = graft.Caches.scoped(qual)
-        BloomFilters.build(q, col("o_orderkey"), math.max(
-          graft.sources.Tables.parquetRowCount(spark, dir, "orders") / 4, 1L))
-        ()
-      })
-      best("qual_count+bloom_build_2job")(() => {
-        val q = graft.Caches.scoped(qual)
-        val n = q.count()
-        BloomFilters.build(q, col("o_orderkey"), math.max(n, 1L))
-        ()
-      })
-      // build once OUTSIDE the probe stages so their deltas isolate the
-      // probe/agg/join costs; persisted OUTSIDE the Caches registry so
-      // the per-stage release() never drops it (the DECOMP=ivf pattern)
-      val qualCached = qual.persist()
-      val bloom = BloomFilters.build(qualCached, col("o_orderkey"),
-        math.max(qualCached.count(), 1L))
-      val probed = li.filter(BloomFilters.bloom_contains(col("l_orderkey"), bloom))
-      best("li+bloom_probe")(() => noop(probed))
-      val agged = probed.groupBy(col("l_orderkey"))
-        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
-      best("+partial_agg")(() => noop(agged))
-      best("+join_sort(limit10)")(() => noop(
-        agged.join(qualCached.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_orderkey"), graft.functions.dstr(col("o_orderdate")).as("orderdate"),
-            col("revenue"))
-          .orderBy(col("revenue").desc, col("l_orderkey"))
-          .limit(10)))
-      qualCached.unpersist(true)
-      best("full_registered")(() => noop(SparkEntry.queries("q3_join_agg")(spark, dir)))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=q13: stage ladder for q13_hourly_agg (r13
-    // verdict item 8 — the 2.86x sf100ev constant-class flag): bare
-    // 3-column events scan floor → +hour/type partial agg (the key
-    // domain is hours·5 types, so map-side partials reduce everything)
-    // → +output sort = full. Pins how much of the cell is scan floor
-    // vs the bounded aggregate vs presentation.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("q13")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] q13 $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val ev = graft.sources.Tables.events(spark, dir)
-        .select(col("ts"), col("event_type"), col("value"))
-      best("ev_scan3cols")(() => noop(ev))
-      // the r14 find, kept as a permanent A/B: grouping on the
-      // formatted STRING paid a per-row formatter + string hash keys
-      // (~16 s of the 19.6 s 1B-event cell); grouping on the truncated
-      // TIMESTAMP and formatting the |hours·types| output rows is the
-      // registered form (7.65 s, parity with DuckDB)
-      val aggedString = ev.groupBy(
-          date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm").as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), graft.functions.dsum(col("value")).as("total_value"))
-      best("+hour_agg_stringkey(dead)")(() => noop(aggedString))
-      val agged = ev.groupBy(date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
-        .agg(count(lit(1)).as("n"), graft.functions.dsum(col("value")).as("total_value"))
-        .select(date_format(col("hour_ts"), "yyyy-MM-dd HH:mm").as("hour"),
-          col("event_type"), col("n"), col("total_value"))
-      best("+hour_agg_tskey")(() => noop(agged))
-      best("+sort(=full)")(() => noop(agged.orderBy(col("hour"), col("event_type"))))
-      best("full_registered")(() => noop(SparkEntry.queries("q13_hourly_agg")(spark, dir)))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=incremental: stage ladder for the arrival-
-    // dedup serve pair (r13 verdict item 8 — 3.98x/3.18x sf100doc
-    // constant-class flags): batch scan+md5 floor → +batch aggregate →
-    // +anti join vs the store-resident hash table → +output sort =
-    // full serve. The store build runs ONCE before the ladder (the
-    // registered serve's cold rep pays it; warm reps are what the
-    // ladder prices), so deltas isolate the three jobs the constant
-    // decomposition attributes.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("incremental")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] incremental $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val path = graft.operators.Dedup.buildIncrementalStore(spark, dir)
-      val batch = graft.sources.Tables.documents(spark, dir)
-        .filter(graft.operators.Curation.splitBucket(col("doc_id")) >= 80)
-      best("batch_scan+md5")(() => noop(
-        batch.select(md5(col("text").cast("binary")).as("text_hash"), col("doc_id"))))
-      val agged = batch
-        .groupBy(md5(col("text").cast("binary")).as("text_hash"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("batch_copies"))
-      best("+batch_agg")(() => noop(agged))
-      val anti = agged.join(
-        spark.read.parquet(s"$path/hashes").hint("shuffle_hash"),
-        Seq("text_hash"), "left_anti")
-      best("+store_anti_join")(() => noop(anti))
-      best("+sort(=full_serve)")(() => noop(
-        anti.select(col("doc_id"), col("text_hash"), col("batch_copies"))
-          .orderBy(col("doc_id"))))
-      best("full_registered_serve")(() => noop(
-        SparkEntry.queries("dedup_incremental_serve")(spark, dir)))
-      best("full_registered_fromtext")(() => noop(
-        SparkEntry.queries("dedup_incremental")(spark, dir)))
-      // r18 structural alternatives (r17 verdict item 3) — measured
-      // against the ladder above before any adoption decision:
-      //   alt_bcast_anti: fold the batch hash set into a broadcast
-      //     probe — the store STREAMS through a broadcast semi join
-      //     (seen hashes, batch-bounded), and the anti join probes
-      //     broadcast(seen); zero store-side exchange.
-      //   alt_present_sorted: replace the range-partitioned output
-      //     sort (whose sampling pass is its own scheduling round)
-      //     with a single-partition presentation sort.
-      //   alt_both: the two combined.
-      val batchHashes = batch
-        .select(md5(col("text").cast("binary")).as("text_hash"))
-      val storeH = spark.read.parquet(s"$path/hashes")
-      val seen = storeH.join(broadcast(batchHashes), Seq("text_hash"), "left_semi")
-      val bAnti = agged.join(broadcast(seen), Seq("text_hash"), "left_anti")
-        .select(col("doc_id"), col("text_hash"), col("batch_copies"))
-      best("alt_bcast_anti")(() => noop(bAnti.orderBy(col("doc_id"))))
-      best("alt_present_sorted")(() => noop(
-        anti.select(col("doc_id"), col("text_hash"), col("batch_copies"))
-          .repartition(1).sortWithinPartitions(col("doc_id"))))
-      best("alt_both")(() => noop(
-        bAnti.repartition(1).sortWithinPartitions(col("doc_id"))))
-      // fromtext attribution (r18): the 2.6x from-text residual is the
-      // STORE side re-deriving its hash set from text — price that
-      // scan with and without the md5 to split IO floor from hash CPU.
-      val store = graft.sources.Tables.documents(spark, dir)
-        .filter(graft.operators.Curation.splitBucket(col("doc_id")) < 80)
-      best("store_scan_only")(() => noop(
-        store.select(octet_length(col("text")).as("b"))))
-      best("store_scan+md5")(() => noop(
-        store.select(md5(col("text").cast("binary")).as("text_hash"))))
-      // r19 (VERDICT item 4): the r18 single-scan change A/B'd above
-      // the sf0.1 floor — the legacy (r17) reconstruction derives EACH
-      // split side from its own full text scan (no shared cached
-      // projection); presentation kept identical (presentSorted) so
-      // the cells isolate the scan count, nothing else. Interleaved
-      // with the registered single-scan form, two rounds.
-      def incrementalLegacy(): org.apache.spark.sql.DataFrame = {
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val lb = docs
-          .filter(graft.operators.Curation.splitBucket(col("doc_id")) >= 80)
-          .groupBy(md5(col("text").cast("binary")).as("text_hash"))
-          .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("batch_copies"))
-        val ls = docs
-          .filter(graft.operators.Curation.splitBucket(col("doc_id")) < 80)
-          .select(md5(col("text").cast("binary")).as("text_hash"))
-        lb.join(ls.hint("shuffle_hash"), Seq("text_hash"), "left_anti")
-          .select(col("doc_id"), col("text_hash"), col("batch_copies"))
-          .transform(graft.functions.presentSorted(_, col("doc_id")))
-      }
-      for (round <- 1 to 2) {
-        best(s"fromtext_registered_r$round")(() => noop(
-          SparkEntry.queries("dedup_incremental")(spark, dir)))
-        best(s"fromtext_legacy_twoscan_r$round")(() => noop(incrementalLegacy()))
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=clserve: stage ladder for the incremental
-    // cluster serve (r15): batch shingling alone → batch postings →
-    // + cross candidates vs the store posting index → + self
-    // candidates → + shingle-fetch + verification (= batch pairs) →
-    // full serve (adds the label-store merge + subgraph CC + decorate).
-    // Store build runs once before the ladder (the cold rep's price).
-    // SPARK_GRAFT_DECOMP=dates: same-JVM A/B for the r18 ts-range
-    // prefilter on date-bounded metric queries — registered (prefiltered)
-    // vs the r17 plain form, interleaved.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("dates")) {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      import graft.etl.MetricsQueries
-      def best(label: String)(mk: () => DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] dates $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      val keys = Seq("date", "channel", "campaign_id", "utm_campaign",
-        "utm_source", "utm_medium").map(col)
-      for (round <- 1 to 2) {
-        best(s"filter_since_pre_r$round")(() =>
-          SparkEntry.queries("etl_filter_since")(spark, dir))
-        best(s"filter_since_plain_r$round")(() =>
-          MetricsQueries.filterSince(MetricsQueries.metrics(spark, dir),
-            "2024-01-15").orderBy(keys: _*))
-        best(s"export_daily_pre_r$round")(() =>
-          SparkEntry.queries("etl_export_daily")(spark, dir))
-        best(s"export_daily_plain_r$round")(() =>
-          graft.functions.presentSorted(
-            MetricsQueries.exportDaily(MetricsQueries.metrics(spark, dir),
-              "2024-01-10"),
-            col("channel"), col("campaign_id"), col("utm_campaign")))
-        best(s"channel_pre_r$round")(() =>
-          SparkEntry.queries("etl_channel_query")(spark, dir))
-        best(s"channel_plain_r$round")(() =>
-          MetricsQueries.channelQuery(MetricsQueries.metrics(spark, dir),
-            "google_ads", "2024-01-05", "2024-01-25", limit = 30, offset = 10))
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=spans: same-JVM A/B for the r18 shared-word-
-    // array caches — the registered single-scan span-cut operators vs
-    // inline reconstructions of their r17 two-scan forms. Interleaved
-    // (A,B,A,B) so JVM/host drift shows as disagreement between the
-    // repeats rather than biasing one side.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("spans")) {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val w = 16
-      def best(label: String)(mk: () => DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] spans $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      val emptyLongs = array().cast("array<bigint>")
-      def spanAgg(spans: DataFrame): DataFrame = spans
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(struct(col("span_start"), col("span_end")))).as("sp"),
-          count(lit(1)).as("n_spans"),
-          sum(col("span_end") - col("span_start") + 1).as("n_removed"))
-      def cutCols(wcol: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] = Seq(
-        graft.functions.CutSpans.cut_spans(wcol,
-          coalesce(transform(col("sp"), _.getField("span_start")), emptyLongs),
-          coalesce(transform(col("sp"), _.getField("span_end")), emptyLongs))
-          .as("clean_text"),
-        (size(wcol).cast("long") - coalesce(col("n_removed"), lit(0L)))
-          .as("n_tokens_clean"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans_removed"),
-        coalesce(col("n_removed"), lit(0L)).as("n_tokens_removed"))
-      // r17 two-scan substringApply: spans from one scan, cut re-reads text
-      def applyTwoScan(): DataFrame = {
-        val perDoc = spanAgg(graft.operators.Dedup.substringSpans(spark, dir, w))
-        graft.sources.Tables.documents(spark, dir)
-          .select(col("doc_id"), split(col("text"), " ").as("w"))
-          .join(perDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
-          .select((col("doc_id") +: cutCols(col("w"))): _*)
-          .orderBy(col("doc_id"))
-      }
-      // r17 two-scan decontaminate
-      def deconTwoScan(): DataFrame = {
-        val posted = graft.operators.Dedup.windowPostingsFrom(
-            graft.sources.Tables.documents(spark, dir), w)
-          .withColumn("bucket", graft.operators.Curation.splitBucket(col("doc_id")))
-          .transform(graft.Caches.scoped(_))
-        val testH = posted.filter(col("bucket") >= 95).select(col("h"))
-        val perDoc = spanAgg(graft.operators.Dedup.mergeIslands(
-          posted.filter(col("bucket") < 90).select(col("doc_id"), col("pos"), col("h"))
-            .join(testH.hint("shuffle_hash"), Seq("h"), "left_semi"), w))
-        graft.sources.Tables.documents(spark, dir)
-          .filter(graft.operators.Curation.splitBucket(col("doc_id")) < 90)
-          .select(col("doc_id"), split(col("text"), " ").as("w"))
-          .join(perDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
-          .select((col("doc_id") +: cutCols(col("w"))): _*)
-          .orderBy(col("doc_id"))
-      }
-      // r17 corpusTrain: cached survivor TEXT, split twice
-      def trainTextCache(): DataFrame = {
-        val survivors = graft.operators.Pipeline.cleanSurvivors(spark, dir)
-          .transform(graft.Caches.scoped(_))
-        val docs = graft.sources.Tables.documents(spark, dir)
-          .join(survivors.select(col("doc_id")).hint("shuffle_hash"),
-            Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("text"))
-          .transform(graft.Caches.scoped(_))
-        val perDoc = spanAgg(graft.operators.Dedup.substringSpansFrom(docs, w))
-        docs
-          .select(col("doc_id"), split(col("text"), " ").as("wd"))
-          .join(perDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
-          .join(survivors.select(col("doc_id"), col("quality_score"))
-            .hint("shuffle_hash"), Seq("doc_id"))
-          .select(col("doc_id"),
-            graft.functions.CutSpans.cut_spans(col("wd"),
-              coalesce(transform(col("sp"), _.getField("span_start")), emptyLongs),
-              coalesce(transform(col("sp"), _.getField("span_end")), emptyLongs))
-              .as("clean_text"),
-            (size(col("wd")).cast("long") - coalesce(col("n_removed"), lit(0L)))
-              .as("n_tokens_clean"),
-            coalesce(col("n_spans"), lit(0L)).as("n_spans_removed"),
-            col("quality_score"))
-          .orderBy(col("doc_id"))
-      }
-      // third variant: cache TEXT once (one scan), split per consumer —
-      // trades the fat deserialized word-array cache for one extra
-      // O(tokens) split
-      def applyTextCache(): DataFrame = {
-        val docs = graft.Caches.scoped(
-          graft.sources.Tables.documents(spark, dir)
-            .select(col("doc_id"), col("text")))
-        val perDoc = spanAgg(graft.operators.Dedup.substringSpansFrom(docs, w))
-        docs
-          .select(col("doc_id"), split(col("text"), " ").as("w"))
-          .join(perDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
-          .select((col("doc_id") +: cutCols(col("w"))): _*)
-          .orderBy(col("doc_id"))
-      }
-      def deconTextCache(): DataFrame = {
-        val base = graft.sources.Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"),
-            graft.operators.Curation.splitBucket(col("doc_id")).as("bucket"))
-          .filter(col("bucket") < 90 || col("bucket") >= 95)
-          .transform(graft.Caches.scoped(_))
-        val posted = graft.operators.Dedup.windowPostingsFromWords(
-            base.select(col("doc_id"), split(col("text"), " ").as("w")), w)
-          .withColumn("bucket", graft.operators.Curation.splitBucket(col("doc_id")))
-          .transform(graft.Caches.scoped(_))
-        val testH = posted.filter(col("bucket") >= 95).select(col("h"))
-        val perDoc = spanAgg(graft.operators.Dedup.mergeIslands(
-          posted.filter(col("bucket") < 90).select(col("doc_id"), col("pos"), col("h"))
-            .join(testH.hint("shuffle_hash"), Seq("h"), "left_semi"), w))
-        base.filter(col("bucket") < 90)
-          .select(col("doc_id"), split(col("text"), " ").as("w"))
-          .join(perDoc.hint("shuffle_hash"), Seq("doc_id"), "left")
-          .select((col("doc_id") +: cutCols(col("w"))): _*)
-          .orderBy(col("doc_id"))
-      }
-      for (round <- 1 to 2) {
-        best(s"apply_shared_r$round")(() =>
-          SparkEntry.queries("dedup_substring_apply")(spark, dir))
-        best(s"apply_twoscan_r$round")(() => applyTwoScan())
-        best(s"apply_textcache_r$round")(() => applyTextCache())
-        best(s"decon_shared_r$round")(() =>
-          SparkEntry.queries("corpus_decontaminate")(spark, dir))
-        best(s"decon_twoscan_r$round")(() => deconTwoScan())
-        best(s"decon_textcache_r$round")(() => deconTextCache())
-        best(s"train_shared_r$round")(() =>
-          SparkEntry.queries("pipeline_corpus_train")(spark, dir))
-        best(s"train_textcache_r$round")(() => trainTextCache())
-      }
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("clserve")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] clserve $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val path = graft.operators.Clusters.buildIncrementalClusterStore(spark, dir)
-      val tau = 0.8; val bb = 80
-      val batchSh0 = graft.operators.Dedup.shingledHashed(spark, dir)
-        .filter(graft.operators.Curation.splitBucket(col("doc_id")) >= bb)
-      best("batch_shingle")(() => noop(batchSh0))
-      val batchSh = graft.Caches.scoped(batchSh0)
-      val batchPre = graft.Caches.scoped(
-        graft.operators.Dedup.prefixPostings(batchSh, tau))
-      val storePre = spark.read.parquet(s"$path/postings")
-      val crossCand = batchPre.as("a")
-        .join(storePre.as("b").hint("shuffle_hash"), graft.operators.Dedup.ppjoinCond(tau))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      val ts0 = System.nanoTime()
-      println(s"[decomp] clserve cross_cand_rows ${crossCand.count()} " +
-        f"${(System.nanoTime() - ts0) / 1e9}%.3f s")
-      val selfCand = batchPre.as("a")
-        .join(batchPre.as("b").hint("shuffle_hash"),
-          graft.operators.Dedup.ppjoinCond(tau) && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      val ts1 = System.nanoTime()
-      println(s"[decomp] clserve self_cand_rows ${selfCand.count()} " +
-        f"${(System.nanoTime() - ts1) / 1e9}%.3f s")
-      val pairsDf = graft.Caches.scoped(
-        graft.operators.Clusters.serveBatchPairs(spark, dir, tau, bb, path))
-      val ts2 = System.nanoTime()
-      println(s"[decomp] clserve batch_pair_rows ${pairsDf.count()} " +
-        f"${(System.nanoTime() - ts2) / 1e9}%.3f s")
-      val lab = spark.read.parquet(s"$path/labels")
-      println(s"[decomp] clserve store_label_rows ${lab.count()}")
-      val ts3 = System.nanoTime()
-      val merged = graft.operators.Clusters.mergeIncrementalLabels(spark, lab, pairsDf)
-      noop(merged)
-      println(f"[decomp] clserve merge_only(cached_pairs) ${(System.nanoTime() - ts3) / 1e9}%.3f s")
-      graft.Caches.release()
-      best("batch_pairs")(() => noop(
-        graft.operators.Clusters.serveBatchPairs(spark, dir, tau, bb, path)))
-      best("full_serve")(() => noop(
-        graft.operators.Clusters.clustersIncrementalServe(spark, dir)))
-      best("recompute_path")(() => noop(
-        graft.operators.Clusters.clustersIncremental(spark, dir)))
-      best("full_recompute")(() => noop(
-        SparkEntry.queries("dedup_clusters")(spark, dir)))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=train: cumulative stage ladder for
-    // pipeline_corpus_train (the composed training-corpus output, the
-    // heaviest new r14 cell at sf10): clean survivors alone →
-    // + survivor-restricted text scan → + span detection over the
-    // survivors → full composed query (adds the cut + stats + the
-    // quality join + output sort). Each stage re-derives its prefix
-    // (cumulative-plan idiom, same as DECOMP=q3/q13), so deltas
-    // attribute the marginal stage including its share of re-derived
-    // upstream work exactly as the registered plan pays it.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("train")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] train $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      def docsFrame() = graft.sources.Tables.documents(spark, dir)
-        .join(graft.operators.Pipeline.cleanSurvivors(spark, dir)
-            .select(col("doc_id")).hint("shuffle_hash"),
-          Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("text"))
-      best("clean_survivors")(() => noop(
-        graft.operators.Pipeline.cleanSurvivors(spark, dir)))
-      best("+survivor_text_scan")(() => noop(docsFrame()))
-      best("+span_detect")(() => noop(
-        graft.operators.Dedup.substringSpansFrom(
-          graft.Caches.scoped(docsFrame()), 16)))
-      best("full_corpus_train")(() => noop(
-        SparkEntry.queries("pipeline_corpus_train")(spark, dir)))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=full: cumulative stage ladder for
-    // pipeline_corpus_full (r15's heaviest new cell): clean survivors →
-    // + split-filtered survivor text scan → + window postings →
-    // + flagged-window semi join (dup ∪ test vocab) → full composed
-    // query (adds islands, the cut, mix rates + filter, pack, text
-    // join, sort). Cumulative-plan idiom as DECOMP=train.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("full")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] full $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      def docsFrame() = graft.sources.Tables.documents(spark, dir)
-        .join(graft.operators.Pipeline.cleanSurvivors(spark, dir)
-            .select(col("doc_id")).hint("shuffle_hash"),
-          Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), split(col("text"), " ").as("wd"),
-          graft.operators.Curation.splitBucket(col("doc_id")).cast("long").as("bucket"))
-        .filter(col("bucket") < 90 || col("bucket") >= 95)
-      def posted(docs: org.apache.spark.sql.DataFrame) = docs
-        .filter(size(col("wd")) >= 16)
-        .select(col("doc_id"), col("bucket"),
-          posexplode(graft.functions.WindowHashes.window_hashes(col("wd"), 16))
-            .as(Seq("pos", "h")))
-      best("clean_survivors")(() => noop(
-        graft.operators.Pipeline.cleanSurvivors(spark, dir)))
-      best("+survivor_split_scan")(() => noop(docsFrame()))
-      best("+window_postings")(() => noop(posted(docsFrame())))
-      // r18 flag form: dupH aggregate ∪ raw testH projection as the
-      // semi join's build — vs the r19 registered single conditional
-      // aggregate (interleaved rounds below price exactly that diff).
-      def flagLegacy(): org.apache.spark.sql.DataFrame = {
-        val p = graft.Caches.scoped(posted(docsFrame()))
-        val dupH = p.filter(col("bucket") < 90).groupBy(col("h"))
-          .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2).select(col("h"))
-        val testH = p.filter(col("bucket") >= 95).select(col("h"))
-        p.filter(col("bucket") < 90).select(col("doc_id"), col("pos"), col("h"))
-          .join(dupH.unionByName(testH).hint("shuffle_hash"), Seq("h"), "left_semi")
-      }
-      def flagFused(): org.apache.spark.sql.DataFrame = {
-        val p = graft.Caches.scoped(posted(docsFrame()))
-        val flagH = p.groupBy(col("h")).agg(
-            count(when(col("bucket") < 90, 1)).as("tc"),
-            count(when(col("bucket") >= 95, 1)).as("xc"))
-          .filter(col("tc") >= 2 || col("xc") >= 1)
-          .select(col("h"))
-        p.filter(col("bucket") < 90).select(col("doc_id"), col("pos"), col("h"))
-          .join(flagH.hint("shuffle_hash"), Seq("h"), "left_semi")
-      }
-      for (round <- 1 to 2) {
-        best(s"+flag_semi_legacy_r$round")(() => noop(flagLegacy()))
-        best(s"+flag_semi_fused_r$round")(() => noop(flagFused()))
-      }
-      best("full_corpus_full")(() => noop(
-        SparkEntry.queries("pipeline_corpus_full")(spark, dir)))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=decor: same-JVM A/B for the r18 decoration
-    // rework on the LSH report queries — registered (top_k_pairs k=1
-    // ObjectHashAggregate + shuffle_hash decorate join) vs the r17 form
-    // (max/min(struct) SortAggregate + unhinted join), reconstructed
-    // over the SAME signature/candidate front. Interleaved rounds; the
-    // sf1 ladder's drift-proof cells for the r18 verdict item 4.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("decor")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] decor $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def minhashLegacy(): org.apache.spark.sql.DataFrame = {
-        val k = 64
-        val (sig, cand) = graft.operators.Dedup
-          .minhashSigAndCandidates(spark, dir, k, 16)
-        val est = cand
-          .join(sig.as("sa").hint("shuffle_hash"), col("doc_a") === col("sa.doc_id"))
-          .join(sig.as("sb").hint("shuffle_hash"), col("doc_b") === col("sb.doc_id"))
-          .select(col("doc_a"), col("doc_b"),
-            (graft.functions.MatchCount.match_count(col("sa.sig"), col("sb.sig"))
-              .cast("double") / k).as("est_jaccard"))
-          .transform(graft.Caches.scoped(_))
-        val perDoc = est.select(col("doc_a").as("doc_id"), col("doc_b").as("other"), col("est_jaccard"))
-          .unionByName(est.select(col("doc_b").as("doc_id"), col("doc_a").as("other"), col("est_jaccard")))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_candidates"),
-            max(struct(col("est_jaccard"), col("other"))).as("best"))
-        sig.select(col("doc_id"))
-          .join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-            col("best.other").as("best_match"),
-            col("best.est_jaccard").as("best_est_jaccard"))
-          .orderBy(col("doc_id"))
-      }
-      def simhashLegacy(): org.apache.spark.sql.DataFrame = {
-        val (fp, cand, _) = graft.operators.Dedup.simhashFpAndCandidates(spark, dir)
-        val near = cand
-          .join(fp.as("fa"), col("doc_a") === col("fa.doc_id"))
-          .join(fp.as("fb"), col("doc_b") === col("fb.doc_id"))
-          .select(col("doc_a"), col("doc_b"),
-            bit_count(col("fa.fp").bitwiseXOR(col("fb.fp"))).as("hamming"))
-          .filter(col("hamming") <= 6)
-          .transform(graft.Caches.scoped(_))
-        val perDoc = near.select(col("doc_a").as("doc_id"), col("doc_b").as("other"), col("hamming"))
-          .unionByName(near.select(col("doc_b").as("doc_id"), col("doc_a").as("other"), col("hamming")))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_near"),
-            min(struct(col("hamming"), col("other"))).as("best"))
-        fp.join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("fp").as("simhash"),
-            coalesce(col("n_near"), lit(0L)).as("n_near"),
-            col("best.other").as("nearest"),
-            col("best.hamming").cast("int").as("min_hamming"))
-          .orderBy(col("doc_id"))
-      }
-      for (round <- 1 to 2) {
-        best(s"minhash_registered_r$round")(() =>
-          SparkEntry.queries("dedup_minhash_lsh")(spark, dir))
-        best(s"minhash_legacy_r$round")(() => minhashLegacy())
-        best(s"simhash_registered_r$round")(() =>
-          SparkEntry.queries("dedup_simhash")(spark, dir))
-        best(s"simhash_legacy_r$round")(() => simhashLegacy())
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=prune: same-JVM A/B for the r19 dedup_prune
-    // rework — registered (clusterLosers: broadcast non-keeper ids
-    // below the gate) vs the r18 form (decorated clusters → filter →
-    // shuffle-hash anti), interleaved.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("prune")) {
-      import org.apache.spark.sql.functions._
-      def best(label: String)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] prune $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      def pruneLegacy(): org.apache.spark.sql.DataFrame = {
-        val drop = graft.operators.Clusters.clusters(spark, dir)
-          .filter(!col("is_keeper")).select(col("doc_id"))
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val meta = Seq("lang", "source", "n_chars").filter(docs.columns.contains)
-        docs.select(("doc_id" +: meta).map(col): _*)
-          .join(drop.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-          .orderBy(col("doc_id"))
-      }
-      for (round <- 1 to 2) {
-        best(s"prune_registered_r$round")(() =>
-          SparkEntry.queries("dedup_prune")(spark, dir))
-        best(s"prune_legacy_r$round")(() => pruneLegacy())
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=setops: stage decomposition of q21_except —
-    // scan, distinct, anti join, and the terminal sort isolated.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("setops")) {
-      import org.apache.spark.sql.functions._
-      val ord = graft.sources.Tables.orders(spark, dir).select(col("o_custkey"))
-      val cust = graft.sources.Tables.customer(spark, dir)
-        .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val stages: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "scan_only" -> (() => ord),
-        "scan+distinct" -> (() => ord.distinct()),
-        "anti_eq" -> (() => ord.distinct()
-          .join(cust, col("o_custkey") === col("c_custkey"), "left_anti")),
-        "anti_nullsafe" -> (() => ord.distinct()
-          .join(cust, col("o_custkey") <=> col("c_custkey"), "left_anti")),
-        // PushDownLeftSemiAntiJoin rewrites anti_eq to probe the 45M
-        // RAW rows before the distinct; the LogicalRDD barrier keeps
-        // the anti ABOVE the distinct so it probes only the distinct
-        // keys — r13 A/B for the placement question.
-        "anti_above_distinct" -> (() => {
-          val d = ord.distinct()
-          spark.createDataFrame(d.rdd, d.schema)
-            .join(cust, col("o_custkey") === col("c_custkey"), "left_anti")
-        }),
-        "except_nosort" -> (() => ord.except(cust)),
-        "full_registered" -> (() => SparkEntry.queries("q21_except")(spark, dir)))
-      for ((label, mk) <- stages) {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=pushdown: one-JVM A/B of the vocabulary
-    // pushdown tiers (set / bloom / none) — the bloom tier's honest
-    // comparison is NONE (its regime is where the set no longer fits),
-    // and the set-vs-bloom delta prices the tier boundary. (Distinct
-    // from DECOMP=contamination below, the r11 df-gate A/B.)
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("pushdown")) {
-      import graft.operators.Curation
-      for (p <- Seq("set", "bloom", "none"); _ <- 1 to 1) {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          Curation.contamination(spark, dir, minContain = 0.05, pushdown = p)
-            .write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] contamination pushdown=$p best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=keywords: one-JVM A/B grid for text_keywords —
-    // (df gate: broadcast vs forced-salted) × (tf intermediate: cached
-    // vs recomputed). Feeds the BASELINE.md text_keywords section: the
-    // forced-salted cost the scaladoc cites and the tf-cache decision.
-    // r19 adds the legacy_* rows: the r18 explode → groupBy(doc_id,
-    // word) tf derivation reconstructed inline, interleaved against the
-    // registered word_tf-kernel form (same-JVM, the only protocol
-    // BASELINE.md trusts on this host).
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("keywords")) {
-      import graft.operators.TextAnalysis
-      import org.apache.spark.sql.functions._
-      def best(label: String)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] keywords $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      // r18 form of text_keywords: tf as a distributed aggregation.
-      def legacyKeywords(k: Int = 5): org.apache.spark.sql.DataFrame = {
-        val nDocs = graft.sources.Tables.parquetRowCount(spark, dir, "documents")
-        val tf = graft.sources.Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-          .groupBy(col("doc_id"), col("word"))
-          .agg(count(lit(1)).as("tf"))
-        val df = graft.Caches.scoped(
-          tf.groupBy(col("word")).agg(count(lit(1)).as("df")))
-        val joined =
-          if (df.count() <= TextAnalysis.BroadcastVocabMax)
-            tf.join(broadcast(df), Seq("word"))
-          else graft.operators.Skew.saltedReplicateJoin(tf, df, "word", 32)
-        joined
-          .select(col("doc_id"), col("word"), col("tf"), col("df"),
-            ((col("tf") * nDocs).cast("double") / col("df")).as("score"))
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-              .orderBy(col("score").desc, col("word"))))
-          .filter(col("rank") <= k)
-          .select(col("doc_id"), col("rank").cast("long").as("rank"),
-            col("word"), col("tf"), col("df"), col("score"))
-          .orderBy(col("doc_id"), col("rank"))
-      }
-      for (round <- 1 to 2) {
-        best(s"kernel_registered_r$round")(() => TextAnalysis.keywords(spark, dir))
-        best(s"legacy_groupby_r$round")(() => legacyKeywords())
-      }
-      // The generated corpus's vocabulary is tiny (3,009 words at
-      // sf10), so the registered default resolves to the broadcast
-      // branch; vocabMax=0 FORCES the salted branch the gate would
-      // pick on a real web-scale vocabulary. registered_default is
-      // reported separately so the gate's own choice stays visible.
-      best("registered_default")(() => TextAnalysis.keywords(spark, dir))
-      best("broadcast_cache")(() =>
-        TextAnalysis.keywords(spark, dir, vocabMax = Long.MaxValue, cacheTf = true))
-      best("broadcast_nocache")(() =>
-        TextAnalysis.keywords(spark, dir, vocabMax = Long.MaxValue, cacheTf = false))
-      best("salted_cache")(() =>
-        TextAnalysis.keywords(spark, dir, vocabMax = 0L, cacheTf = true))
-      best("salted_nocache")(() =>
-        TextAnalysis.keywords(spark, dir, vocabMax = 0L, cacheTf = false))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=contamination: one-JVM A/B of the prefix
-    // plan's df-attach gate (broadcast vs forced-salted) plus the
-    // registered count-plan row for the ladder re-pin.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("contamination")) {
-      import graft.operators.Curation
-      def best(label: String)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] contamination $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      best("prefix_broadcast_df")(() => Curation.contamination(spark, dir, minContain = 0.3))
-      best("prefix_salted_df")(() =>
-        Curation.contamination(spark, dir, minContain = 0.3, vocabMax = 0L))
-      best("count_registered")(() => SparkEntry.queries("corpus_contamination")(spark, dir))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=ivf: stage decomposition of the IVF build+serve
-    // cost — cumulative components materialized through noop so each
-    // delta isolates one stage; serve_warm is the amortized-index
-    // steady state (index built before its timings).
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("ivf")) {
-      import org.apache.spark.sql.functions._
-      val n = graft.sources.Tables.parquetRowCount(spark, dir, "embeddings")
-      val nlist = graft.operators.Ivf.autoNlist(n)
-      def best(label: String)(body: () => Unit): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); body(); Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] ivf $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      // base persisted OUTSIDE the Caches registry so the per-stage
-      // release() never drops it; unpersisted at the end.
-      val base = graft.operators.Similarity.fastNormBase(spark, dir).persist()
-      val dim = base.select(size(col("embedding"))).head.getInt(0)
-      best("base_scan")(() =>
-        graft.operators.Similarity.fastNormBase(spark, dir)
-          .write.format("noop").mode("overwrite").save())
-      best(s"train_nlist$nlist")(() =>
-        { graft.operators.Ivf.train(base, n, nlist, dim, iters = 4); () })
-      val cents = graft.operators.Ivf.train(base, n, nlist, dim, iters = 4)
-      best("assign")(() =>
-        base.select(col("vec_id"),
-            org.apache.spark.sql.functions.element_at(
-              graft.functions.IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1)
-              .as("cell"))
-          .write.format("noop").mode("overwrite").save())
-      best("full_registered")(() =>
-        SparkEntry.queries("sim_ann_ivf")(spark, dir)
-          .write.format("noop").mode("overwrite").save())
-      // build once so serve timings measure the steady state
-      graft.operators.Ivf.annIvfServe(spark, dir).write
-        .format("noop").mode("overwrite").save()
-      Caches.release()
-      best("serve_warm")(() =>
-        graft.operators.Ivf.annIvfServe(spark, dir)
-          .write.format("noop").mode("overwrite").save())
-      base.unpersist(true)
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=knn: one-JVM 2×2 attribution matrix for the r11
-    // kNN self-join rework — {generic CollectTopK struct heap, primitive
-    // TopKPairs} × {probes capped at 32, uncapped nlist/8} — because the
-    // headline Bench delta (198 → 68 s at sf10) landed both changes at
-    // once and candidate-volume arithmetic alone can't split them. The
-    // generic variant reconstructs the exact pre-r11 aggregate shape
-    // (struct(cosine, -id) under collect_top_k) over the SAME candidate
-    // stream the operator builds today.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("knn")) {
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Ivf, Similarity}
-      // sim_knn_join is AQE-off gated in Bench (pinnedJoinQueries) —
-      // match the registered configuration or the matrix's absolutes
-      // aren't comparable to the ladder cells.
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val n = graft.sources.Tables.parquetRowCount(spark, dir, "embeddings")
-      val nlist = Ivf.autoNlist(n)
-      val uncapped = math.max(8, nlist / 8)
-      def knnGeneric(probes: Int): org.apache.spark.sql.DataFrame = {
-        val base = graft.Caches.scoped(Similarity.fastNormBase(spark, dir))
-        val dim = base.select(size(col("embedding"))).head.getInt(0)
-        val cents = Ivf.train(base, n, nlist, dim, iters = 4)
-        val cells = base.select(col("vec_id"), col("embedding"), col("nf"),
-          element_at(graft.functions.IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1).as("cell"))
-        val probeSide = base.select(col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("nf").as("qnf"),
-          explode(graft.functions.IvfCells.ivf_cells(col("embedding"), cents, dim, probes)).as("cell"))
-        probeSide.join(cells.hint("shuffle_hash"), Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("nbr_id"),
-            (graft.functions.DotF32.dot_f32(col("qe"), col("embedding")) /
-              (col("qnf") * col("nf"))).as("cosine_fast"))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKBy.collect_top_k(
-            struct(col("cosine_fast"), (-col("nbr_id")).as("neg_id")), 5).as("topk"))
-          .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "t")))
-          .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-            (-col("t.neg_id")).as("nbr_id"), col("t.cosine_fast").as("cosine"))
-          .orderBy(col("query_id"), col("rank"))
-      }
-      def best(label: String)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[decomp] knn $label best ${ts.min}%.3f  " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      best("pairs_probes32")(() => Ivf.knnSelfJoin(spark, dir))
-      best(s"pairs_probes$uncapped")(() => Ivf.knnSelfJoin(spark, dir, probes = uncapped))
-      best("generic_probes32")(() => knnGeneric(32))
-      best(s"generic_probes$uncapped")(() => knnGeneric(uncapped))
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_DECOMP=embed: dedup_embed_cosine tau sweep — separates
-    // the fixed candidate-verify cost from the tau-dependent volume that
-    // flows into the dedup/cap stages.
-    if (sys.env.get("SPARK_GRAFT_DECOMP").contains("embed")) {
-      val nEmb = graft.sources.Tables.parquetRowCount(spark, dir, "embeddings")
-      val base = graft.operators.Dedup.adaptiveLshBits(nEmb)
-      for (tau <- Seq(0.95, 0.35); extraBits <- Seq(0, 1, 2)) {
-        val bits = Some(base + extraBits)
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          graft.operators.Dedup.embedCosine(spark, dir, tau = tau, bitsOverride = bits)
-            .write.format("noop").mode("overwrite").save()
-          Caches.release()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val n = graft.operators.Dedup
-          .embedCosine(spark, dir, tau = tau, bitsOverride = bits).count()
-        Caches.release()
-        println(f"[decomp] embed tau=$tau bits=${base + extraBits} best ${ts.min}%.3f " +
-          f"rows=$n  " + ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      spark.stop()
-      return
-    }
-    for (name <- names; aqe <- Seq("true", "false", "true", "false")) {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        Caches.release()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[prof] $name aqe=$aqe best ${ts.min}%.3f  " +
-        ts.map(t => f"$t%.3f").mkString(" "))
     }
     spark.stop()
   }

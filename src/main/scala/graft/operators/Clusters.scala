@@ -180,17 +180,10 @@ object Clusters {
       .select(guarded("u"), guarded("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG_CC")
-    var t = System.nanoTime()
-    def lap(label: String): Unit = if (debug) {
-      System.err.println(f"[cc] $label ${(System.nanoTime() - t) / 1e9}%.3f s")
-      t = System.nanoTime()
-    }
     // The upstream pair plan (e.g. the ngram prefix-filter join DAG)
     // runs under the caller's conf; it is fully materialized by the
     // first `materialized` call below, BEFORE the overrides.
     var (edges, n, ck, cachedEdges) = materialized(spark, init)
-    lap(s"init n=$n")
     if (n <= smallGraphMaxEdges) {
       // Small-graph tier: the init job already bounded the edge count,
       // so the collect is ≤ gate rows — union-find with path
@@ -200,10 +193,8 @@ object Clusters {
       // label convention).
       val rows = cachedEdges.collect()
       cachedEdges.unpersist(blocking = false)
-      val out = unionFindLabels(spark,
+      return unionFindLabels(spark,
         rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
-      lap("small-graph union-find")
-      return out
     }
     val aqePrior = spark.conf.get("spark.sql.adaptive.enabled")
     val shufPrior = spark.conf.get("spark.sql.shuffle.partitions")
@@ -230,7 +221,6 @@ object Clusters {
       var it = 0
       while (!converged && it < maxIter) {
         val (next, nn, nck, cachedNext) = materialized(spark, smallStar(largeStar(edges)))
-        lap(s"iter $it star n=$nn")
         // Sets (both sides are distinct): the one-job (count, xor of
         // per-edge hashes) fingerprint decides NON-convergence for
         // free; only a fingerprint MATCH runs the exact set-difference
@@ -238,7 +228,6 @@ object Clusters {
         // fixpoint), not once per round, and equality stays exact
         // rather than probabilistic.
         converged = nn == n && nck == ck && next.exceptAll(edges).isEmpty
-        lap(s"iter $it convergence=$converged")
         // Only the current and previous edge sets are ever read: evict
         // the superseded one NOW (it stays registered in Caches, whose
         // release() is idempotent) — without this, all O(log n)

@@ -185,9 +185,10 @@ object Dedup {
   /** Output ordering for the incremental pair, gated on the BATCH's
     * footer-estimated row count (r18, r17 verdict item 3). The serve
     * is three bounded jobs over a sub-second scan; the sf100doc stage
-    * ladder (DECOMP=incremental, 5M docs / 1M batch, same-session
-    * DuckDB pair 0.80 s) prices the tail's `orderBy` — whose
-    * range-partitioner sampling pass is its own scheduling round — at
+    * ladder (BASELINE.md r14 incremental-dedup section, 5M docs / 1M
+    * batch, same-session DuckDB pair 0.80 s) prices the tail's
+    * `orderBy` — whose range-partitioner sampling pass is its own
+    * scheduling round — at
     * the difference between 1.658 s and the 1.512 s single-partition
     * presentation sort, and the registered serve at 1.947 s = 2.43×;
     * the presentation form lands 1.89×, under the 2× bar. The OTHER
@@ -441,8 +442,8 @@ object Dedup {
     windowPostingsFromWords(wordArrays(docs), w, normalize)
 
   /** [[windowPostingsFrom]] over a pre-split (doc_id, w) frame. */
-  private[graft] def windowPostingsFromWords(words: DataFrame, w: Int,
-                                             normalize: Boolean = false): DataFrame = {
+  private def windowPostingsFromWords(words: DataFrame, w: Int,
+                                      normalize: Boolean = false): DataFrame = {
     val hashed =
       if (normalize)
         transform(col("w"), wd => TextAnalysis.normalizeText(wd))
@@ -696,11 +697,8 @@ object Dedup {
     * spec's recall check exercises exactly the registered operator's
     * candidate set). Returns (persisted signature table, candidates).
     */
-  // private[graft] (r19): Profile's DECOMP=decor harness reconstructs
-  // the r17 max/min(struct) + unhinted-join tails over this exact front
-  // for the same-JVM A/B the sf1 ladder requires.
-  private[graft] def minhashSigAndCandidates(spark: SparkSession, dir: String,
-                                             k: Int, bands: Int): (DataFrame, DataFrame) = {
+  private def minhashSigAndCandidates(spark: SparkSession, dir: String,
+                                      k: Int, bands: Int): (DataFrame, DataFrame) = {
     val r = k / bands
     val sig = tokenized(spark, dir)
       .select(col("doc_id"), MinHashShingled.minhash_shingled(col("w"), 3, k).as("sig"))
@@ -849,9 +847,8 @@ object Dedup {
     * Hamming 2·(64/w)−1. Width comes from the parquet-footer row count
     * (no extra scan), like [[embedCosine]]'s bucket bits.
     */
-  // private[graft] (r19): see minhashSigAndCandidates — DECOMP=decor.
-  private[graft] def simhashFpAndCandidates(spark: SparkSession, dir: String,
-                                            widthOverride: Option[Int] = None)
+  private def simhashFpAndCandidates(spark: SparkSession, dir: String,
+                                     widthOverride: Option[Int] = None)
       : (DataFrame, DataFrame, Int) = {
     val w = widthOverride.getOrElse(
       simhashBandWidth(Tables.parquetRowCount(spark, dir, "documents")))
@@ -933,13 +930,12 @@ object Dedup {
     * every-pair contract (output then Θ(clique²) on dup-heavy corpora).
     */
   def embedCosine(spark: SparkSession, dir: String, tau: Double = 0.35,
-                  tables: Int = 16, bitsOverride: Option[Int] = None,
-                  maxPairsPerDoc: Int = 10, blockSize: Int = 64): DataFrame = {
+                  tables: Int = 16, maxPairsPerDoc: Int = 10,
+                  blockSize: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // n from parquet footer metadata — a count() here would be a full
     // extra scan of the table at 100 TB just to pick a bucket width.
-    val bits = bitsOverride.getOrElse(
-      Dedup.adaptiveLshBits(Tables.parquetRowCount(spark, dir, "embeddings")))
+    val bits = adaptiveLshBits(Tables.parquetRowCount(spark, dir, "embeddings"))
     val bucketed = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
       .withColumn("nrm", sqrt(DotF32.dot_f32(col("embedding"), col("embedding"))))

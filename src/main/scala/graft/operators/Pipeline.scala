@@ -29,8 +29,9 @@ object Pipeline {
     cleanSurvivors(spark, dir, minQuality, tau).orderBy(col("doc_id"))
 
   /** The three-stage survivor frame (doc_id, n_tokens, quality_score),
-    * unordered — shared by [[corpusClean]] and [[corpusTrain]] (and
-    * Profile's DECOMP=train stage ladder). */
+    * unordered — shared by [[corpusClean]] and [[corpusTrain]] (the
+    * r14 stage ladder over it is recorded in BASELINE.md's
+    * pipeline_corpus_train row). */
   private[graft] def cleanSurvivors(spark: SparkSession, dir: String,
                                     minQuality: Double = 0.5,
                                     tau: Double = 0.8): DataFrame = {

@@ -119,8 +119,9 @@ object Relational {
     * sized from the free parquet-footer orders count ÷ 4 — and it was
     * SLOWER (7.1/7.8 vs 5.9/6.4 s fresh-JVM cells, same session): the
     * 40%-bigger filter's per-task agg buffers, shuffle bytes, and probe
-    * working set cost more than the count job saves. Profile
-    * SPARK_GRAFT_DECOMP=q3 carries both stages.
+    * working set cost more than the count job saves. Both stages and
+    * the stage ladder are recorded in BASELINE.md ("q3 cluster-tier
+    * stage ladder").
     */
   private[graft] def q3AggBelowJoin(spark: SparkSession, dir: String): DataFrame = {
     val (cust, ord) = q3Filtered(spark, dir)

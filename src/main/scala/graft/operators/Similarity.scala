@@ -199,8 +199,8 @@ object Similarity {
     * null-candidate row for queries whose buckets were empty, so the
     * output always covers the query set.
     *
-    * Bucket width SCALES WITH THE DATA (bitsOverride unset): bits =
-    * log2(n/64) from parquet footer metadata — expected bucket
+    * Bucket width SCALES WITH THE DATA: bits = [[Dedup.adaptiveLshBits]]
+    * = log2(n/64) from parquet footer metadata — expected bucket
     * occupancy stays ~64 regardless of n, so candidate volume is
     * ~tables·probes·64 per query instead of degrading toward a full
     * scan the way a fixed bucket count does (16 fixed buckets at
@@ -231,11 +231,10 @@ object Similarity {
     * the scalable bucket path engages from n≈200k instead of 400k.
     */
   def annLsh(spark: SparkSession, dir: String, k: Int = 10,
-             tables: Int = 16, bitsOverride: Option[Int] = None,
-             margin: Int = 16, probes: Int = 96,
+             tables: Int = 16, margin: Int = 16, probes: Int = 96,
              denseFallback: Boolean = true): DataFrame = {
     val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val bits = bitsOverride.getOrElse(Dedup.adaptiveLshBits(n))
+    val bits = Dedup.adaptiveLshBits(n)
     val effProbes = math.min(probes, graft.functions.LshProbes.probeFamilySize(bits))
     val estCandidates = tables.toLong * effProbes * math.max(n >> bits, 1L)
     val nQueries = 8L // the registered vec_id < 8 query set

@@ -535,10 +535,11 @@ class PlanSpec extends AnyFunSuite {
     // .intersect()/.except(): native set ops wrap every key in
     // (coalesce(k,0), isnull(k)) for null-safe equality, which kicks
     // the broadcast relation off its long-key fast path — measured
-    // 6.17 vs 4.00 s at sf10 on the EXCEPT anti join (Profile
-    // SPARK_GRAFT_DECOMP=setops). Keys here are non-null TPC-H ids, so
-    // the pin is: the join keys stay bare longs, the distinct aggregate
-    // exists, and nothing degenerates to a cartesian product.
+    // 6.17 vs 4.00 s at sf10 on the EXCEPT anti join (stage ladder in
+    // BASELINE.md, "Set-op queries: the long-key fast path"). Keys here
+    // are non-null TPC-H ids, so the pin is: the join keys stay bare
+    // longs, the distinct aggregate exists, and nothing degenerates to a
+    // cartesian product.
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     for ((name, df) <- Seq(
         "q21_except" -> Relational.q21Except(spark, dir))) {
@@ -859,12 +860,7 @@ class PlanSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     val unaudited = walk(others).filter { f =>
       val rel = f.getPath.stripPrefix("src/main/scala/graft/")
-      // Profile.scala is the dev-only same-JVM A/B harness: it reconstructs
-      // historical query forms (r17 export_daily) for interleaved timing and
-      // is never on a registered query path, so its presentSorted mirrors of
-      // audited sites are excluded rather than audited.
       !auditedSites.contains(rel) && rel != "functions/package.scala" &&
-        rel != "Profile.scala" &&
         new String(java.nio.file.Files.readAllBytes(f.toPath)).contains("presentSorted(")
     }
     assert(unaudited.isEmpty,
