@@ -95,13 +95,15 @@ object EtlQueries {
     * cold_total) and every warm rep times the serve alone. Keying the
     * store path by the source's max mtime makes regenerated testdata
     * rebuild instead of serving stale rows; the _SUCCESS marker guards
-    * against reusing a half-written store.
+    * against reusing a half-written store, checked by
+    * `MetricsStore.committed` — the same rule that lets a warm rep reuse
+    * the relation `MetricsStore.read` resolved for that commit.
     */
   def channelQueryStoreServe(spark: SparkSession, dir: String): DataFrame = {
     val store = System.getProperty("java.io.tmpdir") + "/graft_metrics_store_" +
       Tables.pathSlug(dir) + "_" +
       java.lang.Long.toHexString(sourceStamp(dir))
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(store, "_SUCCESS")))
+    if (!graft.sources.MetricsStore.committed(spark, store))
       graft.sources.MetricsStore.write(MetricsQueries.metrics(spark, dir), store)
     serveChannelFromStore(spark, store)
   }

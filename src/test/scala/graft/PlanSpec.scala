@@ -229,7 +229,10 @@ class PlanSpec extends AnyFunSuite {
   test("etl_channel_query_store serves from a partition-pruned store scan") {
     val feed = graft.etl.EtlQueries.channelQuery(spark, dir)
       .collect().map(_.toString).toSeq
+    // the second serve call reads the relation MetricsStore resolved for
+    // the store's commit: it must prune and agree just the same
     for (df <- Seq(graft.etl.EtlQueries.channelQueryStore(spark, dir),
+                   graft.etl.EtlQueries.channelQueryStoreServe(spark, dir),
                    graft.etl.EtlQueries.channelQueryStoreServe(spark, dir))) {
       val s = planString(df)
       assert(s.contains("PartitionFilters: [") &&
