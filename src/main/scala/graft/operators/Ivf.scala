@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{IvfCells, VecSumF32}
 import graft.sources.Tables
+import graft.streaming.ArrivalStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -359,24 +360,15 @@ object Ivf {
   // ---------------------------------------------------------------- //
 
   /** Index location, keyed like the metrics store's serve twin: by the
-    * source dir AND its max mtime (regenerated testdata rebuilds
-    * instead of serving stale cells) AND nlist (a knob change is a
-    * different index). `_SUCCESS` markers guard half-written trees.
+    * source dir AND its listing stamp ([[Tables.sourceStamp]]:
+    * regenerated testdata rebuilds instead of serving stale cells) AND
+    * nlist (a knob change is a different index). `_SUCCESS` markers
+    * guard half-written trees.
     */
   private def indexPath(dir: String, nlist: Int): String =
     System.getProperty("java.io.tmpdir") + "/graft_ivf_index_" +
-      graft.sources.Tables.pathSlug(dir) + "_" +
-      java.lang.Long.toHexString(sourceStamp(dir)) + "_" + nlist
-
-  private def sourceStamp(dir: String): Long = {
-    val root = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    if (!java.nio.file.Files.exists(root)) 0L
-    else {
-      val s = java.nio.file.Files.walk(root)
-      try s.mapToLong(p => java.nio.file.Files.getLastModifiedTime(p).toMillis).max.orElse(0L)
-      finally s.close()
-    }
-  }
+      Tables.pathSlug(dir) + "_" +
+      java.lang.Long.toHexString(Tables.sourceStamp(dir, "embeddings")) + "_" + nlist
 
   /** Build the on-disk index: train, assign, and write the corpus
     * PARTITIONED BY CELL (`cells/cell=N/` part files) plus the centroid
@@ -410,12 +402,7 @@ object Ivf {
         else assigned.repartition(col("cell"))
       clustered.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/cells")
-      val centRows = (0 until nlist).map { c =>
-        (c, (0 until dim).map(i => cents(c * dim + i)))
-      }
-      import spark.implicits._
-      centRows.toDF("cell", "centroid").repartition(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")
+      writeCentroids(spark, cents, dim, s"$path/centroids")
     }
     path
   }
@@ -463,18 +450,8 @@ object Ivf {
     // rows, the exact state a FAISS server keeps in RAM. Without the
     // memo every warm serve pays two extra collect jobs just to
     // re-read what cannot have changed.
-    val cents = centroidCache.computeIfAbsent(path, _ => {
-      val centRows = spark.read.parquet(s"$path/centroids").collect()
-      val d = centRows.head.getSeq[Float](1).length
-      val m = new Array[Float](nlist * d)
-      centRows.foreach { r =>
-        val c = r.getInt(0)
-        val v = r.getSeq[Float](1)
-        var i = 0
-        while (i < d) { m(c * d + i) = v(i); i += 1 }
-      }
-      m
-    })
+    val cents = centroidCache.computeIfAbsent(path,
+      _ => readCentroidMatrix(spark, s"$path/centroids")._1)
     val dim = cents.length / nlist
 
     // The 8 query vectors: a vec_id-pushdown scan (row-group stats skip
@@ -483,6 +460,20 @@ object Ivf {
     val qRows = queryCache.computeIfAbsent(path, _ =>
       Tables.embeddings(spark, dir).filter(col("vec_id") < 8)
         .select(col("vec_id"), col("embedding")).collect())
+    probeServe(spark, cents, dim, nprobe, qRows, spark.read.parquet(s"$path/cells"),
+      k, margin)
+  }
+
+  /** The serve tail [[annIvfServe]] and [[arrivalAnnServe]] share:
+    * probe cells computed driver-side from the resident centroid
+    * matrix for the collected (query_id, embedding) rows, ONE scan of
+    * `cellStore` pruned to the probed cells (literal IN → PartitionFilters
+    * on a cell-partitioned tree), fast-cosine k+margin prune, and the
+    * decimal-exact re-rank from store-resident rows.
+    */
+  private def probeServe(spark: SparkSession, cents: Array[Float], dim: Int,
+                         nprobe: Int, qRows: Array[org.apache.spark.sql.Row],
+                         cellStore: DataFrame, k: Int, margin: Int): DataFrame = {
     val probePairs = qRows.flatMap { r =>
       val qid = r.getLong(0)
       val v = r.getSeq[Float](1)
@@ -497,7 +488,7 @@ object Ivf {
     val probes = probePairs.toDF("query_id", "cell")
 
     val probedCells = probePairs.map(_._2).distinct
-    val store = spark.read.parquet(s"$path/cells")
+    val store = cellStore
       .filter(col("cell").isin(probedCells: _*)) // literal IN → PartitionFilters
     val qFast = qDf.select(col("query_id"), col("qe"),
       sqrt(graft.functions.DotF32.dot_f32(col("qe"), col("qe"))).as("qnf"))
@@ -557,12 +548,14 @@ object Ivf {
       if (base.isEmpty) return
       val dim = base.select(size(col("embedding"))).head.getInt(0)
       val cents = ensureCentroids(spark, base, storeDir, nlist, dim, iters)
+      val out = ArrivalStore.batchDir(s"$storeDir/cells", batchId)
       base.select(col("vec_id"), col("embedding"), col("nf"),
           element_at(IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1)
             .as("cell"))
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$storeDir/cells/batch=$batchId")
+        .parquet(out)
+      ArrivalStore.markCommitted(out)
     } finally base.unpersist()
   }
 
@@ -575,22 +568,29 @@ object Ivf {
                                      storeDir: String, nlist: Int, dim: Int,
                                      iters: Int): Array[Float] = {
     val centPath = s"$storeDir/centroids"
-    val centSuccess = new org.apache.hadoop.fs.Path(centPath, "_SUCCESS")
-    if (centSuccess.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(centSuccess))
-      readCentroidMatrix(spark, centPath)
+    val (fs, p) = ArrivalStore.fsFor(centPath)
+    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+      readCentroidMatrix(spark, centPath)._1
     else {
       val c = train(base, base.count(), nlist, dim, iters)
-      import spark.implicits._
-      (0 until nlist).map { i =>
-        (i, (0 until dim).map(j => c(i * dim + j)))
-      }.toDF("cell", "centroid").repartition(1)
-        .write.mode("overwrite").parquet(centPath)
+      writeCentroids(spark, c, dim, centPath)
       c
     }
   }
 
-  private def readCentroidMatrix(spark: SparkSession, path: String): Array[Float] = {
+  /** The one centroid-table writer: the flattened row-major matrix as
+    * a single-file (cell, centroid) table, marked committed. */
+  private[graft] def writeCentroids(spark: SparkSession, cents: Array[Float],
+                                    dim: Int, path: String): Unit = {
+    import spark.implicits._
+    ArrivalStore.commitTo((0 until cents.length / dim).map { c =>
+      (c, (0 until dim).map(i => cents(c * dim + i)))
+    }.toDF("cell", "centroid").repartition(1), path)
+  }
+
+  /** The one centroid-table reader: (row-major matrix, nlist, dim). */
+  private[graft] def readCentroidMatrix(spark: SparkSession,
+                                        path: String): (Array[Float], Int, Int) = {
     val rows = spark.read.parquet(path).collect()
     val d = rows.head.getSeq[Float](1).length
     val m = new Array[Float](rows.length * d)
@@ -599,7 +599,7 @@ object Ivf {
       var i = 0
       while (i < d) { m(c * d + i) = v(i); i += 1 }
     }
-    m
+    (m, rows.length, d)
   }
 
   /** Arrival-store centroid tables are MUTABLE across processes — a
@@ -617,7 +617,7 @@ object Ivf {
 
   private[graft] def centroidTableStamped(spark: SparkSession,
                                           path: String): (Array[Float], Int, Int) = {
-    val (fs, p) = graft.streaming.ArrivalStore.fsFor(path)
+    val (fs, p) = ArrivalStore.fsFor(path)
     val listing = fs.listStatus(p).sortBy(_.getPath.getName)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .mkString("\n")
@@ -625,17 +625,8 @@ object Ivf {
     val stamp = md.digest(listing.getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
     if (arrivalCentroidCache.size > 64) arrivalCentroidCache.clear() // retired stamps
-    arrivalCentroidCache.computeIfAbsent(s"$path@$stamp", _ => {
-      val rows = spark.read.parquet(path).collect()
-      val d = rows.head.getSeq[Float](1).length
-      val m = new Array[Float](rows.length * d)
-      rows.foreach { r =>
-        val c = r.getInt(0); val v = r.getSeq[Float](1)
-        var i = 0
-        while (i < d) { m(c * d + i) = v(i); i += 1 }
-      }
-      (m, rows.length, d)
-    })
+    arrivalCentroidCache.computeIfAbsent(s"$path@$stamp",
+      _ => readCentroidMatrix(spark, path))
   }
 
   /** Serve over the arrival-grown index: [[annIvfServe]]'s probe shape
@@ -655,57 +646,15 @@ object Ivf {
       centroidTableStamped(spark, s"$storeDir/centroids")
     val nprobe = math.min(nlistRows,
       nprobeOverride.getOrElse(math.max(8, nlistRows / 8)))
-    val qRows = queries.select(col("query_id"), col("embedding")).collect()
-    val probePairs = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val emb = org.apache.spark.sql.catalyst.util.ArrayData
-        .toArrayData(r.getSeq[Float](1).toArray)
-      val cellsArr = IvfCells.topCells(emb, cents, dim, nprobe)
-      (0 until nprobe).map(i => (qid, cellsArr.getInt(i)))
-    }.toSeq
-    import spark.implicits._
-    val qDf = qRows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      .toDF("query_id", "qe")
-      .select(col("query_id"), col("qe").cast("array<float>").as("qe"))
-    val probes = probePairs.toDF("query_id", "cell")
-    val probedCells = probePairs.map(_._2).distinct
     // the shared arrival-store contract: committed (_SUCCESS) batch
     // dirs only, through the store path's own Hadoop FileSystem
-    val committed = graft.streaming.ArrivalStore
+    val committed = ArrivalStore
       .standingDirs(s"$storeDir/cells", Long.MaxValue, committedOnly = true)
     require(committed.nonEmpty, s"no committed arrival batches under $storeDir")
-    val store = spark.read.option("basePath", s"$storeDir/cells")
-      .parquet(committed: _*)
-      .filter(col("cell").isin(probedCells: _*))
-    val qFast = qDf.select(col("query_id"), col("qe"),
-      sqrt(graft.functions.DotF32.dot_f32(col("qe"), col("qe"))).as("qnf"))
-    val exactNorm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => sqrt(graft.functions.DotDecimal.dot_decimal(c, c))
-    val winners = store
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qFast), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("embedding"), col("qe"),
-        Similarity.fastCosine(col("qe"), col("qnf"), col("embedding"), col("nf")))
-      .withColumn("rank_f", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine_fast").desc, col("vec_id"))))
-      .filter(col("rank_f") <= k + margin)
-    val ranked = winners
-      .select(col("query_id"), col("vec_id"),
-        (graft.functions.DotDecimal.dot_decimal(col("qe"), col("embedding")) /
-          (exactNorm(col("qe")) * exactNorm(col("embedding")))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-    qDf.select(col("query_id"))
-      // shuffle_hash (r18): decorate join back to the query-id set (see
-      // annIvf) — drops both SMJ sorts, same exchanges.
-      .join(ranked.hint("shuffle_hash"), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    probeServe(spark, cents, dim, nprobe,
+      queries.select(col("query_id"), col("embedding")).collect(),
+      spark.read.option("basePath", s"$storeDir/cells").parquet(committed: _*),
+      k, margin)
   }
 
   /** Test hook: when set, [[retrainArrivalStore]] throws AFTER the
@@ -764,17 +713,16 @@ object Ivf {
                           nlistOverride: Option[Int] = None,
                           iters: Int = 4): Unit = graft.Caches.withScope {
     import org.apache.hadoop.fs.Path
-    val (fs, rootP) = graft.streaming.ArrivalStore.fsFor(storeDir)
+    val (fs, rootP) = ArrivalStore.fsFor(storeDir)
     val staging = new Path(rootP, "_staging_retrain")
     val marker = new Path(staging, "_RETRAIN")
     if (!fs.exists(marker)) {
       if (fs.exists(staging)) // interrupted WRITE: live store intact, discard
         fs.delete(staging, true)
-      val dirs = graft.streaming.ArrivalStore
+      val dirs = ArrivalStore
         .standingDirs(s"$storeDir/cells", Long.MaxValue, committedOnly = true)
       require(dirs.nonEmpty, s"no committed arrival batches under $storeDir")
-      val tid = dirs
-        .map(d => new Path(d).getName.stripPrefix("batch=").toLong).max
+      val tid = dirs.map(ArrivalStore.batchIdOf).max
       val standing = graft.Caches.scoped(Similarity.withFastNorm(
         spark.read.option("basePath", s"$storeDir/cells").parquet(dirs: _*)
           .select(col("vec_id"), col("embedding"))))
@@ -796,20 +744,19 @@ object Ivf {
       // DATA column (the r16 fs-metadata lesson — its store is small
       // by regime). Detected from the standing dirs themselves.
       val dirLayout = {
-        val (dfs, first) = graft.streaming.ArrivalStore.fsFor(dirs.head)
+        val (dfs, first) = ArrivalStore.fsFor(dirs.head)
         dfs.listStatus(first).exists(s =>
           s.isDirectory && s.getPath.getName.startsWith("cell="))
       }
-      if (dirLayout)
-        reassigned.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$staging/cells/batch=$tid")
-      else
-        reassigned.sortWithinPartitions(col("cell"))
-          .write.mode("overwrite").parquet(s"$staging/cells/batch=$tid")
-      import spark.implicits._
-      (0 until nlist).map(i => (i, (0 until dim).map(j => cents(i * dim + j))))
-        .toDF("cell", "centroid").repartition(1)
-        .write.mode("overwrite").parquet(s"$staging/centroids")
+      // the staged dir carries its own _SUCCESS through the swap, so
+      // the committedOnly readers see the retrained index
+      val stagedCells = ArrivalStore.batchDir(s"$staging/cells", tid)
+      if (dirLayout) {
+        reassigned.write.mode("overwrite").partitionBy("cell").parquet(stagedCells)
+        ArrivalStore.markCommitted(stagedCells)
+      } else
+        ArrivalStore.commitTo(reassigned.sortWithinPartitions(col("cell")), stagedCells)
+      writeCentroids(spark, cents, dim, s"$staging/centroids")
       val out = fs.create(marker, true)
       try out.write(tid.toString.getBytes("UTF-8")) finally out.close()
     }

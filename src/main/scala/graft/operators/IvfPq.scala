@@ -204,10 +204,7 @@ object IvfPq {
         else assigned.repartition(col("cell"))
       clustered.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/cells")
-      (0 until nlist).map { c =>
-        (c, (0 until dim).map(i => cents(c * dim + i)))
-      }.toDF("cell", "centroid").repartition(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")
+      Ivf.writeCentroids(spark, cents, dim, s"$path/centroids")
       (for (j <- 0 until M; c <- 0 until 256) yield
         (j, c, (0 until dsub).map(i => cb((j * 256 + c) * dsub + i))))
         .toDF("j", "c", "centroid").repartition(1)
@@ -246,17 +243,8 @@ object IvfPq {
     val nprobe = math.min(nlist, nprobeOverride.getOrElse(math.max(8, nlist / 8)))
     val path = buildPqIndex(spark, dir, Some(nlist), residual = residual)
 
-    val cents = centroidCache.computeIfAbsent(path, _ => {
-      val rows = spark.read.parquet(s"$path/centroids").collect()
-      val d = rows.head.getSeq[Float](1).length
-      val mtx = new Array[Float](nlist * d)
-      rows.foreach { r =>
-        val c = r.getInt(0); val v = r.getSeq[Float](1)
-        var i = 0
-        while (i < d) { mtx(c * d + i) = v(i); i += 1 }
-      }
-      mtx
-    })
+    val cents = centroidCache.computeIfAbsent(path,
+      _ => Ivf.readCentroidMatrix(spark, s"$path/centroids")._1)
     val dim = cents.length / nlist
     val dsub = dim / M
     val cb = codebookCache.computeIfAbsent(path, _ => {

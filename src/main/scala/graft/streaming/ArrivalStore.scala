@@ -1,16 +1,20 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The arrival-store commit/replay contract, written ONCE (r16, r15
   * verdict item 7): every streaming loop in [[EventStream]] (and the
   * vector loops in [[graft.operators.Ivf]]) keeps standing state as
   * batchId-keyed partition directories under a store root —
   * `<root>/<sub>/batch=<id>/` — grown by one overwrite per micro-batch.
-  * The eight loops and the compactor used to hand-roll the same four
-  * disciplines; they are factored here so the contract has one
-  * implementation and one scaladoc:
+  * The nine loops and the compactor share this object as their ONLY
+  * copy of the layout and the commit: [[run]] is the one append-mode
+  * `foreachBatch` shell, [[batchDir]]/[[batchIdOf]] the one layout,
+  * and [[commit]] the one per-batch write. The contract has four
+  * disciplines:
   *
   *   1. REPLAY SAFETY — standing state is always read as committed
   *      directories STRICTLY BELOW the reading batch's id
@@ -23,8 +27,11 @@ import org.apache.spark.sql.functions._
   *      its previous attempt.
   *   2. COMMIT VISIBILITY — `committedOnly = true` additionally
   *      requires the `_SUCCESS` marker; readers that must never see an
-  *      in-flight attempt even transiently (serving, compaction) use
-  *      it.
+  *      in-flight attempt even transiently (serving, compaction, every
+  *      public store reader) use it. [[commit]] writes that marker
+  *      itself ([[markCommitted]]) whatever the Hadoop committer's
+  *      `mapreduce.fileoutputcommitter.marksuccessfuljobs` setting, so
+  *      the commit point belongs to the store, not to a default.
   *   3. EMPTY-STORE READS — probing a store before its first commit
   *      returns an EMPTY frame of the caller's schema, never a
   *      schema-inference error ([[readOr]]).
@@ -43,13 +50,49 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object ArrivalStore {
 
+  /** The one arrival stream shell: an append-mode `foreachBatch` query
+    * that hands each micro-batch and its id to `perBatch`. */
+  def run(input: DataFrame, checkpointDir: String)(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => perBatch(batch, batchId) }
+      .start()
+
   /** Hadoop FileSystem + qualified Path for `root`, resolved from the
     * active session's config. */
-  def fsFor(root: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    (p.getFileSystem(org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()), p)
+  def fsFor(root: String): (FileSystem, Path) = {
+    val p = new Path(root)
+    (p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
+  }
+
+  /** Batch `id`'s directory under a store subtree `root`. */
+  def batchDir(root: String, id: Long): String = s"$root/batch=$id"
+
+  /** The batch id a [[batchDir]] path names. */
+  def batchIdOf(dir: String): Long =
+    new Path(dir).getName.stripPrefix("batch=").toLong
+
+  /** Commit one batch's rows: overwrite its own [[batchDir]] and mark
+    * it committed (discipline 2). */
+  def commit(df: DataFrame, root: String, batchId: Long): Unit =
+    commitTo(df, batchDir(root, batchId))
+
+  /** [[commit]] for a directory outside the batch layout (staged
+    * trees, frozen tables). */
+  def commitTo(df: DataFrame, dir: String): Unit = {
+    df.write.mode("overwrite").parquet(dir)
+    markCommitted(dir)
+  }
+
+  /** The commit point: create `dir/_SUCCESS` unless the writer's output
+    * committer already did. Callers with their own write shape
+    * (partitioned, date-swapped) run it after the write returns. */
+  def markCommitted(dir: String): Unit = {
+    val (fs, p) = fsFor(dir)
+    val marker = new Path(p, "_SUCCESS")
+    if (!fs.exists(marker)) fs.create(marker, true).close()
   }
 
   /** Standing-state partition directories committed strictly before
@@ -60,10 +103,9 @@ private[graft] object ArrivalStore {
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => !committedOnly || fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .filter(_.getPath.getName.stripPrefix("batch=").toLong < batchId)
+      .filter(s => !committedOnly || fs.exists(new Path(s.getPath, "_SUCCESS")))
       .map(_.getPath.toString)
+      .filter(batchIdOf(_) < batchId)
   }
 
   /** Read the standing dirs, or the caller's empty frame when none are
@@ -110,12 +152,10 @@ private[graft] object ArrivalStore {
   def latestBatchRows(spark: SparkSession, root: String, dirs: Seq[String],
                       keyCols: Seq[String], keyGate: Int = 1 << 17,
                       tierRatio: Long = 4L): DataFrame = {
-    def idOf(d: String): Long = new org.apache.hadoop.fs.Path(d)
-      .getName.stripPrefix("batch=").toLong
     if (dirs.length <= 1)
       return spark.read.parquet(dirs: _*)
-    val minId = dirs.map(idOf).min
-    val (baseDirs, deltaDirs) = dirs.partition(idOf(_) == minId)
+    val minId = dirs.map(batchIdOf).min
+    val (baseDirs, deltaDirs) = dirs.partition(batchIdOf(_) == minId)
     def bytesOf(ds: Seq[String]): Long = ds.map { d =>
       val (fs, p) = fsFor(d)
       fs.getContentSummary(p).getLength

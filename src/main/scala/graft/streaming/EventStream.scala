@@ -106,37 +106,9 @@ object EventStream {
     */
   def arrivalDedup(docs: DataFrame, storeDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupArrivalBatch(batch, storeDir, batchId)
-      }
-      .start()
-
-  /** Hadoop FileSystem + qualified Path for `root`, resolved from the
-    * active session's config — arrival stores live on whatever storage
-    * the cluster sees (hdfs://, s3a://, file://), not only the
-    * driver-local disk a `java.io.File` listing would silently require
-    * (r14 advice: a non-local store must not read as empty standing
-    * state and re-accept every duplicate).
-    */
-  private def fsFor(root: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) =
-    ArrivalStore.fsFor(root)
-
-  /** Standing-state partition directories committed STRICTLY BEFORE
-    * `batchId` — the read side of the exactly-once contract the
-    * arrival loops share (a retried batch never sees its own crashed
-    * attempt's partial write: its own id is excluded, and any EARLIER
-    * id was fully committed before the checkpoint let a later batch
-    * run). `committedOnly` additionally requires a `_SUCCESS` marker —
-    * the compactor's stricter contract, where a crashed in-flight dir
-    * must be invisible rather than merely later-overwritten.
-    */
-  private def standingDirs(root: String, batchId: Long,
-                           committedOnly: Boolean = false): Seq[String] =
-    ArrivalStore.standingDirs(root, batchId, committedOnly)
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      dedupArrivalBatch(batch, storeDir, batchId)
+    }
 
   /** One arrival batch against the standing store; see [[arrivalDedup]].
     * Public-in-package so the crash-injection spec can drive a retried
@@ -148,7 +120,7 @@ object EventStream {
     val winners = batch
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("batch_copies"))
-    val standing = standingDirs(s"$storeDir/hashes", batchId)
+    val standing = ArrivalStore.standingDirs(s"$storeDir/hashes", batchId)
     // gated broadcast tier (r17): below the gate the standing hash
     // store STREAMS (broadcast semi + bounded anti) instead of
     // shuffle-exchanging O(store) hashes per arriving batch.
@@ -160,24 +132,22 @@ object EventStream {
       .select(col("doc_id"), col("text_hash"), col("batch_copies"))
       .persist() // read twice below; both writes see one computation
     try {
-      accepted.write.mode("overwrite")
-        .parquet(s"$storeDir/accepted/batch=$batchId")
-      accepted.select(col("text_hash")).write.mode("overwrite")
-        .parquet(s"$storeDir/hashes/batch=$batchId")
+      ArrivalStore.commit(accepted, s"$storeDir/accepted", batchId)
+      ArrivalStore.commit(accepted.select(col("text_hash")), s"$storeDir/hashes", batchId)
     } finally accepted.unpersist()
   }
 
   /** The standing accepted corpus across every committed arrival batch
-    * (reader side of [[arrivalDedup]]'s store). Probing a store before
-    * its first batch commits returns an EMPTY frame of the store
-    * schema, not a schema-inference error (r14 advice).
+    * (reader side of [[arrivalDedup]]'s store; `_SUCCESS`-marked dirs
+    * only — ArrivalStore discipline 2). Probing a store before its
+    * first batch commits returns an EMPTY frame of the store schema,
+    * not a schema-inference error (r14 advice).
     */
   def arrivalAccepted(spark: SparkSession, storeDir: String): DataFrame =
-    if (standingDirs(s"$storeDir/accepted", Long.MaxValue).isEmpty)
-      spark.range(0).select(col("id").as("doc_id"), lit("").as("text_hash"),
-        col("id").as("batch_copies"), col("id").as("batch"))
-    else spark.read.option("basePath", s"$storeDir/accepted")
-      .parquet(s"$storeDir/accepted")
+    ArrivalStore.readOr(spark, s"$storeDir/accepted", Long.MaxValue,
+        spark.range(0).select(col("id").as("doc_id"), lit("").as("text_hash"),
+          col("id").as("batch_copies"), col("id").as("batch")),
+        committedOnly = true, withBatchCol = true)
       .select(col("doc_id"), col("text_hash"), col("batch_copies"),
         col("batch").cast("long").as("batch"))
 
@@ -214,13 +184,9 @@ object EventStream {
   def arrivalNearDup(docs: DataFrame, storeDir: String, checkpointDir: String,
                      tau: Double = 0.9, k: Int = 64, bands: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupArrivalBatch(batch, storeDir, batchId, tau, k, bands)
-      }
-      .start()
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      nearDupArrivalBatch(batch, storeDir, batchId, tau, k, bands)
+    }
 
   /** The third arrival loop (r14): streaming CLUSTER-LABEL maintenance
     * — every arriving doc is KEPT (this loop curates labels for a
@@ -254,13 +220,9 @@ object EventStream {
   def arrivalClusters(docs: DataFrame, storeDir: String, checkpointDir: String,
                       tau: Double = 0.9, k: Int = 64, bands: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        clusterArrivalBatch(batch, storeDir, batchId, tau, k, bands)
-      }
-      .start()
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      clusterArrivalBatch(batch, storeDir, batchId, tau, k, bands)
+    }
 
   /** One label-maintenance arrival batch; see [[arrivalClusters]].
     * Scoped caches (its own AND mergeIncrementalDelta's) release via
@@ -277,49 +239,16 @@ object EventStream {
     // probes with zero exchange; above it the shuffle tier stands.
     val small = ArrivalStore.smallBatch(batch)
     def gated(df: DataFrame): DataFrame = ArrivalStore.gated(small)(df)
-    val r = k / bands
-    def bandKeys(sigDf: DataFrame): DataFrame = sigDf.select(col("doc_id"),
-      posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
-        s"b -> xxhash64(slice(sig, b*$r + 1, $r), b))")).as(Seq("band", "bh")))
     val rows = batch.select(col("doc_id"), col("text")).persist()
     try {
-      val shingled = rows
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"),
-          graft.functions.HashedShingles.hashed_shingles(col("w"), 3).as("sh"),
-          graft.functions.MinHashShingled.minhash_shingled(col("w"), 3, k).as("sig"))
+      val shingled = shingleSigs(rows, k)
         .persist() // cross cand + self cand + band write
       try {
-        val batchKeys = bandKeys(shingled)
+        val batchKeys = bandKeys(shingled, k, bands)
           .transform(graft.Caches.scoped(_)) // cross + self joins
-        val bandDirs = standingDirs(s"$storeDir/bands", batchId)
-        val crossPairs =
-          if (bandDirs.isEmpty)
-            shingled.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"))
-              .limit(0)
-          else {
-            // standing band index on the STREAM side, batch keys gated
-            val cand = spark.read.parquet(bandDirs: _*).as("b")
-              .join(gated(batchKeys.as("a")),
-                col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-              .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-              .distinct()
-              .transform(graft.Caches.scoped(_)) // store fetch + verification
-            // collision-bounded point read of the standing corpus
-            val storeSh = ArrivalStore.fetcher(
-                cand.select(col("doc_b").as("doc_id")), "doc_id", small)(
-              spark.read
-                .parquet(standingDirs(s"$storeDir/corpus", batchId): _*))
-              .select(col("doc_id"), split(col("text"), " ").as("w"))
-              .filter(size(col("w")) >= 3)
-              .select(col("doc_id"),
-                graft.functions.HashedShingles.hashed_shingles(col("w"), 3).as("sh"))
-            graft.operators.Dedup.verifyJaccard(
-                shingled.select(col("doc_id"), col("sh")).unionByName(storeSh),
-                cand, tau)
-              .select(col("doc_a"), col("doc_b"))
-          }
+        val crossPairs = crossBandPairs(spark, storeDir, batchId, shingled,
+          batchKeys, small, tau)(
+          spark.read.parquet(ArrivalStore.standingDirs(s"$storeDir/corpus", batchId): _*))
         val selfCand = batchKeys.as("a")
           .join(gated(batchKeys.as("b")),
             col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
@@ -331,7 +260,7 @@ object EventStream {
           .select(col("doc_a"), col("doc_b"))
         val newPairs = crossPairs.unionByName(selfPairs)
           .transform(graft.Caches.scoped(_)) // merge endpoints + delta CC
-        val labelDirs = standingDirs(s"$storeDir/labels", batchId)
+        val labelDirs = ArrivalStore.standingDirs(s"$storeDir/labels", batchId)
         val standing =
           if (labelDirs.isEmpty)
             rows.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
@@ -344,23 +273,73 @@ object EventStream {
           .select(col("doc_id"), col("doc_id").as("cluster_id"))
         val labelsOut = delta.unionByName(selfLabels).persist()
         try {
-          labelsOut.write.mode("overwrite")
-            .parquet(s"$storeDir/labels/batch=$batchId")
-          rows.write.mode("overwrite")
-            .parquet(s"$storeDir/corpus/batch=$batchId")
-          batchKeys.write.mode("overwrite")
-            .parquet(s"$storeDir/bands/batch=$batchId")
+          ArrivalStore.commit(labelsOut, s"$storeDir/labels", batchId)
+          ArrivalStore.commit(rows, s"$storeDir/corpus", batchId)
+          ArrivalStore.commit(batchKeys, s"$storeDir/bands", batchId)
         } finally labelsOut.unpersist()
       } finally shingled.unpersist()
     } finally rows.unpersist()
   }
 
+  /** (doc_id, sh, sig) for the docs of a (doc_id, text) frame with at
+    * least 3 words: hashed 3-shingles plus their k-row MinHash
+    * signature — the near-dup and cluster loops' shared shingle pass. */
+  private def shingleSigs(docs: DataFrame, k: Int): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+      .filter(size(col("w")) >= 3)
+      .select(col("doc_id"),
+        graft.functions.HashedShingles.hashed_shingles(col("w"), 3).as("sh"),
+        graft.functions.MinHashShingled.minhash_shingled(col("w"), 3, k).as("sig"))
+
+  /** (doc_id, band, bh) MinHash band keys of a (doc_id, sig) frame. */
+  private def bandKeys(sigDf: DataFrame, k: Int, bands: Int): DataFrame = {
+    val r = k / bands
+    sigDf.select(col("doc_id"),
+      posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
+        s"b -> xxhash64(slice(sig, b*$r + 1, $r), b))")).as(Seq("band", "bh")))
+  }
+
+  /** The CROSS tier of the near-dup and cluster loops: the batch's band
+    * keys collide against the standing `bands/` index (store on the
+    * STREAM side, batch keys gated), the colliding store docs' text is
+    * a collision-bounded point read of `storeText`, and candidates
+    * verify at exact shingle Jaccard ≥ tau. Returns the verified
+    * (doc_a = batch doc, doc_b = store doc) pairs; empty before the
+    * first band dir is standing.
+    */
+  private def crossBandPairs(spark: SparkSession, storeDir: String, batchId: Long,
+                             shingled: DataFrame, batchKeys: DataFrame,
+                             small: Boolean, tau: Double)(
+      storeText: => DataFrame): DataFrame = {
+    val bandDirs = ArrivalStore.standingDirs(s"$storeDir/bands", batchId)
+    if (bandDirs.isEmpty)
+      shingled.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b")).limit(0)
+    else {
+      val cand = spark.read.parquet(bandDirs: _*).as("b")
+        .join(ArrivalStore.gated(small)(batchKeys.as("a")),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+        .transform(graft.Caches.scoped(_)) // store fetch + verification
+      val storeSh = ArrivalStore.fetcher(
+          cand.select(col("doc_b").as("doc_id")), "doc_id", small)(storeText)
+        .select(col("doc_id"), split(col("text"), " ").as("w"))
+        .filter(size(col("w")) >= 3)
+        .select(col("doc_id"),
+          graft.functions.HashedShingles.hashed_shingles(col("w"), 3).as("sh"))
+      graft.operators.Dedup.verifyJaccard(
+          shingled.select(col("doc_id"), col("sh")).unionByName(storeSh),
+          cand, tau)
+        .select(col("doc_a"), col("doc_b"))
+    }
+  }
+
   /** Latest-batch-wins label read over the delta log (reader side of
-    * [[arrivalClusters]]). Empty frame, not a read error, on a store
-    * with no committed batch yet (r14 advice). */
+    * [[arrivalClusters]]; committed dirs only). Empty frame, not a read
+    * error, on a store with no committed batch yet (r14 advice). */
   def arrivalClusterLabels(spark: SparkSession, storeDir: String): DataFrame = {
     val root = s"$storeDir/labels"
-    val dirs = standingDirs(root, Long.MaxValue)
+    val dirs = ArrivalStore.standingDirs(root, Long.MaxValue, committedOnly = true)
     if (dirs.isEmpty)
       spark.range(0).select(col("id").as("doc_id"), col("id").as("cluster_id"))
     else arrivalClusterLabelsFrom(spark, root, dirs)
@@ -465,14 +444,13 @@ object EventStream {
   private def compactSub(spark: SparkSession, root: String,
                          resolve: Seq[String] => DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
-    val (fs, rootP) = fsFor(root)
+    val (fs, rootP) = ArrivalStore.fsFor(root)
     if (!fs.exists(rootP)) return
     val staging = new Path(rootP, "_staging_compact")
     val targetMark = new Path(staging, "_target")
     val committed = fs.exists(new Path(staging, "_SUCCESS")) &&
       fs.exists(targetMark)
-    def batchIdOf(d: String): Long =
-      new Path(d).getName.stripPrefix("batch=").toLong
+    import ArrivalStore.batchIdOf
     val targetId: Long =
       if (committed) {
         // recovery: the id was pinned at the commit point — remaining
@@ -487,8 +465,8 @@ object EventStream {
         // Crashed in-flight dirs (no _SUCCESS): fold nothing from them,
         // delete them so they cannot pin the id — their retry rewrites
         // them wholesale (r14 advice, medium).
-        val all = standingDirs(root, Long.MaxValue)
-        val dirs = standingDirs(root, Long.MaxValue, committedOnly = true)
+        val all = ArrivalStore.standingDirs(root, Long.MaxValue)
+        val dirs = ArrivalStore.standingDirs(root, Long.MaxValue, committedOnly = true)
         (all.toSet -- dirs.toSet).foreach(d => fs.delete(new Path(d), true))
         // Need at least two committed dirs BELOW the (excluded) max for
         // the collapse to gain anything.
@@ -496,7 +474,7 @@ object EventStream {
         val ids = dirs.map(batchIdOf).sorted
         val tid = ids(ids.length - 2) // second-highest: replay safety
         val sources = dirs.filter(batchIdOf(_) <= tid)
-        resolve(sources).write.mode("overwrite").parquet(staging.toString)
+        ArrivalStore.commitTo(resolve(sources), staging.toString)
         val outS = fs.create(targetMark, true)
         try outS.write(tid.toString.getBytes("UTF-8")) // commit point
         finally outS.close()
@@ -506,7 +484,7 @@ object EventStream {
     // alone, because recovery may find a source whose _SUCCESS was
     // already deleted mid-crash. The max dir (id > targetId) is never
     // touched.
-    standingDirs(root, Long.MaxValue).filter(batchIdOf(_) <= targetId)
+    ArrivalStore.standingDirs(root, Long.MaxValue).filter(batchIdOf(_) <= targetId)
       .foreach(d => fs.delete(new Path(d), true))
     if (compactCrashBeforeRename)
       throw new RuntimeException("injected compaction crash before rename")
@@ -515,7 +493,7 @@ object EventStream {
     // staging demoted back to "interrupted write"). Underscore files
     // are invisible to parquet readers, so it is harmless in the live
     // dir and removed best-effort after the swap.
-    val target = new Path(rootP, s"batch=$targetId")
+    val target = new Path(ArrivalStore.batchDir(root, targetId))
     if (!fs.rename(staging, target))
       throw new java.io.IOException(s"compaction rename failed: $staging -> $target")
     fs.delete(new Path(target, "_target"), false)
@@ -537,14 +515,9 @@ object EventStream {
   def arrivalVectors(vectors: DataFrame, storeDir: String,
                      checkpointDir: String, nlist: Int, iters: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Ivf.vectorArrivalBatch(batch, storeDir, batchId,
-          nlist, iters)
-      }
-      .start()
+    ArrivalStore.run(vectors, checkpointDir) { (batch, batchId) =>
+      graft.operators.Ivf.vectorArrivalBatch(batch, storeDir, batchId, nlist, iters)
+    }
 
   /** The fifth arrival loop (r15): streaming SPAN-DEDUP maintenance —
     * the arrival twin of `dedup_substring`, completing the family
@@ -576,13 +549,9 @@ object EventStream {
     */
   def arrivalSpans(docs: DataFrame, storeDir: String, checkpointDir: String,
                    w: Int = 16): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanArrivalBatch(batch, storeDir, batchId, w)
-      }
-      .start()
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      spanArrivalBatch(batch, storeDir, batchId, w)
+    }
 
   /** One span-maintenance arrival batch; see [[arrivalSpans]]. */
   private[graft] def spanArrivalBatch(batch: DataFrame, storeDir: String,
@@ -597,17 +566,15 @@ object EventStream {
       val wins = graft.operators.Dedup
         .windowPostingsFrom(batch.select(col("doc_id"), col("text")), w)
         .transform(graft.Caches.scoped(_)) // posted + probed + flagged + written
-      val winDirs = standingDirs(s"$storeDir/windows", batchId)
       // The standing log is deliberately NOT cached: its three readers
       // below each re-scan the parquet store with column pruning (the
       // multiplicity recount reads `h` alone), so per-batch cache
       // footprint stays O(batch + collisions) — caching the whole log
       // would grow the per-arrival memory bill O(store) as the corpus
       // accumulates, at odds with the loop's own cost story.
-      val standing =
-        if (winDirs.isEmpty) wins.limit(0)
-        else spark.read.option("basePath", s"$storeDir/windows")
-          .parquet(winDirs: _*).select(col("doc_id"), col("pos"), col("h"))
+      val standing = ArrivalStore
+        .readOr(spark, s"$storeDir/windows", batchId, wins.limit(0), withBatchCol = true)
+        .select(col("doc_id"), col("pos"), col("h"))
       val touched = standing
         .join(gated(wins.select(col("h"))), Seq("h"), "left_semi")
         .select(col("doc_id")).distinct()
@@ -630,8 +597,8 @@ object EventStream {
         .join(gated(flagH), Seq("h"), "left_semi")
         .select(col("doc_id"), col("pos"), col("h"))
       val spans = graft.operators.Dedup.mergeIslands(flagged, w)
-      spans.write.mode("overwrite").parquet(s"$storeDir/spans/batch=$batchId")
-      wins.write.mode("overwrite").parquet(s"$storeDir/windows/batch=$batchId")
+      ArrivalStore.commit(spans, s"$storeDir/spans", batchId)
+      ArrivalStore.commit(wins, s"$storeDir/windows", batchId)
     }
 
   /** The seventh arrival loop (r15): streaming VECTOR DEDUP —
@@ -673,14 +640,9 @@ object EventStream {
                          checkpointDir: String, nlist: Int,
                          tau: Double = 0.95, probes: Int = 4, iters: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        vectorDedupArrivalBatch(batch, storeDir, batchId, nlist, tau,
-          probes, iters)
-      }
-      .start()
+    ArrivalStore.run(vectors, checkpointDir) { (batch, batchId) =>
+      vectorDedupArrivalBatch(batch, storeDir, batchId, nlist, tau, probes, iters)
+    }
 
   /** One vector-dedup arrival batch; see [[arrivalVectorDedup]]. */
   private[graft] def vectorDedupArrivalBatch(batch: DataFrame, storeDir: String,
@@ -709,7 +671,7 @@ object EventStream {
         val probed = assigned.select(col("vec_id"), col("probe_cells"),
             explode(col("probe_cells")).as("cell"), col("embedding"), col("nf"))
           .transform(graft.Caches.scoped(_)) // cross tier + survivor prune
-        val dirs = standingDirs(s"$storeDir/cells", batchId, committedOnly = true)
+        val dirs = ArrivalStore.standingDirs(s"$storeDir/cells", batchId, committedOnly = true)
         val crossRejected =
           if (dirs.isEmpty) assigned.select(col("vec_id")).limit(0)
           else probed.join(
@@ -767,13 +729,12 @@ object EventStream {
         // layout-agnostic (`cell` works as a data column), and the
         // index-building arrivalVectors loop keeps its directory
         // layout (its store is corpus-sized, where dir-prune pays).
-        survivorsPool
-          .join(losers, Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), col("embedding"), col("nf"), col("cell"))
-          .repartition(col("cell"))
-          .sortWithinPartitions(col("cell"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/cells/batch=$batchId")
+        ArrivalStore.commit(survivorsPool
+            .join(losers, Seq("vec_id"), "left_anti")
+            .select(col("vec_id"), col("embedding"), col("nf"), col("cell"))
+            .repartition(col("cell"))
+            .sortWithinPartitions(col("cell")),
+          s"$storeDir/cells", batchId)
       } finally base.unpersist()
     }
 
@@ -796,13 +757,9 @@ object EventStream {
   def arrivalPack(docs: DataFrame, storeDir: String, checkpointDir: String,
                   budgetTokens: Long = 50000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packArrivalBatch(batch, storeDir, batchId, budgetTokens)
-      }
-      .start()
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      packArrivalBatch(batch, storeDir, batchId, budgetTokens)
+    }
 
   /** One packing arrival batch; see [[arrivalPack]]. */
   private[graft] def packArrivalBatch(batch: DataFrame, storeDir: String,
@@ -810,13 +767,7 @@ object EventStream {
                                       budgetTokens: Long): Unit =
     graft.Caches.withScope {
       val spark = batch.sparkSession
-      val metaDirs = standingDirs(s"$storeDir/meta", batchId)
-      val start: Long =
-        if (metaDirs.isEmpty) 0L
-        else spark.read.option("basePath", s"$storeDir/meta")
-          .parquet(metaDirs: _*)
-          .orderBy(col("batch").cast("long").desc)
-          .select(col("end_offset")).head().getLong(0)
+      val start = standingOffset(spark, storeDir, batchId)
       val nBlocks = math.max(32, spark.sparkContext.defaultParallelism * 4)
       val toks = batch
         .withColumn("ts", graft.operators.TextAnalysis.statsCol)
@@ -827,15 +778,33 @@ object EventStream {
         .packCore(toks, budgetTokens, startOffset = start)
         .persist() // assignment write + the offset aggregate
       try {
-        packed.write.mode("overwrite")
-          .parquet(s"$storeDir/packed/batch=$batchId")
-        val batchTokens = Option(packed.agg(sum(col("n_tokens"))).head().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        import spark.implicits._
-        Seq(start + batchTokens).toDF("end_offset").repartition(1)
-          .write.mode("overwrite").parquet(s"$storeDir/meta/batch=$batchId")
+        ArrivalStore.commit(packed, s"$storeDir/packed", batchId)
+        commitOffset(spark, storeDir, batchId, start, packed)
       } finally packed.unpersist()
     }
+
+  /** The packing loops' standing offset: the `end_offset` of the
+    * newest `meta/` row committed before `batchId`, 0 on a fresh store. */
+  private def standingOffset(spark: SparkSession, storeDir: String,
+                             batchId: Long): Long = {
+    val metaDirs = ArrivalStore.standingDirs(s"$storeDir/meta", batchId)
+    if (metaDirs.isEmpty) 0L
+    else spark.read.option("basePath", s"$storeDir/meta")
+      .parquet(metaDirs: _*)
+      .orderBy(col("batch").cast("long").desc)
+      .select(col("end_offset")).head().getLong(0)
+  }
+
+  /** Commit batch `batchId`'s one-row `meta/` offset: `start` advanced
+    * by the `n_tokens` sum of the batch's rows. */
+  private def commitOffset(spark: SparkSession, storeDir: String, batchId: Long,
+                           start: Long, rows: DataFrame): Unit = {
+    val batchTokens = Option(rows.agg(sum(col("n_tokens"))).head().get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    import spark.implicits._
+    ArrivalStore.commit(Seq(start + batchTokens).toDF("end_offset").repartition(1),
+      s"$storeDir/meta", batchId)
+  }
 
   /** The tokenized-sequence arrival loop (r18): streaming twin of
     * [[graft.operators.Bpe.sequencePack]] — the TENSOR-FEED product
@@ -872,13 +841,9 @@ object EventStream {
                           checkpointDir: String, merges: Array[String],
                           ctxLen: Int = 512)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        seqPackArrivalBatch(batch, storeDir, batchId, merges, ctxLen)
-      }
-      .start()
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      seqPackArrivalBatch(batch, storeDir, batchId, merges, ctxLen)
+    }
 
   /** One tokenized-sequence arrival batch; see [[arrivalSequencePack]]. */
   private[graft] def seqPackArrivalBatch(batch: DataFrame, storeDir: String,
@@ -887,36 +852,28 @@ object EventStream {
     graft.Caches.withScope {
       require(ctxLen > 0, s"ctxLen must be positive, got $ctxLen")
       val spark = batch.sparkSession
-      val metaDirs = standingDirs(s"$storeDir/meta", batchId)
-      val start: Long =
-        if (metaDirs.isEmpty) 0L
-        else spark.read.option("basePath", s"$storeDir/meta")
-          .parquet(metaDirs: _*)
-          .orderBy(col("batch").cast("long").desc)
-          .select(col("end_offset")).head().getLong(0)
+      val start = standingOffset(spark, storeDir, batchId)
       val coord = graft.operators.Bpe.tokenCoordinates(
           batch.select(col("doc_id"), col("text").as("clean_text")),
           merges, blocks = 0, startOffset = start)
         .transform(graft.Caches.scoped(_)) // fragment write + offset sum
-      graft.operators.Bpe.tokenFragments(coord, ctxLen)
-        .write.mode("overwrite").parquet(s"$storeDir/seqs/batch=$batchId")
-      val batchTokens = Option(coord.agg(sum(col("n_tokens"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      import spark.implicits._
-      Seq(start + batchTokens).toDF("end_offset").repartition(1)
-        .write.mode("overwrite").parquet(s"$storeDir/meta/batch=$batchId")
+      ArrivalStore.commit(graft.operators.Bpe.tokenFragments(coord, ctxLen),
+        s"$storeDir/seqs", batchId)
+      commitOffset(spark, storeDir, batchId, start, coord)
     }
 
   /** Reader over [[arrivalSequencePack]]'s store: reassembles every
     * committed batch's fragments with the batch packer's own tail
     * (same output schema — seq_id, tokens of exactly ctxLen, n_pad;
     * only the stream's final sequence pads). Empty frame on a fresh
-    * store. `merges` must be the table the loop was started with (it
-    * determines the pad id, exactly as it determined every other id).
+    * store; committed dirs only. `merges` must be the table the loop
+    * was started with (it determines the pad id, exactly as it
+    * determined every other id).
     */
   def arrivalSequences(spark: SparkSession, storeDir: String,
                        merges: Array[String], ctxLen: Int = 512): DataFrame = {
-    val dirs = standingDirs(s"$storeDir/seqs", Long.MaxValue)
+    val dirs = ArrivalStore.standingDirs(s"$storeDir/seqs", Long.MaxValue,
+      committedOnly = true)
     if (dirs.isEmpty)
       spark.range(0).select(col("id").as("seq_id"),
         expr("array()").cast("array<int>").as("tokens"),
@@ -931,22 +888,21 @@ object EventStream {
     * assignments (docs are disjoint across batches by the upstream
     * dedup contract). Empty frame on a fresh store.
     */
-  def arrivalPacked(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = standingDirs(s"$storeDir/packed", Long.MaxValue)
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").as("doc_id"),
-        col("id").as("n_tokens"), col("id").as("shard_id"))
-    else spark.read.option("basePath", s"$storeDir/packed").parquet(dirs: _*)
+  def arrivalPacked(spark: SparkSession, storeDir: String): DataFrame =
+    ArrivalStore.readOr(spark, s"$storeDir/packed", Long.MaxValue,
+        spark.range(0).select(col("id").as("doc_id"),
+          col("id").as("n_tokens"), col("id").as("shard_id")),
+        committedOnly = true, withBatchCol = true)
       .select(col("doc_id"), col("n_tokens"), col("shard_id"))
       .orderBy(col("doc_id"))
-  }
 
   /** Latest-batch-wins span read over [[arrivalSpans]]' delta log —
     * the standing removal list, schema-identical to `dedup_substring`.
     * Empty frame on a store with no committed batch.
     */
   def arrivalSpanList(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = standingDirs(s"$storeDir/spans", Long.MaxValue)
+    val dirs = ArrivalStore.standingDirs(s"$storeDir/spans", Long.MaxValue,
+      committedOnly = true)
     if (dirs.isEmpty)
       spark.range(0).select(col("id").as("doc_id"),
         col("id").as("span_start"), col("id").as("span_end"),
@@ -1014,13 +970,9 @@ object EventStream {
   def arrivalCorpus(docs: DataFrame, storeDir: String, checkpointDir: String,
                     minQuality: Double = 0.5, tau: Double = 0.8, w: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        corpusArrivalBatch(batch, storeDir, batchId, minQuality, tau, w)
-      }
-      .start()
+    ArrivalStore.run(docs, checkpointDir) { (batch, batchId) =>
+      corpusArrivalBatch(batch, storeDir, batchId, minQuality, tau, w)
+    }
 
   /** One composed-pipeline arrival batch; see [[arrivalCorpus]]. */
   private[graft] def corpusArrivalBatch(batch: DataFrame, storeDir: String,
@@ -1044,7 +996,7 @@ object EventStream {
         .agg(min(col("doc_id")).as("doc_id"),
           min_by(col("source"), col("doc_id")).as("source"),
           first(col("text")).as("text"))
-      val hashDirs = standingDirs(s"$storeDir/hashes", batchId)
+      val hashDirs = ArrivalStore.standingDirs(s"$storeDir/hashes", batchId)
       val newContent =
         if (hashDirs.isEmpty) winners
         else ArrivalStore.antiStore(winners,
@@ -1064,7 +1016,7 @@ object EventStream {
         .transform(graft.Caches.scoped(_)) // cross + self candidate joins + write
       // Cross tier: exact prefix-filter candidates against every seen
       // doc's standing posting index; store side is doc_a (earlier).
-      val preDirs = standingDirs(s"$storeDir/prefix", batchId)
+      val preDirs = ArrivalStore.standingDirs(s"$storeDir/prefix", batchId)
       val crossRejected =
         if (preDirs.isEmpty) shingled.select(col("doc_id")).limit(0)
         else {
@@ -1081,7 +1033,7 @@ object EventStream {
           val storeSh = ArrivalStore.fetcher(
               cand.select(col("doc_a").as("doc_id")), "doc_id", small)(
             spark.read
-              .parquet(standingDirs(s"$storeDir/shingles", batchId): _*)
+              .parquet(ArrivalStore.standingDirs(s"$storeDir/shingles", batchId): _*)
               .select(col("doc_id"), col("sh")))
           // verification inputs are already batch/collision-bounded;
           // the store-array union never broadcasts (the Clusters
@@ -1115,15 +1067,12 @@ object EventStream {
         .transform(graft.Caches.scoped(_)) // touched probe + flag union + write
       // Standing logs re-scanned column-pruned, never cached (the
       // spanArrivalBatch footprint argument).
-      val winDirs = standingDirs(s"$storeDir/windows", batchId)
-      val standingWins =
-        if (winDirs.isEmpty) batchWins.limit(0)
-        else spark.read.parquet(winDirs: _*)
-          .select(col("doc_id"), col("pos"), col("h"))
-      val twDirs = standingDirs(s"$storeDir/testwin", batchId)
-      val standingTestH =
-        if (twDirs.isEmpty) batchTestH.limit(0)
-        else spark.read.parquet(twDirs: _*).select(col("h"))
+      val standingWins = ArrivalStore
+        .readOr(spark, s"$storeDir/windows", batchId, batchWins.limit(0))
+        .select(col("doc_id"), col("pos"), col("h"))
+      val standingTestH = ArrivalStore
+        .readOr(spark, s"$storeDir/testwin", batchId, batchTestH.limit(0))
+        .select(col("h"))
       // Touched standing train docs: collide with the batch's new train
       // windows (count can reach 2) OR its new test vocabulary (newly
       // leaked span).
@@ -1161,7 +1110,7 @@ object EventStream {
       // Clean-text delta: batch train docs + touched standing docs,
       // re-cut from ORIGINAL text on original word offsets (one merged
       // cut — the corpusFull seam argument).
-      val corpusDirs = standingDirs(s"$storeDir/corpus", batchId)
+      val corpusDirs = ArrivalStore.standingDirs(s"$storeDir/corpus", batchId)
       val emitDocs =
         if (corpusDirs.isEmpty) // no standing corpus => touched is empty
           train.select(col("doc_id"), col("source"), col("wd"))
@@ -1183,15 +1132,11 @@ object EventStream {
             .as("clean_text"),
           (size(col("wd")).cast("long") - coalesce(col("n_removed"), lit(0L)))
             .as("n_tokens"))
-      cleanOut.write.mode("overwrite").parquet(s"$storeDir/clean/batch=$batchId")
-      base.select(col("text_hash")).write.mode("overwrite")
-        .parquet(s"$storeDir/hashes/batch=$batchId")
-      batchPre.write.mode("overwrite").parquet(s"$storeDir/prefix/batch=$batchId")
-      shingled.write.mode("overwrite").parquet(s"$storeDir/shingles/batch=$batchId")
-      train.select(col("doc_id"), col("source"), col("text"))
-        .write.mode("overwrite").parquet(s"$storeDir/corpus/batch=$batchId")
-      batchWins.write.mode("overwrite").parquet(s"$storeDir/windows/batch=$batchId")
-      batchTestH.write.mode("overwrite").parquet(s"$storeDir/testwin/batch=$batchId")
+      Seq("clean" -> cleanOut, "hashes" -> base.select(col("text_hash")),
+          "prefix" -> batchPre, "shingles" -> shingled,
+          "corpus" -> train.select(col("doc_id"), col("source"), col("text")),
+          "windows" -> batchWins, "testwin" -> batchTestH)
+        .foreach { case (sub, df) => ArrivalStore.commit(df, s"$storeDir/$sub", batchId) }
     }
 
   /** Materialize the packed TRAIN corpus from an [[arrivalCorpus]]
@@ -1252,7 +1197,7 @@ object EventStream {
     // committedOnly: this is a SERVING-class materialization, so a
     // crashed in-flight batch dir (no _SUCCESS) must be invisible —
     // ArrivalStore discipline 2 (r16 advice).
-    val dirs = standingDirs(s"$storeDir/clean", Long.MaxValue,
+    val dirs = ArrivalStore.standingDirs(s"$storeDir/clean", Long.MaxValue,
       committedOnly = true)
     if (dirs.isEmpty) return None
     // pricing knob (r17, verdict item 4 — the batch twin's contract,
@@ -1318,64 +1263,34 @@ object EventStream {
     // broadcast probes with zero exchange.
     val small = ArrivalStore.smallBatch(batch)
     def gated(df: DataFrame): DataFrame = ArrivalStore.gated(small)(df)
-    val r = k / bands
-    def bandKeys(sigDf: DataFrame): DataFrame = sigDf.select(col("doc_id"),
-      posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
-        s"b -> xxhash64(slice(sig, b*$r + 1, $r), b))")).as(Seq("band", "bh")))
     // Tier 1: exact — copies of one content share its text byte-exactly,
     // so any(text) is deterministic in value under the md5 group.
     val winners = batch
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("batch_copies"),
         first(col("text")).as("text"))
-    val seenDirs = standingDirs(s"$storeDir/hashes", batchId)
+    val seenDirs = ArrivalStore.standingDirs(s"$storeDir/hashes", batchId)
     val exactOk = (
       if (seenDirs.isEmpty) winners
       else ArrivalStore.antiStore(winners,
         spark.read.parquet(seenDirs: _*), Seq("text_hash"), small))
       .persist() // hash write + shingle pass + accepted assembly
     try {
-      val shingled = exactOk
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"),
-          graft.functions.HashedShingles.hashed_shingles(col("w"), 3).as("sh"),
-          graft.functions.MinHashShingled.minhash_shingled(col("w"), 3, k).as("sig"))
+      val shingled = shingleSigs(exactOk, k)
         .persist() // cross tier + self tier + band write
       try {
         // Tier 2: cross near-dup against the standing band index.
-        val bandDirs = standingDirs(s"$storeDir/bands", batchId)
-        val crossRejected =
-          if (bandDirs.isEmpty) shingled.select(col("doc_id")).limit(0)
-          else {
-            // standing band index on the STREAM side, batch keys gated
-            val cand = spark.read.parquet(bandDirs: _*).as("b")
-              .join(gated(bandKeys(shingled).as("a")),
-                col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-              .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-              .distinct()
-              .transform(graft.Caches.scoped(_)) // store fetch + verification
-            // collision-bounded point read of the accepted corpus
-            val storeSh = ArrivalStore.fetcher(
-                cand.select(col("doc_b").as("doc_id")), "doc_id", small)(
-              spark.read
-                .option("basePath", s"$storeDir/accepted")
-                .parquet(standingDirs(s"$storeDir/accepted", batchId): _*))
-              .select(col("doc_id"), split(col("text"), " ").as("w"))
-              .filter(size(col("w")) >= 3)
-              .select(col("doc_id"),
-                graft.functions.HashedShingles.hashed_shingles(col("w"), 3).as("sh"))
-            graft.operators.Dedup.verifyJaccard(
-                shingled.select(col("doc_id"), col("sh")).unionByName(storeSh),
-                cand, tau)
-              .select(col("doc_a").as("doc_id")).distinct()
-          }
+        val crossRejected = crossBandPairs(spark, storeDir, batchId, shingled,
+            bandKeys(shingled, k, bands), small, tau)(
+            spark.read.option("basePath", s"$storeDir/accepted")
+              .parquet(ArrivalStore.standingDirs(s"$storeDir/accepted", batchId): _*))
+          .select(col("doc_a").as("doc_id")).distinct()
         // Tier 3: within-batch near-dup among the remaining survivors.
         val selfSh = shingled
           .join(gated(crossRejected), Seq("doc_id"), "left_anti")
           .transform(graft.Caches.scoped(_))
-        val selfCand = bandKeys(selfSh).as("a")
-          .join(gated(bandKeys(selfSh).as("b")),
+        val selfCand = bandKeys(selfSh, k, bands).as("a")
+          .join(gated(bandKeys(selfSh, k, bands).as("b")),
             col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -1395,16 +1310,14 @@ object EventStream {
             col("text"))
           .persist() // corpus write + band-key write
         try {
-          accepted.write.mode("overwrite")
-            .parquet(s"$storeDir/accepted/batch=$batchId")
+          ArrivalStore.commit(accepted, s"$storeDir/accepted", batchId)
           // Every SEEN content's hash (tier-1 note above), not just
           // the accepted ones.
-          exactOk.select(col("text_hash")).write.mode("overwrite")
-            .parquet(s"$storeDir/hashes/batch=$batchId")
-          bandKeys(shingled
-              .join(accepted.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/bands/batch=$batchId")
+          ArrivalStore.commit(exactOk.select(col("text_hash")),
+            s"$storeDir/hashes", batchId)
+          ArrivalStore.commit(bandKeys(shingled
+              .join(accepted.select(col("doc_id")), Seq("doc_id"), "left_semi"), k, bands),
+            s"$storeDir/bands", batchId)
         } finally accepted.unpersist()
       } finally shingled.unpersist()
     } finally exactOk.unpersist()
@@ -1625,6 +1538,8 @@ object EventStream {
               .mode(org.apache.spark.sql.SaveMode.Overwrite)
               .partitionBy("date")
               .parquet(staging.toString)
+            // the staged tree's commit point, which recoverStagedSwap reads
+            ArrivalStore.markCommitted(staging.toString)
             MergeStats.recordStaged(System.nanoTime() - s0)
             val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
             if (manyDates) {

@@ -1014,4 +1014,30 @@ class PlanSpec extends AnyFunSuite {
         s"$name lost the single-partition presentation exchange")
     }
   }
+
+  test("the arrival-store layout and stream shell are written only in ArrivalStore") {
+    // One commit path for the arrival loops: the batch-dir layout (the
+    // `batch=$` interpolation and its parse) and the foreachBatch shell
+    // live in ArrivalStore alone. Besides it, only signedExport (an
+    // update-mode query over a date-partitioned store) and StreamBench's
+    // noop sink start a query of their own.
+    val root = new java.io.File("src/main/scala/graft")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val srcs = walk(root).map(f => f.getPath.stripPrefix("src/main/scala/graft/") ->
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    def sites(needle: String): Map[String, Int] = srcs.collect {
+      case (rel, src) if src.contains(needle) =>
+        rel -> (src.length - src.replace(needle, "").length) / needle.length
+    }.toMap
+    for (needle <- Seq("batch=$", "stripPrefix(\"batch=\")"))
+      assert(sites(needle).keySet == Set("streaming/ArrivalStore.scala"),
+        s"arrival batch-dir layout hand-rolled outside ArrivalStore: $needle in ${sites(needle)}")
+    val shells = sites("writeStream")
+    assert(shells - "streaming/ArrivalStore.scala" ==
+        Map("streaming/EventStream.scala" -> 1, "StreamBench.scala" -> 1) &&
+        shells.contains("streaming/ArrivalStore.scala"),
+      s"a streaming query shell outside ArrivalStore.run: $shells")
+  }
 }

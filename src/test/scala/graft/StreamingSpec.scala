@@ -1318,4 +1318,210 @@ class StreamingSpec extends AnyFunSuite {
     assert(ArrivalStore.smallBatch(one))
     assert(!ArrivalStore.smallBatch(one, maxTextBytes = 0L))
   }
+
+  // ---- one commit path: markers, committed readers, crash at every commit ----
+
+  private val MarkerKey = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+  /** Run `body` with the Hadoop committer's `_SUCCESS` marker disabled
+    * on the session, so only the store's own commit step can mark. */
+  private def markersOff[T](body: => T): T = {
+    spark.conf.set(MarkerKey, "false")
+    try body finally spark.conf.unset(MarkerKey)
+  }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def rm(paths: String*): Unit = paths.foreach(p =>
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Every subtree of a store (batch dirs read as the `batch` column),
+    * as sorted rows — the store's whole observable state. */
+  private def storeSnapshot(store: String): Map[String, Seq[String]] =
+    new java.io.File(store).listFiles().toSeq
+      .filter(f => f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => f.getName -> rowsOf(spark.read.parquet(f.getPath))).toMap
+
+  private def fixtureWords(p: String, n: Int): String =
+    (0 until n).map(i => s"$p$i").mkString(" ")
+
+  /** Three tiny arrival batches whose later batches depend on standing
+    * state: exact repeats, near-dups (one appended word on a 20-word
+    * base), a shared 8-word run, and a within-batch near-dup pair. */
+  private lazy val textChunks: Seq[Seq[(Long, String)]] = Seq(
+    Seq(10L -> s"${fixtureWords("alpha", 20)} ${fixtureWords("sigma", 8)}",
+      11L -> fixtureWords("beta", 30)),
+    Seq(20L -> s"${fixtureWords("alpha", 20)} alphaX",
+      21L -> s"${fixtureWords("gamma", 20)} ${fixtureWords("sigma", 8)}",
+      22L -> fixtureWords("beta", 30)),
+    Seq(30L -> s"${fixtureWords("alpha", 20)} alphaX alphaY",
+      31L -> s"${fixtureWords("delta", 20)} ${fixtureWords("sigma", 8)}",
+      32L -> fixtureWords("omega", 25), 33L -> s"${fixtureWords("omega", 25)} omegaX"))
+
+  private lazy val vecChunks: Seq[Seq[(Long, Seq[Float])]] = Seq(
+    Seq(1L -> Seq(1f, 0f, 0f, 0f), 2L -> Seq(0f, 1f, 0f, 0f),
+      3L -> Seq(1.02f, 0f, 0f, 0f)),
+    Seq(4L -> Seq(0f, 0.98f, 0f, 0f), 5L -> Seq(0f, 0f, 1f, 0f)),
+    Seq(6L -> Seq(0f, 0f, 0.97f, 0f), 7L -> Seq(0f, 0f, 0f, 1f),
+      8L -> Seq(0f, 0f, 0f, 1.01f)))
+
+  private lazy val fixtureMerges =
+    graft.operators.Bpe.train(Seq(("aaaa", 9L), ("bb", 5L)), 4)
+
+  /** The nine `*ArrivalBatch` functions, each as (store, batch index)
+    * => run that fixture batch. */
+  private lazy val arrivalLoops: Seq[(String, (String, Int) => Unit)] = {
+    import spark.implicits._
+    def docs(i: Int) = textChunks(i).toDF("doc_id", "text")
+    def vecs(i: Int) = vecChunks(i).toDF("vec_id", "embedding")
+    Seq(
+      "dedup" -> ((st, i) => EventStream.dedupArrivalBatch(docs(i), st, i)),
+      "nearDup" -> ((st, i) =>
+        EventStream.nearDupArrivalBatch(docs(i), st, i, 0.9, 64, 16)),
+      "clusters" -> ((st, i) =>
+        EventStream.clusterArrivalBatch(docs(i), st, i, 0.9, 64, 16)),
+      "spans" -> ((st, i) => EventStream.spanArrivalBatch(docs(i), st, i, 4)),
+      "vectorDedup" -> ((st, i) =>
+        EventStream.vectorDedupArrivalBatch(vecs(i), st, i, 2, 0.95, 2, 4)),
+      "vectors" -> ((st, i) => graft.operators.Ivf.vectorArrivalBatch(vecs(i), st, i, 2)),
+      "pack" -> ((st, i) => EventStream.packArrivalBatch(docs(i), st, i, 10L)),
+      "sequencePack" -> ((st, i) =>
+        EventStream.seqPackArrivalBatch(docs(i), st, i, fixtureMerges, 5)),
+      "corpus" -> ((st, i) => EventStream.corpusArrivalBatch(
+        docs(i).select(col("doc_id"), lit("src0").as("source"), col("text")),
+        st, i, 0.2, 0.8, 4)))
+  }
+
+  private def loop(name: String): (String, Int) => Unit =
+    arrivalLoops.find(_._1 == name).get._2
+
+  test("arrival store compaction with the committer's markers off equals the markers-on run") {
+    import spark.implicits._
+    def build(): String = {
+      val store = tmpDir("graft_marker_compact")
+      Seq(Seq((10L, "aaa"), (11L, "bbb")), Seq((12L, "aaa"), (13L, "ccc")),
+          Seq((14L, "ddd"), (15L, "eee")), Seq((16L, "fff"), (17L, "bbb"), (18L, "ggg")))
+        .zipWithIndex.foreach { case (rows, i) =>
+          EventStream.dedupArrivalBatch(rows.toDF("doc_id", "text"), store, i.toLong)
+        }
+      EventStream.compactArrivalStore(spark, store)
+      store
+    }
+    val on = build()
+    val off = markersOff(build())
+    def accepted(store: String) = rowsOf(EventStream.arrivalAccepted(spark, store))
+    assert(accepted(on).size == 7, s"markers-on fixture: ${accepted(on)}")
+    assert(accepted(off) == accepted(on),
+      s"compaction with markers off lost committed batches: ${accepted(off)}")
+    assert(storeSnapshot(off) == storeSnapshot(on),
+      "markers-off compacted store differs from the markers-on one")
+    rm(on, off)
+  }
+
+  test("staged-commit swap survives a crash between delete and rename with the committer's markers off") {
+    val ev = Tables.events(spark, dir)
+    val srcDir = tmpDir("graft_mcrash_src")
+    val storeDir = tmpDir("graft_mcrash_store") + "/store"
+    val ckpt = tmpDir("graft_mcrash_ckpt")
+    ev.repartition(3).write.mode("overwrite").parquet(srcDir)
+    def run(store: String, checkpoint: String): Unit = {
+      val q = EventStream.signedExport(
+        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(srcDir),
+        store, checkpoint)
+      try q.processAllAvailable() finally q.stop()
+    }
+    val victim = graft.etl.MetricsQueries.metrics(spark, dir)
+      .agg(min(col("date"))).head.getString(0)
+    val refStore = tmpDir("graft_mcrash_ref") + "/store"
+    val refCkpt = tmpDir("graft_mcrash_refckpt")
+    markersOff {
+      EventStream.crashAfterDeleteOf = Some(victim)
+      try intercept[Throwable](run(storeDir, ckpt))
+      finally EventStream.crashAfterDeleteOf = None
+      assert(new java.io.File(s"$storeDir.staging/_SUCCESS").exists,
+        "staged tree carries no commit marker — recovery would discard it")
+      run(storeDir, ckpt)
+      run(refStore, refCkpt)
+    }
+    assert(new java.io.File(s"$storeDir/date=$victim").exists)
+    def rows(p: String) = spark.read.parquet(p)
+      .withColumn("date", col("date").cast("string"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(rows(storeDir) == rows(refStore),
+      "crashed-and-replayed store diverges from the uninterrupted run")
+    rm(srcDir, storeDir, ckpt, refStore, refCkpt)
+  }
+
+  test("ivf arrival centroids stay frozen at the first batch with the committer's markers off") {
+    val store = tmpDir("graft_marker_cents")
+    def centroids() = rowsOf(spark.read.parquet(s"$store/centroids"))
+    markersOff {
+      loop("vectors")(store, 0)
+      val frozen = centroids()
+      loop("vectors")(store, 1)
+      loop("vectors")(store, 2)
+      assert(centroids() == frozen, "a later batch retrained the frozen quantizer")
+    }
+    rm(store)
+  }
+
+  test("public arrival readers serve committed batches only (ArrivalStore discipline 2)") {
+    val readers: Seq[(String, String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      ("dedup", "accepted", st => EventStream.arrivalAccepted(spark, st)),
+      ("clusters", "labels", st => EventStream.arrivalClusterLabels(spark, st)),
+      ("pack", "packed", st => EventStream.arrivalPacked(spark, st)),
+      ("sequencePack", "seqs", st => EventStream.arrivalSequences(spark, st, fixtureMerges, 5)),
+      ("spans", "spans", st => EventStream.arrivalSpanList(spark, st)),
+      // one source at a 100 % budget: the mix keeps every train doc
+      ("corpus", "clean", st => EventStream.arrivalCorpusTrain(spark, st,
+        weights = Map.empty, budgetPct = 100, budgetTokens = 20L)))
+    for ((name, sub, read) <- readers) {
+      val store = tmpDir(s"graft_committed_$name")
+      loop(name)(store, 0)
+      val before = rowsOf(read(store))
+      loop(name)(store, 1)
+      assert(rowsOf(read(store)) != before, s"$name: fixture batch 1 adds no rows")
+      // a crash inside batch 1's job commit: part files, no marker
+      assert(new java.io.File(s"$store/$sub/batch=1/_SUCCESS").delete())
+      assert(rowsOf(read(store)) == before,
+        s"$name reader served the uncommitted batch 1 of $sub/")
+      graft.Caches.release()
+      rm(store)
+    }
+  }
+
+  test("crash at every commit: each arrival loop re-runs batch 2 to the uninterrupted store") {
+    // No hook: each crash is the on-disk state a kill at that commit
+    // point leaves — (i) no batch-2 dir written, (ii) every sub but one
+    // committed, (iii) every batch-2 dir written without its marker.
+    for ((name, run) <- arrivalLoops) {
+      val store = tmpDir(s"graft_crash_$name")
+      (0 to 2).foreach(run(store, _))
+      val want = storeSnapshot(store)
+      val subs = want.keys.toSeq.sorted
+        .filter(sub => new java.io.File(s"$store/$sub/batch=2").isDirectory)
+      assert(subs.nonEmpty, s"$name wrote no batch-2 dir")
+      def dir2(sub: String) = new java.io.File(s"$store/$sub/batch=2")
+      def rerun(label: String): Unit = {
+        run(store, 2)
+        assert(storeSnapshot(store) == want, s"$name: re-run after $label diverged")
+        subs.foreach(sub => assert(new java.io.File(dir2(sub), "_SUCCESS").exists,
+          s"$name: $sub/batch=2 re-committed without a marker after $label"))
+      }
+      subs.foreach(sub => org.apache.commons.io.FileUtils.deleteDirectory(dir2(sub)))
+      rerun("losing every batch-2 dir")
+      subs.foreach { sub =>
+        org.apache.commons.io.FileUtils.deleteDirectory(dir2(sub))
+        rerun(s"losing $sub/batch=2 only")
+      }
+      subs.foreach(sub => assert(new java.io.File(dir2(sub), "_SUCCESS").delete()))
+      rerun("stripping every batch-2 marker")
+      graft.Caches.release()
+      rm(store)
+    }
+  }
 }
