@@ -140,7 +140,7 @@ object SparkEntry {
     "pipeline_corpus_train" -> ((s, d) => Pipeline.corpusTrain(s, d)),
     "pipeline_corpus_full"  -> ((s, d) => Pipeline.corpusFull(s, d)),
     // the BPE-priced tail (r17): same cleaning stages, pack budget and
-    // n_tokens billed in subword tokens under the per-source-mtime
+    // n_tokens billed in subword tokens under the per-source-stamp
     // merge table. Rows-only — the merge loop is not SQL-expressible;
     // CurationSpec gates it against a sequential fold over the per-doc
     // subword counts of the same mixed set.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *     collected state is bounded by knob, the same SURVEY §5
   *     exception class as the IVF centroid matrix; ties break
   *     lexicographically so retraining is bit-deterministic.
-  *   - [[mergesFor]]: merges memoized per (path, source mtime) — the
-  *     immutable-store keying every derived artifact in the repo uses.
+  *   - [[mergesFor]]: merges memoized per [[Stores.derivedPath]] key
+  *     (the documents listing stamp + the merge count) — the one key
+  *     every derived store in the repo uses.
   *   - `text_tokens_bpe` ([[tokensBpe]]): per-doc whitespace vs BPE
   *     counts through the codegen'd [[graft.functions.BpeCount]]
   *     kernel (one text scan; the merge table rides as a broadcast
@@ -106,12 +107,11 @@ object Bpe {
   private val mergeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
 
-  /** Merge table for a corpus dir, trained once per source mtime. */
+  /** Merge table for a corpus dir, trained once per derived-store key
+    * ([[Stores.derivedPath]]: a regenerated source is a new key). */
   private[graft] def mergesFor(spark: SparkSession, dir: String,
                                numMerges: Int = DefaultMerges): Array[String] = {
-    val key = Tables.pathSlug(dir) + "_" +
-      java.lang.Long.toHexString(Tables.sourceStamp(dir, "documents")) +
-      "_" + numMerges
+    val key = Stores.derivedPath(spark, "bpe_merges", dir, "documents", numMerges.toString)
     mergeCache.computeIfAbsent(key, _ => {
       val n = Tables.parquetRowCount(spark, dir, "documents")
       val every = math.max(1L, n / SampleDocs)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Stores
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -539,11 +540,12 @@ object Clusters {
     * cluster path (r14 verdict item 1: the [[clustersIncremental]]
     * registered row re-derived the FULL pair graph and re-ran CC over
     * the store side on every call — measured 8.68 s at sf10 against
-    * the 3.59 s full recompute it is supposed to undercut). Built once
-    * per source mtime (same keying discipline as
-    * [[Dedup.buildIncrementalStore]]; `_SUCCESS` guards half-written
-    * trees), holding the three tables a production pipeline keeps
-    * between arrivals:
+    * the 3.59 s full recompute it is supposed to undercut). A
+    * [[Stores.derived]] store keyed by the documents table's listing
+    * stamp, tau and the batch bucket (the same key as
+    * [[Dedup.buildIncrementalStore]]; reused only once all three tables
+    * are committed), holding the three tables a production pipeline
+    * keeps between arrivals:
     *   - `labels/`   — the standing corpus's resolved (doc_id,
     *     cluster_id) star table: CC over the store-side exact pair
     *     graph runs at BUILD time, never at serve time;
@@ -557,27 +559,19 @@ object Clusters {
     */
   def buildIncrementalClusterStore(spark: SparkSession, dir: String,
                                    tau: Double = 0.8,
-                                   batchBucket: Int = 80): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_clstore_" +
-      graft.sources.Tables.pathSlug(dir) + "_" +
-      java.lang.Long.toHexString(
-        graft.sources.Tables.sourceStamp(dir, "documents")) +
-      "_" + tau + "_" + batchBucket
-    val done = Seq("labels", "postings", "shingles").forall(sub =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, sub, "_SUCCESS")))
-    if (!done) graft.Caches.withScope {
-      Dedup.shingledHashed(spark, dir)
-        .filter(Curation.splitBucket(col("doc_id")) < batchBucket)
-        .write.mode("overwrite").parquet(s"$path/shingles")
-      val storeSh = spark.read.parquet(s"$path/shingles")
-      Dedup.prefixPostings(storeSh, tau)
-        .write.mode("overwrite").parquet(s"$path/postings")
-      connectedComponents(spark,
-        Dedup.ngramJaccardFrom(storeSh, tau).select(col("doc_a"), col("doc_b")))
-        .write.mode("overwrite").parquet(s"$path/labels")
+                                   batchBucket: Int = 80): String =
+    Stores.derived(spark, "clstore", dir, "documents", s"${tau}_$batchBucket")(
+        "labels", "postings", "shingles") { path =>
+      graft.Caches.withScope {
+        Stores.commitTo(Dedup.shingledHashed(spark, dir)
+          .filter(Curation.splitBucket(col("doc_id")) < batchBucket), s"$path/shingles")
+        val storeSh = Stores.read(spark, s"$path/shingles")
+        Stores.commitTo(Dedup.prefixPostings(storeSh, tau), s"$path/postings")
+        Stores.commitTo(connectedComponents(spark,
+          Dedup.ngramJaccardFrom(storeSh, tau).select(col("doc_a"), col("doc_b"))),
+          s"$path/labels")
+      }
     }
-    path
-  }
 
   /** `dedup_clusters_incremental_serve`: [[clustersIncremental]]'s
     * store-resident twin — identical merged output, gated by the same
@@ -598,7 +592,7 @@ object Clusters {
     val path = buildIncrementalClusterStore(spark, dir, tau, batchBucket)
     val batchPairs = serveBatchPairs(spark, dir, tau, batchBucket, path)
     decorate(mergeIncrementalLabels(spark,
-      spark.read.parquet(s"$path/labels"), batchPairs))
+      Stores.read(spark, s"$path/labels"), batchPairs))
   }
 
   /** The serve's batch-pair stage as a LAZY frame (factored out so
@@ -643,7 +637,7 @@ object Clusters {
       if (small) broadcast(df) else df.hint("shuffle_hash")
     val batchPre = Dedup.prefixPostings(batchSh, tau)
       .transform(graft.Caches.scoped(_)) // cross + self candidate joins
-    val storePre = spark.read.parquet(s"$path/postings")
+    val storePre = Stores.read(spark, s"$path/postings")
     // CROSS candidates (batch × store): the sides are disjoint by
     // bucket, so no id-order predicate — completeness only needs the
     // smallest common hash inside BOTH prefixes, which the prefix
@@ -658,7 +652,7 @@ object Clusters {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     val cand = crossCand.unionByName(selfCand)
       .transform(graft.Caches.scoped(_)) // semi-join prune + verification
-    val storeShNeeded = spark.read.parquet(s"$path/shingles")
+    val storeShNeeded = Stores.read(spark, s"$path/shingles")
       .join(batchSide(cand.select(col("doc_b").as("doc_id"))),
         Seq("doc_id"), "left_semi")
       .transform(graft.Caches.scoped(_)) // db-side verify join input

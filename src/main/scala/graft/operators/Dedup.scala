@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{DotF32, HashedShingles, LshBuckets, MinHashShingled, SimHashShingled}
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -216,9 +216,10 @@ object Dedup {
     else df.orderBy(col("doc_id"))
   }
 
-  /** On-disk standing dedup store for the incremental path, mtime-keyed
-    * like [[Ivf.buildIndex]]'s index (a regenerated source is a new
-    * path; `_SUCCESS` guards half-written trees). Two narrow tables:
+  /** On-disk standing dedup store for the incremental path: a
+    * [[Stores.derived]] store keyed by the documents table's listing
+    * stamp and the knobs (a regenerated source is a new path; a path is
+    * reused only once both tables are committed). Two narrow tables:
     *   - `hashes/`  — the store's DISTINCT md5 text hashes (16 B/doc —
     *     [[exact]]'s audit key set restricted to the standing corpus);
     *   - `bands/`   — the store's MinHash band keys (doc_id, band, bh),
@@ -233,31 +234,23 @@ object Dedup {
     */
   def buildIncrementalStore(spark: SparkSession, dir: String,
                             batchBucket: Int = 80, k: Int = 64,
-                            bands: Int = 16): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_dedup_store_" +
-      Tables.pathSlug(dir) + "_" +
-      java.lang.Long.toHexString(Tables.sourceStamp(dir, "documents")) +
-      "_" + batchBucket + "_" + k + "_" + bands
-    val done = Seq("hashes", "bands").forall(sub =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, sub, "_SUCCESS")))
-    if (!done) {
+                            bands: Int = 16): String =
+    Stores.derived(spark, "dedup_store", dir, "documents",
+        s"${batchBucket}_${k}_$bands")("hashes", "bands") { path =>
       val store = Tables.documents(spark, dir)
         .filter(Curation.splitBucket(col("doc_id")) < batchBucket)
-      store.select(md5(col("text").cast("binary")).as("text_hash"))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$path/hashes")
+      Stores.commitTo(store.select(md5(col("text").cast("binary")).as("text_hash"))
+        .distinct(), s"$path/hashes")
       val r = k / bands
-      tokenized(spark, dir)
+      Stores.commitTo(tokenized(spark, dir)
         .filter(Curation.splitBucket(col("doc_id")) < batchBucket)
         .select(col("doc_id"),
           MinHashShingled.minhash_shingled(col("w"), 3, k).as("sig"))
         .select(col("doc_id"),
           posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
-            s"b -> xxhash64(slice(sig, b*$r + 1, $r), b))")).as(Seq("band", "bh")))
-        .write.mode("overwrite").parquet(s"$path/bands")
+            s"b -> xxhash64(slice(sig, b*$r + 1, $r), b))")).as(Seq("band", "bh"))),
+        s"$path/bands")
     }
-    path
-  }
 
   /** `dedup_incremental_serve`: [[incremental]]'s store-resident twin —
     * the batch aggregate is unchanged, but the anti join probes the
@@ -281,7 +274,7 @@ object Dedup {
       .filter(Curation.splitBucket(col("doc_id")) >= batchBucket)
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("batch_copies"))
-      .join(spark.read.parquet(s"$path/hashes").hint("shuffle_hash"),
+      .join(Stores.read(spark, s"$path/hashes").hint("shuffle_hash"),
         Seq("text_hash"), "left_anti")
       .select(col("doc_id"), col("text_hash"), col("batch_copies"))
       .transform(batchPresentation(spark, dir, batchBucket))
@@ -311,7 +304,7 @@ object Dedup {
         posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
           s"b -> xxhash64(slice(sig, b*$r + 1, $r), b))")).as(Seq("band", "bh")))
     val cand = batchKeys.as("a")
-      .join(spark.read.parquet(s"$path/bands").as("b").hint("shuffle_hash"),
+      .join(Stores.read(spark, s"$path/bands").as("b").hint("shuffle_hash"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{IvfCells, VecSumF32}
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 import graft.streaming.ArrivalStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -359,59 +359,43 @@ object Ivf {
   // On-disk index + serve-only path                                   //
   // ---------------------------------------------------------------- //
 
-  /** Index location, keyed like the metrics store's serve twin: by the
-    * source dir AND its listing stamp ([[Tables.sourceStamp]]:
-    * regenerated testdata rebuilds instead of serving stale cells) AND
-    * nlist (a knob change is a different index). `_SUCCESS` markers
-    * guard half-written trees.
-    */
-  private def indexPath(dir: String, nlist: Int): String =
-    System.getProperty("java.io.tmpdir") + "/graft_ivf_index_" +
-      Tables.pathSlug(dir) + "_" +
-      java.lang.Long.toHexString(Tables.sourceStamp(dir, "embeddings")) + "_" + nlist
-
   /** Build the on-disk index: train, assign, and write the corpus
     * PARTITIONED BY CELL (`cells/cell=N/` part files) plus the centroid
     * matrix (`centroids/`). Cell directories are what make serving
     * O(candidates): a probe set becomes a PartitionFilters prune that
     * LISTS nprobe directories instead of scanning n rows. The write
-    * clusters on the partition column first (REBALANCE under AQE,
-    * plain repartition otherwise) for the same reason MetricsStore
-    * does: unclustered, w upstream tasks × nlist cells spray w·nlist
-    * near-empty files and directory listing eats the prune's win.
+    * clusters on the partition column first ([[Stores.clustered]]):
+    * unclustered, w upstream tasks × nlist cells spray w·nlist
+    * near-empty files and directory listing eats the prune's win. The
+    * index is a [[Stores.derived]] store keyed by the embeddings
+    * table's listing stamp AND nlist (a knob change is a different
+    * index), reused only once both trees are committed.
     */
   def buildIndex(spark: SparkSession, dir: String,
                  nlistOverride: Option[Int] = None, iters: Int = 4): String = {
     val n = Tables.parquetRowCount(spark, dir, "embeddings")
     val nlist = nlistOverride.getOrElse(autoNlist(n))
-    val path = indexPath(dir, nlist)
-    val done = Seq("cells", "centroids").forall(sub =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, sub, "_SUCCESS")))
-    if (!done) {
+    Stores.derived(spark, "ivf_index", dir, "embeddings", nlist.toString)(
+        "cells", "centroids") { path =>
       // Registered through Caches like every operator-path persist;
       // the CALLER releases after its terminal action (build runs at
       // most once per index key, so later invocations register nothing).
       val base = graft.Caches.scoped(Similarity.fastNormBase(spark, dir))
       val dim = base.select(size(col("embedding"))).head.getInt(0)
       val cents = train(base, n, nlist, dim, iters)
-      val assigned = base.select(col("vec_id"), col("embedding"), col("nf"),
-        element_at(IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1).as("cell"))
-      val aqeOn = spark.conf.get("spark.sql.adaptive.enabled", "false").toBoolean
-      val clustered =
-        if (aqeOn) assigned.hint("rebalance", col("cell"))
-        else assigned.repartition(col("cell"))
-      clustered.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/cells")
+      Stores.commitTo(base.select(col("vec_id"), col("embedding"), col("nf"),
+        element_at(IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1).as("cell")),
+        s"$path/cells", Some("cell"))
       writeCentroids(spark, cents, dim, s"$path/centroids")
     }
-    path
   }
 
   /** `sim_ann_ivf_serve`: the amortized-index serving path. The build
-    * runs at most once per (dir, source-mtime, nlist) — Bench's cold
-    * rep pays it, every warm rep times the serve alone, which is the
-    * cost model of a production ANN service (FAISS builds the IVF
-    * index once and answers queries against it).
+    * runs at most once per [[buildIndex]] key (the embeddings table's
+    * listing stamp and nlist) — Bench's cold rep pays it, every warm
+    * rep times the serve alone, which is the cost model of a production
+    * ANN service (FAISS builds the IVF index once and answers queries
+    * against it).
     *
     * Serve = centroid matrix read back (nlist rows), query vectors
     * read via a vec_id-pushdown scan (8 rows — the query set is the
@@ -425,16 +409,9 @@ object Ivf {
     * serve READS only the probed fraction of the store (nprobe/nlist
     * ≈ 1/8 at defaults — an 8× I/O prune; at a FIXED nprobe the serve
     * is O(nprobe·n/nlist) = sub-linear, and nprobe is the standard
-    * IVF recall↔cost knob).
+    * IVF recall↔cost knob). The cell store itself is resolved once per
+    * commit ([[Stores.read]]).
     */
-  /** Serving-process state, keyed by index path (which embeds the
-    * source mtime — entries are immutable; a few hundred KB each).
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
-  private val queryCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
-
   def annIvfServe(spark: SparkSession, dir: String, k: Int = 10,
                   nlistOverride: Option[Int] = None, nprobeOverride: Option[Int] = None,
                   margin: Int = 16): DataFrame = {
@@ -442,27 +419,37 @@ object Ivf {
     val nlist = nlistOverride.getOrElse(autoNlist(n))
     val nprobe = math.min(nlist, nprobeOverride.getOrElse(math.max(8, nlist / 8)))
     val path = buildIndex(spark, dir, Some(nlist))
+    val cents = centroidsOf(spark, path)
+    probeServe(spark, cents, cents.length / nlist, nprobe, queryRowsOf(spark, dir, path),
+      Stores.read(spark, s"$path/cells"), k, margin)
+  }
 
-    // The centroid matrix and the query vectors are JVM-memoized per
-    // index path: the path embeds the source mtime, so both are
-    // immutable once built (a regenerated source is a NEW path) and a
-    // serving process holds them resident — nlist×dim floats + |Q|
-    // rows, the exact state a FAISS server keeps in RAM. Without the
-    // memo every warm serve pays two extra collect jobs just to
-    // re-read what cannot have changed.
-    val cents = centroidCache.computeIfAbsent(path,
+  /** Serving-process state of an immutable index path (the path embeds
+    * the source's listing stamp — a regenerated source is a NEW path —
+    * so entries never go stale; a few hundred KB each): the centroid
+    * matrix and the 8 query vectors, held resident exactly as a FAISS
+    * server keeps nlist×dim floats + |Q| rows in RAM. Without the memo
+    * every warm serve pays two extra collect jobs just to re-read what
+    * cannot have changed. Shared by [[annIvfServe]] and
+    * [[IvfPq.annIvfPqServe]].
+    */
+  private val centroidCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
+  private val queryCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
+
+  private[graft] def centroidsOf(spark: SparkSession, path: String): Array[Float] =
+    centroidCache.computeIfAbsent(path,
       _ => readCentroidMatrix(spark, s"$path/centroids")._1)
-    val dim = cents.length / nlist
 
-    // The 8 query vectors: a vec_id-pushdown scan (row-group stats skip
-    // everything else), collected — bounded by the query-set size, the
-    // same class of driver-side state as the channel query's params.
-    val qRows = queryCache.computeIfAbsent(path, _ =>
+  /** The 8 query vectors: a vec_id-pushdown scan (row-group stats skip
+    * everything else), collected — bounded by the query-set size, the
+    * same class of driver-side state as the channel query's params. */
+  private[graft] def queryRowsOf(spark: SparkSession, dir: String,
+                                 path: String): Array[org.apache.spark.sql.Row] =
+    queryCache.computeIfAbsent(path, _ =>
       Tables.embeddings(spark, dir).filter(col("vec_id") < 8)
         .select(col("vec_id"), col("embedding")).collect())
-    probeServe(spark, cents, dim, nprobe, qRows, spark.read.parquet(s"$path/cells"),
-      k, margin)
-  }
 
   /** The serve tail [[annIvfServe]] and [[arrivalAnnServe]] share:
     * probe cells computed driver-side from the resident centroid
@@ -482,9 +469,7 @@ object Ivf {
       (0 until nprobe).map(i => (qid, cellsArr.getInt(i)))
     }.toSeq
     import spark.implicits._
-    val qDf = qRows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      .toDF("query_id", "qe")
-      .select(col("query_id"), col("qe").cast("array<float>").as("qe"))
+    val qDf = queryFrame(spark, qRows)
     val probes = probePairs.toDF("query_id", "cell")
 
     val probedCells = probePairs.map(_._2).distinct
@@ -496,8 +481,6 @@ object Ivf {
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qFast), Seq("query_id"))
-    val exactNorm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => sqrt(graft.functions.DotDecimal.dot_decimal(c, c))
     val winners = cands
       .select(col("query_id"), col("vec_id"), col("embedding"), col("qe"),
         Similarity.fastCosine(col("qe"), col("qnf"), col("embedding"), col("nf")))
@@ -507,7 +490,25 @@ object Ivf {
       .filter(col("rank_f") <= k + margin)
     // Decimal-exact re-rank on the ≤ |Q|·(k+margin) surviving rows —
     // all data store-resident or broadcast; the corpus is not rescanned.
-    val ranked = winners
+    exactTopK(qDf, winners, k)
+  }
+
+  /** The collected (query_id, embedding) rows as the (query_id, qe)
+    * query frame both serves broadcast. */
+  private[graft] def queryFrame(spark: SparkSession,
+                                qRows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    import spark.implicits._
+    qRows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("query_id", "qe")
+      .select(col("query_id"), col("qe").cast("array<float>").as("qe"))
+  }
+
+  /** The serve tail [[probeServe]] and [[IvfPq.annIvfPqServe]] share:
+    * the decimal-exact top k per query over (query_id, vec_id, qe,
+    * embedding) candidate rows, decorated back onto every query id. */
+  private[graft] def exactTopK(qDf: DataFrame, cands: DataFrame, k: Int): DataFrame = {
+    val exactNorm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+      c => sqrt(graft.functions.DotDecimal.dot_decimal(c, c))
+    val ranked = cands
       .select(col("query_id"), col("vec_id"),
         (graft.functions.DotDecimal.dot_decimal(col("qe"), col("embedding")) /
           (exactNorm(col("qe")) * exactNorm(col("embedding")))).as("cosine"))
@@ -548,14 +549,10 @@ object Ivf {
       if (base.isEmpty) return
       val dim = base.select(size(col("embedding"))).head.getInt(0)
       val cents = ensureCentroids(spark, base, storeDir, nlist, dim, iters)
-      val out = ArrivalStore.batchDir(s"$storeDir/cells", batchId)
-      base.select(col("vec_id"), col("embedding"), col("nf"),
+      Stores.commitTo(base.select(col("vec_id"), col("embedding"), col("nf"),
           element_at(IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1)
-            .as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(out)
-      ArrivalStore.markCommitted(out)
+            .as("cell")),
+        ArrivalStore.batchDir(s"$storeDir/cells", batchId), Some("cell"))
     } finally base.unpersist()
   }
 
@@ -568,9 +565,7 @@ object Ivf {
                                      storeDir: String, nlist: Int, dim: Int,
                                      iters: Int): Array[Float] = {
     val centPath = s"$storeDir/centroids"
-    val (fs, p) = ArrivalStore.fsFor(centPath)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      readCentroidMatrix(spark, centPath)._1
+    if (Stores.committed(centPath)) readCentroidMatrix(spark, centPath)._1
     else {
       val c = train(base, base.count(), nlist, dim, iters)
       writeCentroids(spark, c, dim, centPath)
@@ -583,7 +578,7 @@ object Ivf {
   private[graft] def writeCentroids(spark: SparkSession, cents: Array[Float],
                                     dim: Int, path: String): Unit = {
     import spark.implicits._
-    ArrivalStore.commitTo((0 until cents.length / dim).map { c =>
+    Stores.commitTo((0 until cents.length / dim).map { c =>
       (c, (0 until dim).map(i => cents(c * dim + i)))
     }.toDF("cell", "centroid").repartition(1), path)
   }
@@ -604,9 +599,9 @@ object Ivf {
 
   /** Arrival-store centroid tables are MUTABLE across processes — a
     * [[retrainArrivalStore]] cutover replaces the whole table in
-    * place, unlike [[buildIndex]]'s mtime-embedding immutable paths —
-    * so the serving memo is keyed by (path, file-listing digest):
-    * names + lengths + mtimes of the live `centroids/` tree. A serve
+    * place, unlike [[buildIndex]]'s source-stamped immutable paths —
+    * so the serving memo is keyed by (path, [[Tables.listingStamp]] of
+    * the live `centroids/` tree). A serve
     * in ANY process after a cutover sees a new stamp and reloads; the
     * stale matrix can never be divided by the fresh table's row count
     * (the r17 cross-process staleness advice). Value carries (matrix,
@@ -617,13 +612,7 @@ object Ivf {
 
   private[graft] def centroidTableStamped(spark: SparkSession,
                                           path: String): (Array[Float], Int, Int) = {
-    val (fs, p) = ArrivalStore.fsFor(path)
-    val listing = fs.listStatus(p).sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString("\n")
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val stamp = md.digest(listing.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
+    val stamp = Tables.listingStamp(spark, path)
     if (arrivalCentroidCache.size > 64) arrivalCentroidCache.clear() // retired stamps
     arrivalCentroidCache.computeIfAbsent(s"$path@$stamp",
       _ => readCentroidMatrix(spark, path))
@@ -713,7 +702,7 @@ object Ivf {
                           nlistOverride: Option[Int] = None,
                           iters: Int = 4): Unit = graft.Caches.withScope {
     import org.apache.hadoop.fs.Path
-    val (fs, rootP) = ArrivalStore.fsFor(storeDir)
+    val (fs, rootP) = Stores.fsFor(storeDir)
     val staging = new Path(rootP, "_staging_retrain")
     val marker = new Path(staging, "_RETRAIN")
     if (!fs.exists(marker)) {
@@ -734,7 +723,6 @@ object Ivf {
         .select(col("vec_id"), col("embedding"), col("nf"),
           element_at(IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1)
             .as("cell"))
-        .repartition(col("cell"))
       // Match the OWNING loop's cell layout — post-cutover batches keep
       // appending in their native shape, and parquet partition
       // discovery rejects mixed directory depths under one basePath:
@@ -744,18 +732,16 @@ object Ivf {
       // DATA column (the r16 fs-metadata lesson — its store is small
       // by regime). Detected from the standing dirs themselves.
       val dirLayout = {
-        val (dfs, first) = ArrivalStore.fsFor(dirs.head)
+        val (dfs, first) = Stores.fsFor(dirs.head)
         dfs.listStatus(first).exists(s =>
           s.isDirectory && s.getPath.getName.startsWith("cell="))
       }
       // the staged dir carries its own _SUCCESS through the swap, so
       // the committedOnly readers see the retrained index
       val stagedCells = ArrivalStore.batchDir(s"$staging/cells", tid)
-      if (dirLayout) {
-        reassigned.write.mode("overwrite").partitionBy("cell").parquet(stagedCells)
-        ArrivalStore.markCommitted(stagedCells)
-      } else
-        ArrivalStore.commitTo(reassigned.sortWithinPartitions(col("cell")), stagedCells)
+      if (dirLayout) Stores.commitTo(reassigned, stagedCells, Some("cell"))
+      else Stores.commitTo(
+        Stores.clustered(reassigned, "cell").sortWithinPartitions(col("cell")), stagedCells)
       writeCentroids(spark, cents, dim, s"$staging/centroids")
       val out = fs.create(marker, true)
       try out.write(tid.toString.getBytes("UTF-8")) finally out.close()

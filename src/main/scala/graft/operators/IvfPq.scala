@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{IvfCells, PqCodes, VecSumF32}
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -150,24 +150,18 @@ object IvfPq {
     cb
   }
 
-  /** Same mtime-keyed immutable-store convention as [[Ivf.buildIndex]];
-    * the PQ tree adds `codebooks/` and a `code` column in `cells/`.
+  /** The [[Ivf.buildIndex]] store convention ([[Stores.derived]], keyed
+    * by the embeddings listing stamp, nlist, m and the mode); the PQ
+    * tree adds `codebooks/` and a `code` column in `cells/`.
     */
-  private def indexPath(dir: String, nlist: Int, residual: Boolean): String =
-    System.getProperty("java.io.tmpdir") + "/graft_ivfpq_index_" +
-      Tables.pathSlug(dir) + "_" +
-      java.lang.Long.toHexString(Tables.sourceStamp(dir, "embeddings")) +
-      "_" + nlist + "_" + M + (if (residual) "_res" else "")
-
   def buildPqIndex(spark: SparkSession, dir: String,
                    nlistOverride: Option[Int] = None, iters: Int = 4,
                    residual: Boolean = false): String = {
     val n = Tables.parquetRowCount(spark, dir, "embeddings")
     val nlist = nlistOverride.getOrElse(Ivf.autoNlist(n))
-    val path = indexPath(dir, nlist, residual)
-    val done = Seq("cells", "centroids", "codebooks").forall(sub =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, sub, "_SUCCESS")))
-    if (!done) {
+    Stores.derived(spark, "ivfpq_index", dir, "embeddings",
+        s"${nlist}_$M" + (if (residual) "_res" else ""))(
+        "cells", "centroids", "codebooks") { path =>
       val base = graft.Caches.scoped(Similarity.fastNormBase(spark, dir))
       val dim = base.select(size(col("embedding"))).head.getInt(0)
       val dsub = dim / M
@@ -196,32 +190,21 @@ object IvfPq {
         else graft.Caches.scoped(
           codeInput.select(col("vec_id"), col("pqv").as("embedding")))
       val cb = trainPq(trainBase, n, dim, M, iters)
-      val assigned = codeInput.select(col("vec_id"), col("embedding"), col("nf"),
-        PqCodes.pq_encode(col("pqv"), cb, M, dsub).as("code"), col("cell"))
-      val aqeOn = spark.conf.get("spark.sql.adaptive.enabled", "false").toBoolean
-      val clustered =
-        if (aqeOn) assigned.hint("rebalance", col("cell"))
-        else assigned.repartition(col("cell"))
-      clustered.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/cells")
+      Stores.commitTo(codeInput.select(col("vec_id"), col("embedding"), col("nf"),
+        PqCodes.pq_encode(col("pqv"), cb, M, dsub).as("code"), col("cell")),
+        s"$path/cells", Some("cell"))
       Ivf.writeCentroids(spark, cents, dim, s"$path/centroids")
-      (for (j <- 0 until M; c <- 0 until 256) yield
+      Stores.commitTo((for (j <- 0 until M; c <- 0 until 256) yield
         (j, c, (0 until dsub).map(i => cb((j * 256 + c) * dsub + i))))
-        .toDF("j", "c", "centroid").repartition(1)
-        .write.mode("overwrite").parquet(s"$path/codebooks")
+        .toDF("j", "c", "centroid").repartition(1), s"$path/codebooks")
     }
-    path
   }
 
-  /** Serving-process state keyed by the immutable index path — the
-    * FAISS-server RAM residency, exactly [[Ivf.annIvfServe]]'s memo.
+  /** Serving-process codebook state keyed by the immutable index path —
+    * the FAISS-server RAM residency of [[Ivf.centroidsOf]]'s memo.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
   private val codebookCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
-  private val queryCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
 
   /** `sim_ann_ivfpq_serve` (raw) / `sim_ann_ivfpq_res_serve`
     * (residual): the compressed serve. Contract matches
@@ -243,8 +226,7 @@ object IvfPq {
     val nprobe = math.min(nlist, nprobeOverride.getOrElse(math.max(8, nlist / 8)))
     val path = buildPqIndex(spark, dir, Some(nlist), residual = residual)
 
-    val cents = centroidCache.computeIfAbsent(path,
-      _ => Ivf.readCentroidMatrix(spark, s"$path/centroids")._1)
+    val cents = Ivf.centroidsOf(spark, path)
     val dim = cents.length / nlist
     val dsub = dim / M
     val cb = codebookCache.computeIfAbsent(path, _ => {
@@ -257,9 +239,7 @@ object IvfPq {
       }
       arr
     })
-    val qRows = queryCache.computeIfAbsent(path, _ =>
-      Tables.embeddings(spark, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding")).collect())
+    val qRows = Ivf.queryRowsOf(spark, dir, path)
 
     // Probe cells + per-query ADC lookup tables, both driver-computed
     // from bounded state (|Q|·nlist dots; |Q|·m·256 LUT entries). In
@@ -310,15 +290,13 @@ object IvfPq {
     val lutDf = lutRows.toDF("query_id", "lut", "qnf")
       .select(col("query_id"), col("lut").cast("array<float>").as("lut"), col("qnf"))
     val probes = probePairs.toDF("query_id", "cell", "qdotc")
-    val qDf = qRows.map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      .toDF("query_id", "qe")
-      .select(col("query_id"), col("qe").cast("array<float>").as("qe"))
+    val qDf = Ivf.queryFrame(spark, qRows)
 
     val probedCells = probePairs.map(_._2).distinct
     // Stage 1: compressed candidate scan — (vec_id, nf, code) only; the
     // embedding column never leaves the parquet footer (PlanSpec pins
     // the pruned ReadSchema and the PartitionFilters cell prune).
-    val scan = spark.read.parquet(s"$path/cells")
+    val scan = Stores.read(spark, s"$path/cells")
       .filter(col("cell").isin(probedCells: _*))
       .select(col("vec_id"), col("nf"), col("code"), col("cell"))
     val winners = scan
@@ -337,26 +315,10 @@ object IvfPq {
     // Stage 2: exact re-rank — full vectors fetched ONLY for the
     // ≤ |Q|·(k+margin) survivors via a broadcast id join against the
     // same partition-pruned cell scan.
-    val exactNorm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => sqrt(graft.functions.DotDecimal.dot_decimal(c, c))
-    val ranked = spark.read.parquet(s"$path/cells")
+    Ivf.exactTopK(qDf, Stores.read(spark, s"$path/cells")
       .filter(col("cell").isin(probedCells: _*))
       .select(col("vec_id"), col("embedding"))
       .join(broadcast(winners), Seq("vec_id"))
-      .join(broadcast(qDf), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        (graft.functions.DotDecimal.dot_decimal(col("qe"), col("embedding")) /
-          (exactNorm(col("qe")) * exactNorm(col("embedding")))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-    qDf.select(col("query_id"))
-      // shuffle_hash (r18): decorate join back to the query-id set (see
-      // annIvf) — drops both SMJ sorts, same exchanges.
-      .join(ranked.hint("shuffle_hash"), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+      .join(broadcast(qDf), Seq("query_id")), k)
   }
 }

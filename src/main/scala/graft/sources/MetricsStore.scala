@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Date-partitioned metrics storage — the reference's own scale answer
   * (SYSTEM_DESIGN.md: partition by date/channel) realized as a parquet
@@ -15,97 +14,25 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * date×channel matrix would fragment files below HDFS block size at
   * daily volume; channel stays a pushed row-group filter instead.
   *
-  * Freshness contract: a read is resolved (directory listing plus one
-  * schema-inference job) once per `_SUCCESS` commit of the store and
-  * reused by every later read in the session until the marker changes
-  * — the contract of Spark's `REFRESH TABLE` for catalog tables, with
-  * no manual refresh. A store written without the marker (half-written,
-  * or by a writer that disables `_SUCCESS`) is read fresh every time.
+  * The commit, the clustered write and the resolve-once read are the
+  * shared store rules of [[Stores]]; this object names them for the
+  * metrics layout.
   */
 object MetricsStore {
 
-  // (session, qualified path) -> (marker mtime, relation). The relation
-  // keeps its InMemoryFileIndex, so later reads skip the listing and the
-  // schema job while date filters still land in PartitionFilters.
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, DataFrame)]
-
-  private def qualify(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    (fs, fs.makeQualified(p))
-  }
-
-  /** Modification time of the `_SUCCESS` marker under `root`; None when
-    * the store has no marker. */
-  private def commitStamp(fs: FileSystem, root: Path): Option[Long] =
-    try Some(fs.getFileStatus(new Path(root, "_SUCCESS")).getModificationTime)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** Whether the store at `path` is committed: the one rule that both
-    * the read cache and store reuse (EtlQueries) go by, on any Hadoop
-    * filesystem. */
-  private[graft] def committed(spark: SparkSession, path: String): Boolean = {
-    val (fs, root) = qualify(spark, path)
-    commitStamp(fs, root).isDefined
-  }
-
-  /** Persist consolidated metrics partitioned by date. Overwrite is
-    * idempotent per the reference's re-ingest contract: same input,
-    * same partitions, same rows.
-    *
-    * Rows are clustered on the partition column before the write:
-    * without it every upstream task holds rows for every date, so a
-    * w-task write into d dates sprays w×d near-empty files (5k+ at
-    * sf0.1 — the file-listing cost then dominates the serve path's
-    * prune). The clustering shuffle is a REBALANCE-by-date rather than a
-    * plain `repartition(date)`: under AQE, oversized date partitions are
-    * split at the advisory size (a hot date no longer serializes its
-    * whole write through one task — the r9 ADVICE bottleneck) while
-    * small dates still land wholly in one task, so the layout stays a
-    * bounded handful of files per date instead of w×d spray. Spark only
-    * RESOLVES the rebalance hint when AQE is enabled — under an AQE-off
-    * session it is silently dropped, which un-clusters the write and
-    * re-creates the w×d spray (measured: the sf0.1 round-trip query went
-    * 1.9 → 3.7 s) — so AQE-off sessions take the plain hash-clustered
-    * `repartition(date)` explicitly and keep the one-file-per-date
-    * layout, accepting the hot-date single-task ceiling there.
+  /** Persist consolidated metrics partitioned by date and mark the store
+    * committed ([[Stores.commitTo]]). Overwrite is idempotent per the
+    * reference's re-ingest contract: same input, same partitions, same
+    * rows. Rows are clustered on `date` before the write
+    * ([[Stores.clustered]]), so each date directory holds a bounded
+    * handful of files instead of one per upstream task.
     */
-  def write(metrics: DataFrame, path: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    // Cached reads of this path are dropped before the write and again
-    // once it returns or fails (an entry a concurrent read cached
-    // mid-write cannot outlive it), so in-process rewrites never depend
-    // on the marker's mtime granularity.
-    val root = qualify(metrics.sparkSession, path)._2.toString
-    def forget(): Unit = resolved.keySet.removeIf(_._2 == root)
-    forget()
-    val aqeOn = metrics.sparkSession.conf
-      .get("spark.sql.adaptive.enabled", "false").toBoolean
-    val clustered =
-      if (aqeOn) metrics.hint("rebalance", col("date"))
-      else metrics.repartition(col("date"))
-    try clustered.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("date")
-      .parquet(path)
-    finally forget()
-  }
+  def write(metrics: DataFrame, path: String): Unit =
+    Stores.commitTo(metrics, path, Some("date"))
 
   /** Read back; date filters become partition pruning (verified by
     * PlanSpec — the scan's `PartitionFilters` must carry them). Resolved
-    * once per commit (see the freshness contract above).
+    * once per commit ([[Stores.read]]).
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (fs, root) = qualify(spark, path)
-    commitStamp(fs, root) match {
-      case None => spark.read.parquet(path)
-      case Some(stamp) =>
-        // the stamp is taken BEFORE resolving: a commit landing meanwhile
-        // leaves an older stamp in the entry, so the next read re-resolves
-        resolved.compute((spark, root.toString), (_, cur) =>
-          if (cur != null && cur._1 == stamp) cur
-          else (stamp, spark.read.parquet(path)))._2
-    }
-  }
+  def read(spark: SparkSession, path: String): DataFrame = Stores.read(spark, path)
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,8 +94,14 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
   def parquetRowCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.computeIfAbsent(s"$sfDir/$name.parquet",
-      _ => parquetRowCountUncached(spark, sfDir, name))
+    countCache.computeIfAbsent(s"$sfDir/$name.parquet", _ => {
+      val (conf, _, files) = listing(spark, s"$sfDir/$name.parquet")
+      files.filter(isParquet).map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try reader.getRecordCount finally reader.close()
+      }.sum
+    })
 
   private val sizeCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
@@ -104,91 +112,64 @@ object Tables {
     * gate admits arbitrarily wide rows).
     */
   def parquetByteSize(spark: SparkSession, sfDir: String, name: String): Long =
-    sizeCache.computeIfAbsent(s"$sfDir/$name.parquet", _ => {
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = root.getFileSystem(conf)
-      val status = fs.getFileStatus(root)
-      if (status.isFile) status.getLen
-      else {
-        var total = 0L
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && f.getPath.getName.endsWith(".parquet")) total += f.getLen
-        }
-        total
-      }
-    })
+    sizeCache.computeIfAbsent(s"$sfDir/$name.parquet",
+      _ => listing(spark, s"$sfDir/$name.parquet")._3.filter(isParquet).map(_.getLen).sum)
 
-  /** Change-detection key for on-disk derived stores
-    * ([[graft.operators.Ivf]]'s index, [[graft.operators.Dedup]]'s
-    * standing dedup store): a 64-bit digest over the table's file
-    * LISTING — each file's relative name, size, and mtime — so a
-    * regenerated source gets a new stamp even when timestamps are
-    * preserved (cp -p, rsync -a, tar extraction defeat a max-mtime-only
-    * key whenever the rewrite changes bytes or layout but not times).
-    * Unchanged-content rewrites with preserved names+sizes+mtimes still
-    * collide, which is the correct fixpoint: identical listing ⇒ the
-    * derived store is still valid.
-    */
+  /** Every file under `path` (the file itself when it is one) through
+    * its Hadoop FileSystem, with the conf and the qualified root. */
+  private def listing(spark: SparkSession, path: String)
+      : (Configuration, String, Seq[LocatedFileStatus]) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val files = Seq.newBuilder[LocatedFileStatus]
+    val it = fs.listFiles(root, true)
+    while (it.hasNext) files += it.next()
+    (conf, fs.makeQualified(root).toString, files.result())
+  }
+
+  private def isParquet(f: LocatedFileStatus): Boolean = f.getPath.getName.endsWith(".parquet")
+
   /** Filesystem-safe unique slug of a source directory for derived-
-    * store tmp paths (r14, closes the hashCode-collision nit: two
-    * distinct dirs with colliding String.hashCode would share a
-    * `_SUCCESS`-guarded tree and race). The canonical path is made
-    * injective by keeping its sanitized tail (the discriminating part)
-    * plus a hex digest of the full path.
+    * store paths ([[Stores.scratchPath]]). The slug is taken from the
+    * QUALIFIED path, so `/x` and `file:/x` name one store, and is made
+    * injective by keeping the path's sanitized tail (the discriminating
+    * part, for readability) plus a hex digest of the full qualified
+    * path (two dirs with colliding String.hashCode would otherwise share
+    * a tree and race).
     */
   def pathSlug(dir: String): String = {
-    val canon = new java.io.File(dir).getAbsolutePath
-    val tail = canon.takeRight(40).map(c =>
+    val conf = SparkSession.getActiveSession
+      .map(_.sessionState.newHadoopConf()).getOrElse(new Configuration())
+    val canon = new Path(dir).makeQualified(FileSystem.getDefaultUri(conf),
+      new Path(System.getProperty("user.dir")))
+    val tail = canon.toUri.getPath.takeRight(40).map(c =>
       if (c.isLetterOrDigit) c else '_')
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes("UTF-8")).take(8)
+      .digest(canon.toString.getBytes("UTF-8")).take(8)
       .map("%02x".format(_)).mkString
     s"${tail}_$digest"
   }
 
-  def sourceStamp(sfDir: String, name: String): Long = {
-    val root = java.nio.file.Paths.get(sfDir, s"$name.parquet")
-    if (!java.nio.file.Files.exists(root)) 0L
-    else {
-      val s = java.nio.file.Files.walk(root)
-      try {
-        var acc = 0L
-        val it = s.sorted().iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          acc = acc * 1000003L + root.relativize(p).toString.hashCode
-          acc = acc * 1000003L + java.nio.file.Files.getLastModifiedTime(p).toMillis
-          if (java.nio.file.Files.isRegularFile(p))
-            acc = acc * 1000003L + java.nio.file.Files.size(p)
+  /** Change-detection key of the files under `path` — a source table
+    * for [[Stores.derivedPath]], a mutable arrival centroid table for
+    * [[graft.operators.Ivf.centroidTableStamped]]: a 64-bit digest over
+    * the LISTING through the path's Hadoop FileSystem — each file's
+    * relative name, length and mtime — so a regenerated source gets a
+    * new stamp even when timestamps are preserved (cp -p, rsync -a, tar
+    * extraction defeat a max-mtime-only key whenever the rewrite
+    * changes bytes or layout but not times), and a `file:`/`hdfs:`/
+    * `s3a:` source is stamped like a local one. Unchanged-content
+    * rewrites with preserved names+sizes+mtimes still collide, which is
+    * the correct fixpoint: identical listing ⇒ the derived state is
+    * still valid. A missing path stamps 0.
+    */
+  def listingStamp(spark: SparkSession, path: String): Long =
+    try {
+      val (_, root, files) = listing(spark, path)
+      files.map(f => (f.getPath.toString.stripPrefix(root), f.getLen, f.getModificationTime))
+        .sortBy(_._1).foldLeft(0L) { case (acc, (rel, len, mtime)) =>
+          ((acc * 1000003L + rel.hashCode) * 1000003L + mtime) * 1000003L + len
         }
-        acc
-      } finally s.close()
-    }
-  }
-
-  private def parquetRowCountUncached(
-      spark: SparkSession, sfDir: String, name: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    def footerCount(f: org.apache.hadoop.fs.FileStatus): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getRecordCount finally reader.close()
-    }
-    val status = fs.getFileStatus(root)
-    if (status.isFile) footerCount(status)
-    else {
-      var total = 0L
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) total += footerCount(f)
-      }
-      total
-    }
-  }
+    } catch { case _: java.io.FileNotFoundException => 0L }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.sources.Stores
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -26,12 +27,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *      into the batch's OWN directory, so the retry replaces exactly
   *      its previous attempt.
   *   2. COMMIT VISIBILITY — `committedOnly = true` additionally
-  *      requires the `_SUCCESS` marker; readers that must never see an
+  *      requires the commit marker; readers that must never see an
   *      in-flight attempt even transiently (serving, compaction, every
-  *      public store reader) use it. [[commit]] writes that marker
-  *      itself ([[markCommitted]]) whatever the Hadoop committer's
-  *      `mapreduce.fileoutputcommitter.marksuccessfuljobs` setting, so
-  *      the commit point belongs to the store, not to a default.
+  *      public store reader) use it. [[commit]] writes through
+  *      [[graft.sources.Stores.commitTo]], which sets that marker
+  *      itself whatever the Hadoop committer's settings, so the commit
+  *      point belongs to the store, not to a default.
   *   3. EMPTY-STORE READS — probing a store before its first commit
   *      returns an EMPTY frame of the caller's schema, never a
   *      schema-inference error ([[readOr]]).
@@ -60,13 +61,6 @@ private[graft] object ArrivalStore {
       .foreachBatch { (batch: DataFrame, batchId: Long) => perBatch(batch, batchId) }
       .start()
 
-  /** Hadoop FileSystem + qualified Path for `root`, resolved from the
-    * active session's config. */
-  def fsFor(root: String): (FileSystem, Path) = {
-    val p = new Path(root)
-    (p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
-  }
-
   /** Batch `id`'s directory under a store subtree `root`. */
   def batchDir(root: String, id: Long): String = s"$root/batch=$id"
 
@@ -77,33 +71,17 @@ private[graft] object ArrivalStore {
   /** Commit one batch's rows: overwrite its own [[batchDir]] and mark
     * it committed (discipline 2). */
   def commit(df: DataFrame, root: String, batchId: Long): Unit =
-    commitTo(df, batchDir(root, batchId))
-
-  /** [[commit]] for a directory outside the batch layout (staged
-    * trees, frozen tables). */
-  def commitTo(df: DataFrame, dir: String): Unit = {
-    df.write.mode("overwrite").parquet(dir)
-    markCommitted(dir)
-  }
-
-  /** The commit point: create `dir/_SUCCESS` unless the writer's output
-    * committer already did. Callers with their own write shape
-    * (partitioned, date-swapped) run it after the write returns. */
-  def markCommitted(dir: String): Unit = {
-    val (fs, p) = fsFor(dir)
-    val marker = new Path(p, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-  }
+    Stores.commitTo(df, batchDir(root, batchId))
 
   /** Standing-state partition directories committed strictly before
     * `batchId` (pass Long.MaxValue for "everything"). */
   def standingDirs(root: String, batchId: Long,
                    committedOnly: Boolean = false): Seq[String] = {
-    val (fs, p) = fsFor(root)
+    val (fs, p) = Stores.fsFor(root)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => !committedOnly || fs.exists(new Path(s.getPath, "_SUCCESS")))
+      .filter(s => !committedOnly || Stores.committed(fs, s.getPath))
       .map(_.getPath.toString)
       .filter(batchIdOf(_) < batchId)
   }
@@ -157,7 +135,7 @@ private[graft] object ArrivalStore {
     val minId = dirs.map(batchIdOf).min
     val (baseDirs, deltaDirs) = dirs.partition(batchIdOf(_) == minId)
     def bytesOf(ds: Seq[String]): Long = ds.map { d =>
-      val (fs, p) = fsFor(d)
+      val (fs, p) = Stores.fsFor(d)
       fs.getContentSummary(p).getLength
     }.sum
     if (bytesOf(baseDirs) < tierRatio * math.max(1L, bytesOf(deltaDirs)))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.dsum
+import graft.sources.Stores
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -444,12 +445,11 @@ object EventStream {
   private def compactSub(spark: SparkSession, root: String,
                          resolve: Seq[String] => DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
-    val (fs, rootP) = ArrivalStore.fsFor(root)
+    val (fs, rootP) = Stores.fsFor(root)
     if (!fs.exists(rootP)) return
     val staging = new Path(rootP, "_staging_compact")
     val targetMark = new Path(staging, "_target")
-    val committed = fs.exists(new Path(staging, "_SUCCESS")) &&
-      fs.exists(targetMark)
+    val committed = Stores.committed(fs, staging) && fs.exists(targetMark)
     import ArrivalStore.batchIdOf
     val targetId: Long =
       if (committed) {
@@ -474,7 +474,7 @@ object EventStream {
         val ids = dirs.map(batchIdOf).sorted
         val tid = ids(ids.length - 2) // second-highest: replay safety
         val sources = dirs.filter(batchIdOf(_) <= tid)
-        ArrivalStore.commitTo(resolve(sources), staging.toString)
+        Stores.commitTo(resolve(sources), staging.toString)
         val outS = fs.create(targetMark, true)
         try outS.write(tid.toString.getBytes("UTF-8")) // commit point
         finally outS.close()
@@ -1539,7 +1539,7 @@ object EventStream {
               .partitionBy("date")
               .parquet(staging.toString)
             // the staged tree's commit point, which recoverStagedSwap reads
-            ArrivalStore.markCommitted(staging.toString)
+            Stores.markCommitted(staging.toString)
             MergeStats.recordStaged(System.nanoTime() - s0)
             val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
             if (manyDates) {
@@ -1616,7 +1616,7 @@ object EventStream {
     val staging = new org.apache.hadoop.fs.Path(s"$storeDir.staging")
     val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(staging)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
+      if (Stores.committed(fs, staging)) {
         for (st <- fs.listStatus(staging)
              if st.getPath.getName.startsWith("date=")) {
           val target = new org.apache.hadoop.fs.Path(storeDir, st.getPath.getName)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.etl.MetricsQueries
-import graft.sources.MetricsStore
+import graft.sources.{MetricsStore, Stores}
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -83,7 +83,7 @@ class MetricsStoreSpec extends AnyFunSuite {
       MetricsStore.write(metrics, store)
       assert(canon(MetricsStore.read(spark, store)) == canon(metrics))
       partial.write.mode("overwrite").partitionBy("date").parquet(store)
-      assert(MetricsStore.committed(spark, store))
+      assert(Stores.committed(store))
       assert(canon(MetricsStore.read(spark, store)) == canon(partial))
     }
   }
@@ -93,7 +93,7 @@ class MetricsStoreSpec extends AnyFunSuite {
       MetricsStore.write(metrics, store)
       MetricsStore.read(spark, store)
       Files.delete(Paths.get(store, "_SUCCESS"))
-      assert(!MetricsStore.committed(spark, store))
+      assert(!Stores.committed(store))
       for (_ <- 1 to 2) {
         val (back, n) = jobs(MetricsStore.read(spark, store))
         assert(n >= 1, "a store without a marker was served from the cache")
@@ -103,7 +103,7 @@ class MetricsStoreSpec extends AnyFunSuite {
       partial.write.mode("overwrite")
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .partitionBy("date").parquet(store)
-      assert(!MetricsStore.committed(spark, store))
+      assert(!Stores.committed(store))
       assert(canon(MetricsStore.read(spark, store)) == canon(partial))
     }
   }

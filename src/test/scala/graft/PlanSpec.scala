@@ -1015,19 +1015,24 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** (path under src/main/scala/graft, source text) of every main file,
+    * for the source audits. */
+  private lazy val mainSources: Seq[(String, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    walk(new java.io.File("src/main/scala/graft")).map(f =>
+      f.getPath.stripPrefix("src/main/scala/graft/") ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
   test("the arrival-store layout and stream shell are written only in ArrivalStore") {
     // One commit path for the arrival loops: the batch-dir layout (the
     // `batch=$` interpolation and its parse) and the foreachBatch shell
     // live in ArrivalStore alone. Besides it, only signedExport (an
     // update-mode query over a date-partitioned store) and StreamBench's
     // noop sink start a query of their own.
-    val root = new java.io.File("src/main/scala/graft")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val srcs = walk(root).map(f => f.getPath.stripPrefix("src/main/scala/graft/") ->
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-    def sites(needle: String): Map[String, Int] = srcs.collect {
+    def sites(needle: String): Map[String, Int] = mainSources.collect {
       case (rel, src) if src.contains(needle) =>
         rel -> (src.length - src.replace(needle, "").length) / needle.length
     }.toMap
@@ -1039,5 +1044,16 @@ class PlanSpec extends AnyFunSuite {
         Map("streaming/EventStream.scala" -> 1, "StreamBench.scala" -> 1) &&
         shells.contains("streaming/ArrivalStore.scala"),
       s"a streaming query shell outside ArrivalStore.run: $shells")
+  }
+
+  test("the store rules are written only in Stores") {
+    // One owner for the on-disk store rules: the derived-store location
+    // (`java.io.tmpdir`), the commit marker (`"_SUCCESS"`) and the
+    // AQE-aware clustered write (`hint("rebalance"`).
+    for (needle <- Seq("java.io.tmpdir", "\"_SUCCESS\"", "hint(\"rebalance\"")) {
+      val sites = mainSources.collect { case (rel, src) if src.contains(needle) => rel }.toSet
+      assert(sites == Set("sources/Stores.scala"),
+        s"store rule hand-rolled outside Stores: $needle in $sites")
+    }
   }
 }
