@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * default: never), SPARK_GRAFT_COMPACT_AT (batch index before which
   * EventStream.compactArrivalStore runs — prices mid-stream
   * compaction and the post-compaction batches that read the collapsed
-  * clustered base; default: never), SPARK_GRAFT_CPUS (default 32).
+  * clustered base; default: never), SPARK_GRAFT_CPUS (default: every core).
   *
   * `vecdedupdrift` replays BASELINE's occupancy-drift stress as a
   * reproducible mode instead of a one-off: batch 0 is UNIFORM random
@@ -47,7 +47,6 @@ object ArrivalBench {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_ARRIVAL_BATCHES", "10").toInt
     val mode = sys.env.getOrElse("SPARK_GRAFT_ARRIVAL_MODE", "exact")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val retrainAt = sys.env.getOrElse("SPARK_GRAFT_RETRAIN_AT", "-1").toInt
     val compactAt = sys.env.getOrElse("SPARK_GRAFT_COMPACT_AT", "-1").toInt
     // fail fast: an index >= nBatches never fires, and emitting its
@@ -58,8 +57,7 @@ object ArrivalBench {
       s"SPARK_GRAFT_RETRAIN_AT=$retrainAt never fires with $nBatches batches")
     require(compactAt < nBatches,
       s"SPARK_GRAFT_COMPACT_AT=$compactAt never fires with $nBatches batches")
-    val spark = Sessions.driver(cpus, dir)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores())
     val store = java.nio.file.Files
       .createTempDirectory(s"graft_arrival_bench_$mode").toString
 

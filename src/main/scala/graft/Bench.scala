@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every registered query, timed end-to-end at
   * SPARK_GRAFT_SF_DIR, one JSON line out.
   *
@@ -31,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   * alphabetical chunks (default: ceil(n/8), ~8 queries/shard), each
   * chunk runs in a freshly forked JVM with the same classpath and JVM
   * args as this one, and the parent merges the child JSON files into the
-  * one output line. Children run SEQUENTIALLY — all 32 cores belong to
+  * one output line. Children run SEQUENTIALLY — every core belongs to
   * one shard at a time, so per-query numbers stay comparable to the
   * single-JVM protocol. SPARK_GRAFT_SHARDS=1 forces the legacy one-JVM
   * sweep (used by the in-shard child itself, and for A/B).
@@ -263,8 +261,7 @@ object Bench {
     * shard-child mode — writes it to SPARK_GRAFT_SHARD_OUT instead.
     */
   private def runSweep(names: Seq[String], sfDir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.driver(cpus.toInt, sfDir)
+    val spark = Sessions.local(Sessions.cores())
     // One tiny warmup materialization so JVM/codegen startup cost isn't
     // charged to the first query in the map.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -292,15 +289,8 @@ object Bench {
     // breaks a query would "improve" the sweep. Failures are collected
     // and emitted as a separate "failed" key instead.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    val aqeDefault = spark.conf.get("spark.sql.adaptive.enabled")
     val rt = Runtime.getRuntime
     val results = selected.map { case (name, fn) =>
-      // Queries that gain nothing from AQE's re-plan barriers at any
-      // scale (SparkEntry.aqeOffQueries: domain-bounded aggregations +
-      // the hint-pinned-join dedup family) execute with adaptive off,
-      // everything else at the session's volume-gated default.
-      spark.conf.set("spark.sql.adaptive.enabled",
-        if (SparkEntry.aqeOffQueries(name)) "false" else aqeDefault)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()

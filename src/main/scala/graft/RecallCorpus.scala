@@ -121,8 +121,7 @@ object RecallCorpus {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, factorS) = args
     val factor = factorS.toInt
-    val spark = Sessions.driver(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, srcDir)
+    val spark = Sessions.local(Sessions.cores())
     val out = scaled(spark, srcDir, factor).unionByName(planted(spark, srcDir))
     out.repartition(32).write.mode("overwrite")
       .parquet(s"$dstDir/embeddings.parquet")

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf10")
-    val spark = Sessions.driver(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, dir)
+    val spark = Sessions.local(Sessions.cores())
 
     // SPARK_GRAFT_KNN_CLUSTERED = "<n>,<clusters>[,probes...]" (r18,
     // r17 verdict item 7): sim_knn_join's 0.75 default-knob bar is

@@ -129,18 +129,8 @@ object ScaleData {
     require(factor <= 128 || !(tables("documents") || tables("embeddings")),
       s"factor $factor exceeds the perturbation period (128): scaled " +
         "text/embedding copies would repeat (select numeric tables only)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Match Sessions: NTZ-physical source timestamps surface session-zoned,
-      // so scaled copies are written with the same logical type everywhere.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cores()
+    val spark = Sessions.local(cpus)
     import graft.sources.Tables
 
     // Scaled fact tables must not inherit the source's single-file
@@ -166,7 +156,7 @@ object ScaleData {
     def write(name: String, df: => DataFrame): Unit =
       if (tables(name)) {
         val out = clusterKey.get(name) match {
-          case Some(k) => df.repartitionByRange(cpus.toInt * 2, col(k))
+          case Some(k) => df.repartitionByRange(cpus * 2, col(k))
           case None => df
         }
         out.write.mode("overwrite").parquet(s"$dstDir/$name.parquet")

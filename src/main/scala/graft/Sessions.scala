@@ -2,52 +2,38 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory used by tests and mains.
+/** The one session factory: every main, test and library caller builds
+  * its session with [[local]].
   *
-  * Settings chosen for the driver's local[N] harness but shaped for a
-  * real cluster: AQE (runtime coalesce + skew-join splitting), UTC
-  * session time zone (oracle parity), shuffle partitions sized to the
-  * active core count rather than the 200 default. Every session is built
-  * from the one list in [[settings]]; `local` and `driver` differ only in
-  * whether AQE is on.
+  * Settings chosen for a local[N] run but shaped for a real cluster: AQE
+  * (runtime coalesce + skew-join splitting), UTC session time zone
+  * (oracle parity), shuffle partitions sized to the active core count
+  * rather than the 200 default. Every session is built from the one list
+  * in [[settings]]; no caller switches AQE per query. The operators that
+  * need another regime for one of their loops set it themselves and
+  * restore it on exit (`Clusters.connectedComponents`).
   */
 object Sessions {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    build(cores, aqe = true)
-
-  /** Session for the driver mains (Bench/Verify), with adaptive execution
-    * itself applied adaptively — see [[driverAqe]]. */
-  def driver(cpus: Int, sfDir: String): SparkSession = build(cpus, driverAqe(sfDir))
-
-  /** The driver session's AQE switch. AQE's runtime re-planning buys skew
-    * splitting and partition coalescing that only matter once shuffles
-    * are big enough to skew or spill, while its per-stage materialization
-    * barrier costs a fixed ~0.3-0.5 s on every multi-stage query — ~20%
-    * of a whole sf0.1 sweep, nothing at sf10 (where it saved 2x on the
-    * ngram join, r4 BASELINE). So: AQE on when the directory's scan
-    * volume crosses 1 GiB, off below, exactly the cost-based switch a
-    * production deployment makes for its interactive tier.
-    */
-  def driverAqe(sfDir: String): Boolean = inputBytes(sfDir) >= (1L << 30)
-
-  /** Bytes of parquet on disk under an sf directory — the scan volume a
-    * sweep over that directory will read. */
-  def inputBytes(sfDir: String): Long = {
-    val root = java.nio.file.Paths.get(sfDir)
-    if (!java.nio.file.Files.exists(root)) 0L
-    else {
-      val s = java.nio.file.Files.walk(root)
-      try s.filter(p => p.toString.endsWith(".parquet") &&
-          java.nio.file.Files.isRegularFile(p))
-        .mapToLong(java.nio.file.Files.size).sum()
-      finally s.close()
-    }
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .withExtensions(new graft.functions.GraftExtensions)
+    settings(cores).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
+  /** The mains' core count: `SPARK_GRAFT_CPUS`, else every core of the
+    * host. */
+  def cores(): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
   /** Every setting a graft session is built with. */
-  private[graft] def settings(cores: Int, aqe: Boolean): Seq[(String, String)] = Seq(
+  private[graft] def settings(cores: Int): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores.toString,
-    "spark.sql.adaptive.enabled" -> aqe.toString,
+    "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // Start wide, let AQE coalesce down: a fixed partition count equal
     // to the core count makes every big shuffle a handful of giant
@@ -97,15 +83,4 @@ object Sessions {
     // (r17, verdict item 2).
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "256",
     "spark.ui.enabled" -> "false")
-
-  private def build(cores: Int, aqe: Boolean): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .withExtensions(new graft.functions.GraftExtensions)
-    settings(cores, aqe).foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -155,120 +155,6 @@ object SparkEntry {
     "pipeline_corpus_tokenized" -> ((s, d) => Pipeline.corpusTokenized(s, d))
   )
 
-  /** Queries whose every shuffle is key-domain-bounded and lands AFTER
-    * a map-side partial aggregate: the shuffle volume is O(mapTasks ×
-    * |key domain|) fixed-width rows regardless of input size, evenly
-    * hash-spread by construction, with no joins to re-strategize — so
-    * AQE's per-stage materialization barriers (~0.15 s/round, measured
-    * in BASELINE.md's constant decomposition) buy nothing at ANY scale
-    * and Bench/Verify execute these with adaptive execution off. This
-    * extends Sessions.driver's volume-based AQE auto-gate from
-    * directory granularity to the query class where the re-plan has
-    * provably nothing to adapt: partition sizing is predictable
-    * (post-partial-agg reduce volume ≈ |domain| rows), skew impossible
-    * (every shuffle row a distinct bounded key). One-JVM A/B at sf10
-    * (4 reps × 2 rounds each way): etl_consolidate 1.69→1.11 s,
-    * etl_metrics 1.42→1.02 s, etl_export_daily 1.74→1.33 s; q1_agg and
-    * corpus_stats within noise but the same class, included for
-    * consistency. Row-level or join-bearing queries stay out — AQE's
-    * skew-join splitting and coalescing are load-bearing there (the
-    * sf10 ngram join measured 2× faster WITH AQE, r4).
-    *
-    * r9 extends the set with a second AQE-gains-nothing shape —
-    * join-free plans whose every shuffle key is UNIFORM by
-    * construction, even when the key domain grows with data: skew is
-    * impossible (dedup_exact groups on md5 — a uniform 128-bit hash;
-    * corpus_pack_shards windows on equal-width doc_id blocks and its
-    * only unpartitioned window reads ≤ ~10k block totals), the
-    * explicit broadcast in pack_shards leaves nothing to
-    * re-strategize, and the remaining exchange is a global output
-    * sort AQE never improves. One-JVM A/B at sf10 (4 reps × 2 rounds
-    * each way): dedup_exact 1.30→0.59 s, corpus_pack_shards
-    * 1.03→0.76 s — the AQE barriers were half of dedup_exact's cost.
-    *
-    * Late r9 adds the IVF pair: every shuffle in those plans is
-    * bounded by |Q| or nlist — training aggregations reduce to ≤nlist
-    * rows, the rank windows partition by query_id (8 keys), the
-    * candidate join is an explicit broadcast, the final sort is 88
-    * rows — and the 4 Lloyd iterations each paid an AQE re-plan round
-    * for a ≤nlist-row exchange. One-JVM A/B at sf10 (4 reps × 2
-    * rounds each way): sim_ann_ivf 3.22→1.88 s, sim_ann_ivf_serve
-    * 1.06→0.98 s.
-    */
-  val boundedShuffleQueries: Set[String] = Set(
-    "etl_consolidate", "etl_metrics", "etl_export_daily",
-    "q1_agg", "corpus_stats",
-    "dedup_exact", "dedup_exact_normalized", "dedup_exact_normalized_utf8",
-    "corpus_pack_shards", "corpus_pack_shards_bpe", "corpus_shuffle_pack",
-    "sim_ann_ivf", "sim_ann_ivf_serve", "sim_ann_ivfpq_serve",
-    "sim_ann_ivfpq_res_serve",
-    // the set-op pair: their only exchanges are the key-domain-bounded
-    // distinct / grouped-flags aggregate (map-side partials on ≤4.5M
-    // custkeys) + the output sort; the joins broadcast. AQE's re-plan
-    // barrier after the big exchange measured ~1.9 s on q21 and ~0.7 s
-    // on q20 at sf100li (Profile A/B, two rounds each way, r13) —
-    // q21 4.65/4.83 on → 2.70/2.80 off; q20 2.26/2.71 → 1.56/1.68.
-    "q20_intersect", "q21_except")
-
-  /** Second AQE-gains-nothing class (r9-final): queries whose every
-    * JOIN strategy is already hint-pinned (`shuffle_hash` on the
-    * posting/verification/band/star joins — AQE cannot re-strategize
-    * them) and whose shuffle volumes are bounded by construction
-    * (prefix-filter candidates ≤ Σ df_prefix², adaptive LSH/simhash
-    * bands sized to keep collision volume linear in n, CC edges ≤ the
-    * verified pair set). r4 measured AQE worth 2× on this family, but
-    * that was the pre-prefix-filter rare-shingle plan whose 26M-row
-    * shingle shuffle needed runtime coalescing; the r7 rewrites removed
-    * the thing AQE was fixing. One-JVM A/B at sf10, TWO independent
-    * rounds each way (best / rep spread): ngram 6.17→3.32,
-    * minhash 9.45→3.62, simhash 6.75→3.56, embed_cosine 11.42→5.07,
-    * clusters 6.57→3.96 — AQE-off is ~2× across the family, and at
-    * sf0.1/sf1 the volume-based auto-gate already runs them AQE-off,
-    * so this only changes the ≥1 GiB regime to match the measurement.
-    * (corpus_contamination stays OUT: its τ-adaptive count plan was
-    * measured at 1.00× parity WITH AQE at sf10 and its doc-frequency
-    * posting join is the one place runtime skew handling still has a
-    * live job.)
-    */
-  val pinnedJoinQueries: Set[String] = Set(
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_embed_cosine", "dedup_clusters", "dedup_prune",
-    // minhash banding + verify + CC: every join hint-pinned, same
-    // family as dedup_minhash_lsh + dedup_clusters above
-    "dedup_clusters_sketch",
-    // same ngram pair graph + CC class, plus the merge's hint-pinned
-    // label semi/anti joins
-    "dedup_clusters_incremental",
-    // store-resident twin: hint-pinned posting/semi/anti joins against
-    // the materialized store tables, batch-bounded CC
-    "dedup_clusters_incremental_serve",
-    // embed-cosine pairs (hint-pinned blocked LSH self-join) + CC —
-    // the same composition class as dedup_clusters
-    "dedup_semantic",
-    "pipeline_corpus_clean",
-    // the full composition adds the span/mix/pack stages: hint-pinned
-    // window-hash semi join + span/doc/text joins, broadcast rate and
-    // block-prefix tables (bounded rows by construction)
-    "pipeline_corpus_full",
-    // same plan, BPE-priced tail (one extra codegen'd kernel column)
-    "pipeline_corpus_full_bpe",
-    // same class: one hint-pinned cell co-group + a bounded-heap
-    // top-k aggregate, candidate volume n·probes·(n/nlist) by
-    // construction
-    "sim_knn_join",
-    // the degeneration run of the same co-group plus two hint-pinned
-    // shuffle-hash id joins in the decimal re-rank
-    "sim_knn_exact",
-    // batch-sized hash groupBy + one hint-pinned shuffle-hash anti join
-    // on the 16-byte content hash — both shuffles bounded by batch size
-    "dedup_incremental",
-    // same plan with the anti join's store side read from the
-    // materialized hash audit table — still hint-pinned + narrow
-    "dedup_incremental_serve")
-
-  /** Union consumed by Bench/Verify's per-query AQE gate. */
-  val aqeOffQueries: Set[String] = boundedShuffleQueries ++ pinnedJoinQueries
-
   /** Shared shingle/size CTEs for the dedup oracles — the SQL mirror of
     * Dedup.shingled (3-gram word shingles, distinct per doc, docs with
     * <3 words excluded).

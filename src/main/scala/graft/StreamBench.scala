@@ -42,9 +42,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "500000").toLong
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "30").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.cores()
     val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_STREAM_STATESTORE=rocksdb swaps the per-key state
     // store to RocksDB — the production provider once state outgrows
     // executor heap (the default HDFSBacked store keeps every key's

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.driver(cpus.toInt, sfDir)
+    val spark = Sessions.local(Sessions.cores())
     new java.io.File(outDir).mkdirs()
     // Same optional subset filter as Bench (iteration aid); unknown names
     // fail loudly rather than silently dumping nothing.
@@ -20,11 +18,7 @@ object Verify {
     }
     val selected = subset.fold(SparkEntry.queries)(s =>
       SparkEntry.queries.filter { case (k, _) => s(k) })
-    val aqeDefault = spark.conf.get("spark.sql.adaptive.enabled")
     selected.foreach { case (name, fn) =>
-      // same per-query AQE gate as Bench (SparkEntry.aqeOffQueries)
-      spark.conf.set("spark.sql.adaptive.enabled",
-        if (SparkEntry.aqeOffQueries(name)) "false" else aqeDefault)
       // Rows-only dumps (no oracle SQL twin): flatten array columns to a
       // deterministic joined string IN THE DUMP ONLY — the driver's pandas
       // comparator factorizes every dumped column and numpy arrays are

@@ -72,8 +72,9 @@ private[graft] object Stores {
     * a hot partition splits at the advisory size instead of writing
     * through one task (the r9 ADVICE bottleneck). Spark drops the
     * rebalance hint when AQE is off, which un-clusters the write (the
-    * sf0.1 store round trip went 1.9 → 3.7 s), so AQE-off sessions take
-    * the plain `repartition(c)` and its hot-partition ceiling.
+    * sf0.1 store round trip went 1.9 → 3.7 s), so a caller's own AQE-off
+    * session takes the plain `repartition(c)` and its hot-partition
+    * ceiling (`Sessions.local` runs AQE on).
     */
   def clustered(df: DataFrame, c: String): DataFrame =
     if (df.sparkSession.conf.get("spark.sql.adaptive.enabled", "false").toBoolean)

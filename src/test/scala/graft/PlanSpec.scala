@@ -1056,4 +1056,19 @@ class PlanSpec extends AnyFunSuite {
         s"store rule hand-rolled outside Stores: $needle in $sites")
     }
   }
+
+  test("one session policy: sessions are built only in Sessions, AQE set only there and in the CC loop") {
+    // Every main builds Sessions.local; no harness holds a per-query AQE
+    // list or toggle. The one operator-owned regime is the CC star loop,
+    // which sets AQE off for its rounds and restores it on exit.
+    def sites(needles: String*): Set[String] = mainSources.collect {
+      case (rel, src) if needles.exists(src.contains) => rel
+    }.toSet
+    assert(sites("SparkSession.builder()") == Set("Sessions.scala"),
+      s"a session built outside Sessions: ${sites("SparkSession.builder()")}")
+    val aqeSets = sites("set(\"spark.sql.adaptive.enabled\"", "\"spark.sql.adaptive.enabled\" ->")
+    assert(aqeSets == Set("Sessions.scala", "operators/Clusters.scala"),
+      s"AQE set outside Sessions and the CC star loop: $aqeSets")
+    assert(sites("aqeOff").isEmpty, s"a per-query AQE list: ${sites("aqeOff")}")
+  }
 }

@@ -4,12 +4,12 @@ import java.io.File
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.etl.EtlQueries
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -124,5 +124,33 @@ class StoresSpec extends AnyFunSuite {
       assert(warm == first && again == first)
       Caches.release()
     }
+  }
+
+  test("a clustered write with AQE off repartitions: same rows, one file per date directory") {
+    // Spark drops the rebalance hint with AQE off, so such sessions
+    // take Stores.clustered's plain repartition; every input partition
+    // below holds every date, so an unclustered write would leave four
+    // files in each date directory.
+    val df = spark.range(0, 2000, 1, 4)
+      .select(col("id"), expr("date_add(date'2024-01-01', cast(id % 5 as int))").as("date"))
+    def written(aqe: String): (Seq[String], Seq[Int]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_stores_clustered").toFile
+      val key = "spark.sql.adaptive.enabled"
+      val prior = spark.conf.get(key)
+      spark.conf.set(key, aqe)
+      try {
+        Stores.commitTo(df, dir.getPath, Some("date"))
+        val parts = dir.listFiles().toSeq.filter(_.getName.startsWith("date="))
+          .map(_.listFiles().count(_.getName.startsWith("part-")))
+        (rows(spark.read.parquet(dir.getPath)), parts)
+      } finally {
+        spark.conf.set(key, prior)
+        FileUtils.deleteDirectory(dir)
+      }
+    }
+    val (on, _) = written("true")
+    val (off, files) = written("false")
+    assert(on.size == 2000 && off == on)
+    assert(files == Seq.fill(5)(1), s"part files per date directory with AQE off: $files")
   }
 }
