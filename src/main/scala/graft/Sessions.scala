@@ -39,10 +39,18 @@ object Sessions {
     // to the core count makes every big shuffle a handful of giant
     // sort-and-spill tasks once the data outgrows it (the sf10 sweep
     // measured dedup_ngram_jaccard at 271 s with 8 fixed partitions,
-    // 134 s with AQE coalescing from 64). Small queries still coalesce
-    // to one or two partitions, so the constant stays amortized.
+    // 134 s with AQE coalescing from 64). Small queries coalesce to one
+    // or two partitions, persisted frames included (next entry), so the
+    // constant stays amortized.
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
       math.max(cores * 4, 32).toString,
+    // Without this Spark plans every persisted frame with AQE's
+    // final-stage coalescing off, so each Caches.scoped frame is stored
+    // at initialPartitionNum partitions and every stage that reads it
+    // runs that many tiny tasks. With it, Pipeline.corpusFull over 25k
+    // documents on 4 cores runs 145 tasks instead of 528 (41 → 43
+    // stages), with the same output.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

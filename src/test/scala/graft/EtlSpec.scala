@@ -303,6 +303,18 @@ class EtlSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
   }
 
+  test("metricsForDays refuses a non-UTC session instead of dropping rows") {
+    // its ts prefilter uses UTC-midnight instants, equal to the callers'
+    // date predicates only while `date` derives from ts in UTC
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+      val e = intercept[IllegalArgumentException](
+        MetricsQueries.metricsForDays(spark, dir, "2024-01-05", Some("2024-01-25")))
+      assert(e.getMessage.contains("America/New_York"), e.getMessage)
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+  }
+
   test("channel inference matches the reference's UTM mapping") {
     import spark.implicits._
     val df = Seq(("google", "cpc"), ("facebook", "social"), ("tiktok", "cpc"),

@@ -477,6 +477,20 @@ class PlanSpec extends AnyFunSuite {
       s"expected the quality/exact/ngram stages to read the shared cache, got $cacheReads reads")
   }
 
+  test("pipeline_corpus_full reads every cached frame at AQE-coalesced partitions") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val df = graft.operators.Pipeline.corpusFull(spark, dir)
+    df.collect()
+    val parts = deepNodes(df.queryExecution.executedPlan).collect {
+      case i: InMemoryTableScanExec => i.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
+    }
+    graft.Caches.release()
+    assert(parts.nonEmpty, "pipeline_corpus_full read no cached frame")
+    // one task per cached partition in every stage that reads it: an
+    // uncoalesced frame sits at initialPartitionNum (32) on 4 cores
+    assert(parts.forall(_ <= 4), s"cached frames read at ${parts.mkString(", ")} partitions")
+  }
+
   test("only bounded-cardinality window operators run unpartitioned") {
     // etl_channel_query's residual window runs over <= offset+limit rows
     // and corpus_pack_shards' block-prefix window over <= ~10k block
