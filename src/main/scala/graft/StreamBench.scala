@@ -31,9 +31,9 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   * reference's /ingest loop as an incremental aggregation), and the
   * stream-stream interval attribution join (bench-scaled lookback so
   * state eviction fires inside the run — see the knobs below).
-  * signedExport is excluded: its cost is dominated by the per-batch
-  * store merge (disk), which the crash-injection spec covers and a
-  * rows/s figure would misstate.
+  * signedExport is excluded: it is an arrival-store loop whose cost is
+  * the per-batch store commit (disk), which a noop-sink rows/s figure
+  * would misstate.
   */
 object StreamBench {
 
@@ -44,14 +44,6 @@ object StreamBench {
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "30").toInt
     val cpus = Sessions.cores()
     val spark = Sessions.local(cpus)
-    // SPARK_GRAFT_STREAM_STATESTORE=rocksdb swaps the per-key state
-    // store to RocksDB — the production provider once state outgrows
-    // executor heap (the default HDFSBacked store keeps every key's
-    // state as JVM objects). BASELINE.md's streaming section carries
-    // the measured A/B on the state-heavy dedup twin.
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // SPARK_GRAFT_STREAM_OPS: comma-separated subset (default: all).
     val opFilter = sys.env.get("SPARK_GRAFT_STREAM_OPS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

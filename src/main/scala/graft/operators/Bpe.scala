@@ -198,37 +198,17 @@ object Bpe {
     * `n_tokens`), shared with the arrival twin
     * ([[graft.streaming.EventStream.seqPackArrivalBatch]]).
     *
-    * TWO COORDINATION SHAPES, both identity-gated by the same specs,
-    * selected by `spark.graft.seqpack.narrowCoordination` (default
-    * false). The r18 plan audit showed the direct shape — encode, then
-    * run the id ARRAYS through the prefix-sum machinery — moves the
-    * whole token stream through THREE exchanges (the range partition,
-    * the prefix window's blk hash exchange, the final seq_id
-    * assembly). The narrow shape encodes ONCE into a scoped cache
-    * (MEMORY_AND_DISK — spills, never OOMs, the pipeline family's
-    * standard batch/train-frame cache class) and coordinates a NARROW
-    * (doc_id, skey, n_tokens = size(ids)) frame — 24 B/doc — through
-    * the offset machinery, joining the cached ids to the finished
-    * offsets by doc_id (shuffle_hash, neither side sorts): the token
-    * stream crosses TWO exchanges. Measured A/B (sf100doc arrival
-    * loop, 500k docs ≈ 86M tokens/batch, local[32]): direct 4.4-5.3
-    * s/batch, narrow-cached 5.7-6.3, narrow-without-cache (bpe_count
-    * supplying lengths, second kernel pass) 5.5-7.2. LOCALLY the
-    * direct shape wins — same-JVM exchanges are memory copies, so a
-    * cache materialization buys nothing — and it is the default. On a
-    * network-shuffle cluster the calculus inverts: each exchange ships
-    * the corpus's token bytes (≈ 4 B/token — at the 100 TB design
-    * point, ~petabyte-class traffic per avoided pass), so the narrow
-    * shape's one saved heavy exchange plus the window sort shrinking
-    * from id-arrays to 24 B rows is the deployment choice; flip the
-    * conf, semantics pinned identical by the spec matrix.
+    * The encoded id ARRAYS run through the prefix-sum machinery
+    * directly. A narrow shape (coordinate a 24 B/doc (doc_id, skey,
+    * n_tokens) frame, then join the cached ids back) saves one heavy
+    * exchange but measured slower locally (sf100doc arrival loop, 500k
+    * docs ≈ 86M tokens/batch, local[32]: direct 4.4-5.3 s/batch,
+    * narrow-cached 5.7-6.3), so only the direct shape is kept.
     */
   private[graft] def tokenCoordinates(docs: DataFrame, merges: Array[String],
                                       blocks: Int, startOffset: Long): DataFrame = {
     val spark = docs.sparkSession
     val eos = graft.functions.BpeCount.eosId(merges.length)
-    val narrow = spark.conf.getOption("spark.graft.seqpack.narrowCoordination")
-      .exists(_.toBoolean)
     val nBlocks =
       if (blocks > 0) blocks
       else math.max(32, spark.sparkContext.defaultParallelism * 4)
@@ -236,25 +216,12 @@ object Bpe {
       md5(concat(col("doc_id").cast("string"), lit(":shuffle"))).as("skey"),
       concat(graft.functions.BpeCount.bpe_encode(col("clean_text"), merges),
         array(lit(eos))).as("ids"))
-    if (narrow) {
-      val cached = enc.transform(graft.Caches.scoped(_))
-      val offs = Curation.withPrefixOffsets(
-        cached.select(col("doc_id"), col("skey"),
-            size(col("ids")).cast("long").as("n_tokens"))
-          .repartitionByRange(nBlocks, col("skey"), col("doc_id"))
-          .withColumn("blk", spark_partition_id().cast("long")),
-        orderCols = Seq("skey", "doc_id"), startOffset = startOffset)
-        .select(col("doc_id"), col("off"), col("n_tokens"))
-      cached.select(col("doc_id"), col("ids"))
-        .join(offs.hint("shuffle_hash"), Seq("doc_id"))
-    } else {
-      Curation.withPrefixOffsets(
-        enc.withColumn("n_tokens", size(col("ids")).cast("long"))
-          .repartitionByRange(nBlocks, col("skey"), col("doc_id"))
-          .withColumn("blk", spark_partition_id().cast("long")),
-        orderCols = Seq("skey", "doc_id"), startOffset = startOffset)
-        .select(col("doc_id"), col("ids"), col("off"), col("n_tokens"))
-    }
+    Curation.withPrefixOffsets(
+      enc.withColumn("n_tokens", size(col("ids")).cast("long"))
+        .repartitionByRange(nBlocks, col("skey"), col("doc_id"))
+        .withColumn("blk", spark_partition_id().cast("long")),
+      orderCols = Seq("skey", "doc_id"), startOffset = startOffset)
+      .select(col("doc_id"), col("ids"), col("off"), col("n_tokens"))
   }
 
   /** Stage 2: each offset-coordinated doc (`ids`, `off`, `n_tokens`)

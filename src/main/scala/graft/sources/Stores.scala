@@ -57,9 +57,8 @@ private[graft] object Stores {
   def committed(fs: FileSystem, dir: Path): Boolean = commitStamp(fs, dir).isDefined
 
   /** The commit point: create `dir/_SUCCESS` unless the writer's output
-    * committer already did. Writers with their own write shape (the
-    * signed export's staged date swap) run it after the write returns. */
-  def markCommitted(dir: String): Unit = {
+    * committer already did. */
+  private def markCommitted(dir: String): Unit = {
     val (fs, p) = fsFor(dir)
     val marker = new Path(p, Marker)
     if (!fs.exists(marker)) fs.create(marker, true).close()

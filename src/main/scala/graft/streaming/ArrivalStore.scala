@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * vector loops in [[graft.operators.Ivf]]) keeps standing state as
   * batchId-keyed partition directories under a store root —
   * `<root>/<sub>/batch=<id>/` — grown by one overwrite per micro-batch.
-  * The nine loops and the compactor share this object as their ONLY
-  * copy of the layout and the commit: [[run]] is the one append-mode
+  * The ten loops and the compactor share this object as their ONLY
+  * copy of the layout and the commit: [[run]] is the one
   * `foreachBatch` shell, [[batchDir]]/[[batchIdOf]] the one layout,
   * and [[commit]] the one per-batch write. The contract has four
   * disciplines:
@@ -37,8 +37,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *      returns an EMPTY frame of the caller's schema, never a
   *      schema-inference error ([[readOr]]).
   *   4. LATEST-BATCH-WINS RESOLUTION — delta logs without tombstones
-  *      (cluster labels, span lists, clean text) resolve per key to
-  *      the rows of that key's HIGHEST committed batch
+  *      (cluster labels, span lists, clean text, signed export rows)
+  *      resolve per key to the rows of that key's HIGHEST committed batch
   *      ([[latestBatchRows]]); a batch that changes a key re-states
   *      all of the key's rows, which is what makes tombstones
   *      unnecessary.
@@ -51,12 +51,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 private[graft] object ArrivalStore {
 
-  /** The one arrival stream shell: an append-mode `foreachBatch` query
-    * that hands each micro-batch and its id to `perBatch`. */
-  def run(input: DataFrame, checkpointDir: String)(
+  /** The one arrival stream shell: a `foreachBatch` query that hands
+    * each micro-batch and its id to `perBatch`. The arrival loops run
+    * `append`; an aggregate whose batches re-state changed keys runs
+    * `update`. */
+  def run(input: DataFrame, checkpointDir: String, outputMode: String = "append")(
       perBatch: (DataFrame, Long) => Unit): StreamingQuery =
     input.writeStream
-      .outputMode("append")
+      .outputMode(outputMode)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) => perBatch(batch, batchId) }
       .start()
@@ -117,7 +119,9 @@ private[graft] object ArrivalStore {
     * key gate — delta keys are bounded by the re-statement mass since
     * the last compaction) while the window shuffles only the delta
     * dirs. Exact by construction: a base row survives iff no later
-    * dir re-states its key, which is precisely latest-batch-wins.
+    * dir re-states its key, which is precisely latest-batch-wins. Keys
+    * match null-safe (`<=>`), as the window's partitioning does: a key
+    * holding a null is still one key.
     *
     * COST-GATED on free file sizes: the tier adds one bounded probe
     * job and an anti join, which only pays once the base dir
@@ -143,7 +147,7 @@ private[graft] object ArrivalStore {
     val deltas = latestBatchRowsWindow(spark, root, deltaDirs, keyCols)
       .transform(graft.Caches.scoped(_)) // override keys + output union
     val base = spark.read.parquet(baseDirs: _*) // no batch col: data only
-    val keys = deltas.select(keyCols.map(col): _*).distinct()
+    val keys = deltas.select(keyCols.map(k => col(k).as(s"__k_$k")): _*).distinct()
     val probe = keys.limit(keyGate + 1).collect()
     val overridden =
       if (probe.length <= keyGate)
@@ -151,7 +155,8 @@ private[graft] object ArrivalStore {
           spark.sparkContext.parallelize(probe.toIndexedSeq, 1),
           keys.schema))
       else keys.hint("shuffle_hash")
-    base.join(overridden, keyCols, "left_anti")
+    base.join(overridden,
+        keyCols.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _), "left_anti")
       .select(deltas.columns.map(col): _*)
       .unionByName(deltas)
   }

@@ -592,24 +592,16 @@ class CurationSpec extends AnyFunSuite {
       (4L, "bb"), (5L, "a b aaaa"), (6L, "bb bb bb"))
     val ctx = 5
     val want = refSequencePack(docs, merges, ctx)
-    // both coordination shapes (the direct default and the narrow
-    // cluster shape) must produce the identical pack — the conf knob
-    // may only change the PLAN
-    for (narrow <- Seq("false", "true")) {
-      spark.conf.set("spark.graft.seqpack.narrowCoordination", narrow)
-      val got = try graft.operators.Bpe.sequencePack(
-          docs.toDF("doc_id", "clean_text"), merges, ctx, blocks = 3)
-        .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getLong(2))).toSeq
-      finally spark.conf.unset("spark.graft.seqpack.narrowCoordination")
-      graft.Caches.release()
-      assert(got == want,
-        s"crafted pack (narrowCoordination=$narrow) diverged:\n got $got\nwant $want")
-      // structural invariants: ids contiguous from 0, every sequence
-      // exactly ctx wide, padding confined to the last sequence
-      assert(got.map(_._1) == got.indices.map(_.toLong))
-      assert(got.forall(_._2.size == ctx))
-      assert(got.init.forall(_._3 == 0L), "padding leaked off the tail sequence")
-    }
+    val got = graft.operators.Bpe.sequencePack(
+        docs.toDF("doc_id", "clean_text"), merges, ctx, blocks = 3)
+      .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getLong(2))).toSeq
+    graft.Caches.release()
+    assert(got == want, s"crafted pack diverged:\n got $got\nwant $want")
+    // structural invariants: ids contiguous from 0, every sequence
+    // exactly ctx wide, padding confined to the last sequence
+    assert(got.map(_._1) == got.indices.map(_.toLong))
+    assert(got.forall(_._2.size == ctx))
+    assert(got.init.forall(_._3 == 0L), "padding leaked off the tail sequence")
   }
 
   test("pipeline_corpus_tokenized equals the sequential encode+pack over the mixed corpus") {

@@ -1,12 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.etl.MetricsQueries
 import graft.sources.{MetricsStore, Stores}
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,17 +30,8 @@ class MetricsStoreSpec extends AnyFunSuite {
 
   /** `body`'s result and the number of Spark jobs it launched. */
   private def jobs[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      ListenerDrain(spark.sparkContext)
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (a, starts) = ListenerDrain.jobStarts(spark.sparkContext)(body)
+    (a, starts.size)
   }
 
   private def withStore(body: String => Unit): Unit = {

@@ -1041,23 +1041,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("the arrival-store layout and stream shell are written only in ArrivalStore") {
-    // One commit path for the arrival loops: the batch-dir layout (the
-    // `batch=$` interpolation and its parse) and the foreachBatch shell
-    // live in ArrivalStore alone. Besides it, only signedExport (an
-    // update-mode query over a date-partitioned store) and StreamBench's
-    // noop sink start a query of their own.
-    def sites(needle: String): Map[String, Int] = mainSources.collect {
-      case (rel, src) if src.contains(needle) =>
-        rel -> (src.length - src.replace(needle, "").length) / needle.length
-    }.toMap
+    // One commit path for every streaming store: the batch-dir layout
+    // (the `batch=$` interpolation and its parse) and the foreachBatch
+    // shell live in ArrivalStore alone; besides it, only StreamBench's
+    // noop sink starts a query. No store keeps a commit protocol of its
+    // own: no dynamic partition overwrite, no `.staging` sibling tree.
+    def sites(needle: String): Set[String] =
+      mainSources.collect { case (rel, src) if src.contains(needle) => rel }.toSet
     for (needle <- Seq("batch=$", "stripPrefix(\"batch=\")"))
-      assert(sites(needle).keySet == Set("streaming/ArrivalStore.scala"),
+      assert(sites(needle) == Set("streaming/ArrivalStore.scala"),
         s"arrival batch-dir layout hand-rolled outside ArrivalStore: $needle in ${sites(needle)}")
-    val shells = sites("writeStream")
-    assert(shells - "streaming/ArrivalStore.scala" ==
-        Map("streaming/EventStream.scala" -> 1, "StreamBench.scala" -> 1) &&
-        shells.contains("streaming/ArrivalStore.scala"),
-      s"a streaming query shell outside ArrivalStore.run: $shells")
+    assert(sites("writeStream") == Set("streaming/ArrivalStore.scala", "StreamBench.scala"),
+      s"a streaming query shell outside ArrivalStore.run: ${sites("writeStream")}")
+    for (needle <- Seq("partitionOverwriteMode", ".staging"))
+      assert(sites(needle).isEmpty, s"a private store commit protocol: $needle in ${sites(needle)}")
   }
 
   test("the store rules are written only in Stores") {
@@ -1084,5 +1081,8 @@ class PlanSpec extends AnyFunSuite {
     assert(aqeSets == Set("Sessions.scala", "operators/Clusters.scala"),
       s"AQE set outside Sessions and the CC star loop: $aqeSets")
     assert(sites("aqeOff").isEmpty, s"a per-query AQE list: ${sites("aqeOff")}")
+    // ...and the library reads no conf key of its own: a `spark.graft.*`
+    // switch would be a second policy beside the session's.
+    assert(sites("\"spark.graft.").isEmpty, s"a library conf key: ${sites("\"spark.graft.")}")
   }
 }

@@ -1,13 +1,11 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.etl.EtlQueries
 import graft.sources.{Stores, Tables}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,18 +52,8 @@ class StoresSpec extends AnyFunSuite {
 
   /** Names of the stages every job `body` launches. */
   private def stagesOf[A](body: => A): (A, Seq[String]) = {
-    val names = new ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.stageInfos.foreach(s => names.add(s.name))
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      ListenerDrain(spark.sparkContext)
-      (a, names.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (a, starts) = ListenerDrain.jobStarts(spark.sparkContext)(body)
+    (a, starts.flatMap(_.stageInfos.map(_.name)))
   }
 
   test("a derived store under a file: URI source is rebuilt when the source is rewritten") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Relational
 import graft.sources.Tables
-import graft.streaming.EventStream
+import graft.streaming.{ArrivalStore, EventStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,42 +99,29 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming signed export equals per-date batch export; replay leaves the store unchanged") {
-    import graft.etl.{Consolidate, EtlQueries, MetricsQueries}
+    import graft.etl.{EtlQueries, MetricsQueries}
     val ev = Tables.events(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_export_src").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_export_store").toString + "/store"
+    val root = tmpDir("graft_export")
+    val (srcDir, storeDir) = (s"$root/src", s"$root/store")
     ev.repartition(3).write.mode("overwrite").parquet(srcDir)
-    EventStream.MergeStats.reset()
-    def run(): Unit = {
+    // discipline 3: a store with no committed batch reads as an empty
+    // frame of the export schema
+    val emptyStore = EventStream.signedExportRows(spark, storeDir)
+    assert(emptyStore.isEmpty)
+    def run(ckpt: String): Unit = {
       // fresh checkpoint each run = the full feed replays into the SAME store
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_export_ckpt").toString
       val src = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val q = EventStream.signedExport(src, storeDir, ckpt)
       try { q.processAllAvailable() } finally { q.stop() }
     }
-    run()
-    // Quantify the staged-write durability trade (r5 verdict item 8):
-    // the first batch against the missing store must skip staging (its
-    // output derives from streaming state alone), and the staging
-    // round-trip's extra parquet write is reported as a share of total
-    // merge time so the I/O price stays on the record.
-    val ms = EventStream.MergeStats
-    assert(ms.appliedMerges > 0)
-    // Count against APPLIED merges (batches that touched dates): a
-    // zero-row micro-batch increments `merges` without staging and must
-    // not fail this property. Exactly the first applied merge (store
-    // not yet created) skips staging.
-    assert(ms.stagedMerges == ms.appliedMerges - 1,
-      s"expected exactly the first of ${ms.appliedMerges} applied merges to " +
-        s"skip staging, got ${ms.stagedMerges} staged (${ms.merges} total merges)")
-    info(f"signed-export merges: ${ms.merges} total, ${ms.appliedMerges} applied, " +
-      f"${ms.stagedMerges} staged; " +
-      f"staging write ${ms.stagingNanos / 1e9}%.2f s of ${ms.mergeNanos / 1e9}%.2f s " +
-      f"merge time (${100.0 * ms.stagingNanos / math.max(ms.mergeNanos, 1)}%.0f%%)")
-    def snapshot() = spark.read.parquet(storeDir)
-      .withColumn("date", col("date").cast("string"))
-    val first = snapshot().collect().map(_.toString).sorted.toSeq
+    run(s"$root/ckpt_a")
+    assert(ArrivalStore.standingDirs(s"$storeDir/export", Long.MaxValue).length > 1,
+      "the feed must span several micro-batches, so keys resolve across batch dirs")
+    def snapshot(store: String) = EventStream.signedExportRows(spark, store)
+    def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(typed(emptyStore) == typed(snapshot(storeDir)))
+    val first = rowsOf(snapshot(storeDir))
     assert(first.nonEmpty)
     // batch reference: handlers.go runExport per date — exportDaily +
     // signing, composed from the already-verified batch operators
@@ -148,20 +135,17 @@ class StreamingSpec extends AnyFunSuite {
     // compare on the batch reference's column order
     val refCols = EtlQueries.signExportRows(
       MetricsQueries.exportDaily(m, dates.head).withColumn("date", lit(dates.head))).columns
-    val gotRows = snapshot().select(refCols.map(col).toIndexedSeq: _*)
-      .collect().map(_.toString).sorted.toSeq
+    val gotRows = rowsOf(snapshot(storeDir).select(refCols.map(col).toIndexedSeq: _*))
     assert(gotRows == want, "streaming export store diverges from batch per-date export")
-    // replay the whole feed into the same store: byte-identical, no dups
-    run()
-    val second = snapshot().collect().map(_.toString).sorted.toSeq
-    assert(second == first, "replaying the feed changed the store (not idempotent)")
+    // replay the whole feed into the same store: identical rows, no dups
+    run(s"$root/ckpt_b")
+    assert(rowsOf(snapshot(storeDir)) == first,
+      "replaying the feed changed the store (not idempotent)")
     // checkpointed RESTART: a second source feeds half its files to one
     // query instance, then a NEW instance resumes from the same
     // checkpoint for the rest — exactly-once recovery must land the
     // store in the same final state
-    val src2 = java.nio.file.Files.createTempDirectory("graft_export_src2").toString
-    val store2 = java.nio.file.Files.createTempDirectory("graft_export_store2").toString + "/store"
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_export_ckpt2").toString
+    val (src2, store2, ckpt2) = (s"$root/src2", s"$root/store2", s"$root/ckpt2")
     def startOn(src: String) = EventStream.signedExport(
       spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(src),
       store2, ckpt2)
@@ -171,103 +155,10 @@ class StreamingSpec extends AnyFunSuite {
     ev.filter(col("event_id") % 2 === 1).repartition(2).write.mode("append").parquet(src2)
     val q2 = startOn(src2)
     try { q2.processAllAvailable() } finally { q2.stop() }
-    val resumed = spark.read.parquet(store2)
-      .withColumn("date", col("date").cast("string"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(resumed == first, "checkpointed restart diverged from the single-run store")
+    assert(rowsOf(snapshot(store2)) == first,
+      "checkpointed restart diverged from the single-run store")
     m.unpersist()
-  }
-
-  test("many-dates batches commit through the bulk overwrite tier, same store") {
-    // r12 verdict item 8: a backfill batch with thousands of dates must
-    // not pay a per-date driver rename loop. Force the tier with
-    // maxSwapDates=1 (every multi-date batch routes bulk) and assert the
-    // final store is row-identical to the per-date swap path's.
-    val ev = Tables.events(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_bulk_src").toString
-    ev.repartition(3).write.mode("overwrite").parquet(srcDir)
-    def runTo(storeDir: String, cap: Int): Unit = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bulk_ckpt").toString
-      val src = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = EventStream.signedExport(src, storeDir, ckpt, maxSwapDates = cap)
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
-    def snapshot(storeDir: String) = spark.read.parquet(storeDir)
-      .withColumn("date", col("date").cast("string"))
-      .collect().map(_.toString).sorted.toSeq
-    val swapStore = java.nio.file.Files.createTempDirectory("graft_bulk_a").toString + "/store"
-    val bulkStore = java.nio.file.Files.createTempDirectory("graft_bulk_b").toString + "/store"
-    EventStream.MergeStats.reset()
-    runTo(swapStore, cap = 10000)
-    assert(EventStream.MergeStats.bulkMerges == 0L,
-      "high cap must never route a test-sized batch through the bulk tier")
-    EventStream.MergeStats.reset()
-    runTo(bulkStore, cap = 1)
-    assert(EventStream.MergeStats.bulkMerges > 0L,
-      "cap=1 must route multi-date batches through the bulk tier")
-    assert(snapshot(bulkStore) == snapshot(swapStore),
-      "bulk-overwrite tier diverged from the per-date swap store")
-  }
-
-  test("staged-commit swap survives a crash between delete and rename (injected)") {
-    // r8 documented the delete-to-rewrite window honestly; r9 closes it
-    // at the file-layout level. This spec KILLS the merge in that exact
-    // window — the injected crash fires after a date partition's target
-    // is deleted and before its staged copy is renamed in — then
-    // restarts the query from the same checkpoint and asserts the
-    // replayed batch restores the store to the uninterrupted reference.
-    val ev = Tables.events(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_crash_src").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_crash_store").toString + "/store"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_crash_ckpt").toString
-    ev.repartition(3).write.mode("overwrite").parquet(srcDir)
-    def start() = EventStream.signedExport(
-      spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(srcDir),
-      storeDir, ckpt)
-    // a date every batch touches — the second applied merge (first with
-    // an existing store, so first to run the swap) will hit it
-    val victim = graft.etl.MetricsQueries.metrics(spark, dir)
-      .agg(min(col("date"))).head.getString(0)
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def targetDir = new org.apache.hadoop.fs.Path(storeDir, s"date=$victim")
-    def stagingDir = new org.apache.hadoop.fs.Path(s"$storeDir.staging")
-    EventStream.crashAfterDeleteOf = Some(victim)
-    try {
-      val q1 = start()
-      val thrown = intercept[Throwable] { try q1.processAllAvailable() finally q1.stop() }
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: causes(t.getCause)
-      assert(causes(thrown).exists(_.getMessage != null) &&
-        causes(thrown).exists(c => Option(c.getMessage).exists(_.contains("injected crash"))),
-        s"query failed for another reason: $thrown")
-      // the window is OPEN on disk: the victim partition is gone from
-      // the store, its only copy sits in the committed staging tree
-      assert(!fs.exists(targetDir), "victim partition survived the injected delete")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(stagingDir, "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(stagingDir, s"date=$victim")),
-        "staged copy missing — the crash window would lose data")
-    } finally {
-      EventStream.crashAfterDeleteOf = None
-    }
-    // heal: restart from the SAME checkpoint; recovery rolls the staged
-    // partition forward before the replayed batch reads kept rows
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(fs.exists(targetDir) && !fs.exists(stagingDir))
-    // reference: the same feed streamed without interruption
-    val refStore = java.nio.file.Files.createTempDirectory("graft_crash_ref").toString + "/store"
-    val refCkpt = java.nio.file.Files.createTempDirectory("graft_crash_refckpt").toString
-    val qr = EventStream.signedExport(
-      spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(srcDir),
-      refStore, refCkpt)
-    try qr.processAllAvailable() finally qr.stop()
-    def rows(p: String) = spark.read.parquet(p)
-      .withColumn("date", col("date").cast("string"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(storeDir) == rows(refStore),
-      "crashed-and-replayed store diverges from the uninterrupted run")
+    rm(root)
   }
 
   test("sessionizer state survives a checkpointed restart (exactly-once)") {
@@ -1090,6 +981,20 @@ class StreamingSpec extends AnyFunSuite {
         .map(_.getLong(0)).contains(301L),
       "post-compaction fresh doc did not land")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(xstore))
+
+    // Export store: export/ resolves latest-batch-wins per export key,
+    // null-holding keys included, so the compacted dir re-states the
+    // resolved rows and the reader is unchanged.
+    val estore = tmpDir("graft_compact_ex")
+    (0 to 2).foreach(loop("export")(estore, _))
+    def exportRows() = rowsOf(EventStream.signedExportRows(spark, estore))
+    val eBefore = exportRows()
+    assert(eBefore.size == 4, s"export fixture: $eBefore")
+    EventStream.compactArrivalStore(spark, estore)
+    assert(new java.io.File(s"$estore/export").listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("batch=")) == 2)
+    assert(exportRows() == eBefore, "compaction changed the resolved export rows")
+    rm(estore)
   }
 
   test("left-outer interval join: matches emit eagerly, unmatched clicks after the watermark") {
@@ -1372,12 +1277,28 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val fixtureMerges =
     graft.operators.Bpe.train(Seq(("aaaa", 9L), ("bb", 5L)), 4)
 
-  /** The nine `*ArrivalBatch` functions, each as (store, batch index)
+  /** Three update-mode batches of changed daily export rows (date,
+    * channel, campaign_id, utm_campaign, clicks, impressions, cost,
+    * leads, opportunities, closed_won, revenue): each re-states the
+    * current totals of the keys it changed, and keys may hold nulls (a
+    * null `ts` gives a null date, digit-free props a null utm_campaign). */
+  private lazy val exportChunks = Seq(
+    Seq(("2024-01-01", "google", "c1", "u1", 3L, 10L, 1.5, 0L, 0L, 0L, 0.0),
+      ("2024-01-01", "crm", "", null, 0L, 0L, 0.0, 2L, 1L, 0L, 0.0)),
+    Seq(("2024-01-01", "google", "c1", "u1", 5L, 14L, 2.25, 0L, 0L, 0L, 0.0),
+      ("2024-01-02", "meta", "c2", "u2", 1L, 4L, 0.5, 0L, 0L, 0L, 0.0)),
+    Seq(("2024-01-01", "crm", "", null, 0L, 0L, 0.0, 3L, 1L, 1L, 40.0),
+      (null, "meta", "c2", "u2", 0L, 2L, 0.25, 0L, 0L, 0L, 0.0)))
+
+  /** The ten `*ArrivalBatch` functions, each as (store, batch index)
     * => run that fixture batch. */
   private lazy val arrivalLoops: Seq[(String, (String, Int) => Unit)] = {
     import spark.implicits._
     def docs(i: Int) = textChunks(i).toDF("doc_id", "text")
     def vecs(i: Int) = vecChunks(i).toDF("vec_id", "embedding")
+    def changed(i: Int) = exportChunks(i).toDF("date", "channel", "campaign_id",
+      "utm_campaign", "clicks", "impressions", "cost", "leads", "opportunities",
+      "closed_won", "revenue")
     Seq(
       "dedup" -> ((st, i) => EventStream.dedupArrivalBatch(docs(i), st, i)),
       "nearDup" -> ((st, i) =>
@@ -1393,7 +1314,8 @@ class StreamingSpec extends AnyFunSuite {
         EventStream.seqPackArrivalBatch(docs(i), st, i, fixtureMerges, 5)),
       "corpus" -> ((st, i) => EventStream.corpusArrivalBatch(
         docs(i).select(col("doc_id"), lit("src0").as("source"), col("text")),
-        st, i, 0.2, 0.8, 4)))
+        st, i, 0.2, 0.8, 4)),
+      "export" -> ((st, i) => EventStream.exportArrivalBatch(changed(i), st, i)))
   }
 
   private def loop(name: String): (String, Int) => Unit =
@@ -1422,40 +1344,6 @@ class StreamingSpec extends AnyFunSuite {
     rm(on, off)
   }
 
-  test("staged-commit swap survives a crash between delete and rename with the committer's markers off") {
-    val ev = Tables.events(spark, dir)
-    val srcDir = tmpDir("graft_mcrash_src")
-    val storeDir = tmpDir("graft_mcrash_store") + "/store"
-    val ckpt = tmpDir("graft_mcrash_ckpt")
-    ev.repartition(3).write.mode("overwrite").parquet(srcDir)
-    def run(store: String, checkpoint: String): Unit = {
-      val q = EventStream.signedExport(
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(srcDir),
-        store, checkpoint)
-      try q.processAllAvailable() finally q.stop()
-    }
-    val victim = graft.etl.MetricsQueries.metrics(spark, dir)
-      .agg(min(col("date"))).head.getString(0)
-    val refStore = tmpDir("graft_mcrash_ref") + "/store"
-    val refCkpt = tmpDir("graft_mcrash_refckpt")
-    markersOff {
-      EventStream.crashAfterDeleteOf = Some(victim)
-      try intercept[Throwable](run(storeDir, ckpt))
-      finally EventStream.crashAfterDeleteOf = None
-      assert(new java.io.File(s"$storeDir.staging/_SUCCESS").exists,
-        "staged tree carries no commit marker — recovery would discard it")
-      run(storeDir, ckpt)
-      run(refStore, refCkpt)
-    }
-    assert(new java.io.File(s"$storeDir/date=$victim").exists)
-    def rows(p: String) = spark.read.parquet(p)
-      .withColumn("date", col("date").cast("string"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(storeDir) == rows(refStore),
-      "crashed-and-replayed store diverges from the uninterrupted run")
-    rm(srcDir, storeDir, ckpt, refStore, refCkpt)
-  }
-
   test("ivf arrival centroids stay frozen at the first batch with the committer's markers off") {
     val store = tmpDir("graft_marker_cents")
     def centroids() = rowsOf(spark.read.parquet(s"$store/centroids"))
@@ -1469,6 +1357,29 @@ class StreamingSpec extends AnyFunSuite {
     rm(store)
   }
 
+  test("latest-batch-wins tier matches keys holding a null (equals the window form)") {
+    // A later batch re-states keys whose date or utm_campaign is null;
+    // the base row of such a key must not survive the tier's anti join.
+    import spark.implicits._
+    val root = tmpDir("graft_nullkey_log") + "/log"
+    Seq(Seq(("d1", "u1", 1L), ("d1", null, 1L), (null, "u2", 1L)),
+        Seq(("d1", null, 2L), ("d2", "u1", 1L)),
+        Seq((null, "u2", 3L)))
+      .zipWithIndex.foreach { case (rows, i) =>
+        ArrivalStore.commit(rows.toDF("date", "utm_campaign", "v"), root, i.toLong)
+      }
+    val dirs = ArrivalStore.standingDirs(root, Long.MaxValue)
+    val keys = Seq("date", "utm_campaign")
+    val want = rowsOf(ArrivalStore.latestBatchRowsWindow(spark, root, dirs, keys))
+    assert(want.size == 4, s"window reference: $want")
+    for (gate <- Seq(1 << 17, 0))
+      assert(rowsOf(ArrivalStore.latestBatchRows(spark, root, dirs, keys,
+          keyGate = gate, tierRatio = 0L)) == want,
+        s"tiered latest-wins (gate=$gate) kept a re-stated null-key row")
+    graft.Caches.release()
+    rm(new java.io.File(root).getParent)
+  }
+
   test("public arrival readers serve committed batches only (ArrivalStore discipline 2)") {
     val readers: Seq[(String, String, String => org.apache.spark.sql.DataFrame)] = Seq(
       ("dedup", "accepted", st => EventStream.arrivalAccepted(spark, st)),
@@ -1478,7 +1389,8 @@ class StreamingSpec extends AnyFunSuite {
       ("spans", "spans", st => EventStream.arrivalSpanList(spark, st)),
       // one source at a 100 % budget: the mix keeps every train doc
       ("corpus", "clean", st => EventStream.arrivalCorpusTrain(spark, st,
-        weights = Map.empty, budgetPct = 100, budgetTokens = 20L)))
+        weights = Map.empty, budgetPct = 100, budgetTokens = 20L)),
+      ("export", "export", st => EventStream.signedExportRows(spark, st)))
     for ((name, sub, read) <- readers) {
       val store = tmpDir(s"graft_committed_$name")
       loop(name)(store, 0)
