@@ -363,6 +363,7 @@ object Curation {
         posted.filter(col("bucket") >= 95).select(col("doc_id"), col("pos"), col("h"))
           .join(trainH.hint("shuffle_hash"), Seq("h"), "left_semi"), w)
       .withColumnRenamed("n_dup_windows", "n_contaminated_windows")
+      .orderBy(col("doc_id"), col("span_start"))
   }
 
   /** `corpus_decontaminate`: [[contaminationSpans]]'s TRAIN-side apply

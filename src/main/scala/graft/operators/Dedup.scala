@@ -384,12 +384,14 @@ object Dedup {
     */
   def substringSpans(spark: SparkSession, dir: String, w: Int = 16): DataFrame =
     substringSpansFrom(Tables.documents(spark, dir), w)
+      .orderBy(col("doc_id"), col("span_start"))
 
   /** [[substringSpans]] over ANY (doc_id, text) frame — the library
     * entry [[Pipeline.corpusTrain]] feeds with the cleaned-survivor
     * corpus, so repeated spans are detected over the documents that
     * actually remain (a span repeated only between exact duplicates is
-    * already gone with the duplicates).
+    * already gone with the duplicates). Unordered, as
+    * [[mergeIslands]].
     */
   def substringSpansFrom(docs: DataFrame, w: Int = 16): DataFrame =
     substringSpansFromWords(wordArrays(docs), w)
@@ -452,7 +454,11 @@ object Dedup {
     * per-document spans: windows at p and q overlap iff q − p ≤ w−1, a
     * larger gap starts a new span. One doc-keyed window pass; output
     * (doc_id, span_start, span_end, n_dup_windows) in word offsets —
-    * the removal list [[substringApply]] consumes.
+    * the removal list [[substringApply]] consumes. Unordered: every
+    * apply consumer regroups it by doc_id into a `sort_array`, and a
+    * presentation sort here put a range exchange, a sampling job and a
+    * sort under each of them; the registered span lists and the arrival
+    * span stores order it themselves.
     */
   private[graft] def mergeIslands(flagged: DataFrame, w: Int): DataFrame = {
     val byDoc = org.apache.spark.sql.expressions.Window
@@ -469,7 +475,6 @@ object Dedup {
         (max(col("pos")) + lit(w - 1)).cast("long").as("span_end"),
         count(lit(1)).as("n_dup_windows"))
       .select(col("doc_id"), col("span_start"), col("span_end"), col("n_dup_windows"))
-      .orderBy(col("doc_id"), col("span_start"))
   }
 
   /** `dedup_substring_apply`: the span removal list APPLIED (r14) —

@@ -24,9 +24,18 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** The session each public entry point builds its whole plan in:
+    * [[graft.Sessions.forInput]] over the documents' size on disk (a
+    * file listing, no Spark job). The returned frame belongs to that
+    * session, so its regime holds for whatever the caller runs on it.
+    */
+  private def planSession(spark: SparkSession, dir: String): SparkSession =
+    graft.Sessions.forInput(spark,
+      graft.sources.Tables.parquetByteSize(spark, dir, "documents"))
+
   def corpusClean(spark: SparkSession, dir: String,
                   minQuality: Double = 0.5, tau: Double = 0.8): DataFrame =
-    cleanSurvivors(spark, dir, minQuality, tau).orderBy(col("doc_id"))
+    cleanSurvivors(planSession(spark, dir), dir, minQuality, tau).orderBy(col("doc_id"))
 
   /** The three-stage survivor frame (doc_id, n_tokens, quality_score),
     * unordered — shared by [[corpusClean]] and [[corpusTrain]] (the
@@ -99,7 +108,8 @@ object Pipeline {
   def corpusTrain(spark: SparkSession, dir: String,
                   minQuality: Double = 0.5, tau: Double = 0.8,
                   w: Int = 16): DataFrame = {
-    val survivors = cleanSurvivors(spark, dir, minQuality, tau)
+    val s = planSession(spark, dir)
+    val survivors = cleanSurvivors(s, dir, minQuality, tau)
       .transform(graft.Caches.scoped(_)) // semi-join prune + quality output
     // CACHED survivor text, by measurement: the A/B at sf10 (1M docs)
     // reads cache 18.25 s vs recompute 21.76 s — the second scan +
@@ -110,7 +120,7 @@ object Pipeline {
     // duplicated semi join; a deployment that cannot afford local
     // spill space for its survivor set materializes it to the output
     // store anyway (clean_text IS the product).
-    val docs = graft.sources.Tables.documents(spark, dir)
+    val docs = graft.sources.Tables.documents(s, dir)
       .join(survivors.select(col("doc_id")).hint("shuffle_hash"),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("text"))
@@ -199,7 +209,7 @@ object Pipeline {
                  defaultWeight: Int = 1, budgetPct: Int = 50,
                  budgetTokens: Long = 50000L,
                  bpeMerges: Option[Array[String]] = None): DataFrame = {
-    val mixed = mixedTrain(spark, dir, minQuality, tau, w, weights,
+    val mixed = mixedTrain(planSession(spark, dir), dir, minQuality, tau, w, weights,
       defaultWeight, budgetPct, bpeMerges)
     val n = graft.sources.Tables.parquetRowCount(spark, dir, "documents")
     val blockSize = math.max(1000L, n / 10000L)
@@ -323,8 +333,9 @@ object Pipeline {
                       weights: Map[String, Int] = Map("src0" -> 30, "src1" -> 30),
                       defaultWeight: Int = 1, budgetPct: Int = 50,
                       numMerges: Int = Bpe.DefaultMerges): DataFrame = {
-    val merges = Bpe.mergesFor(spark, dir, numMerges)
-    val mixed = mixedTrain(spark, dir, minQuality, tau, w, weights,
+    val s = planSession(spark, dir)
+    val merges = Bpe.mergesFor(s, dir, numMerges)
+    val mixed = mixedTrain(s, dir, minQuality, tau, w, weights,
       defaultWeight, budgetPct)
     Bpe.sequencePack(mixed.select(col("doc_id"), col("clean_text")),
       merges, ctxLen)

@@ -599,6 +599,7 @@ object EventStream {
         .join(gated(flagH), Seq("h"), "left_semi")
         .select(col("doc_id"), col("pos"), col("h"))
       val spans = graft.operators.Dedup.mergeIslands(flagged, w)
+        .orderBy(col("doc_id"), col("span_start"))
       ArrivalStore.commit(spans, s"$storeDir/spans", batchId)
       ArrivalStore.commit(wins, s"$storeDir/windows", batchId)
     }
@@ -1109,6 +1110,7 @@ object EventStream {
         .join(gated(dupH.unionByName(testFlagH)), Seq("h"), "left_semi")
         .select(col("doc_id"), col("pos"), col("h"))
       val spans = Dedup.mergeIslands(flagged, w)
+        .orderBy(col("doc_id"), col("span_start"))
       // Clean-text delta: batch train docs + touched standing docs,
       // re-cut from ORIGINAL text on original word offsets (one merged
       // cut — the corpusFull seam argument).

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
 
@@ -240,7 +240,7 @@ class CurationSpec extends AnyFunSuite {
     // = 95 > 10 → rate min(100, 950) = 100 (saturation: every small
     // doc survives, the formula never invents mass).
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mix_spec").toString
+    val tmp = tmpDir("graft_mix_spec")
     ((0L until 200L).map(i => (i, s"text $i", "en", "big", 10L)) ++
       (200L until 210L).map(i => (i, s"text $i", "en", "small", 10L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -263,7 +263,6 @@ class CurationSpec extends AnyFunSuite {
     val expectBig = (0L until 200L).filter(bucketOf(_) < 4).toSet
     assert(bySource("big").map(_._1).toSet == expectBig,
       "big-source acceptance diverged from the content-addressed rule")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("pipeline_corpus_train cuts survivor-corpus repeated spans the clean stages can't") {
@@ -281,7 +280,7 @@ class CurationSpec extends AnyFunSuite {
     def filler(p: String, n: Int) =
       (0 until n).flatMap(i => Seq("the", s"$p$i")).mkString(" ")
     val passage = (0 until w).map(i => s"shared$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_train_spec").toString
+    val tmp = tmpDir("graft_train_spec")
     Seq(
       (1L, s"${filler("a", 12)} $passage ${filler("b", 12)}"),
       (2L, s"${filler("c", 12)} $passage ${filler("d", 12)}"),
@@ -309,7 +308,6 @@ class CurationSpec extends AnyFunSuite {
       assert(!text.contains("shared"), s"doc $id still contains the passage")
     }
     assert(got(3L)._3 == 0L && got(3L)._2 == 60L, "clean doc was modified")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("pipeline_corpus_full: every stage fires on a crafted corpus") {
@@ -354,7 +352,7 @@ class CurationSpec extends AnyFunSuite {
       (contTest, s"${filler("qa", 12)} $contPassage ${filler("qb", 12)}"))
     val bulkIds = (0 until 200).map(_ => nt())
     val bulk = bulkIds.zipWithIndex.map { case (id, i) => (id, filler(s"m${i}x", 30)) }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_full_spec").toString
+    val tmp = tmpDir("graft_full_spec")
     (small.map { case (id, t) => (id, t, "small") } ++
       bulk.map { case (id, t) => (id, t, "big") })
       .toDF("doc_id", "text", "source")
@@ -403,7 +401,6 @@ class CurationSpec extends AnyFunSuite {
       assert(shard == prefix / 100L, s"doc $id shard ${shard} != ${prefix / 100L}")
       prefix += toks
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("contamination spans equal a from-scratch reimplementation") {
@@ -423,7 +420,7 @@ class CurationSpec extends AnyFunSuite {
     // per doc, so nothing else may fire.
     import spark.implicits._
     val w = 16
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cspan_spec").toString
+    val tmp = tmpDir("graft_cspan_spec")
     def filler(id: Long, n: Int): Seq[String] = (0 until n).map(i => s"f${id}x$i")
     val probe = (0L until 200L).map(id => (id, filler(id, 40).mkString(" ")))
     // two directories: Spark's file-status cache may serve a stale
@@ -466,7 +463,6 @@ class CurationSpec extends AnyFunSuite {
       assert(cleaned(id) == ((untouched(id), 40L, 0L, 0L)),
         s"clean train doc $id was modified: ${cleaned(id)}")
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("pipeline_corpus_full_bpe: the whitespace pipeline re-priced by a sequential subword fold") {
@@ -507,7 +503,7 @@ class CurationSpec extends AnyFunSuite {
     // tier folds case/punct per word and must cut the EXACT raw span.
     import spark.implicits._
     val w = 16
-    val tmp = java.nio.file.Files.createTempDirectory("graft_normdecon_spec").toString
+    val tmp = tmpDir("graft_normdecon_spec")
     def filler(id: Long, n: Int): Seq[String] = (0 until n).map(i => s"f${id}x$i")
     val probe = (0L until 200L).map(id => (id, filler(id, 40).mkString(" ")))
     probe.toDF("doc_id", "text")
@@ -551,7 +547,6 @@ class CurationSpec extends AnyFunSuite {
     (trainIds - trainId).foreach { id =>
       assert(norm(id)._1 == untouched(id), s"clean train doc $id was modified")
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   private def md5hex(s: String): String =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
 
@@ -203,7 +203,7 @@ class DedupSpec extends AnyFunSuite {
     // Written as a real documents.parquet so the registered dir-based
     // operators (exact, exactNormalized, ngramJaccard raw + normalized)
     // run exactly as registered.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_norm_spec").toString
+    val tmp = tmpDir("graft_norm_spec")
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     Seq(
@@ -226,7 +226,6 @@ class DedupSpec extends AnyFunSuite {
     assert(normPairs.map(p => (p._1, p._2)) == Set((0L, 1L)),
       s"normalized shingles must find exactly the variant pair, got $normPairs")
     assert(normPairs.head._3 == 1.0, "normalized variants are shingle-identical")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("ngram Jaccard equals brute-force all-pairs exactly (prefix filter is complete)") {

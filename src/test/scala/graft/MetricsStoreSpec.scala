@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import graft.etl.MetricsQueries
 import graft.sources.{MetricsStore, Stores}
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The store's read cache: a relation is resolved once per `_SUCCESS`
   * commit, and every rewrite — through [[MetricsStore.write]], around it,
   * or without a marker — is visible to the next read. */
-class MetricsStoreSpec extends AnyFunSuite {
+class MetricsStoreSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.01"
 
@@ -34,15 +34,8 @@ class MetricsStoreSpec extends AnyFunSuite {
     (a, starts.size)
   }
 
-  private def withStore(body: String => Unit): Unit = {
-    val tmp = Files.createTempDirectory("graft_metrics_store")
-    try body(tmp.resolve("store").toString)
-    finally {
-      val s = Files.walk(tmp)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally s.close()
-    }
-  }
+  private def withStore(body: String => Unit): Unit =
+    body(tmpDir("graft_metrics_store") + "/store")
 
   test("a second read of an unchanged store launches no job, same rows") {
     withStore { store =>

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast, a sneaky single-partition window) is a scale bug even
   * when results stay correct.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
 
@@ -199,7 +199,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("date-partitioned metrics store prunes partitions on date filters") {
     import graft.etl.MetricsQueries
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store").toString
+    val tmp = tmpDir("graft_store")
     graft.sources.MetricsStore.write(MetricsQueries.metrics(spark, dir), tmp)
     val back = graft.sources.MetricsStore.read(spark, tmp)
       .filter(org.apache.spark.sql.functions.col("date") === "2024-01-10")
@@ -477,7 +477,7 @@ class PlanSpec extends AnyFunSuite {
       s"expected the quality/exact/ngram stages to read the shared cache, got $cacheReads reads")
   }
 
-  test("pipeline_corpus_full reads every cached frame at AQE-coalesced partitions") {
+  test("pipeline_corpus_full reads every cached frame at <= 4 partitions") {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val df = graft.operators.Pipeline.corpusFull(spark, dir)
     df.collect()
@@ -487,24 +487,69 @@ class PlanSpec extends AnyFunSuite {
     graft.Caches.release()
     assert(parts.nonEmpty, "pipeline_corpus_full read no cached frame")
     // one task per cached partition in every stage that reads it: an
-    // uncoalesced frame sits at initialPartitionNum (32) on 4 cores
+    // uncoalesced AQE frame sits at initialPartitionNum (32) on 4 cores
     assert(parts.forall(_ <= 4), s"cached frames read at ${parts.mkString(", ")} partitions")
+  }
+
+  test("pipeline_corpus_* plan without AQE below the size threshold only") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val bytes = graft.sources.Tables.parquetByteSize(spark, dir, "documents")
+    def run(name: String, threshold: Long): (Boolean, Seq[String]) = {
+      val df = Sessions.aqeMinInputBytes.withValue(threshold)(SparkEntry.queries(name)(spark, dir))
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val adaptive = deepNodes(df.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[AdaptiveSparkPlanExec])
+      graft.Caches.release()
+      (adaptive, rows)
+    }
+    val names = SparkEntry.queries.keys.filter(_.startsWith("pipeline_corpus_")).toSeq.sorted
+    assert(names.size == 5, s"pipeline queries: $names")
+    for (name <- names) {
+      val (belowAdaptive, below) = run(name, bytes + 1)
+      val (atAdaptive, at) = run(name, bytes)
+      assert(!belowAdaptive, s"$name planned with AQE below the threshold")
+      assert(atAdaptive, s"$name planned without AQE at the threshold")
+      assert(below.nonEmpty && below == at, s"$name rows differ between the two regimes")
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "the caller's session conf was written")
+  }
+
+  test("pipeline_corpus_full sorts no span list by span_start") {
+    // Dedup.mergeIslands is unordered: its consumers regroup spans by
+    // doc_id, so a presentation sort there is a range exchange, a
+    // sampling job and a sort that feed nothing.
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = graft.operators.Pipeline.corpusFull(spark, dir)
+    df.collect()
+    val ranges = deepNodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        e.outputPartitioning.toString
+    }
+    graft.Caches.release()
+    assert(ranges.nonEmpty, "pipeline_corpus_full lost its doc_id presentation sort")
+    assert(!ranges.exists(_.contains("span_start")),
+      s"a range exchange on span_start: ${ranges.mkString("; ")}")
   }
 
   test("only bounded-cardinality window operators run unpartitioned") {
     // etl_channel_query's residual window runs over <= offset+limit rows
-    // and corpus_pack_shards' block-prefix window over <= ~10k block
-    // summaries by construction; nothing else may move all data to one
-    // partition.
+    // and every pack tail's block-prefix window (over `blk_tot`,
+    // Curation.withPrefixOffsets) over <= ~10k block summaries by
+    // construction; nothing else may move all data to one partition.
+    // Read before AQE: an unexecuted AdaptiveSparkPlanExec shows no
+    // operator below it.
     def unpartitionedWindows(p: SparkPlan): Int =
       p.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
+          if w.partitionSpec.isEmpty &&
+            !w.windowExpression.exists(_.references.exists(_.name == "blk_tot")) => w
       }.size
     val bounded = Set("etl_channel_query", "etl_channel_query_store",
-      "etl_channel_query_store_serve", "corpus_pack_shards")
+      "etl_channel_query_store_serve")
     for ((name, fn) <- SparkEntry.queries if !bounded(name)) {
-      val n = unpartitionedWindows(fn(spark, dir).queryExecution.executedPlan)
+      val n = unpartitionedWindows(fn(spark, dir).queryExecution.sparkPlan)
       assert(n == 0, s"$name has $n unpartitioned Window operator(s)")
     }
   }
@@ -704,7 +749,7 @@ class PlanSpec extends AnyFunSuite {
     // aggregate shuffles. This is the plan shape the 100 TB deployment
     // actually gets.
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bucket_demo").toString
+    val tmp = tmpDir("graft_bucket_demo")
     spark.sql("DROP TABLE IF EXISTS graft_bucket_demo")
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"),
@@ -743,7 +788,6 @@ class PlanSpec extends AnyFunSuite {
     assert(bucketScan.exists(_.bucketedScan),
       "store scan did not use the bucketed layout")
     spark.sql("DROP TABLE IF EXISTS graft_bucket_demo")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("span operators: hash-posting joins stay shuffle-hash, no text in the shuffle") {
@@ -920,7 +964,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_plan_arrival").toString
+    val root = tmpDir("graft_plan_arrival")
     val corpusStore = s"$root/corpus_store"
     val nearDupStore = s"$root/neardup_store"
     import spark.implicits._
@@ -1081,6 +1125,12 @@ class PlanSpec extends AnyFunSuite {
     assert(aqeSets == Set("Sessions.scala", "operators/Clusters.scala"),
       s"AQE set outside Sessions and the CC star loop: $aqeSets")
     assert(sites("aqeOff").isEmpty, s"a per-query AQE list: ${sites("aqeOff")}")
+    // Operators pick another regime through a derived session
+    // (Sessions.forInput), never by writing the caller's conf.
+    assert(sites("newSession(") == Set("Sessions.scala"),
+      s"a session derived outside Sessions: ${sites("newSession(")}")
+    assert(!mainSources.toMap.apply("operators/Pipeline.scala").contains("spark.conf.set"),
+      "the corpus pipeline writes its caller's session conf")
     // ...and the library reads no conf key of its own: a `spark.graft.*`
     // switch would be a second policy beside the session's.
     assert(sites("\"spark.graft.").isEmpty, s"a library conf key: ${sites("\"spark.graft.")}")

@@ -34,4 +34,22 @@ class SessionsSpec extends AnyFunSuite {
     }
     assert(parts <= 4, s"the cached aggregate is stored at $parts partitions on 4 cores")
   }
+
+  test("forInput derives an AQE-off session below the threshold and leaves the caller's conf alone") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    val small = Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 99L))
+    assert(small ne caller)
+    assert(small.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(small.conf.get("spark.sql.shuffle.partitions") == "3", "the caller's conf was not copied")
+    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
+    // memoized per caller and conf; a changed caller conf gets a new session
+    assert(Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 0L)) eq small)
+    caller.conf.set("spark.sql.shuffle.partitions", "2")
+    val changed = Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 0L))
+    assert((changed ne small) && changed.conf.get("spark.sql.shuffle.partitions") == "2")
+    // at the threshold, or with AQE already off, the caller's own session
+    assert(Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 100L)) eq caller)
+    assert(Sessions.forInput(small, 0L) eq small)
+  }
 }

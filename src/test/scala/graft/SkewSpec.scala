@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
 
@@ -175,7 +175,7 @@ class SkewSpec extends AnyFunSuite {
     //     honestly grows with the distinct mass (BASELINE measures
     //     that regime's cost curve; correctness must hold regardless).
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft_skew_vdd").toString
+    val store = tmpDir("graft_skew_vdd")
     val tau = 0.95
     def unit(v: Seq[Float]): Seq[Float] = {
       val n = math.sqrt(v.map(x => x.toDouble * x).sum)
@@ -238,6 +238,5 @@ class SkewSpec extends AnyFunSuite {
       300L, 303L, 306L, 309L)
     assert(got.intersect(hotDupIds) == Set(100L),
       s"duplicate skew must collapse to the first arrival: ${got.intersect(hotDupIds)}")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
   }
 }

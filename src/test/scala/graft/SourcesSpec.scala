@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** §2.8 sources/sinks: csv and json round-trips through the same
   * DataFrame surface the parquet tables use.
   */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_src_$name").toString
+    tmpDir(s"graft_src_$name")
 
   test("csv round-trip preserves rows and values (header + explicit schema)") {
     val orders = Tables.orders(spark, dir)

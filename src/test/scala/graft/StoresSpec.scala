@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * and cluster serve stores, IVF and IVF-PQ indexes): rebuilt when the
   * source changes, on any Hadoop filesystem; written once whatever the
   * committer's marker setting; resolved once per commit when served. */
-class StoresSpec extends AnyFunSuite {
+class StoresSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val testdata = "/root/testdata"
 
@@ -30,24 +30,14 @@ class StoresSpec extends AnyFunSuite {
   /** A private copy of a testdata dir, so every store derived from it is
     * new to this test; the copy and those stores are deleted after. */
   private def withSourceCopy[T](sf: String)(body: String => T): T = {
-    val src = java.nio.file.Files.createTempDirectory("graft_stores_src").toFile
-    FileUtils.copyDirectory(new File(s"$testdata/$sf"), src)
-    try body(src.getPath)
-    finally {
-      storeDirs(src.getPath).foreach(FileUtils.deleteDirectory)
-      FileUtils.deleteDirectory(src)
-    }
+    val src = tmpDir("graft_stores_src")
+    FileUtils.copyDirectory(new File(s"$testdata/$sf"), new File(src))
+    body(src)
   }
-
-  /** Every derived-store tree built from `dir`. */
-  private def storeDirs(dir: String): Seq[File] =
-    new File(System.getProperty("java.io.tmpdir")).listFiles().toSeq.filter(f =>
-      f.isDirectory && f.getName.startsWith("graft_") &&
-        f.getName.contains(Tables.pathSlug(dir)))
 
   /** (path, length, mtime) of every file under the stores of `dir`. */
   private def listing(dir: String): Seq[(String, Long, Long)] =
-    storeDirs(dir).flatMap(d => FileUtils.listFiles(d, null, true).asScala)
+    TmpDirs.derivedStores(dir).flatMap(d => FileUtils.listFiles(d, null, true).asScala)
       .map(f => (f.getPath, f.length, f.lastModified)).sorted
 
   /** Names of the stages every job `body` launches. */
@@ -122,7 +112,7 @@ class StoresSpec extends AnyFunSuite {
     val df = spark.range(0, 2000, 1, 4)
       .select(col("id"), expr("date_add(date'2024-01-01', cast(id % 5 as int))").as("date"))
     def written(aqe: String): (Seq[String], Seq[Int]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stores_clustered").toFile
+      val dir = new File(tmpDir("graft_stores_clustered"))
       val key = "spark.sql.adaptive.enabled"
       val prior = spark.conf.get(key)
       spark.conf.set(key, aqe)
@@ -131,10 +121,7 @@ class StoresSpec extends AnyFunSuite {
         val parts = dir.listFiles().toSeq.filter(_.getName.startsWith("date="))
           .map(_.listFiles().count(_.getName.startsWith("part-")))
         (rows(spark.read.parquet(dir.getPath)), parts)
-      } finally {
-        spark.conf.set(key, prior)
-        FileUtils.deleteDirectory(dir)
-      }
+      } finally spark.conf.set(key, prior)
     }
     val (on, _) = written("true")
     val (off, files) = written("false")

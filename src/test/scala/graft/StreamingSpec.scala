@@ -11,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * same finite feed (SURVEY §2.7). The feed streams through a file
   * source (public API, one micro-batch) into a memory sink.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
 
   test("streaming hourly window agg equals q13_hourly_agg batch") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_hourly").toString
+    val tmp = tmpDir("graft_stream_hourly")
     val events = Tables.events(spark, dir)
     events.write.mode("overwrite").parquet(tmp)
     val src = spark.readStream.schema(events.schema).parquet(tmp)
@@ -32,7 +32,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming consolidation equals etl_consolidate batch") {
     val ev = Tables.events(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cons").toString
+    val tmp = tmpDir("graft_stream_cons")
     ev.repartition(3).write.mode("overwrite").parquet(tmp)
     val src = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp)
@@ -47,7 +47,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming dedup removes cross-batch duplicates (twin of batch distinct)") {
     val ev = Tables.events(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dedup").toString
+    val tmp = tmpDir("graft_stream_dedup")
     // the same events written twice -> duplicates arrive in different
     // micro-batches; watermark-bounded state must still drop them
     ev.repartition(2).write.mode("overwrite").parquet(tmp)
@@ -72,7 +72,7 @@ class StreamingSpec extends AnyFunSuite {
     // delay covers the feed's whole span — nothing is ever late-dropped
     // and the finite-feed result must equal the batch join exactly.
     val spanSec = (maxTs.getTime - minTs.getTime) / 1000 + 10
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_attr").toString
+    val tmp = tmpDir("graft_stream_attr")
     ev.repartition(3).write.mode("overwrite").parquet(tmp)
     val src = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp)
@@ -158,7 +158,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(rowsOf(snapshot(store2)) == first,
       "checkpointed restart diverged from the single-run store")
     m.unpersist()
-    rm(root)
   }
 
   test("sessionizer state survives a checkpointed restart (exactly-once)") {
@@ -171,9 +170,9 @@ class StreamingSpec extends AnyFunSuite {
       (r.getTimestamp(0), r.getTimestamp(1))
     }
     val spanSec = (maxTs.getTime - minTs.getTime) / 1000 + 10
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ckpt_src").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_state").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
+    val srcDir = tmpDir("graft_ckpt_src")
+    val ckptDir = tmpDir("graft_ckpt_state")
+    val outDir = tmpDir("graft_ckpt_out")
     def startQuery() = {
       val src = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -219,7 +218,7 @@ class StreamingSpec extends AnyFunSuite {
     // across micro-batches in arbitrary (out-of-order) chunks, so
     // nothing may be sealed until the horizon sentinel arrives.
     val spanSec = (maxTs.getTime - minTs.getTime) / 1000 + 10
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sess").toString
+    val tmp = tmpDir("graft_stream_sess")
     // 3 part files -> 3 micro-batches of randomly-interleaved events
     ev.repartition(3).write.mode("overwrite").parquet(tmp)
     // horizon sentinel, written last -> final micro-batch; it pushes the
@@ -250,8 +249,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrival_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrival_ckpt").toString
+    val store = tmpDir("graft_arrival_store")
+    val ckpt = tmpDir("graft_arrival_ckpt")
     val mem = MemoryStream[(Long, String)]
     val q = EventStream.arrivalDedup(
       mem.toDF().toDF("doc_id", "text"), store, ckpt)
@@ -295,16 +294,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(EventStream.arrivalAccepted(spark, store)
         .filter(col("batch") === 7L).count() == 0L,
       "replayed content was re-accepted against the standing store")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival near-dup: three reject tiers against the growing store") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrnd_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrnd_ckpt").toString
+    val store = tmpDir("graft_arrnd_store")
+    val ckpt = tmpDir("graft_arrnd_ckpt")
     // Distinct vocabularies so unrelated docs share NO 3-gram shingle;
     // an appended word keeps J = (n-2)/(n+1) ≈ 0.95 ≥ 0.9 on 40-word
     // bases (a near-dup the exact hash can't see).
@@ -342,16 +339,14 @@ class StreamingSpec extends AnyFunSuite {
     EventStream.nearDupArrivalBatch(
       chunks(1).toDF("doc_id", "text"), store, 1L, 0.9, 64, 16)
     assert(accepted() == got, "retried near-dup batch changed the store")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival clusters: delta-log labels equal a full batch recompute") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrcl_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrcl_ckpt").toString
+    val store = tmpDir("graft_arrcl_store")
+    val ckpt = tmpDir("graft_arrcl_ckpt")
     def words(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val (a, b, c, d) = (words("alpha", 40), words("beta", 40),
       words("gamma", 40), words("delta", 40))
@@ -375,7 +370,7 @@ class StreamingSpec extends AnyFunSuite {
     // Ground truth: the BATCH pipeline over the whole corpus at once
     // (minhashVerifiedPairs -> clustersFrom), self-labels for docs no
     // pair touches — the incremental delta log must land exactly there.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arrcl_full").toString
+    val tmp = tmpDir("graft_arrcl_full")
     chunks.flatten.toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val full = graft.operators.Clusters.clustersFrom(spark,
@@ -415,17 +410,14 @@ class StreamingSpec extends AnyFunSuite {
       assert(tiered == ref,
         s"tiered latest-wins (gate=$gate) diverged from the window reference")
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("arrival spans: delta log equals batch substringSpans over the union") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrsp_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrsp_ckpt").toString
+    val store = tmpDir("graft_arrsp_store")
+    val ckpt = tmpDir("graft_arrsp_ckpt")
     assert(EventStream.arrivalSpanList(spark, store).isEmpty)
     def words(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val pass = (0 until 16).map(i => s"sp$i").mkString(" ")
@@ -464,8 +456,6 @@ class StreamingSpec extends AnyFunSuite {
     // per-dir overwrite keep the store byte-deterministic.
     EventStream.spanArrivalBatch(chunks(1).toDF("doc_id", "text"), store, 1L, 16)
     assert(spans() == got, "retried span batch changed the store")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival sequence pack: seq ids continue, straddling sequence completed, retry idempotent") {
@@ -477,8 +467,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrsq_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrsq_ckpt").toString
+    val store = tmpDir("graft_arrsq_store")
+    val ckpt = tmpDir("graft_arrsq_ckpt")
     val merges = graft.operators.Bpe.train(Seq(("aaaa", 9L), ("bb", 5L)), 4)
     val ctx = 5
     assert(EventStream.arrivalSequences(spark, store, merges, ctx).isEmpty)
@@ -530,16 +520,14 @@ class StreamingSpec extends AnyFunSuite {
     EventStream.compactArrivalStore(spark, store)
     assert(seqs() == got, "compaction changed the assembled sequences")
     graft.Caches.release()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival pack: shard ids continue seamlessly across batches, retry idempotent") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrpk_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrpk_ckpt").toString
+    val store = tmpDir("graft_arrpk_store")
+    val ckpt = tmpDir("graft_arrpk_ckpt")
     assert(EventStream.arrivalPacked(spark, store).isEmpty)
     def text(n: Int) = (0 until n).map(i => s"w$i").mkString(" ")
     // budget 10; running offsets: d1@0, d2@4, d3@9, d4@12, d5@20 ->
@@ -575,17 +563,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(packed() == got, "retried pack batch changed the assignments")
     EventStream.packArrivalBatch(chunks(2).toDF("doc_id", "text"), store, 2L, 10L)
     assert(packed() == got, "retried final batch changed the assignments")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival corpus: composed pipeline equals batch corpusFull over the union") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrcorp_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrcorp_ckpt").toString
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_arrcorp_docs").toString
+    val store = tmpDir("graft_arrcorp_store")
+    val ckpt = tmpDir("graft_arrcorp_ckpt")
+    val docsDir = tmpDir("graft_arrcorp_docs")
     // Empty-store materialization returns an empty frame, not an error.
     assert(EventStream.arrivalCorpusTrain(spark, store).isEmpty)
     def words(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
@@ -720,16 +706,14 @@ class StreamingSpec extends AnyFunSuite {
         .toDF("doc_id", "source", "text"), store, 1L, 0.2, 0.8, w)
     assert(materialized() == got, "retried corpus batch changed the store")
     graft.Caches.release()
-    Seq(store, ckpt, docsDir).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
   }
 
   test("arrival vector dedup: full-probe degeneration equals the brute-force fold") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrvd_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrvd_ckpt").toString
+    val store = tmpDir("graft_arrvd_store")
+    val ckpt = tmpDir("graft_arrvd_ckpt")
     def v(a: Float, b: Float, c: Float, d: Float): Seq[Float] = Seq(a, b, c, d)
     // Scaled copies have cosine 1 (clear of the f32 threshold);
     // orthogonal vectors cosine 0.
@@ -766,8 +750,6 @@ class StreamingSpec extends AnyFunSuite {
     EventStream.vectorDedupArrivalBatch(
       chunks(1).toSeq.toDF("vec_id", "embedding"), store, 1L, 2, 0.95, 2, 4)
     assert(accepted() == got, "retried vector-dedup batch changed the store")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival vector dedup: non-transitive chain collapses to min id (CC contract)") {
@@ -779,7 +761,7 @@ class StreamingSpec extends AnyFunSuite {
     // convention so the semantics stay a stated contract, not an
     // accident of transitively consistent test vectors.
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft_arrvdc_store").toString
+    val store = tmpDir("graft_arrvdc_store")
     // Unit vectors at successive angle θ with cos θ = 0.96 ≥ τ = 0.95:
     // cos(a,b) = cos(b,c) = 0.96, cos(a,c) = 2·0.96² − 1 = 0.8432 < τ.
     val ct = 0.96f
@@ -807,15 +789,14 @@ class StreamingSpec extends AnyFunSuite {
     val got2 = spark.read.parquet(s"$store/cells").select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(got2 == Set(1L, 4L, 5L), s"cross tier diverged from contract: $got2")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
   }
 
   test("arrival vectors: the streamed index serves exactly (full-probe degeneration)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft_arrvec_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_arrvec_ckpt").toString
+    val store = tmpDir("graft_arrvec_store")
+    val ckpt = tmpDir("graft_arrvec_ckpt")
     val all = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -851,13 +832,11 @@ class StreamingSpec extends AnyFunSuite {
     graft.operators.Ivf.vectorArrivalBatch(
       chunks(1).toSeq.toDF("vec_id", "embedding"), store, 1L, nlist)
     assert(serveAll() == exact, "retried vector batch changed the served index")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
   test("arrival store compaction: replay-safe collapse, state identical, crash-recoverable") {
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft_compact_store").toString
+    val store = tmpDir("graft_compact_store")
     // Empty-store probe returns an empty frame, not a read error.
     assert(EventStream.arrivalAccepted(spark, store).isEmpty)
     def feed(rows: Seq[(Long, String)], id: Long): Unit =
@@ -903,13 +882,12 @@ class StreamingSpec extends AnyFunSuite {
     feed(Seq((20L, "aaa"), (21L, "eee")), 3L)
     assert(acceptedRows() == before + ((21L, 1L)),
       "post-compaction arrival mis-deduped")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
 
     // Labels store: latest-wins must resolve BEFORE compaction, and a
     // post-compaction batch must still fuse against it.
     def words(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val (a, b) = (words("alpha", 40), words("beta", 40))
-    val cstore = java.nio.file.Files.createTempDirectory("graft_compact_cl").toString
+    val cstore = tmpDir("graft_compact_cl")
     assert(EventStream.arrivalClusterLabels(spark, cstore).isEmpty)
     def cfeed(rows: Seq[(Long, String)], id: Long): Unit =
       EventStream.clusterArrivalBatch(rows.toDF("doc_id", "text"), cstore, id,
@@ -928,12 +906,11 @@ class StreamingSpec extends AnyFunSuite {
     cfeed(Seq((14L, a + " alphaX alphaY")), 3L) // fuses into {10,12} post-compaction
     assert(labels() == lbefore + (14L -> 10L),
       "post-compaction cluster batch failed to fuse")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cstore))
 
     // Span store: windows/ compacts as a plain union, spans/ resolves
     // latest-batch-wins first; a post-compaction batch must still
     // collide with the compacted standing windows.
-    val sstore = java.nio.file.Files.createTempDirectory("graft_compact_sp").toString
+    val sstore = tmpDir("graft_compact_sp")
     val pass = (0 until 16).map(i => s"sp$i").mkString(" ")
     def sfeed(rows: Seq[(Long, String)], id: Long): Unit =
       EventStream.spanArrivalBatch(rows.toDF("doc_id", "text"), sstore, id, 16)
@@ -949,12 +926,11 @@ class StreamingSpec extends AnyFunSuite {
     sfeed(Seq((40L, s"${words("se", 5)} $pass ${words("sf", 5)}")), 3L)
     assert(spanSet() == sBefore + ((40L, 5L, 20L)),
       "post-compaction span batch missed the compacted standing windows")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sstore))
 
     // Corpus store (r16): all seven subtrees compact — clean/ resolves
     // latest-wins — and both the materialization and a post-compaction
     // batch behave identically against the compacted standing state.
-    val xstore = java.nio.file.Files.createTempDirectory("graft_compact_cx").toString
+    val xstore = tmpDir("graft_compact_cx")
     def xfeed(rows: Seq[(Long, String)], id: Long): Unit =
       EventStream.corpusArrivalBatch(
         rows.map { case (i, t) => (i, if (i % 2 == 0) "src0" else "src1", t) }
@@ -980,7 +956,6 @@ class StreamingSpec extends AnyFunSuite {
       spark.read.parquet(s"$xstore/clean").select("doc_id").collect()
         .map(_.getLong(0)).contains(301L),
       "post-compaction fresh doc did not land")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(xstore))
 
     // Export store: export/ resolves latest-batch-wins per export key,
     // null-holding keys included, so the compacted dir re-states the
@@ -994,7 +969,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(s"$estore/export").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("batch=")) == 2)
     assert(exportRows() == eBefore, "compaction changed the resolved export rows")
-    rm(estore)
   }
 
   test("left-outer interval join: matches emit eagerly, unmatched clicks after the watermark") {
@@ -1048,7 +1022,7 @@ class StreamingSpec extends AnyFunSuite {
     // continuing loop: post-cutover batches assign under the NEW
     // frozen centroids and the serve stays exact.
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft_retrain").toString
+    val store = tmpDir("graft_retrain")
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -1099,13 +1073,12 @@ class StreamingSpec extends AnyFunSuite {
       .sorted.toSeq
     assert(serveAll() == exact,
       "post-retrain arrivals did not integrate — full-probe serve differs from brute force")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
     // SORTED-layout store (the vecdedup loop keeps `cell` as a data
     // column): the retrain must write the collapsed dir in the OWNING
     // loop's layout — a cell=N partition tree mixed with later
     // data-column batches fails parquet partition discovery outright
     // (mixed directory depths under one basePath; r17 regression pin).
-    val store2 = java.nio.file.Files.createTempDirectory("graft_retrain_vdd").toString
+    val store2 = tmpDir("graft_retrain_vdd")
     (0 until 2).foreach { i =>
       graft.streaming.EventStream.vectorDedupArrivalBatch(
         chunks(i).toSeq.toDF("vec_id", "embedding"), store2, i.toLong,
@@ -1129,7 +1102,6 @@ class StreamingSpec extends AnyFunSuite {
       nlist, 4)
     assert(serve2().size >= before2.size,
       "post-retrain vecdedup batch did not integrate")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store2))
   }
 
   test("ivf retrain mid-stream: stop at committed offset, retrain, resume — identity vs never-stopped") {
@@ -1157,9 +1129,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     // control: all four chunks through one never-stopped query
     val (srcC, storeC, ckptC) = (
-      java.nio.file.Files.createTempDirectory("graft_rts_src_c").toString,
-      java.nio.file.Files.createTempDirectory("graft_rts_store_c").toString,
-      java.nio.file.Files.createTempDirectory("graft_rts_ckpt_c").toString)
+      tmpDir("graft_rts_src_c"),
+      tmpDir("graft_rts_store_c"),
+      tmpDir("graft_rts_ckpt_c"))
     val qc = startLoop(srcC, storeC, ckptC)
     try {
       (0 until 4).foreach { i => feed(srcC, i); qc.processAllAvailable() }
@@ -1167,9 +1139,9 @@ class StreamingSpec extends AnyFunSuite {
     // cutover: two chunks, STOP at the committed offset, retrain to a
     // different quantizer size, RESUME the same checkpoint, two more
     val (srcR, storeR, ckptR) = (
-      java.nio.file.Files.createTempDirectory("graft_rts_src_r").toString,
-      java.nio.file.Files.createTempDirectory("graft_rts_store_r").toString,
-      java.nio.file.Files.createTempDirectory("graft_rts_ckpt_r").toString)
+      tmpDir("graft_rts_src_r"),
+      tmpDir("graft_rts_store_r"),
+      tmpDir("graft_rts_ckpt_r"))
     val q1 = startLoop(srcR, storeR, ckptR)
     try {
       (0 until 2).foreach { i => feed(srcR, i); q1.processAllAvailable() }
@@ -1195,8 +1167,6 @@ class StreamingSpec extends AnyFunSuite {
       .sorted.toSeq
     assert(serveAll(storeR) == serveAll(storeC),
       "full-probe serve diverged between the retrained and control stores")
-    Seq(srcC, storeC, ckptC, srcR, storeR, ckptR).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("arrival batch gate: text ceiling derives from the session heap") {
@@ -1234,12 +1204,6 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set(MarkerKey, "false")
     try body finally spark.conf.unset(MarkerKey)
   }
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private def rm(paths: String*): Unit = paths.foreach(p =>
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -1341,7 +1305,6 @@ class StreamingSpec extends AnyFunSuite {
       s"compaction with markers off lost committed batches: ${accepted(off)}")
     assert(storeSnapshot(off) == storeSnapshot(on),
       "markers-off compacted store differs from the markers-on one")
-    rm(on, off)
   }
 
   test("ivf arrival centroids stay frozen at the first batch with the committer's markers off") {
@@ -1354,7 +1317,6 @@ class StreamingSpec extends AnyFunSuite {
       loop("vectors")(store, 2)
       assert(centroids() == frozen, "a later batch retrained the frozen quantizer")
     }
-    rm(store)
   }
 
   test("latest-batch-wins tier matches keys holding a null (equals the window form)") {
@@ -1377,7 +1339,6 @@ class StreamingSpec extends AnyFunSuite {
           keyGate = gate, tierRatio = 0L)) == want,
         s"tiered latest-wins (gate=$gate) kept a re-stated null-key row")
     graft.Caches.release()
-    rm(new java.io.File(root).getParent)
   }
 
   test("public arrival readers serve committed batches only (ArrivalStore discipline 2)") {
@@ -1402,7 +1363,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(rowsOf(read(store)) == before,
         s"$name reader served the uncommitted batch 1 of $sub/")
       graft.Caches.release()
-      rm(store)
     }
   }
 
@@ -1433,7 +1393,6 @@ class StreamingSpec extends AnyFunSuite {
       subs.foreach(sub => assert(new java.io.File(dir2(sub), "_SUCCESS").delete()))
       rerun("stripping every batch-2 marker")
       graft.Caches.release()
-      rm(store)
     }
   }
 }
