@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * rather than the 200 default. Every session is built from the one list
   * in [[settings]], and no harness switches AQE per query. An operator
   * that needs another regime picks it itself: the corpus pipeline plans
-  * small inputs without AQE in a derived session ([[forInput]]), and
-  * the CC star loop sets its rounds' regime and restores it on exit
+  * without AQE in a derived session ([[withoutAqe]]), and the CC star
+  * loop sets its rounds' regime and restores it on exit
   * (`Clusters.connectedComponents`).
   */
 object Sessions {
@@ -32,51 +32,47 @@ object Sessions {
   def cores(): Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
 
-  /** Inputs of at least this many bytes on disk keep the caller's AQE
-    * regime in [[forInput]]; smaller ones plan without AQE. Measured
-    * with `Pipeline.corpusFull` on 4 cores, one JVM, AQE off vs on
-    * interleaved: AQE off was faster at every size tried, 25k perfbench
-    * documents (3.0 MB) 4.7 vs 6.2 s warm, ScaleData sf1 (5.8 MB) 4.6
-    * vs 6.1 s, 100k documents (11.9 MB) 36.6 vs 37.6 s, 250k (29.6 MB)
-    * 189 vs 207 s and sf10 (56.9 MB) 48.7 vs 56.8 s (one run each at
-    * the last two). The threshold sits between the 250k corpus and
-    * sf10, so sf10 and every larger input keep AQE: at sf10 the sweep
-    * measured AQE coalescing 2× faster than fixed partitions for
-    * `dedup_ngram_jaccard`, and one pipeline run per side is too little to
-    * overrule that.
-    * Thread-scoped so a test can run one plan on each side of it.
+  /** Derived AQE-off sessions: per caller, the conf last copied and
+    * the session. A plain map: `Tables` keeps every session it read
+    * through for the life of the JVM, so a derived session lives as
+    * long as its caller, one per caller.
     */
-  private[graft] val aqeMinInputBytes = new scala.util.DynamicVariable[Long](32L << 20)
+  private val derivedWithoutAqe =
+    scala.collection.mutable.HashMap.empty[SparkSession, (Map[String, String], SparkSession)]
 
-  /** Derived AQE-off sessions: per parent, the conf copied and the
-    * session. */
-  private val withoutAqe =
-    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]()
-
-  /** The session an operator over `inputBytes` of input plans in: the
-    * caller's own when it already runs without AQE or the input is at
-    * least [[aqeMinInputBytes]]; else a session derived from it with
-    * the caller's modifiable SQL conf and AQE off. Below the threshold
-    * AQE's one-job-per-stage scheduling and its per-stage re-plans cost
-    * more than its coalescing saves. The caller's conf is never
-    * written, and a frame built in the returned session keeps its
-    * regime for whatever the caller does with it next.
+  /** The session the corpus pipeline plans in: the caller's own when it
+    * already runs without AQE, else one session derived from it, with
+    * the caller's modifiable SQL conf and AQE off. A changed caller conf
+    * is copied into that same session on the next call (keys the caller
+    * unset are unset), so a frame built in it plans under the caller's
+    * current conf, as the caller's own frames do. The caller's conf is
+    * never written.
+    *
+    * Measured with `Pipeline.corpusFull` on 4 cores, one JVM, AQE off
+    * vs on interleaved: AQE off was faster at every size tried, 25k
+    * perfbench documents (3.0 MB) 4.7 vs 6.2 s warm, ScaleData sf1
+    * (5.8 MB) 4.6 vs 6.1 s, 100k documents (11.9 MB) 36.6 vs 37.6 s,
+    * 250k (29.6 MB) 189 vs 207 s and sf10 (56.9 MB) 48.7 vs 56.8 s (one
+    * run each at the last two). AQE's one job per stage, its per-stage
+    * re-plans and its 32-way map output cost more than its coalescing
+    * saves on this plan, so no input size picks AQE.
     */
-  def forInput(spark: SparkSession, inputBytes: Long): SparkSession =
-    if (!spark.sessionState.conf.adaptiveExecutionEnabled ||
-        inputBytes >= aqeMinInputBytes.value) spark
+  def withoutAqe(spark: SparkSession): SparkSession =
+    if (!spark.sessionState.conf.adaptiveExecutionEnabled) spark
     else {
       val conf = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
         spark.conf.isModifiable(k)
       }
-      withoutAqe.synchronized {
-        Option(withoutAqe.get(spark)).collect { case (c, s) if c == conf => s }.getOrElse {
-          val derived = spark.newSession()
+      derivedWithoutAqe.synchronized {
+        val (copied, derived) = derivedWithoutAqe.getOrElseUpdate(spark,
+          (Map.empty, spark.newSession()))
+        if (copied.isEmpty || copied != conf) {
+          (copied.keySet -- conf.keySet).foreach(derived.conf.unset)
           conf.foreach { case (k, v) => derived.conf.set(k, v) }
           derived.conf.set("spark.sql.adaptive.enabled", "false")
-          withoutAqe.put(spark, conf -> derived)
-          derived
+          derivedWithoutAqe(spark) = conf -> derived
         }
+        derived
       }
     }
 

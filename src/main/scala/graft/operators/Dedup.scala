@@ -384,17 +384,17 @@ object Dedup {
     */
   def substringSpans(spark: SparkSession, dir: String, w: Int = 16): DataFrame =
     substringSpansFrom(Tables.documents(spark, dir), w)
-      .orderBy(col("doc_id"), col("span_start"))
 
-  /** [[substringSpans]] over ANY (doc_id, text) frame — the library
-    * entry [[Pipeline.corpusTrain]] feeds with the cleaned-survivor
+  /** [[substringSpans]] over ANY (doc_id, text) frame, ordered by
+    * (doc_id, span_start). [[Pipeline.corpusTrain]] runs the same pass,
+    * unordered ([[substringSpansFromWords]]), over the cleaned-survivor
     * corpus, so repeated spans are detected over the documents that
     * actually remain (a span repeated only between exact duplicates is
-    * already gone with the duplicates). Unordered, as
-    * [[mergeIslands]].
+    * already gone with the duplicates).
     */
   def substringSpansFrom(docs: DataFrame, w: Int = 16): DataFrame =
     substringSpansFromWords(wordArrays(docs), w)
+      .orderBy(col("doc_id"), col("span_start"))
 
   /** [[substringSpansFrom]] over a pre-split (doc_id, w) word-array
     * frame — lets [[substringApply]] share ONE cached split of the text

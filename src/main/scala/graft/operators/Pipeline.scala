@@ -21,21 +21,17 @@ import org.apache.spark.sql.functions._
   * and the shingle array — and the raw text is dropped before the
   * persist, so at 100 TB the dominant cost (the text scan) is paid
   * once and the cached intermediate is the compact derived form.
+  *
+  * Each public entry point builds its whole plan in
+  * [[graft.Sessions.withoutAqe]] of the caller's session. The returned
+  * frame belongs to that session, so the regime holds for whatever the
+  * caller runs on it.
   */
 object Pipeline {
 
-  /** The session each public entry point builds its whole plan in:
-    * [[graft.Sessions.forInput]] over the documents' size on disk (a
-    * file listing, no Spark job). The returned frame belongs to that
-    * session, so its regime holds for whatever the caller runs on it.
-    */
-  private def planSession(spark: SparkSession, dir: String): SparkSession =
-    graft.Sessions.forInput(spark,
-      graft.sources.Tables.parquetByteSize(spark, dir, "documents"))
-
   def corpusClean(spark: SparkSession, dir: String,
                   minQuality: Double = 0.5, tau: Double = 0.8): DataFrame =
-    cleanSurvivors(planSession(spark, dir), dir, minQuality, tau).orderBy(col("doc_id"))
+    cleanSurvivors(graft.Sessions.withoutAqe(spark), dir, minQuality, tau).orderBy(col("doc_id"))
 
   /** The three-stage survivor frame (doc_id, n_tokens, quality_score),
     * unordered — shared by [[corpusClean]] and [[corpusTrain]] (the
@@ -88,7 +84,7 @@ object Pipeline {
     * dedup applied to the survivors:
     *
     *   quality gate → exact keeper → near-dup removal →
-    *   repeated-span cut ([[Dedup.substringSpansFrom]] over the
+    *   repeated-span cut ([[Dedup.substringSpansFromWords]] over the
     *   SURVIVOR corpus + the CutSpans materialization)
     *
     * Spans are detected over the documents that actually remain, not
@@ -108,7 +104,7 @@ object Pipeline {
   def corpusTrain(spark: SparkSession, dir: String,
                   minQuality: Double = 0.5, tau: Double = 0.8,
                   w: Int = 16): DataFrame = {
-    val s = planSession(spark, dir)
+    val s = graft.Sessions.withoutAqe(spark)
     val survivors = cleanSurvivors(s, dir, minQuality, tau)
       .transform(graft.Caches.scoped(_)) // semi-join prune + quality output
     // CACHED survivor text, by measurement: the A/B at sf10 (1M docs)
@@ -125,7 +121,7 @@ object Pipeline {
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("text"))
       .transform(graft.Caches.scoped(_)) // window pass + cut, one scan
-    val perDoc = Dedup.substringSpansFrom(docs, w)
+    val perDoc = Dedup.substringSpansFromWords(Dedup.wordArrays(docs), w)
       .groupBy(col("doc_id"))
       .agg(
         sort_array(collect_list(struct(col("span_start"), col("span_end")))).as("sp"),
@@ -209,7 +205,7 @@ object Pipeline {
                  defaultWeight: Int = 1, budgetPct: Int = 50,
                  budgetTokens: Long = 50000L,
                  bpeMerges: Option[Array[String]] = None): DataFrame = {
-    val mixed = mixedTrain(planSession(spark, dir), dir, minQuality, tau, w, weights,
+    val mixed = mixedTrain(graft.Sessions.withoutAqe(spark), dir, minQuality, tau, w, weights,
       defaultWeight, budgetPct, bpeMerges)
     val n = graft.sources.Tables.parquetRowCount(spark, dir, "documents")
     val blockSize = math.max(1000L, n / 10000L)
@@ -333,7 +329,7 @@ object Pipeline {
                       weights: Map[String, Int] = Map("src0" -> 30, "src1" -> 30),
                       defaultWeight: Int = 1, budgetPct: Int = 50,
                       numMerges: Int = Bpe.DefaultMerges): DataFrame = {
-    val s = planSession(spark, dir)
+    val s = graft.Sessions.withoutAqe(spark)
     val merges = Bpe.mergesFor(s, dir, numMerges)
     val mixed = mixedTrain(s, dir, minQuality, tau, w, weights,
       defaultWeight, budgetPct)

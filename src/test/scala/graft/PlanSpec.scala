@@ -491,25 +491,18 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     assert(parts.forall(_ <= 4), s"cached frames read at ${parts.mkString(", ")} partitions")
   }
 
-  test("pipeline_corpus_* plan without AQE below the size threshold only") {
+  test("pipeline_corpus_* plan without AQE and leave the caller's conf alone") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val bytes = graft.sources.Tables.parquetByteSize(spark, dir, "documents")
-    def run(name: String, threshold: Long): (Boolean, Seq[String]) = {
-      val df = Sessions.aqeMinInputBytes.withValue(threshold)(SparkEntry.queries(name)(spark, dir))
-      val rows = df.collect().map(_.toString).sorted.toSeq
-      val adaptive = deepNodes(df.queryExecution.executedPlan)
-        .exists(_.isInstanceOf[AdaptiveSparkPlanExec])
-      graft.Caches.release()
-      (adaptive, rows)
-    }
     val names = SparkEntry.queries.keys.filter(_.startsWith("pipeline_corpus_")).toSeq.sorted
     assert(names.size == 5, s"pipeline queries: $names")
     for (name <- names) {
-      val (belowAdaptive, below) = run(name, bytes + 1)
-      val (atAdaptive, at) = run(name, bytes)
-      assert(!belowAdaptive, s"$name planned with AQE below the threshold")
-      assert(atAdaptive, s"$name planned without AQE at the threshold")
-      assert(below.nonEmpty && below == at, s"$name rows differ between the two regimes")
+      val df = SparkEntry.queries(name)(spark, dir)
+      assert(df.collect().nonEmpty, s"$name returned no rows")
+      val adaptive = deepNodes(df.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[AdaptiveSparkPlanExec])
+      graft.Caches.release()
+      assert(!adaptive, s"$name planned with AQE")
+      assert(df.sparkSession ne spark, s"$name planned in the caller's own session")
     }
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
       "the caller's session conf was written")
@@ -1126,7 +1119,7 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
       s"AQE set outside Sessions and the CC star loop: $aqeSets")
     assert(sites("aqeOff").isEmpty, s"a per-query AQE list: ${sites("aqeOff")}")
     // Operators pick another regime through a derived session
-    // (Sessions.forInput), never by writing the caller's conf.
+    // (Sessions.withoutAqe), never by writing the caller's conf.
     assert(sites("newSession(") == Set("Sessions.scala"),
       s"a session derived outside Sessions: ${sites("newSession(")}")
     assert(!mainSources.toMap.apply("operators/Pipeline.scala").contains("spark.conf.set"),

@@ -35,21 +35,26 @@ class SessionsSpec extends AnyFunSuite {
     assert(parts <= 4, s"the cached aggregate is stored at $parts partitions on 4 cores")
   }
 
-  test("forInput derives an AQE-off session below the threshold and leaves the caller's conf alone") {
+  test("withoutAqe derives one AQE-off session per caller and leaves the caller's conf alone") {
     val caller = spark.newSession()
     caller.conf.set("spark.sql.shuffle.partitions", "3")
-    val small = Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 99L))
-    assert(small ne caller)
-    assert(small.conf.get("spark.sql.adaptive.enabled") == "false")
-    assert(small.conf.get("spark.sql.shuffle.partitions") == "3", "the caller's conf was not copied")
+    caller.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+    val derived = Sessions.withoutAqe(caller)
+    assert(derived ne caller)
+    assert(derived.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(derived.conf.get("spark.sql.shuffle.partitions") == "3", "the caller's conf was not copied")
     assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
-    // memoized per caller and conf; a changed caller conf gets a new session
-    assert(Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 0L)) eq small)
+    assert(Sessions.withoutAqe(caller) eq derived)
+    // a changed caller conf is copied into the same session, not a new one
     caller.conf.set("spark.sql.shuffle.partitions", "2")
-    val changed = Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 0L))
-    assert((changed ne small) && changed.conf.get("spark.sql.shuffle.partitions") == "2")
-    // at the threshold, or with AQE already off, the caller's own session
-    assert(Sessions.aqeMinInputBytes.withValue(100L)(Sessions.forInput(caller, 100L)) eq caller)
-    assert(Sessions.forInput(small, 0L) eq small)
+    caller.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert(Sessions.withoutAqe(caller) eq derived)
+    assert(derived.conf.get("spark.sql.shuffle.partitions") == "2")
+    assert(derived.conf.get("spark.sql.files.maxPartitionBytes") ==
+      caller.conf.get("spark.sql.files.maxPartitionBytes"), "a key the caller unset stayed set")
+    assert(derived.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
+    // a session already without AQE is its own
+    assert(Sessions.withoutAqe(derived) eq derived)
   }
 }
