@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftCache}
 
 /** Registry for operator-path persists, so long-lived sessions can
   * release them deterministically.
@@ -19,10 +19,40 @@ import org.apache.spark.sql.Dataset
   * (Bench, Verify, application code) call [[release]] after the
   * terminal action on a returned DataFrame. Bench enforces the
   * contract by asserting `getPersistentRDDs.isEmpty` after each query.
+  *
+  * Leaves: [[scoped]] returns a frame whose analyzed plan is the
+  * cache's single `InMemoryRelation`, not the persisted lineage. The
+  * planner would swap in that same relation anyway, so physical plans
+  * do not change; what changes is that analysis, optimization and the
+  * cache lookup of every frame built on it stop re-walking the lineage.
+  * A leaf keeps its input's output attributes and encoder, and
+  * self-joins of it resolve like self-joins of any relation.
+  *
+  * Release: a frame built on a leaf after that leaf's cache was freed
+  * re-loads the cache on its next action (the leaf has no lineage to
+  * fall back to). The next [[release]] frees such a copy too, so
+  * `getPersistentRDDs` is empty after it whether a frame ran before or
+  * after the previous release.
   */
 object Caches {
 
-  private val live = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
+  /** One registration: the persisted frame (its unpersist drops the
+    * cache manager's entry) and the cache its leaf frame reads. */
+  private final class Entry(val ds: Dataset[_], val cache: GraftCache.CacheRef) {
+    def free(): Unit = {
+      ds.unpersist(blocking = true)
+      cache.clear()
+      released.add(cache)
+    }
+  }
+
+  private val live = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
+
+  // Caches of freed entries: a frame built on a leaf after its release
+  // re-loads the cache on its next action, and nothing else would ever
+  // free that copy. [[release]] clears any that is loaded again; both
+  // it and [[withScope]] drop the handles whose cache no frame reaches.
+  private val released = new java.util.concurrent.ConcurrentLinkedQueue[GraftCache.CacheRef]()
 
   // Nested per-caller scopes (r14 advice): a streaming micro-batch must
   // release ONLY the caches its own plan construction registered —
@@ -33,19 +63,24 @@ object Caches {
   // call made inside [[withScope]] (including ones made by operators
   // it calls, e.g. Clusters.mergeIncrementalDelta) to that caller.
   private val scopes =
-    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[Dataset[_]]]] {
-      override def initialValue: List[scala.collection.mutable.ArrayBuffer[Dataset[_]]] = Nil
+    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[Entry]]] {
+      override def initialValue: List[scala.collection.mutable.ArrayBuffer[Entry]] = Nil
     }
 
-  /** Persist `ds` and register it for the enclosing [[withScope]] if
-    * one is active on this thread, else for the next [[release]]. */
+  /** Persist `ds`, register it for the enclosing [[withScope]] if one
+    * is active on this thread, else for the next [[release]], and
+    * return it as a leaf frame over its cache. */
   def scoped[T](ds: Dataset[T]): Dataset[T] = {
-    ds.persist()
-    scopes.get() match {
-      case head :: _ => head += ds
-      case Nil       => live.add(ds)
+    val (leaf, cache) = GraftCache.leaf(ds).getOrElse {
+      ds.persist()
+      GraftCache.leaf(ds).get
     }
-    ds
+    val e = new Entry(ds, cache)
+    scopes.get() match {
+      case head :: _ => head += e
+      case Nil       => live.add(e)
+    }
+    leaf
   }
 
   /** Run `body`, then unpersist exactly the caches [[scoped]] registered
@@ -54,23 +89,28 @@ object Caches {
     * queue or another thread's scopes.
     */
   def withScope[A](body: => A): A = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Entry]
     scopes.set(buf :: scopes.get())
     try body
     finally {
       scopes.set(scopes.get().tail)
-      buf.foreach(_.unpersist(blocking = true))
+      buf.foreach(_.free())
+      released.removeIf(c => !c.reachable)
     }
   }
 
-  /** Unpersist everything registered since the last release. Blocking
-    * so a following timing measurement never races cache eviction.
+  /** Unpersist everything registered since the last release, and any
+    * earlier-freed cache that a frame built after its release loaded
+    * again. Blocking so a following timing measurement never races
+    * cache eviction.
     */
   def release(): Unit = {
-    var d = live.poll()
-    while (d != null) {
-      d.unpersist(blocking = true)
-      d = live.poll()
+    var e = live.poll()
+    while (e != null) {
+      e.free()
+      e = live.poll()
     }
+    released.removeIf(c => !c.reachable)
+    released.forEach(c => if (c.loaded) c.clear())
   }
 }

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Registers every graft custom expression in the session's
   * FunctionRegistry, so the whole kernel library is callable from plain
@@ -61,6 +61,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     reg("intersect_count_sorted", "intersect_count_sorted(a, b) - |A∩B| of sorted long arrays") {
       case Seq(a, b) => IntersectCountSorted(a, b)
+    }
+    reg("intersect_count_at_least",
+        "intersect_count_at_least(a, b, need) - |A∩B| of sorted long arrays if >= need, else -1") {
+      case Seq(a, b, n) => IntersectCountAtLeast(a, b, Cast(n, LongType))
     }
     reg("match_count", "match_count(a, b) - positions where two long arrays agree") {
       case Seq(a, b) => MatchCount(a, b)

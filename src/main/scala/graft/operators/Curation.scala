@@ -613,9 +613,12 @@ object Curation {
           .join(train.select(col("doc_id").as("train_id"), col("sh").as("rsh"))
             .hint("shuffle_hash"), Seq("train_id"))
           .join(testFetch, Seq("test_id"))
+          // need sits at or below the smallest passing count, so every
+          // pair that passes keeps its exact count; the rest read −1
           .select(col("test_id"), col("train_id"),
-            (graft.functions.IntersectCountSorted.intersect_count_sorted(
-              col("tsh"), col("rsh")).cast("double") /
+            (graft.functions.IntersectCountAtLeast.intersect_count_at_least(
+              col("tsh"), col("rsh"), ceil(size(col("tsh")) * minContain) - 1)
+              .cast("double") /
               size(col("tsh")).cast("double")).as("containment"))
           .filter(col("containment") >= minContain)
           .groupBy(col("test_id"), col("train_id"))

@@ -656,9 +656,14 @@ object Dedup {
     cand
       .join(sh(shA.as("da"), bA), col("doc_a") === col("da.doc_id"))
       .join(sh(shB.as("db"), bB), col("doc_b") === col("db.doc_id"))
+      // J ≥ tau ⇔ n_common ≥ tau/(1+tau)·(na+nb); `need` sits strictly
+      // below that bound, so every pair that can pass gets its exact
+      // count and a pair that cannot reads −1 and fails the filter.
       .select(col("doc_a"), col("doc_b"),
-        graft.functions.IntersectCountSorted.intersect_count_sorted(
-          col("da.sh"), col("db.sh")).as("n_common"),
+        graft.functions.IntersectCountAtLeast.intersect_count_at_least(
+          col("da.sh"), col("db.sh"),
+          floor((size(col("da.sh")) + size(col("db.sh"))) * (tau / (1 + tau))) - 1)
+          .as("n_common"),
         size(col("da.sh")).as("na"), size(col("db.sh")).as("nb"))
       .select(col("doc_a"), col("doc_b"), col("n_common"),
         (col("n_common").cast("double") /

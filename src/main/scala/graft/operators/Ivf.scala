@@ -541,19 +541,18 @@ object Ivf {
     * retrain = build a new store, cut over, not mutate this one.
     */
   def vectorArrivalBatch(batch: DataFrame, storeDir: String, batchId: Long,
-                         nlist: Int, iters: Int = 4): Unit = {
+                         nlist: Int, iters: Int = 4): Unit = graft.Caches.withScope {
     val spark = batch.sparkSession
     val base = Similarity.withFastNorm(
-      batch.select(col("vec_id"), col("embedding"))).persist()
-    try {
-      if (base.isEmpty) return
+      batch.select(col("vec_id"), col("embedding"))).transform(graft.Caches.scoped(_))
+    if (!base.isEmpty) {
       val dim = base.select(size(col("embedding"))).head.getInt(0)
       val cents = ensureCentroids(spark, base, storeDir, nlist, dim, iters)
       Stores.commitTo(base.select(col("vec_id"), col("embedding"), col("nf"),
           element_at(IvfCells.ivf_cells(col("embedding"), cents, dim, 1), 1)
             .as("cell")),
         ArrivalStore.batchDir(s"$storeDir/cells", batchId), Some("cell"))
-    } finally base.unpersist()
+    }
   }
 
   /** Train-once coarse quantizer shared by the arrival loops: read the

@@ -73,8 +73,9 @@ object Pipeline {
       // corpus builds ~0.9·n·8 B across ALL partitions (~7 GB/10⁹ docs
       // cluster-wide, KBs per task at any sane partitioning); a corpus
       // where that per-partition slice threatens executor memory has
-      // its duplicate mass concentrated by key skew, which AQE's skew
-      // split handles for SHJ the same as SMJ.
+      // its duplicate mass concentrated by key skew. The pipeline plans
+      // without AQE, so no skew split runs here, and no build-size gate
+      // guards this pin yet (ROADMAP item 3).
       .join(nearLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("n_tokens"), col("quality_score"))
   }

@@ -116,7 +116,7 @@ object EventStream {
     * batchId directly.
     */
   private[graft] def dedupArrivalBatch(batch: DataFrame, storeDir: String,
-                                       batchId: Long): Unit = {
+                                       batchId: Long): Unit = graft.Caches.withScope {
     val spark = batch.sparkSession
     val winners = batch
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
@@ -131,11 +131,9 @@ object EventStream {
       else ArrivalStore.antiStore(winners,
         spark.read.parquet(standing: _*), Seq("text_hash"), small))
       .select(col("doc_id"), col("text_hash"), col("batch_copies"))
-      .persist() // read twice below; both writes see one computation
-    try {
-      ArrivalStore.commit(accepted, s"$storeDir/accepted", batchId)
-      ArrivalStore.commit(accepted.select(col("text_hash")), s"$storeDir/hashes", batchId)
-    } finally accepted.unpersist()
+      .transform(graft.Caches.scoped(_)) // read twice below; both writes see one computation
+    ArrivalStore.commit(accepted, s"$storeDir/accepted", batchId)
+    ArrivalStore.commit(accepted.select(col("text_hash")), s"$storeDir/hashes", batchId)
   }
 
   /** The standing accepted corpus across every committed arrival batch
@@ -240,46 +238,40 @@ object EventStream {
     // probes with zero exchange; above it the shuffle tier stands.
     val small = ArrivalStore.smallBatch(batch)
     def gated(df: DataFrame): DataFrame = ArrivalStore.gated(small)(df)
-    val rows = batch.select(col("doc_id"), col("text")).persist()
-    try {
-      val shingled = shingleSigs(rows, k)
-        .persist() // cross cand + self cand + band write
-      try {
-        val batchKeys = bandKeys(shingled, k, bands)
-          .transform(graft.Caches.scoped(_)) // cross + self joins
-        val crossPairs = crossBandPairs(spark, storeDir, batchId, shingled,
-          batchKeys, small, tau)(
-          spark.read.parquet(ArrivalStore.standingDirs(s"$storeDir/corpus", batchId): _*))
-        val selfCand = batchKeys.as("a")
-          .join(gated(batchKeys.as("b")),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        val selfPairs = graft.operators.Dedup.verifyJaccard(
-            shingled.select(col("doc_id"), col("sh")), selfCand, tau)
-          .select(col("doc_a"), col("doc_b"))
-        val newPairs = crossPairs.unionByName(selfPairs)
-          .transform(graft.Caches.scoped(_)) // merge endpoints + delta CC
-        val labelDirs = ArrivalStore.standingDirs(s"$storeDir/labels", batchId)
-        val standing =
-          if (labelDirs.isEmpty)
-            rows.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
-          else arrivalClusterLabelsFrom(spark, s"$storeDir/labels", labelDirs)
-        val delta = graft.operators.Clusters
-          .mergeIncrementalDelta(spark, standing, newPairs)
-        val selfLabels = rows.select(col("doc_id"))
-          .join(gated(delta.select(col("doc_id"))),
-            Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("doc_id").as("cluster_id"))
-        val labelsOut = delta.unionByName(selfLabels).persist()
-        try {
-          ArrivalStore.commit(labelsOut, s"$storeDir/labels", batchId)
-          ArrivalStore.commit(rows, s"$storeDir/corpus", batchId)
-          ArrivalStore.commit(batchKeys, s"$storeDir/bands", batchId)
-        } finally labelsOut.unpersist()
-      } finally shingled.unpersist()
-    } finally rows.unpersist()
+    val rows = batch.select(col("doc_id"), col("text")).transform(graft.Caches.scoped(_))
+    val shingled = shingleSigs(rows, k)
+      .transform(graft.Caches.scoped(_)) // cross cand + self cand + band write
+    val batchKeys = bandKeys(shingled, k, bands)
+      .transform(graft.Caches.scoped(_)) // cross + self joins
+    val crossPairs = crossBandPairs(spark, storeDir, batchId, shingled,
+      batchKeys, small, tau)(
+      spark.read.parquet(ArrivalStore.standingDirs(s"$storeDir/corpus", batchId): _*))
+    val selfCand = batchKeys.as("a")
+      .join(gated(batchKeys.as("b")),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    val selfPairs = graft.operators.Dedup.verifyJaccard(
+        shingled.select(col("doc_id"), col("sh")), selfCand, tau)
+      .select(col("doc_a"), col("doc_b"))
+    val newPairs = crossPairs.unionByName(selfPairs)
+      .transform(graft.Caches.scoped(_)) // merge endpoints + delta CC
+    val labelDirs = ArrivalStore.standingDirs(s"$storeDir/labels", batchId)
+    val standing =
+      if (labelDirs.isEmpty)
+        rows.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
+      else arrivalClusterLabelsFrom(spark, s"$storeDir/labels", labelDirs)
+    val delta = graft.operators.Clusters
+      .mergeIncrementalDelta(spark, standing, newPairs)
+    val selfLabels = rows.select(col("doc_id"))
+      .join(gated(delta.select(col("doc_id"))),
+        Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("cluster_id"))
+    val labelsOut = delta.unionByName(selfLabels).transform(graft.Caches.scoped(_))
+    ArrivalStore.commit(labelsOut, s"$storeDir/labels", batchId)
+    ArrivalStore.commit(rows, s"$storeDir/corpus", batchId)
+    ArrivalStore.commit(batchKeys, s"$storeDir/bands", batchId)
   }
 
   /** (doc_id, sh, sig) for the docs of a (doc_id, text) frame with at
@@ -656,9 +648,8 @@ object EventStream {
       val spark = batch.sparkSession
       import graft.operators.{Clusters, Ivf, Similarity}
       val base = Similarity.withFastNorm(
-        batch.select(col("vec_id"), col("embedding"))).persist()
-      try {
-        if (base.isEmpty) return
+        batch.select(col("vec_id"), col("embedding"))).transform(graft.Caches.scoped(_))
+      if (!base.isEmpty) {
         val dim = base.select(size(col("embedding"))).head().getInt(0)
         val cents = Ivf.ensureCentroids(spark, base, storeDir, nlist, dim, iters)
         // clamp probes to the LIVE centroid count, not the caller's
@@ -738,7 +729,7 @@ object EventStream {
             .repartition(col("cell"))
             .sortWithinPartitions(col("cell")),
           s"$storeDir/cells", batchId)
-      } finally base.unpersist()
+      }
     }
 
   /** The sixth arrival loop (r15): streaming SHARD PACKING — the
@@ -779,11 +770,9 @@ object EventStream {
         .withColumn("blk", spark_partition_id().cast("long"))
       val packed = graft.operators.Curation
         .packCore(toks, budgetTokens, startOffset = start)
-        .persist() // assignment write + the offset aggregate
-      try {
-        ArrivalStore.commit(packed, s"$storeDir/packed", batchId)
-        commitOffset(spark, storeDir, batchId, start, packed)
-      } finally packed.unpersist()
+        .transform(graft.Caches.scoped(_)) // assignment write + the offset aggregate
+      ArrivalStore.commit(packed, s"$storeDir/packed", batchId)
+      commitOffset(spark, storeDir, batchId, start, packed)
     }
 
   /** The packing loops' standing offset: the `end_offset` of the
@@ -1278,53 +1267,47 @@ object EventStream {
       if (seenDirs.isEmpty) winners
       else ArrivalStore.antiStore(winners,
         spark.read.parquet(seenDirs: _*), Seq("text_hash"), small))
-      .persist() // hash write + shingle pass + accepted assembly
-    try {
-      val shingled = shingleSigs(exactOk, k)
-        .persist() // cross tier + self tier + band write
-      try {
-        // Tier 2: cross near-dup against the standing band index.
-        val crossRejected = crossBandPairs(spark, storeDir, batchId, shingled,
-            bandKeys(shingled, k, bands), small, tau)(
-            spark.read.option("basePath", s"$storeDir/accepted")
-              .parquet(ArrivalStore.standingDirs(s"$storeDir/accepted", batchId): _*))
-          .select(col("doc_a").as("doc_id")).distinct()
-        // Tier 3: within-batch near-dup among the remaining survivors.
-        val selfSh = shingled
-          .join(gated(crossRejected), Seq("doc_id"), "left_anti")
-          .transform(graft.Caches.scoped(_))
-        val selfCand = bandKeys(selfSh, k, bands).as("a")
-          .join(gated(bandKeys(selfSh, k, bands).as("b")),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        val selfPairs = graft.operators.Dedup.verifyJaccard(
-          selfSh.select(col("doc_id"), col("sh")), selfCand, tau)
-        // gated driver union-find (r16, the vecdedup lesson): the full
-        // clustersFrom path pays ~4 s of CC scheduling rounds on a
-        // micro-batch-sized pair graph
-        val selfDropped = graft.operators.Clusters
-          .clusterLosers(spark, selfPairs.select(col("doc_a"), col("doc_b")))
-          .select(col("doc_id"))
-        val rejected = crossRejected.unionByName(selfDropped)
-        val accepted = exactOk
-          .join(gated(rejected), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("text_hash"), col("batch_copies"),
-            col("text"))
-          .persist() // corpus write + band-key write
-        try {
-          ArrivalStore.commit(accepted, s"$storeDir/accepted", batchId)
-          // Every SEEN content's hash (tier-1 note above), not just
-          // the accepted ones.
-          ArrivalStore.commit(exactOk.select(col("text_hash")),
-            s"$storeDir/hashes", batchId)
-          ArrivalStore.commit(bandKeys(shingled
-              .join(accepted.select(col("doc_id")), Seq("doc_id"), "left_semi"), k, bands),
-            s"$storeDir/bands", batchId)
-        } finally accepted.unpersist()
-      } finally shingled.unpersist()
-    } finally exactOk.unpersist()
+      .transform(graft.Caches.scoped(_)) // hash write + shingle pass + accepted assembly
+    val shingled = shingleSigs(exactOk, k)
+      .transform(graft.Caches.scoped(_)) // cross tier + self tier + band write
+    // Tier 2: cross near-dup against the standing band index.
+    val crossRejected = crossBandPairs(spark, storeDir, batchId, shingled,
+        bandKeys(shingled, k, bands), small, tau)(
+        spark.read.option("basePath", s"$storeDir/accepted")
+          .parquet(ArrivalStore.standingDirs(s"$storeDir/accepted", batchId): _*))
+      .select(col("doc_a").as("doc_id")).distinct()
+    // Tier 3: within-batch near-dup among the remaining survivors.
+    val selfSh = shingled
+      .join(gated(crossRejected), Seq("doc_id"), "left_anti")
+      .transform(graft.Caches.scoped(_))
+    val selfCand = bandKeys(selfSh, k, bands).as("a")
+      .join(gated(bandKeys(selfSh, k, bands).as("b")),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    val selfPairs = graft.operators.Dedup.verifyJaccard(
+      selfSh.select(col("doc_id"), col("sh")), selfCand, tau)
+    // gated driver union-find (r16, the vecdedup lesson): the full
+    // clustersFrom path pays ~4 s of CC scheduling rounds on a
+    // micro-batch-sized pair graph
+    val selfDropped = graft.operators.Clusters
+      .clusterLosers(spark, selfPairs.select(col("doc_a"), col("doc_b")))
+      .select(col("doc_id"))
+    val rejected = crossRejected.unionByName(selfDropped)
+    val accepted = exactOk
+      .join(gated(rejected), Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("text_hash"), col("batch_copies"),
+        col("text"))
+      .transform(graft.Caches.scoped(_)) // corpus write + band-key write
+    ArrivalStore.commit(accepted, s"$storeDir/accepted", batchId)
+    // Every SEEN content's hash (tier-1 note above), not just
+    // the accepted ones.
+    ArrivalStore.commit(exactOk.select(col("text_hash")),
+      s"$storeDir/hashes", batchId)
+    ArrivalStore.commit(bandKeys(shingled
+        .join(accepted.select(col("doc_id")), Seq("doc_id"), "left_semi"), k, bands),
+      s"$storeDir/bands", batchId)
   }
 
   /** Stream-stream event-time INTERVAL join (r12): every click joined

@@ -1,0 +1,44 @@
+package org.apache.spark.sql
+
+import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
+
+/** Re-roots a persisted Dataset at its cache entry.
+  *
+  * `Dataset.persist` registers the plan with the session's
+  * `CacheManager`, but the Dataset still carries its whole lineage:
+  * every `join`/`select` built on it re-analyzes that lineage, and the
+  * planner's `useCachedData` then swaps the lineage for the cache's
+  * `InMemoryRelation`. A frame rooted at that same relation plans
+  * identically and analyzes as one leaf. Like [[GraftColumn]], this
+  * file lives in `org.apache.spark.sql` only to reach the
+  * `classic.Dataset` constructor and the cache manager.
+  */
+object GraftCache {
+  /** A weak handle on the cached RDD behind a leaf frame: it does not
+    * keep the cache reachable once no frame reads it. */
+  final class CacheRef private[GraftCache] (b: CachedRDDBuilder) {
+    private val ref = new java.lang.ref.WeakReference(b)
+    /** False once no frame or cache entry reaches the cache. */
+    def reachable: Boolean = ref.get != null
+    /** True while the cached RDD is materialized. */
+    def loaded: Boolean = Option(ref.get).exists(_.isCachedColumnBuffersLoaded)
+    /** Unpersist the cached RDD, blocking; a later action re-loads it. */
+    def clear(): Unit = Option(ref.get).foreach(_.clearCache(blocking = true))
+  }
+
+  /** `ds` as a Dataset over its cache's `InMemoryRelation` (with `ds`'s
+    * output attributes and encoder), plus a handle on that cache; None
+    * if no cache entry covers `ds`. A `ds` that already is such a leaf
+    * comes back as is. */
+  def leaf[T](ds: Dataset[T]): Option[(Dataset[T], CacheRef)] = {
+    val c = ds.asInstanceOf[classic.Dataset[T]]
+    c.logicalPlan match {
+      case r: InMemoryRelation => Some((ds, new CacheRef(r.cacheBuilder)))
+      case _ =>
+        c.sparkSession.sharedState.cacheManager.lookupCachedData(c).map { cd =>
+          val rel = cd.cachedRepresentation.withOutput(c.queryExecution.analyzed.output)
+          (new classic.Dataset[T](c.sparkSession, rel, c.encoder), new CacheRef(rel.cacheBuilder))
+        }
+    }
+  }
+}

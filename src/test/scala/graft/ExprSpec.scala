@@ -110,6 +110,35 @@ class ExprSpec extends AnyFunSuite {
     assert(df.filter(col("merge") =!= col("builtin")).isEmpty)
   }
 
+  test("IntersectCountAtLeast is the exact count when it reaches need, else -1") {
+    import spark.implicits._
+    // random sorted distinct arrays over a small domain, so overlaps of
+    // every size occur; every need from 0 to min(na, nb) + 1
+    val rnd = new scala.util.Random(11)
+    def arr(): Seq[Long] =
+      rnd.shuffle((0L until 40L).toList).take(rnd.nextInt(26)).sorted
+    val pairs = Seq.fill(300)((arr(), arr())) ++
+      Seq((Seq.empty[Long], Seq.empty[Long]), (Seq(3L), Seq(3L)), ((0L until 25L).toList, (0L until 25L).toList))
+    val checked = pairs.toDF("a", "b")
+      .withColumn("need", explode(sequence(lit(0), least(size(col("a")), size(col("b"))) + 1)))
+      .select(col("need"),
+        IntersectCountSorted.intersect_count_sorted(col("a"), col("b")).as("full"),
+        IntersectCountAtLeast.intersect_count_at_least(col("a"), col("b"), col("need")).as("early"))
+      .collect()
+    assert(checked.length > 1000)
+    for (r <- checked) {
+      val (need, full, early) = (r.getInt(0), r.getLong(1), r.getLong(2))
+      assert(early == (if (full >= need) full else -1L), s"need $need, exact $full, got $early")
+    }
+    // the interpreted path agrees with the generated one
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    for ((a, b) <- pairs.take(50); need <- 0 to math.min(a.size, b.size) + 1) {
+      val full = a.intersect(b).size.toLong
+      assert(IntersectCountAtLeast.count(new GenericArrayData(a.toArray[Any]),
+        new GenericArrayData(b.toArray[Any]), need) == (if (full >= need) full else -1L))
+    }
+  }
+
   test("MatchCount equals the declarative zip_with coordinate-match count") {
     import spark.implicits._
     val pairs = Seq(

@@ -10,6 +10,25 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast, a sneaky single-partition window) is a scale bug even
   * when results stay correct.
   */
+object PlanSpec {
+  /** Full traversal including through AQE stage boundaries —
+    * QueryStageExec leaves hide the materialized subtrees a naive
+    * collect() never sees, and an un-run AdaptiveSparkPlanExec shows
+    * no children at all.
+    */
+  def deepNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val through = p match {
+      case a: AdaptiveSparkPlanExec => deepNodes(a.executedPlan)
+      case q: QueryStageExec => deepNodes(q.plan)
+      case i: InMemoryTableScanExec => deepNodes(i.relation.cachedPlan)
+      case _ => Seq.empty
+    }
+    p +: (through ++ p.children.flatMap(deepNodes))
+  }
+}
+
 class PlanSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val dir = "/root/testdata/sf0.001"
@@ -26,21 +45,7 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
   private def finalPlanOnly(s: String): String =
     s.split(java.util.regex.Pattern.quote("== Initial Plan ==")).head
 
-  /** Full traversal including through AQE stage boundaries —
-    * QueryStageExec leaves hide the materialized subtrees a naive
-    * collect() never sees.
-    */
-  private def deepNodes(p: SparkPlan): Seq[SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val through = p match {
-      case a: AdaptiveSparkPlanExec => deepNodes(a.executedPlan)
-      case q: QueryStageExec => deepNodes(q.plan)
-      case i: InMemoryTableScanExec => deepNodes(i.relation.cachedPlan)
-      case _ => Seq.empty
-    }
-    p +: (through ++ p.children.flatMap(deepNodes))
-  }
+  import PlanSpec.deepNodes
 
   test("q2 pushes filters and projection into the parquet scan") {
     val s = planString(Relational.q2FilterProject(spark, dir))
@@ -830,21 +835,26 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
     val lowCard = Set("event_type", "lang_pred", "split", "channel")
-    def reduced(p: SparkPlan): Boolean = p.collectFirst {
-      case a: BaseAggregateExec => a
-      case j: BroadcastHashJoinExec => j
-    }.isDefined
+    def reduced(p: SparkPlan): Boolean = deepNodes(p).exists {
+      case _: BaseAggregateExec | _: BroadcastHashJoinExec => true
+      case _ => false
+    }
+    var windows = 0
     for ((name, fn) <- SparkEntry.queries) {
-      val bad = fn(spark, dir).queryExecution.executedPlan.collect {
-        case w: WindowExec
-          if w.partitionSpec.nonEmpty &&
-            w.partitionSpec.flatMap(_.references.toSeq.map(_.name))
-              .forall(lowCard) && !reduced(w.child) => w
+      val ws = deepNodes(fn(spark, dir).queryExecution.executedPlan).collect {
+        case w: WindowExec => w
       }
+      windows += ws.size
+      val bad = ws.filter(w =>
+        w.partitionSpec.nonEmpty &&
+          w.partitionSpec.flatMap(_.references.toSeq.map(_.name)).forall(lowCard) &&
+          !reduced(w.child))
       assert(bad.isEmpty,
         s"$name runs ${bad.size} window(s) keyed only by low-cardinality " +
           s"column(s) over an unreduced input — all data lands in a handful of tasks")
+      Caches.release()
     }
+    assert(windows > 0, "no registered query planned a WindowExec: the check saw nothing")
   }
 
   test("unpartitioned windows run only over bounded inputs (r19, r18 verdict watch-item)") {
@@ -1075,6 +1085,21 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     walk(new java.io.File("src/main/scala/graft")).map(f =>
       f.getPath.stripPrefix("src/main/scala/graft/") ->
         new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("every persist goes through Caches") {
+    // One persist path: a frame persisted anywhere else is freed by
+    // neither Caches.release nor Caches.withScope, and frames built on
+    // it re-analyze its whole lineage instead of one cache leaf.
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val sites = walk(new java.io.File("src/main")).filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      src.contains(".persist(") || src.contains(".cache()")
+    }.map(_.getPath).sorted
+    assert(sites == Seq("src/main/scala/graft/Caches.scala"),
+      s"persist outside Caches.scoped in: ${sites.mkString(", ")}")
   }
 
   test("the arrival-store layout and stream shell are written only in ArrivalStore") {

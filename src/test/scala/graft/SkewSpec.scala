@@ -154,11 +154,11 @@ class SkewSpec extends AnyFunSuite with TmpDirs {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
     def aggBelow(p: SparkPlan): Boolean =
-      p.collectFirst { case a: BaseAggregateExec => a }.isDefined
-    val raw = Relational.medianDisc(ev)
-      .queryExecution.executedPlan.collect {
-        case w: WindowExec if !aggBelow(w.child) => w
-      }
+      PlanSpec.deepNodes(p).exists(_.isInstanceOf[BaseAggregateExec])
+    val windows = PlanSpec.deepNodes(Relational.medianDisc(ev).queryExecution.executedPlan)
+      .collect { case w: WindowExec => w }
+    assert(windows.nonEmpty, "medianDisc planned no WindowExec: the check saw nothing")
+    val raw = windows.filter(w => !aggBelow(w.child))
     assert(raw.isEmpty, s"${raw.size} window(s) run over un-aggregated rows")
   }
 

@@ -23,6 +23,12 @@ ties counting for neither side. A metric reads as a gain only over at
 least ten pairs, when the change wins at least nine tenths of them and
 the medians differ by more than the parent's interquartile range; the relative change is
 printed next to the metric's bound from BENCHMARK.json.
+
+The summary also prints each side's spread of `attempted` (the operations one timed window
+completed) and lists the pairs whose sides attempted a different number of fewer than ten
+operations, as corpus_batch's few runs do. Over so few runs the first, cold one weighs on
+every metric: with two runs against three, one side's p50 is the mean of a cold and a warm
+run while the other's is a warm run.
 """
 import argparse
 import json
@@ -33,6 +39,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FEW_RUNS = 10  # below this many operations per run, one cold operation moves the metrics
 
 
 def seeds_arg(text):
@@ -83,6 +90,22 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def report_attempted(attempted):
+    """Each side's spread of attempted operations, and the pairs of few operations
+    where the sides differ."""
+    for side in ("parent", "change"):
+        xs = [x for x in attempted[side] if x is not None]
+        if xs:
+            print(f"  attempted {side:<6} min {min(xs)} median {statistics.median(xs):g} "
+                  f"max {max(xs)}")
+    uneven = [f"{i + 1} ({p} vs {c})"
+              for i, (p, c) in enumerate(zip(attempted["parent"], attempted["change"]))
+              if p is not None and c is not None and p != c and min(p, c) < FEW_RUNS]
+    if uneven:
+        print(f"  UNEVEN RUNS: pairs {', '.join(uneven)} (parent vs change attempted); "
+              "their per-run means mix cold and warm runs unequally")
+
+
 def report(metric, better, bound, pairs):
     """One summary line; pairs holds (parent value, change value)."""
     both = [(a, b) for a, b in pairs if a is not None and b is not None]
@@ -130,12 +153,14 @@ def main():
 
     for w in a.workload:
         runs = {"parent": [], "change": []}
+        attempted = {"parent": [], "change": []}
         for i, seed in enumerate(a.seeds):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
                 result, record = run_once(trees[side], w, seed, seconds, a.trace)
                 vals = values(record)
                 runs[side].append(vals)
+                attempted[side].append(result.get("attempted"))
                 e2e = " ".join(f"{m['name']}={vals[m['name']]:.4g}"
                                for m in bench["end_to_end"] if m["name"] in vals)
                 print(f"{w} pair {i + 1}/{len(a.seeds)} seed {seed} {side:<6} "
@@ -143,6 +168,7 @@ def main():
                       f"failed={result.get('failed', 'missing')}/"
                       f"{result.get('attempted', '?')} {e2e}", flush=True)
         print(f"{w}: median [q1, q3] over {len(a.seeds)} pairs")
+        report_attempted(attempted)
         for name, better, bound in metrics:
             pairs = [(p.get(name), c.get(name)) for p, c in zip(runs["parent"], runs["change"])]
             if any(v for pair in pairs for v in pair):  # skip all-zero counters
