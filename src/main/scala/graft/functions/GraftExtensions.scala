@@ -59,12 +59,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     reg("simhash_shingled", "simhash_shingled(words, n) - SimHash over word n-grams") {
       case Seq(w, n) => SimHashShingled(w, intArg(n, "simhash_shingled", 2))
     }
-    reg("intersect_count_sorted", "intersect_count_sorted(a, b) - |A∩B| of sorted long arrays") {
+    reg("intersect_count_sorted",
+        "intersect_count_sorted(a, b[, need]) - |A∩B| of sorted long arrays; -1 if below need") {
       case Seq(a, b) => IntersectCountSorted(a, b)
-    }
-    reg("intersect_count_at_least",
-        "intersect_count_at_least(a, b, need) - |A∩B| of sorted long arrays if >= need, else -1") {
-      case Seq(a, b, n) => IntersectCountAtLeast(a, b, Cast(n, LongType))
+      case Seq(a, b, n) => IntersectCountSorted(a, b, Cast(n, LongType))
     }
     reg("match_count", "match_count(a, b) - positions where two long arrays agree") {
       case Seq(a, b) => MatchCount(a, b)

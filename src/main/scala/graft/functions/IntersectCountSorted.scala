@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -16,67 +16,21 @@ import org.apache.spark.sql.types._
   * the 3-gram Jaccard verification join. Inputs MUST be sorted
   * ascending (graft sorts shingle arrays once per document, amortized
   * over all of the document's candidate pairs).
+  *
+  * `need` is for a verification that only has to know whether the
+  * count reaches it: the result is the exact count when it does and −1
+  * when it does not, and the merge stops as soon as the matches so far
+  * plus the shorter remainder fall below `need` (PPJoin's
+  * early-terminating verification, Xiao et al. 2008). A threshold
+  * filter on the result is unchanged as long as `need` sits at or below
+  * the smallest count that passes it. With `need = 0` (the two-argument
+  * form) every count is exact.
   */
-case class IntersectCountSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "intersect_count_sorted"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<bigint>), got (${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    IntersectCountSorted.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.IntersectCountSorted.count($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object IntersectCountSorted {
-  /** Static entry point shared by the interpreted and codegen paths. */
-  def count(a: ArrayData, b: ArrayData): Long = {
-    val (na, nb) = (a.numElements(), b.numElements())
-    var i = 0
-    var j = 0
-    var c = 0L
-    while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
-
-  def intersect_count_sorted(a: Column, b: Column): Column =
-    GraftColumn.column(IntersectCountSorted(
-      GraftColumn.expression(a), GraftColumn.expression(b)))
-}
-
-/** [[IntersectCountSorted]] for a verification that only needs to know
-  * whether |A ∩ B| reaches `need`: the exact count when it does, −1 when
-  * it does not. The merge stops as soon as the matches so far plus the
-  * shorter remainder fall below `need` (PPJoin's early-terminating
-  * verification, Xiao et al. 2008), so a candidate pair that cannot
-  * pass stops after a fraction of the merge. A threshold filter on the
-  * result is unchanged as long as `need` sits at or below the smallest
-  * count that passes it.
-  */
-case class IntersectCountAtLeast(first: Expression, second: Expression, third: Expression)
+case class IntersectCountSorted(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "intersect_count_at_least"
+  override def prettyName: String = "intersect_count_sorted"
 
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
@@ -88,20 +42,25 @@ case class IntersectCountAtLeast(first: Expression, second: Expression, third: E
     }
 
   override def nullSafeEval(a: Any, b: Any, need: Any): Any =
-    IntersectCountAtLeast.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+    IntersectCountSorted.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
       need.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b, need) =>
-      s"graft.functions.IntersectCountAtLeast.count($a, $b, $need)")
+      s"graft.functions.IntersectCountSorted.count($a, $b, $need)")
 
   override protected def withNewChildrenInternal(newFirst: Expression, newSecond: Expression,
                                                  newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-object IntersectCountAtLeast {
-  /** |a ∩ b| if it is at least `need`, else −1; both arrays sorted. */
+object IntersectCountSorted {
+  /** The exact count: no early exit. */
+  def apply(a: Expression, b: Expression): IntersectCountSorted =
+    IntersectCountSorted(a, b, Literal(0L))
+
+  /** Static entry point shared by the interpreted and codegen paths:
+    * |a ∩ b| if it is at least `need`, else −1; both arrays sorted. */
   def count(a: ArrayData, b: ArrayData, need: Long): Long = {
     val (na, nb) = (a.numElements(), b.numElements())
     var i = 0
@@ -120,7 +79,10 @@ object IntersectCountAtLeast {
     if (c < need) -1L else c
   }
 
-  def intersect_count_at_least(a: Column, b: Column, need: Column): Column =
-    GraftColumn.column(IntersectCountAtLeast(GraftColumn.expression(a),
+  def intersect_count_sorted(a: Column, b: Column): Column =
+    GraftColumn.column(IntersectCountSorted(GraftColumn.expression(a), GraftColumn.expression(b)))
+
+  def intersect_count_sorted(a: Column, b: Column, need: Column): Column =
+    GraftColumn.column(IntersectCountSorted(GraftColumn.expression(a),
       GraftColumn.expression(b), GraftColumn.expression(need.cast(LongType))))
 }

@@ -616,7 +616,7 @@ object Curation {
           // need sits at or below the smallest passing count, so every
           // pair that passes keeps its exact count; the rest read −1
           .select(col("test_id"), col("train_id"),
-            (graft.functions.IntersectCountAtLeast.intersect_count_at_least(
+            (graft.functions.IntersectCountSorted.intersect_count_sorted(
               col("tsh"), col("rsh"), ceil(size(col("tsh")) * minContain) - 1)
               .cast("double") /
               size(col("tsh")).cast("double")).as("containment"))

@@ -660,7 +660,7 @@ object Dedup {
       // below that bound, so every pair that can pass gets its exact
       // count and a pair that cannot reads −1 and fails the filter.
       .select(col("doc_a"), col("doc_b"),
-        graft.functions.IntersectCountAtLeast.intersect_count_at_least(
+        graft.functions.IntersectCountSorted.intersect_count_sorted(
           col("da.sh"), col("db.sh"),
           floor((size(col("da.sh")) + size(col("db.sh"))) * (tau / (1 + tau))) - 1)
           .as("n_common"),

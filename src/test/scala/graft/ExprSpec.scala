@@ -110,7 +110,7 @@ class ExprSpec extends AnyFunSuite {
     assert(df.filter(col("merge") =!= col("builtin")).isEmpty)
   }
 
-  test("IntersectCountAtLeast is the exact count when it reaches need, else -1") {
+  test("IntersectCountSorted with need is the exact count when it reaches need, else -1") {
     import spark.implicits._
     // random sorted distinct arrays over a small domain, so overlaps of
     // every size occur; every need from 0 to min(na, nb) + 1
@@ -122,8 +122,8 @@ class ExprSpec extends AnyFunSuite {
     val checked = pairs.toDF("a", "b")
       .withColumn("need", explode(sequence(lit(0), least(size(col("a")), size(col("b"))) + 1)))
       .select(col("need"),
-        IntersectCountSorted.intersect_count_sorted(col("a"), col("b")).as("full"),
-        IntersectCountAtLeast.intersect_count_at_least(col("a"), col("b"), col("need")).as("early"))
+        size(array_intersect(col("a"), col("b"))).cast("long").as("full"),
+        IntersectCountSorted.intersect_count_sorted(col("a"), col("b"), col("need")).as("early"))
       .collect()
     assert(checked.length > 1000)
     for (r <- checked) {
@@ -134,7 +134,7 @@ class ExprSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     for ((a, b) <- pairs.take(50); need <- 0 to math.min(a.size, b.size) + 1) {
       val full = a.intersect(b).size.toLong
-      assert(IntersectCountAtLeast.count(new GenericArrayData(a.toArray[Any]),
+      assert(IntersectCountSorted.count(new GenericArrayData(a.toArray[Any]),
         new GenericArrayData(b.toArray[Any]), need) == (if (full >= need) full else -1L))
     }
   }

@@ -31,8 +31,8 @@ class SqlFunctionsSpec extends AnyFunSuite {
         |  size(minhash_shingled(array('a','b','c','d'), 3, 16)) AS k,
         |  simhash_shingled(array('a','b','c','d'), 3) AS fp,
         |  intersect_count_sorted(array(1L, 5L, 9L), array(5L, 9L, 12L)) AS inter,
-        |  intersect_count_at_least(array(1L, 5L, 9L), array(5L, 9L, 12L), 2) AS reached,
-        |  intersect_count_at_least(array(1L, 5L, 9L), array(5L, 9L, 12L), 3) AS missed
+        |  intersect_count_sorted(array(1L, 5L, 9L), array(5L, 9L, 12L), 2) AS reached,
+        |  intersect_count_sorted(array(1L, 5L, 9L), array(5L, 9L, 12L), 3) AS missed
         |""".stripMargin).head
     assert(row.getInt(0) == 2)
     assert(row.getInt(1) == 16)
