@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, GraftCache}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftCache, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for operator-path persists, so long-lived sessions can
   * release them deterministically.
@@ -15,7 +16,9 @@ import org.apache.spark.sql.{Dataset, GraftCache}
   * each at sf10, and a production session serving repeated queries
   * would leak without bound.
   *
-  * Contract: operators route every persist through [[scoped]]; callers
+  * Contract: operators route every persist through [[scoped]], every
+  * lineage cut through [[checkpointed]], and an early free through
+  * [[free]] (`unpersist` on a leaf frame is a no-op); callers
   * (Bench, Verify, application code) call [[release]] after the
   * terminal action on a returned DataFrame. Bench enforces the
   * contract by asserting `getPersistentRDDs.isEmpty` after each query.
@@ -33,18 +36,17 @@ import org.apache.spark.sql.{Dataset, GraftCache}
   * fall back to). The next [[release]] frees such a copy too, so
   * `getPersistentRDDs` is empty after it whether a frame ran before or
   * after the previous release.
+  *
+  * Checkpoints: a loop feeding each round into the next needs
+  * [[checkpointed]]: a cache leaf's plan string embeds the cached plan
+  * and its tasks carry the cached lineage. The trade: a local
+  * checkpoint is not recomputed if an executor is lost, and reading it
+  * after its release fails instead of re-loading it.
   */
 object Caches {
 
-  /** One registration: the persisted frame (its unpersist drops the
-    * cache manager's entry) and the cache its leaf frame reads. */
-  private final class Entry(val ds: Dataset[_], val cache: GraftCache.CacheRef) {
-    def free(): Unit = {
-      ds.unpersist(blocking = true)
-      cache.clear()
-      released.add(cache)
-    }
-  }
+  /** One registration: the frame handed out and how to free what it reads. */
+  private final class Entry(val leaf: Dataset[_], val free: () => Unit)
 
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
 
@@ -75,16 +77,38 @@ object Caches {
       ds.persist()
       GraftCache.leaf(ds).get
     }
-    val e = new Entry(ds, cache)
-    scopes.get() match {
-      case head :: _ => head += e
-      case Nil       => live.add(e)
-    }
+    register(new Entry(leaf, () => {
+      ds.unpersist(blocking = true); cache.clear(); released.add(cache)
+    }))
     leaf
   }
 
-  /** Run `body`, then unpersist exactly the caches [[scoped]] registered
-    * during it on this thread — terminal actions on the scoped frames
+  /** `df` cut to a lazy local checkpoint, registered like [[scoped]],
+    * as a leaf frame of `session` with `df`'s stats: the first action
+    * that reads it computes it and drops its lineage. */
+  def checkpointed(df: DataFrame, session: SparkSession): DataFrame = {
+    val cut = df.localCheckpoint(eager = false)
+    val rdd = cut.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    val leaf = GraftCache.rddLeaf(cut, session)
+    register(new Entry(leaf, () => rdd.unpersist(blocking = true)))
+    leaf
+  }
+
+  /** Free now what `leaf`, a frame [[scoped]] or [[checkpointed]]
+    * returned on this thread, reads, and drop its registration. */
+  def free(leaf: Dataset[_]): Unit = {
+    def freed(e: Entry) = (e.leaf eq leaf) && { e.free(); true }
+    scopes.get().foreach(_.filterInPlace(!freed(_)))
+    live.removeIf(freed(_))
+  }
+
+  private def register(e: Entry): Unit = scopes.get() match {
+    case head :: _ => head += e
+    case Nil       => live.add(e)
+  }
+
+  /** Run `body`, then free exactly what this thread registered
+    * during it — terminal actions on the registered frames
     * must happen inside `body`. Nestable; never touches the global
     * queue or another thread's scopes.
     */
@@ -99,7 +123,7 @@ object Caches {
     }
   }
 
-  /** Unpersist everything registered since the last release, and any
+  /** Free everything registered since the last release, and any
     * earlier-freed cache that a frame built after its release loaded
     * again. Blocking so a following timing measurement never races
     * cache eviction.

@@ -10,10 +10,9 @@ import org.apache.spark.sql.SparkSession
   * (oracle parity), shuffle partitions sized to the active core count
   * rather than the 200 default. Every session is built from the one list
   * in [[settings]], and no harness switches AQE per query. An operator
-  * that needs another regime picks it itself: the corpus pipeline plans
-  * without AQE in a derived session ([[withoutAqe]]), and the CC star
-  * loop sets its rounds' regime and restores it on exit
-  * (`Clusters.connectedComponents`).
+  * that needs another regime picks it itself, in a derived session
+  * ([[withoutAqe]]): the corpus pipeline and the CC star rounds
+  * (`Clusters.connectedComponents`) plan there without AQE.
   */
 object Sessions {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

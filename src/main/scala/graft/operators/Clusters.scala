@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.Stores
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCache, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Duplicate-cluster resolution (SURVEY §2.3): the step between "near-dup
@@ -24,41 +24,36 @@ import org.apache.spark.sql.functions._
   * driver sees only per-iteration COUNTS (convergence test). Shuffles
   * carry 16-byte edges, never document payloads; each iteration's edge
   * set is ≤ the candidate-pair volume, which the upstream generators
-  * already bound sub-quadratically. The Catalyst plan is truncated to a
-  * LogicalRDD leaf every iteration ([[materialized]]) — without that,
-  * iteration k's plan embeds iteration k−1's twice (the star join
-  * reuses its input) and analysis cost doubles per round.
+  * already bound sub-quadratically. Every round's edge set is cut to a
+  * checkpointed leaf ([[materialized]]): round k's plan and its tasks
+  * then carry one leaf, not every earlier round.
   */
 object Clusters {
 
-  /** Persist `df` via the [[graft.Caches]] registry, force it, and
-    * return a plan-truncated frame (a LogicalRDD leaf over the cached
-    * rows) plus (count, order-independent xor checksum) — ONE job that
-    * both materializes the cache and feeds the caller's convergence
-    * test (a separate count + set-difference pair would pay two more
-    * scheduling rounds per iteration).
-    */
-  private def materialized(spark: SparkSession, df: DataFrame)
-      : (DataFrame, Long, Long, DataFrame) = {
-    val cached = graft.Caches.scoped(df)
-    val r = cached.agg(
-      count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
-    (spark.createDataFrame(cached.rdd, cached.schema),
-      r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1), cached)
+  /** `df` cut to a [[graft.Caches.checkpointed]] leaf of `noAqe`, plus
+    * (count, order-independent xor checksum): ONE job computes the cut
+    * and feeds the convergence test. */
+  private def materialized(df: DataFrame, noAqe: SparkSession): (DataFrame, Long, Long) = {
+    val cut = graft.Caches.checkpointed(df, noAqe)
+    val r = cut.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
+    (cut, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
+  /** `df` hash-partitioned on `u` into `k` partitions, when sized: the
+    * per-node min and the join on u then need no shuffle of their own. */
+  private def byU(df: DataFrame, k: Option[Int]): DataFrame =
+    k.fold(df)(df.repartition(_, col("u")))
+
   /** Large-star round: every node u points each LARGER neighbor v at
-    * m = min(N(u) ∪ {u}). Runs on the symmetrized edge list; one
-    * shuffle for the per-node min, one for the join back.
+    * m = min(N(u) ∪ {u}). Runs on the symmetrized edge list.
     */
-  private[graft] def largeStar(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("u"), col("v"))
-      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+  private[graft] def largeStar(edges: DataFrame, k: Option[Int]): DataFrame = {
+    val sym = byU(edges.select(col("u"), col("v"))
+      .unionByName(edges.select(col("v").as("u"), col("u").as("v"))), k)
     val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
       .select(col("u"), least(col("u"), col("mv")).as("m"))
-    // shuffle_hash: both sides are LogicalRDD leaves with no stats, so
-    // without the hint Catalyst sort-merges (and mins — one row per
-    // NODE — must never be broadcast at scale). No distinct here:
+    // shuffle_hash: without the hint Catalyst sort-merges (and mins —
+    // one row per NODE — must never be broadcast at scale). No distinct here:
     // small-star's terminal distinct collapses duplicates one round
     // later, saving a full shuffle per round for a ≤2× temporary fanout.
     sym.join(mins.hint("shuffle_hash"), "u")
@@ -70,9 +65,9 @@ object Clusters {
     * neighbor (and itself) at m = min of that set. Orients each edge
     * large→small first, so no symmetrization is needed.
     */
-  private[graft] def smallStar(edges: DataFrame): DataFrame = {
-    val dir = edges.select(
-      greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+  private[graft] def smallStar(edges: DataFrame, k: Option[Int]): DataFrame = {
+    val dir = byU(edges.select(
+      greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v")), k)
     val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
     dir.join(mins.hint("shuffle_hash"), "u")
       .filter(col("v") =!= col("m"))
@@ -88,8 +83,7 @@ object Clusters {
     * "keeper" under the same min-id convention [[Dedup.exact]] uses).
     *
     * Iterates large-star/small-star to a FIXPOINT, verified by edge-set
-    * equality (count match + empty difference — two jobs on the
-    * already-cached sets), not by an iteration budget: a converged
+    * equality (see the loop), not by an iteration budget: a converged
     * small-star output is exactly the star edge set {(x, min C) : x ∈
     * C, x ≠ min C}, which is the label assignment itself. `maxIter` is
     * a backstop against a non-terminating bug, not a tuning knob — the
@@ -107,11 +101,8 @@ object Clusters {
     * state — tens of MB of boxed heap, not the raw 16 B/edge (boxed
     * Rows/tuples cost ~10× the primitive payload, which is why the gate
     * sits at 2^17 rather than the 2^20 an id-bytes estimate would
-    * suggest). The labels go back out through an RDD (no LocalRelation:
-    * a collected result embedded in the plan would ship the whole label
-    * set inside every downstream task closure). Outputs are identical
-    * by the min-label convention (ClustersSpec gates both branches
-    * against the same reference), and above the gate nothing changes.
+    * suggest). Outputs are identical by the min-label convention
+    * (ClustersSpec gates both branches against the same reference).
     */
   /** Driver union-find with path compression over a collected edge
     * list (unions attach the larger root under the smaller and initial
@@ -181,78 +172,51 @@ object Clusters {
       .select(guarded("u"), guarded("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    // The upstream pair plan (e.g. the ngram prefix-filter join DAG)
-    // runs under the caller's conf; it is fully materialized by the
-    // first `materialized` call below, BEFORE the overrides.
-    var (edges, n, ck, cachedEdges) = materialized(spark, init)
+    // The upstream pair plan runs once, in the caller's session. The
+    // rounds plan in Sessions.withoutAqe: their shuffles are bounded by
+    // the counted edge volume and their joins pinned by hint, so AQE's
+    // per-stage re-plans (~0.15 s each, ~6 stages/round) buy nothing.
+    val noAqe = graft.Sessions.withoutAqe(spark)
+    var (edges, n, ck) = materialized(init, noAqe)
     if (n <= smallGraphMaxEdges) {
       // Small-graph tier: the init job already bounded the edge count,
-      // so the collect is ≤ gate rows — union-find with path
-      // compression, roots always the component min (unions attach the
-      // larger root under the smaller, and initial roots are node ids,
-      // so the root is the minimum id seen — exactly the star loop's
-      // label convention).
-      val rows = cachedEdges.collect()
-      cachedEdges.unpersist(blocking = false)
+      // so the collect is ≤ gate rows.
+      val rows = edges.collect()
+      graft.Caches.free(edges)
       return unionFindLabels(spark,
         rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
     }
-    val aqePrior = spark.conf.get("spark.sql.adaptive.enabled")
-    val shufPrior = spark.conf.get("spark.sql.shuffle.partitions")
+    // Star shuffles sized in the plan from the MEASURED edge count
+    // (~50k edges/partition, capped at the caller's shuffle partitions,
+    // unsized when that is not numeric, e.g. a managed session's "auto").
+    val k = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toLong)
+      .toOption.map(p => math.max(1L, math.min(p, n / 50000L)).toInt)
     var converged = n == 0L
-    try {
-      // Star-loop execution regime, restored on exit: AQE off — every
-      // loop shuffle is bounded by the (already-counted) edge volume,
-      // the join strategies are pinned by hint, so the per-stage
-      // re-plan barriers (~0.15 s each across ~6 stages/round, the
-      // dominant cost at test scale) buy nothing. Shuffle partitions
-      // sized from the MEASURED edge count (~50k edges/partition,
-      // capped at the session default): 32-partition shuffles of a
-      // 256-edge graph pay 200 task launches per round for nothing,
-      // while a 100 TB pair graph keeps the session's cluster sizing.
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // A platform-managed session may hold a non-numeric value here
-      // (e.g. "auto"); skip the data-sized override rather than throw
-      // after AQE was already flipped (the library entry must be safe
-      // on sessions this repo didn't build).
-      scala.util.Try(shufPrior.toLong).toOption.foreach { prior =>
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(1L, math.min(prior, n / 50000L)).toString)
-      }
-      var it = 0
-      while (!converged && it < maxIter) {
-        val (next, nn, nck, cachedNext) = materialized(spark, smallStar(largeStar(edges)))
-        // Sets (both sides are distinct): the one-job (count, xor of
-        // per-edge hashes) fingerprint decides NON-convergence for
-        // free; only a fingerprint MATCH runs the exact set-difference
-        // confirmation — so exceptAll executes once per query (at the
-        // fixpoint), not once per round, and equality stays exact
-        // rather than probabilistic.
-        converged = nn == n && nck == ck && next.exceptAll(edges).isEmpty
-        // Only the current and previous edge sets are ever read: evict
-        // the superseded one NOW (it stays registered in Caches, whose
-        // release() is idempotent) — without this, all O(log n)
-        // iteration caches stay pinned until the caller's release,
-        // which at 100 TB is O(log n) copies of the edge set in memory.
-        cachedEdges.unpersist(blocking = false)
-        cachedEdges = cachedNext
-        edges = next
-        n = nn
-        ck = nck
-        it += 1
-      }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqePrior)
-      spark.conf.set("spark.sql.shuffle.partitions", shufPrior)
+    var it = 0
+    while (!converged && it < maxIter) {
+      val (next, nn, nck) = materialized(smallStar(largeStar(edges, k), k), noAqe)
+      // Sets (both sides are distinct): the (count, xor) fingerprint
+      // decides NON-convergence for free; only a MATCH runs the exact
+      // exceptAll, once per query (at the fixpoint), not once per round.
+      converged = nn == n && nck == ck && next.exceptAll(edges).isEmpty
+      // The new cut no longer reaches the old one: free it NOW, not
+      // O(log n) edge-set copies later at the caller's release.
+      graft.Caches.free(edges)
+      edges = next
+      n = nn
+      ck = nck
+      it += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           s"($n edges live) — cycle in the star iteration, please report")
-    // Star edges point member→min; the center labels itself.
-    edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+    // Star edges point member→min; the center labels itself. In the
+    // caller's session, like the small tier's labels.
+    val star = GraftCache.rddLeaf(edges, spark)
+    star.select(col("u").as("doc_id"), col("v").as("cluster_id"))
       .unionByName(
-        edges.select(col("v").as("doc_id"), col("v").as("cluster_id")).distinct())
+        star.select(col("v").as("doc_id"), col("v").as("cluster_id")).distinct())
   }
 
   /** `dedup_clusters`: duplicate groups of the documents corpus —

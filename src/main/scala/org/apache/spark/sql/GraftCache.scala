@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 
 /** Re-roots a persisted Dataset at its cache entry.
@@ -11,7 +12,7 @@ import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelati
   * `InMemoryRelation`. A frame rooted at that same relation plans
   * identically and analyzes as one leaf. Like [[GraftColumn]], this
   * file lives in `org.apache.spark.sql` only to reach the
-  * `classic.Dataset` constructor and the cache manager.
+  * `classic.Dataset` constructor, `ofRows` and the cache manager.
   */
 object GraftCache {
   /** A weak handle on the cached RDD behind a leaf frame: it does not
@@ -40,5 +41,15 @@ object GraftCache {
           (new classic.Dataset[T](c.sparkSession, rel, c.encoder), new CacheRef(rel.cacheBuilder))
         }
     }
+  }
+
+  /** `ds`, a frame over one `LogicalRDD`, as a leaf frame of `session`
+    * with the same stats, minus the declared partitioning: that names
+    * attributes canonicalization leaves alone, so no exchange over a
+    * self-joined copy of the leaf would be reused. */
+  def rddLeaf(ds: Dataset[Row], session: SparkSession): DataFrame = {
+    val r = ds.asInstanceOf[classic.Dataset[Row]].logicalPlan.asInstanceOf[LogicalRDD]
+    val s = session.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, LogicalRDD(r.output, r.rdd)(s, Some(r.stats), Some(r.constraints)))
   }
 }

@@ -4,6 +4,7 @@ import graft.operators.{Clusters, Dedup}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Connected-component duplicate clustering (operators/Clusters.scala):
   * the star-iteration labels are checked against an independent
@@ -42,12 +43,13 @@ class ClustersSpec extends AnyFunSuite {
     * tests must keep exercising it now that the default gate routes
     * every test-sized graph to the driver union-find tier.
     */
-  private def ccLabels(edges: Seq[(Long, Long)], gate: Long = 0L): Map[Long, Long] = {
+  private def ccLabels(edges: Seq[(Long, Long)], gate: Long = 0L,
+                       release: Boolean = true): Map[Long, Long] = {
     import spark.implicits._
     val labels = Clusters
       .connectedComponents(spark, edges.toDF("u", "v"), smallGraphMaxEdges = gate)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.Caches.release()
+    if (release) graft.Caches.release()
     labels
   }
 
@@ -100,20 +102,75 @@ class ClustersSpec extends AnyFunSuite {
 
   test("small-graph gate is plan-pinned: local leaf below, star output above") {
     import spark.implicits._
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, UnionExec}
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("u", "v")
-    // The small tier's leaf is Scan ExistingRDD (r14: parallelize, NOT
-    // a LocalTableScan — a LocalRelation would embed every label in the
+    // the plans that ran, walked through AQE stages and cached relations
+    def ran(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      PlanSpec.deepNodes(df.queryExecution.executedPlan)
+    }
+    // The small tier's leaf is an RDD scan (r14: parallelize, NOT a
+    // LocalTableScan — a LocalRelation would embed every label in the
     // plan and re-ship them inside each downstream task closure).
-    val small = Clusters.connectedComponents(spark, edges)
-    val smallPlan = small.queryExecution.executedPlan.toString
-    assert(smallPlan.contains("Scan ExistingRDD") && !smallPlan.contains("LocalTableScan"),
+    val small = ran(Clusters.connectedComponents(spark, edges))
+    assert(small.exists(_.isInstanceOf[RDDScanExec]) &&
+      !small.exists(_.isInstanceOf[LocalTableScanExec]) &&
+      !small.exists(_.isInstanceOf[UnionExec]),
       "below the gate the labels must come from the driver union-find " +
         "(parallelized RDD leaf), not the star loop or a LocalRelation")
-    val star = Clusters.connectedComponents(spark, edges, smallGraphMaxEdges = 0L)
-    val starPlan = star.queryExecution.executedPlan.toString
-    assert(starPlan.contains("Union"),
+    // gate=0 forces the distributed star loop: the member∪center union
+    // over the last round's checkpointed leaf
+    val star = ran(Clusters.connectedComponents(spark, edges, smallGraphMaxEdges = 0L))
+    assert(star.exists(_.isInstanceOf[UnionExec]) && star.exists(_.isInstanceOf[RDDScanExec]),
       "gate=0 must force the distributed star loop (member∪center union plan)")
     graft.Caches.release()
+  }
+
+  test("star loop leaves the caller's conf alone while another thread plans") {
+    // The rounds plan in Sessions.withoutAqe: a second thread polling
+    // the caller's session during a multi-round loop must always read
+    // AQE on and plan adaptively.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val chain = (1L to 3000L).sliding(2).map(s => (s(0), s(1))).toSeq
+    @volatile var looping = true
+    val flags = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val polls = new java.util.concurrent.atomic.AtomicInteger()
+    val poller = new Thread(() => while (looping) {
+      flags.add(spark.conf.get("spark.sql.adaptive.enabled"))
+      roots.add(spark.range(0, 100).groupBy((col("id") % 3).as("k")).count()
+        .queryExecution.executedPlan.getClass.getSimpleName)
+      polls.incrementAndGet()
+    })
+    poller.start()
+    val labels = try ccLabels(chain) finally { looping = false; poller.join() }
+    assert(labels == unionFindLabels(chain))
+    assert(polls.get > 10, s"only ${polls.get} polls ran during the loop")
+    assert(flags.asScala == Set("true"), s"the caller's session read AQE as $flags during the loop")
+    assert(roots.asScala == Set(classOf[AdaptiveSparkPlanExec].getSimpleName),
+      s"a query planned on the caller's session during the loop had root $roots")
+  }
+
+  test("a 20,000-node path converges with one round pinned at a time") {
+    // Each round is cut to a local checkpoint, so round k's tasks carry
+    // no earlier round and run on the default thread stack, and a
+    // superseded round is freed as soon as the next one exists.
+    val sc = spark.sparkContext
+    graft.Caches.release()
+    val before = sc.getPersistentRDDs.size
+    val path = (1L until 20000L).map(i => (i, i + 1))
+    @volatile var looping = true
+    val pinned = new java.util.concurrent.atomic.AtomicInteger()
+    val sampler = new Thread(() => while (looping) {
+      pinned.accumulateAndGet(sc.getPersistentRDDs.size - before, (a, b) => math.max(a, b))
+      Thread.sleep(5)
+    })
+    sampler.start()
+    val labels = try ccLabels(path, release = false) finally { looping = false; sampler.join() }
+    assert(labels == unionFindLabels(path))
+    assert(pinned.get <= 2, s"${pinned.get} persisted RDDs at once during the loop")
+    graft.Caches.release()
+    assert(sc.getPersistentRDDs.size == before, "the loop left persisted RDDs after release")
   }
 
   test("dedup_clusters agrees with union-find over its own pair input") {

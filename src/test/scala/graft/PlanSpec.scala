@@ -142,23 +142,29 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
   }
 
   test("CC star rounds hash-join without broadcasting the per-node min table") {
-    // Mirror the loop's real input class: a LogicalRDD leaf (no stats).
-    // Catalyst must not sort-merge (hint pins shuffle-hash) and must
-    // never broadcast `mins` — it holds one row per NODE, which at
-    // 100 TB is the corpus itself.
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("u", LongType), StructField("v", LongType)))
-    val edges = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, 2L), Row(2L, 3L))), schema)
+    // Mirror the loop's real input: a checkpointed leaf of the AQE-off
+    // session, carrying its origin's statistics — here a two-edge
+    // frame's, far under the broadcast threshold. Catalyst must not
+    // sort-merge (the hint pins shuffle-hash) and must never broadcast
+    // `mins` — it holds one row per NODE, which at 100 TB is the corpus.
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import spark.implicits._
+    val noAqe = Sessions.withoutAqe(spark)
+    val edges = Caches.checkpointed(Seq((1L, 2L), (2L, 3L)).toDF("u", "v"), noAqe)
+    assert(edges.queryExecution.optimizedPlan.stats.sizeInBytes <
+      noAqe.sessionState.conf.autoBroadcastJoinThreshold, "the leaf lost its origin's stats")
     for ((name, df) <- Seq(
-      "largeStar" -> graft.operators.Clusters.largeStar(edges),
-      "smallStar" -> graft.operators.Clusters.smallStar(edges))) {
-      val s = planString(df)
-      assert(s.contains("ShuffledHashJoin"), s"$name: star join must hash, got:\n$s")
-      assert(!s.contains("SortMergeJoin"), s"$name sort-merges 16-byte edge rows")
-      assert(!s.contains("BroadcastExchange"), s"$name broadcasts the per-node min table")
+      "largeStar" -> graft.operators.Clusters.largeStar(edges, Some(2)),
+      "smallStar" -> graft.operators.Clusters.smallStar(edges, Some(2)))) {
+      val nodes = deepNodes(df.queryExecution.executedPlan)
+      assert(nodes.exists(_.isInstanceOf[ShuffledHashJoinExec]),
+        s"$name: star join must hash, got:\n${df.queryExecution.executedPlan}")
+      assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"$name sort-merges 16-byte edge rows")
+      assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
+        s"$name broadcasts the per-node min table")
     }
+    Caches.release()
   }
 
   test("kNN self-join co-groups cells shuffle-hash with a bounded top-k aggregate, no broadcast, no sort-based rank") {
@@ -1094,12 +1100,15 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val sites = walk(new java.io.File("src/main")).filter { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      src.contains(".persist(") || src.contains(".cache()")
-    }.map(_.getPath).sorted
-    assert(sites == Seq("src/main/scala/graft/Caches.scala"),
-      s"persist outside Caches.scoped in: ${sites.mkString(", ")}")
+    // The same holds for a lineage cut and for freeing one early: a
+    // leaf's own `unpersist` frees nothing.
+    for (needle <- Seq(".persist(", ".cache()", "localCheckpoint(", ".unpersist(")) {
+      val sites = walk(new java.io.File("src/main")).filter { f =>
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(needle)
+      }.map(_.getPath).sorted
+      assert(sites.forall(_ == "src/main/scala/graft/Caches.scala"),
+        s"$needle outside Caches in: ${sites.mkString(", ")}")
+    }
   }
 
   test("the arrival-store layout and stream shell are written only in ArrivalStore") {
@@ -1130,25 +1139,26 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     }
   }
 
-  test("one session policy: sessions are built only in Sessions, AQE set only there and in the CC loop") {
+  test("one session policy: only Sessions builds sessions and sets AQE") {
     // Every main builds Sessions.local; no harness holds a per-query AQE
-    // list or toggle. The one operator-owned regime is the CC star loop,
-    // which sets AQE off for its rounds and restores it on exit.
+    // list or toggle.
     def sites(needles: String*): Set[String] = mainSources.collect {
       case (rel, src) if needles.exists(src.contains) => rel
     }.toSet
     assert(sites("SparkSession.builder()") == Set("Sessions.scala"),
       s"a session built outside Sessions: ${sites("SparkSession.builder()")}")
     val aqeSets = sites("set(\"spark.sql.adaptive.enabled\"", "\"spark.sql.adaptive.enabled\" ->")
-    assert(aqeSets == Set("Sessions.scala", "operators/Clusters.scala"),
-      s"AQE set outside Sessions and the CC star loop: $aqeSets")
+    assert(aqeSets == Set("Sessions.scala"), s"AQE set outside Sessions: $aqeSets")
     assert(sites("aqeOff").isEmpty, s"a per-query AQE list: ${sites("aqeOff")}")
     // Operators pick another regime through a derived session
     // (Sessions.withoutAqe), never by writing the caller's conf.
     assert(sites("newSession(") == Set("Sessions.scala"),
       s"a session derived outside Sessions: ${sites("newSession(")}")
-    assert(!mainSources.toMap.apply("operators/Pipeline.scala").contains("spark.conf.set"),
-      "the corpus pipeline writes its caller's session conf")
+    val confWrites = mainSources.collect {
+      case (rel, src) if (rel.startsWith("operators/") || rel.startsWith("streaming/")) &&
+        Seq("conf.set(", "setConf(").exists(src.contains) => rel
+    }
+    assert(confWrites.isEmpty, s"an operator writes its session's conf: $confWrites")
     // ...and the library reads no conf key of its own: a `spark.graft.*`
     // switch would be a second policy beside the session's.
     assert(sites("\"spark.graft.").isEmpty, s"a library conf key: ${sites("\"spark.graft.")}")
