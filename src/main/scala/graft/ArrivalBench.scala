@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   * A curve that grows with batch index falsifies the claim; BASELINE's
   * arrival section records the measured curves.
   *
-  * StreamBench deliberately excludes the foreachBatch store loops (its
-  * noop-sink rows/s would misstate a disk-commit-dominated operator);
-  * this harness measures the document and vector loops the way they
-  * actually cost: batch in, store grown, wall second out.
+  * A noop-sink rows/s figure would misstate these disk-commit-dominated
+  * store loops, so this harness measures the document and vector loops
+  * the way they actually cost: batch in, store grown, wall second out.
   *
   * Knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   * SPARK_GRAFT_ARRIVAL_BATCHES (default 10), SPARK_GRAFT_ARRIVAL_MODE

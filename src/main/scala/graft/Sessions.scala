@@ -31,13 +31,11 @@ object Sessions {
   def cores(): Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
 
-  /** Derived AQE-off sessions: per caller, the conf last copied and
-    * the session. A plain map: `Tables` keeps every session it read
-    * through for the life of the JVM, so a derived session lives as
-    * long as its caller, one per caller.
-    */
+  /** Derived AQE-off sessions: per caller, the conf last copied and the
+    * session. Weak on the caller, which the derived session does not
+    * reference; a collected caller's entry goes at the next access. */
   private val derivedWithoutAqe =
-    scala.collection.mutable.HashMap.empty[SparkSession, (Map[String, String], SparkSession)]
+    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]
 
   /** The session the corpus pipeline plans in: the caller's own when it
     * already runs without AQE, else one session derived from it, with
@@ -63,13 +61,13 @@ object Sessions {
         spark.conf.isModifiable(k)
       }
       derivedWithoutAqe.synchronized {
-        val (copied, derived) = derivedWithoutAqe.getOrElseUpdate(spark,
-          (Map.empty, spark.newSession()))
+        val (copied, derived) = Option(derivedWithoutAqe.get(spark))
+          .getOrElse((Map.empty[String, String], spark.newSession()))
         if (copied.isEmpty || copied != conf) {
           (copied.keySet -- conf.keySet).foreach(derived.conf.unset)
           conf.foreach { case (k, v) => derived.conf.set(k, v) }
           derived.conf.set("spark.sql.adaptive.enabled", "false")
-          derivedWithoutAqe(spark) = conf -> derived
+          derivedWithoutAqe.put(spark, conf -> derived)
         }
         derived
       }

@@ -63,16 +63,17 @@ object Clusters {
 
   /** Small-star round: every node u points each SMALLER-or-equal
     * neighbor (and itself) at m = min of that set. Orients each edge
-    * large→small first, so no symmetrization is needed.
+    * large→small first, so no symmetrization is needed. The distinct
+    * reads its input hashed on u at k, which clusters (u, v) too.
     */
   private[graft] def smallStar(edges: DataFrame, k: Option[Int]): DataFrame = {
     val dir = byU(edges.select(
       greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v")), k)
     val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
-    dir.join(mins.hint("shuffle_hash"), "u")
+    byU(dir.join(mins.hint("shuffle_hash"), "u")
       .filter(col("v") =!= col("m"))
       .select(col("v").as("u"), col("m").as("v"))
-      .unionByName(mins.select(col("u"), col("m").as("v")))
+      .unionByName(mins.select(col("u"), col("m").as("v"))), k)
       .distinct()
   }
 

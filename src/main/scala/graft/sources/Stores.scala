@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCache, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The one owner of the on-disk store rules. Every store graft keeps —
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions.col
   *     stores live on whatever storage the cluster sees.
   *   - CLUSTERED WRITE: a partitioned write clusters its rows on the
   *     partition column first ([[clustered]]).
-  *   - RESOLVE-ONCE READ: [[read]] resolves a committed store (listing
-  *     plus one schema-inference job) once per commit.
+  *   - RESOLVE-ONCE READ: [[read]] resolves a committed store once per
+  *     `_SUCCESS` mtime, [[source]] a source once per
+  *     [[Tables.listingStamp]]; the reading session keeps the relation.
   *
   * A DERIVED store ([[derived]]) is built from a source table, and its
   * path carries the source's listing stamp
@@ -58,9 +59,8 @@ private[graft] object Stores {
 
   /** The commit point: create `dir/_SUCCESS` unless the writer's output
     * committer already did. */
-  private def markCommitted(dir: String): Unit = {
-    val (fs, p) = fsFor(dir)
-    val marker = new Path(p, Marker)
+  private def markCommitted(fs: FileSystem, dir: Path): Unit = {
+    val marker = new Path(dir, Marker)
     if (!fs.exists(marker)) fs.create(marker, true).close()
   }
 
@@ -81,55 +81,41 @@ private[graft] object Stores {
     else df.repartition(col(c))
 
   /** Overwrite `dir` with `df` — [[clustered]] and `partitionBy` on
-    * `partitionCol` when given — then mark it committed. Cached reads
-    * of `dir` are dropped before the write and again once it returns or
-    * fails (an entry a concurrent read cached mid-write cannot outlive
-    * it), so in-process rewrites never depend on the marker's mtime
-    * granularity. */
+    * `partitionCol` when given — then mark it committed. The session
+    * then drops what it kept for `dir`'s prior commit, so its rewrites
+    * never depend on the marker's mtime granularity. */
   def commitTo(df: DataFrame, dir: String, partitionCol: Option[String] = None): Unit = {
     val spark = df.sparkSession
-    forget(spark, dir)
+    val (fs, root) = fsFor(spark, dir)
+    val prior = commitStamp(fs, root)
     try {
       val w = partitionCol match {
         case Some(c) => clustered(df, c).write.partitionBy(c)
         case None => df.write
       }
       w.mode(SaveMode.Overwrite).parquet(dir)
-      markCommitted(dir)
-    } finally forget(spark, dir)
+      markCommitted(fs, root)
+    } finally prior.foreach(GraftCache.forgetRelation(spark, root.toString, _))
   }
 
-  // (session, qualified path) -> (marker mtime, relation). The relation
-  // keeps its InMemoryFileIndex, so later reads skip the listing and the
-  // schema job while partition filters still land in PartitionFilters.
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, DataFrame)]
-
-  /** Drop cached reads of `dir` and of every path under it. */
-  private def forget(spark: SparkSession, dir: String): Unit = {
-    val root = fsFor(spark, dir)._2.toString
-    resolved.keySet.removeIf(k => k._2 == root || k._2.startsWith(root + "/"))
-  }
-
-  /** Read a store back. Freshness contract: a committed store is
-    * resolved once per `_SUCCESS` commit and reused by every later read
-    * in the session until the marker changes — the contract of Spark's
-    * `REFRESH TABLE` for catalog tables, with no manual refresh. A store
-    * without the marker (half-written, or written by a writer that
-    * disables it) is read fresh every time and nothing is cached.
-    */
+  /** Read a store back: resolved once per `_SUCCESS` commit — the
+    * contract of Spark's `REFRESH TABLE` for catalog tables, with no
+    * manual refresh. A store without the marker (half-written, or
+    * written by a writer that disables it) is read fresh every time. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val (fs, root) = fsFor(spark, path)
-    commitStamp(fs, root) match {
-      case None => spark.read.parquet(path)
-      case Some(stamp) =>
-        // the stamp is taken BEFORE resolving: a commit landing meanwhile
-        // leaves an older stamp in the entry, so the next read re-resolves
-        resolved.compute((spark, root.toString), (_, cur) =>
-          if (cur != null && cur._1 == stamp) cur
-          else (stamp, spark.read.parquet(path)))._2
-    }
+    commitStamp(fs, root).fold(spark.read.parquet(path))(resolved(spark, path, root, _))
   }
+
+  /** Read a parquet source, a file or a directory: resolved once per
+    * [[Tables.listingStamp]], so a rewrite is read by the next call. */
+  def source(spark: SparkSession, path: String): DataFrame =
+    resolved(spark, path, fsFor(spark, path)._2, Tables.listingStamp(spark, path))
+
+  // Stamped BEFORE resolving: a rewrite landing meanwhile leaves the
+  // relation under the older stamp. Keyed by the qualified root.
+  private def resolved(spark: SparkSession, path: String, root: Path, stamp: Long): DataFrame =
+    GraftCache.sessionRelation(spark, root.toString, stamp)(spark.read.parquet(path))
 
   /** Per-source scratch location `tmpdir/graft_<kind>_<slug>`, for
     * stores every call rewrites (the metrics round trip). */
@@ -150,15 +136,13 @@ private[graft] object Stores {
     * and runs `build(path)` unless every sub-table in `subs` (the path
     * itself when none) is committed. `build` writes each sub through
     * [[commitTo]], which marks it; a build that leaves one uncommitted
-    * fails here instead of being rebuilt on every call. Cached reads
-    * under the path are dropped before the build.
+    * fails here instead of being rebuilt on every call.
     */
   def derived(spark: SparkSession, kind: String, dir: String, table: String,
               key: String)(subs: String*)(build: String => Unit): String = {
     val path = derivedPath(spark, kind, dir, table, key)
     val units = if (subs.isEmpty) Seq(path) else subs.map(s => s"$path/$s")
     if (!units.forall(committed(_))) {
-      forget(spark, path)
       build(path)
       val open = units.filterNot(committed(_))
       if (open.nonEmpty)

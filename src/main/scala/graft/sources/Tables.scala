@@ -1,32 +1,24 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Readers for the driver-generated testdata tables.
   *
-  * Each table is a single parquet file under an sf directory. Reads are
-  * plain `spark.read.parquet` so Catalyst keeps full pushdown/pruning
-  * freedom; at cluster scale the same call reads a date-partitioned
-  * directory tree and gains partition pruning for free.
+  * Each table is a parquet file or directory under an sf directory,
+  * read through [[Stores.source]] as a plain parquet relation, so
+  * Catalyst keeps full pushdown/pruning freedom; at cluster scale the
+  * same call reads a date-partitioned tree and prunes partitions.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // One schema-inference + file-listing per (session, path) instead of one
-  // per registered query: a 59-query sweep re-resolved the same ten footers
-  // hundreds of times. A DataFrame is an immutable plan, so reuse is safe;
-  // the testdata directories never mutate within a JVM.
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    dfCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      key => normalizeNtz(key._1.read.parquet(key._2)))
+    normalizeNtz(Stores.source(spark, s"$sfDir/$name.parquet"))
 
   /** The driver's generator writes plain `timestamp[us]` parquet columns
     * (isAdjustedToUTC=false), which Spark 4's reader surfaces as
@@ -88,23 +80,20 @@ object Tables {
     * file. Driver-side file listing is O(#files); a cluster deployment
     * with millions of files would take n from catalog statistics
     * instead, but the sizing only needs log2(n) so even a stale count
-    * is fine.
+    * is fine. The footers are read once per [[listingStamp]].
     */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  def parquetRowCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.computeIfAbsent(s"$sfDir/$name.parquet", _ => {
-      val (conf, _, files) = listing(spark, s"$sfDir/$name.parquet")
+  def parquetRowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val (conf, root, files) = listing(spark, s"$sfDir/$name.parquet")
+    footerRows.computeIfAbsent((root, stampOf(root, files)), _ =>
       files.filter(isParquet).map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try reader.getRecordCount finally reader.close()
-      }.sum
-    })
+      }.sum)
+  }
 
-  private val sizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+  private val footerRows =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]
 
   /** On-disk byte size of a table (sum of file lengths) — the free
     * footer-class statistic broadcast GATES use to bound estimated
@@ -112,23 +101,22 @@ object Tables {
     * gate admits arbitrarily wide rows).
     */
   def parquetByteSize(spark: SparkSession, sfDir: String, name: String): Long =
-    sizeCache.computeIfAbsent(s"$sfDir/$name.parquet",
-      _ => listing(spark, s"$sfDir/$name.parquet")._3.filter(isParquet).map(_.getLen).sum)
+    listing(spark, s"$sfDir/$name.parquet")._3.filter(isParquet).map(_.getLen).sum
 
   /** Every file under `path` (the file itself when it is one) through
-    * its Hadoop FileSystem, with the conf and the qualified root. */
+    * its Hadoop FileSystem, with the conf and the qualified root. Plain
+    * statuses: a located one runs a shell command per local file (3 ms). */
   private def listing(spark: SparkSession, path: String)
-      : (Configuration, String, Seq[LocatedFileStatus]) = {
+      : (Configuration, String, Seq[FileStatus]) = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val files = Seq.newBuilder[LocatedFileStatus]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) files += it.next()
-    (conf, fs.makeQualified(root).toString, files.result())
+    def under(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(under) else Seq(s)
+    (conf, fs.makeQualified(root).toString, under(fs.getFileStatus(root)))
   }
 
-  private def isParquet(f: LocatedFileStatus): Boolean = f.getPath.getName.endsWith(".parquet")
+  private def isParquet(f: FileStatus): Boolean = f.getPath.getName.endsWith(".parquet")
 
   /** Filesystem-safe unique slug of a source directory for derived-
     * store paths ([[Stores.scratchPath]]). The slug is taken from the
@@ -151,9 +139,9 @@ object Tables {
     s"${tail}_$digest"
   }
 
-  /** Change-detection key of the files under `path` — a source table
-    * for [[Stores.derivedPath]], a mutable arrival centroid table for
-    * [[graft.operators.Ivf.centroidTableStamped]]: a 64-bit digest over
+  /** Change-detection key of the files under `path` — a source for
+    * [[Stores.source]] and [[Stores.derivedPath]], a mutable arrival centroid
+    * table for [[graft.operators.Ivf.centroidTableStamped]]: a 64-bit digest over
     * the LISTING through the path's Hadoop FileSystem — each file's
     * relative name, length and mtime — so a regenerated source gets a
     * new stamp even when timestamps are preserved (cp -p, rsync -a, tar
@@ -167,9 +155,12 @@ object Tables {
   def listingStamp(spark: SparkSession, path: String): Long =
     try {
       val (_, root, files) = listing(spark, path)
-      files.map(f => (f.getPath.toString.stripPrefix(root), f.getLen, f.getModificationTime))
-        .sortBy(_._1).foldLeft(0L) { case (acc, (rel, len, mtime)) =>
-          ((acc * 1000003L + rel.hashCode) * 1000003L + mtime) * 1000003L + len
-        }
+      stampOf(root, files)
     } catch { case _: java.io.FileNotFoundException => 0L }
+
+  private def stampOf(root: String, files: Seq[FileStatus]): Long =
+    files.map(f => (f.getPath.toString.stripPrefix(root), f.getLen, f.getModificationTime))
+      .sortBy(_._1).foldLeft(0L) { case (acc, (rel, len, mtime)) =>
+        ((acc * 1000003L + rel.hashCode) * 1000003L + mtime) * 1000003L + len
+      }
 }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.QualifiedTableName
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Re-roots a persisted Dataset at its cache entry.
   *
@@ -12,7 +14,7 @@ import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelati
   * `InMemoryRelation`. A frame rooted at that same relation plans
   * identically and analyzes as one leaf. Like [[GraftColumn]], this
   * file lives in `org.apache.spark.sql` only to reach the
-  * `classic.Dataset` constructor, `ofRows` and the cache manager.
+  * `classic.Dataset` constructor, `ofRows` and the session's caches.
   */
 object GraftCache {
   /** A weak handle on the cached RDD behind a leaf frame: it does not
@@ -52,4 +54,27 @@ object GraftCache {
     val s = session.asInstanceOf[classic.SparkSession]
     classic.Dataset.ofRows(s, LogicalRDD(r.output, r.rdd)(s, Some(r.stats), Some(r.constraints)))
   }
+
+  /** The relation `spark` keeps for `path` at `stamp`, as a frame of
+    * `spark`, resolved by `load` on a miss. Spark's per-session relation
+    * cache keeps it: LRU-bounded (`filesourceTableRelationCacheSize`)
+    * and freed with the session. Each frame gets its own copy of the
+    * root, marked analyzed: a Dataset records its id on its root node. */
+  def sessionRelation(spark: SparkSession, path: String, stamp: Long)
+                     (load: => DataFrame): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val plan = s.sessionState.catalog.getCachedPlan(relationKey(path, stamp),
+      () => load.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed)
+    val fresh = plan match { case r: LogicalRelation => r.copy(); case p => p }
+    fresh.setAnalyzed()
+    classic.Dataset.ofRows(s, fresh)
+  }
+
+  /** Drop what [[sessionRelation]] keeps in `spark` for `path` at `stamp`. */
+  def forgetRelation(spark: SparkSession, path: String, stamp: Long): Unit =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .invalidateCachedTable(relationKey(path, stamp))
+
+  private def relationKey(path: String, stamp: Long) =
+    QualifiedTableName("graft", java.lang.Long.toHexString(stamp), path)
 }

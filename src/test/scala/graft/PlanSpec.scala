@@ -147,22 +147,28 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     // frame's, far under the broadcast threshold. Catalyst must not
     // sort-merge (the hint pins shuffle-hash) and must never broadcast
     // `mins` — it holds one row per NODE, which at 100 TB is the corpus.
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // A sized round shuffles at its k, never at the session's count.
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
     import spark.implicits._
     val noAqe = Sessions.withoutAqe(spark)
+    val k = 2
+    assert(noAqe.conf.get("spark.sql.shuffle.partitions") != k.toString)
     val edges = Caches.checkpointed(Seq((1L, 2L), (2L, 3L)).toDF("u", "v"), noAqe)
     assert(edges.queryExecution.optimizedPlan.stats.sizeInBytes <
       noAqe.sessionState.conf.autoBroadcastJoinThreshold, "the leaf lost its origin's stats")
     for ((name, df) <- Seq(
-      "largeStar" -> graft.operators.Clusters.largeStar(edges, Some(2)),
-      "smallStar" -> graft.operators.Clusters.smallStar(edges, Some(2)))) {
+      "largeStar" -> graft.operators.Clusters.largeStar(edges, Some(k)),
+      "smallStar" -> graft.operators.Clusters.smallStar(edges, Some(k)))) {
       val nodes = deepNodes(df.queryExecution.executedPlan)
       assert(nodes.exists(_.isInstanceOf[ShuffledHashJoinExec]),
         s"$name: star join must hash, got:\n${df.queryExecution.executedPlan}")
       assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"$name sort-merges 16-byte edge rows")
       assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
         s"$name broadcasts the per-node min table")
+      val widths = nodes.collect { case e: ShuffleExchangeExec => e.numPartitions }
+      assert(widths.nonEmpty && widths.forall(_ == k),
+        s"$name shuffles at $widths partitions, not at k = $k")
     }
     Caches.release()
   }
@@ -1082,30 +1088,29 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     }
   }
 
+  /** Every `.scala` file under `f`. */
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles.toSeq.flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
   /** (path under src/main/scala/graft, source text) of every main file,
     * for the source audits. */
-  private lazy val mainSources: Seq[(String, String)] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    walk(new java.io.File("src/main/scala/graft")).map(f =>
-      f.getPath.stripPrefix("src/main/scala/graft/") ->
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-  }
+  private lazy val mainSources: Seq[(String, String)] =
+    scalaFiles(new java.io.File("src/main/scala/graft")).map(f =>
+      f.getPath.stripPrefix("src/main/scala/graft/") -> text(f))
 
   test("every persist goes through Caches") {
     // One persist path: a frame persisted anywhere else is freed by
     // neither Caches.release nor Caches.withScope, and frames built on
     // it re-analyze its whole lineage instead of one cache leaf.
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     // The same holds for a lineage cut and for freeing one early: a
     // leaf's own `unpersist` frees nothing.
     for (needle <- Seq(".persist(", ".cache()", "localCheckpoint(", ".unpersist(")) {
-      val sites = walk(new java.io.File("src/main")).filter { f =>
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(needle)
-      }.map(_.getPath).sorted
+      val sites = scalaFiles(new java.io.File("src/main")).filter(text(_).contains(needle))
+        .map(_.getPath).sorted
       assert(sites.forall(_ == "src/main/scala/graft/Caches.scala"),
         s"$needle outside Caches in: ${sites.mkString(", ")}")
     }
@@ -1114,15 +1119,15 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
   test("the arrival-store layout and stream shell are written only in ArrivalStore") {
     // One commit path for every streaming store: the batch-dir layout
     // (the `batch=$` interpolation and its parse) and the foreachBatch
-    // shell live in ArrivalStore alone; besides it, only StreamBench's
-    // noop sink starts a query. No store keeps a commit protocol of its
-    // own: no dynamic partition overwrite, no `.staging` sibling tree.
+    // shell live in ArrivalStore alone, and nothing else starts a
+    // streaming query. No store keeps a commit protocol of its own: no
+    // dynamic partition overwrite, no `.staging` sibling tree.
     def sites(needle: String): Set[String] =
       mainSources.collect { case (rel, src) if src.contains(needle) => rel }.toSet
     for (needle <- Seq("batch=$", "stripPrefix(\"batch=\")"))
       assert(sites(needle) == Set("streaming/ArrivalStore.scala"),
         s"arrival batch-dir layout hand-rolled outside ArrivalStore: $needle in ${sites(needle)}")
-    assert(sites("writeStream") == Set("streaming/ArrivalStore.scala", "StreamBench.scala"),
+    assert(sites("writeStream") == Set("streaming/ArrivalStore.scala"),
       s"a streaming query shell outside ArrivalStore.run: ${sites("writeStream")}")
     for (needle <- Seq("partitionOverwriteMode", ".staging"))
       assert(sites(needle).isEmpty, s"a private store commit protocol: $needle in ${sites(needle)}")
@@ -1137,6 +1142,17 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
       assert(sites == Set("sources/Stores.scala"),
         s"store rule hand-rolled outside Stores: $needle in $sites")
     }
+  }
+
+  test("no strong map is keyed by a session") {
+    // A map that holds a session strongly keeps it, and everything it
+    // resolved, for the life of the JVM. Per-session state lives in the
+    // session itself (Stores' resolved relations), or in a map weak on
+    // the session (Sessions.withoutAqe).
+    val strong = "\\[\\(SparkSession,|(?<!Weak)HashMap(\\.empty)?\\[SparkSession".r
+    val sites = scalaFiles(new java.io.File("src/main"))
+      .filter(f => strong.findFirstIn(text(f)).isDefined).map(_.getPath).sorted
+    assert(sites.isEmpty, s"a map keyed by SparkSession in: ${sites.mkString(", ")}")
   }
 
   test("one session policy: only Sessions builds sessions and sets AQE") {

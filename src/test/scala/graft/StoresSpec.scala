@@ -1,12 +1,15 @@
 package graft
 
 import java.io.File
+import java.lang.ref.WeakReference
 
-import graft.etl.EtlQueries
-import graft.sources.{Stores, Tables}
+import graft.etl.{EtlQueries, MetricsQueries}
+import graft.operators.Pipeline
+import graft.sources.{MetricsStore, Stores, Tables}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.exchange.BroadcastPool
 import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +18,9 @@ import scala.jdk.CollectionConverters._
 /** The derived stores built from a source (metrics serve store, dedup
   * and cluster serve stores, IVF and IVF-PQ indexes): rebuilt when the
   * source changes, on any Hadoop filesystem; written once whatever the
-  * committer's marker setting; resolved once per commit when served. */
+  * committer's marker setting; resolved once per commit when served.
+  * A source rewritten in place is read fresh by the same session, and
+  * a session the caller drops is freed. */
 class StoresSpec extends AnyFunSuite with TmpDirs {
   lazy val spark: SparkSession = Sessions.local(4)
   val testdata = "/root/testdata"
@@ -35,6 +40,16 @@ class StoresSpec extends AnyFunSuite with TmpDirs {
     body(src)
   }
 
+  /** Regenerate `dir`'s `table` in place without a third of its rows
+    * (hashed on `id`): a staged copy renamed over the original. */
+  private def dropThird(dir: String, table: String, id: String): Unit = {
+    val path = s"$dir/$table.parquet"
+    val staged = s"$dir/${table}_next"
+    spark.read.parquet(path).filter(pmod(hash(col(id)), lit(3)) =!= 0).write.parquet(staged)
+    FileUtils.forceDelete(new File(path))
+    assert(new File(staged).renameTo(new File(path)))
+  }
+
   /** (path, length, mtime) of every file under the stores of `dir`. */
   private def listing(dir: String): Seq[(String, Long, Long)] =
     TmpDirs.derivedStores(dir).flatMap(d => FileUtils.listFiles(d, null, true).asScala)
@@ -52,20 +67,69 @@ class StoresSpec extends AnyFunSuite with TmpDirs {
       assert(uri.startsWith("file:"))
       val before = rows(EtlQueries.channelQueryStoreServe(spark, uri))
       assert(before == rows(EtlQueries.channelQuery(spark, uri)))
-      // regenerate the source: a third of the events go away
-      val events = s"$local/events.parquet"
-      val staged = s"$local/events_next"
-      spark.read.parquet(events).filter(pmod(hash(col("event_id")), lit(3)) =!= 0)
-        .write.parquet(staged)
-      FileUtils.forceDelete(new File(events))
-      assert(new File(staged).renameTo(new File(events)))
-      // a new session: Tables resolves each source once per session
-      val next = spark.newSession()
-      val fresh = rows(EtlQueries.channelQuery(next, uri))
+      dropThird(local, "events", "event_id")
+      val fresh = rows(EtlQueries.channelQuery(spark, uri))
       assert(fresh != before, "the rewrite did not change the channel query")
-      assert(rows(EtlQueries.channelQueryStoreServe(next, uri)) == fresh,
+      assert(rows(EtlQueries.channelQueryStoreServe(spark, uri)) == fresh,
         "the store-backed serve kept serving the store built from the old source")
     }
+  }
+
+  test("a same-session rewrite of documents is read by the next corpusFull") {
+    withSourceCopy("sf0.01") { dir =>
+      // each run releases its caches, as the Caches contract asks: a
+      // cache keyed on the same path would otherwise serve the old rows
+      def corpus(s: SparkSession) =
+        try rows(Pipeline.corpusFull(s, dir)) finally Caches.release()
+      val before = corpus(spark)
+      dropThird(dir, "documents", "doc_id")
+      val after = corpus(spark)
+      assert(after != before, "corpusFull kept reading the old documents")
+      assert(after == corpus(spark.newSession()))
+    }
+  }
+
+  test("a same-session rewrite of events is read by the next feed query") {
+    withSourceCopy("sf0.01") { dir =>
+      val ads = SparkEntry.queries("etl_ads_extract")
+      val before = rows(ads(spark, dir))
+      dropThird(dir, "events", "event_id")
+      val after = rows(ads(spark, dir))
+      assert(after != before, "the ads feed kept reading the old events")
+      assert(after == rows(ads(spark.newSession(), dir)))
+    }
+  }
+
+  test("dropped sessions that read sources, stores and the corpus pipeline are freed") {
+    val dir = s"$testdata/sf0.001"
+    val store = tmpDir("graft_gc_store") + "/store"
+    MetricsStore.write(MetricsQueries.metrics(spark, dir), store)
+    // Spark's own holds are kept off the dropped sessions: reads end in
+    // head(), the corpus pipeline runs in the derived AQE-off session
+    // (Spark keeps a session that ran an AQE shuffle reachable for up to
+    // about a minute), and its broadcasts run on pool threads started
+    // from this long-lived session.
+    def dropped(): (WeakReference[SparkSession], WeakReference[SparkSession]) = {
+      BroadcastPool.fill()
+      val s = spark.newSession()
+      Tables.events(s, dir).head()
+      Tables.documents(s, dir).head()
+      MetricsStore.read(s, store).head()
+      Pipeline.corpusFull(s, dir).head()
+      (new WeakReference(s), new WeakReference(Sessions.withoutAqe(s)))
+    }
+    val refs = Seq.fill(3)(dropped())
+    Caches.release()
+    // whether every reference clears within a few collections
+    def cleared(rs: Seq[WeakReference[SparkSession]]): Boolean = (1 to 20).exists { _ =>
+      System.gc()
+      Thread.sleep(100)
+      rs.forall(_.get == null)
+    }
+    assert(cleared(refs.map(_._1)), "a dropped session is still reachable")
+    // the derived sessions' entries go at the map's next access
+    Sessions.withoutAqe(spark)
+    assert(cleared(refs.map(_._2)), "a dropped session's derived session is still reachable")
   }
 
   test("with the committer's markers off, a second serve call writes no store") {
