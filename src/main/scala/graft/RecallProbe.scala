@@ -68,10 +68,10 @@ object RecallProbe {
     val exactCos = exactRows.map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
     require(exact.nonEmpty, "cosineTopk returned nothing")
 
-    def recallOf(tables: Int, probes: Int, dense: Boolean): Double = {
-      val ann = operators.Similarity
-        .annLsh(spark, dir, tables = tables, probes = probes, denseFallback = dense)
-        .collect().filter(!_.isNullAt(2))
+    def recallOf(tables: Int, probes: Int, forced: (String, Tiers.Side)*): Double = {
+      val ann = Tiers.forcing(forced: _*)(operators.Similarity
+          .annLsh(spark, dir, tables = tables, probes = probes).collect())._1
+        .filter(!_.isNullAt(2))
         .groupBy(_.getLong(0))
         .map { case (q, rows) => q -> rows.map(_.getLong(2)).toSet }
       val recalls = exact.toSeq.sortBy(_._1).map { case (q, bs) =>
@@ -86,7 +86,7 @@ object RecallProbe {
       recalls.sum / recalls.size
     }
 
-    val mean = recallOf(tables = 16, probes = 96, dense = true)
+    val mean = recallOf(tables = 16, probes = 96)
     println(f"[recall] MEAN default knobs: $mean%.3f over n=${
       sources.Tables.embeddings(spark, dir).count()} vectors")
 
@@ -165,14 +165,15 @@ object RecallProbe {
     if (sys.env.get("SPARK_GRAFT_RECALL_SWEEP").contains("1"))
       for (np <- Seq(16, 32, 64))
         println(f"[recall] MEAN ivf nprobe=$np: ${ivfRecall(Some(np))}%.3f")
-    // Forced-bucket sweep: denseFallback off so the LSH machinery
-    // itself is measured even where the hybrid would (correctly) take
-    // the dense path at this n — the bucket path is what survives to
-    // 10M+ vectors, where candidates ≈ tables·probes·64 ≪ n.
+    // Forced-bucket sweep: the dense fallback is forced off so the LSH
+    // machinery itself is measured even where the hybrid would
+    // (correctly) take the dense path at this n — the bucket path is
+    // what survives to 10M+ vectors, where candidates ≈
+    // tables·probes·64 ≪ n.
     if (sys.env.get("SPARK_GRAFT_RECALL_SWEEP").contains("1"))
       for (t <- Seq(16, 24); p <- Seq(96, 192, 288))
         println(f"[recall] MEAN bucket-path tables=$t probes=$p: ${
-          recallOf(t, p, dense = false)}%.3f")
+          recallOf(t, p, Tiers.LshDense -> Tiers.Large)}%.3f")
 
     // sim_knn_join recall-vs-probes (SPARK_GRAFT_KNN_SWEEP = comma-
     // separated probe counts, e.g. "4,8,16,32,0" with 0 = the capped

@@ -151,12 +151,10 @@ object Bpe {
                     budgetTokens: Long = 50000L,
                     numMerges: Int = DefaultMerges): DataFrame = {
     val merges = mergesFor(spark, dir, numMerges)
-    val n = Tables.parquetRowCount(spark, dir, "documents")
-    val blockSize = math.max(1000L, n / 10000L)
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.BpeCount.bpe_count(col("text"), merges).as("n_tokens"),
-        (col("doc_id") / blockSize).cast("long").as("blk"))
+        Curation.docBlock(spark, dir))
     Curation.packCore(toks, budgetTokens)
   }
 

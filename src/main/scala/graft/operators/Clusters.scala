@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tiers
 import graft.sources.Stores
 import org.apache.spark.sql.{DataFrame, GraftCache, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,12 +94,12 @@ object Clusters {
     *
     * A size-gated SMALL-GRAPH tier (r13, the [[Dedup.exact]]-style
     * measured-gate idiom): once the init job has COUNTED the distinct
-    * edge set, a graph at or under `smallGraphMaxEdges` is solved by
+    * edge set, a graph at or under [[Tiers.CcMaxEdges]] is solved by
     * driver union-find on the collected edges instead of the star loop —
     * the loop pays ~6 scheduling rounds per iteration × O(log n)
     * iterations, which dominated dedup_semantic's sweep cell (3.39 s for
     * a 262-edge graph at sf0.1). Driver memory is bounded BY the gate:
-    * at the 2^17 default that is ~131k collected Rows plus the LongMap
+    * at its 2^17 bound that is ~131k collected Rows plus the LongMap
     * state — tens of MB of boxed heap, not the raw 16 B/edge (boxed
     * Rows/tuples cost ~10× the primitive payload, which is why the gate
     * sits at 2^17 rather than the 2^20 an id-bytes estimate would
@@ -149,8 +150,7 @@ object Clusters {
   }
 
   def connectedComponents(spark: SparkSession, pairs: DataFrame,
-                          maxIter: Int = 40,
-                          smallGraphMaxEdges: Long = 1L << 17): DataFrame = {
+                          maxIter: Int = 40): DataFrame = {
     val cols = pairs.columns
     require(cols.length == 2, s"pair graph needs 2 columns, got ${cols.mkString(",")}")
     // Integral ids only: a lossy cast (string keys, decimals) would null
@@ -179,7 +179,7 @@ object Clusters {
     // per-stage re-plans (~0.15 s each, ~6 stages/round) buy nothing.
     val noAqe = graft.Sessions.withoutAqe(spark)
     var (edges, n, ck) = materialized(init, noAqe)
-    if (n <= smallGraphMaxEdges) {
+    if (Tiers.small(Tiers.CcUnionFind)(n <= Tiers.CcMaxEdges)) {
       // Small-graph tier: the init job already bounded the edge count,
       // so the collect is ≤ gate rows.
       val rows = edges.collect()
@@ -325,10 +325,8 @@ object Clusters {
     * recompute over arrival sequences.
     */
   def mergeIncrementalLabels(spark: SparkSession, labels: DataFrame,
-                             newPairs: DataFrame,
-                             smallMergeMaxEdges: Long = 1L << 17): DataFrame = {
-    val (lab, touchedClusters, subLabels) =
-      mergeParts(spark, labels, newPairs, smallMergeMaxEdges)
+                             newPairs: DataFrame): DataFrame = {
+    val (lab, touchedClusters, subLabels) = mergeParts(spark, labels, newPairs)
     // re-select: a using-column join moves cluster_id first, and the
     // contract (like connectedComponents') is (doc_id, cluster_id).
     // touchedClusters carries its own join-strategy hint (broadcast
@@ -349,9 +347,8 @@ object Clusters {
     * every member appears in the delta.
     */
   def mergeIncrementalDelta(spark: SparkSession, labels: DataFrame,
-                            newPairs: DataFrame,
-                            smallMergeMaxEdges: Long = 1L << 17): DataFrame =
-    mergeParts(spark, labels, newPairs, smallMergeMaxEdges)._3
+                            newPairs: DataFrame): DataFrame =
+    mergeParts(spark, labels, newPairs)._3
 
   /** The shared decomposition of both merge entries: (cached standing
     * labels, touched-cluster ids carrying their join hint, re-solved
@@ -372,54 +369,51 @@ object Clusters {
     * [[connectedComponents]]' small tier. The union-find itself is the
     * same [[unionFindLabels]] solver, so both tiers share one label
     * convention; ClustersSpec gates tier identity by running its
-    * arrival sequences at gate 0 (distributed) and default (driver).
+    * arrival sequences with [[Tiers.MergeDriver]] forced either way,
+    * and with the pair probe passing but [[Tiers.MergeStar]] forced to
+    * fall back.
     * The standing label table is still never collected — only
     * batch-proportional slices of it.
     */
   private def mergeParts(spark: SparkSession, labels: DataFrame,
-                         newPairs: DataFrame,
-                         smallMergeMaxEdges: Long = 1L << 17)
-      : (DataFrame, DataFrame, DataFrame) = {
+                         newPairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val lc = labels.columns
     require(lc.length == 2, s"label table needs 2 columns, got ${lc.mkString(",")}")
     val pc = newPairs.columns
-    require(smallMergeMaxEdges < Int.MaxValue, "smallMergeMaxEdges must fit an Int")
     val lab = labels.select(col(lc(0)).as("doc_id"), col(lc(1)).as("cluster_id"))
       .transform(graft.Caches.scoped(_)) // read by both joins below
     val pairs = newPairs
       .select(col(pc(0)).cast("long").as("u"), col(pc(1)).cast("long").as("v"))
       .transform(graft.Caches.scoped(_)) // endpoints + subgraph union
-    if (smallMergeMaxEdges > 0) {
-      val probe = pairs.limit(smallMergeMaxEdges.toInt + 1).collect()
-      if (probe.length <= smallMergeMaxEdges &&
-          probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val pairEdges = probe.map(r => (r.getLong(0), r.getLong(1)))
-        val touchedIds = pairEdges.iterator
-          .flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
-        val touchedLab = lab
-          .join(broadcast(longColDF(spark, "doc_id", touchedIds)),
-            Seq("doc_id"), "left_semi")
-          .select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
-          .collect() // bounded: one label row per touched doc
-        val clusterIds = touchedLab.map(_.getLong(1)).distinct.toSeq
-        val clusterDF = longColDF(spark, "cluster_id", clusterIds)
-        val starProbe = lab
+    val probe = Tiers.collectUpTo(Tiers.MergeDriver, pairs, Tiers.MergeMaxEdges)
+    if (probe.exists(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))) {
+      val pairEdges = probe.get.map(r => (r.getLong(0), r.getLong(1)))
+      val touchedIds = pairEdges.iterator
+        .flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
+      val touchedLab = lab
+        .join(broadcast(longColDF(spark, "doc_id", touchedIds)),
+          Seq("doc_id"), "left_semi")
+        .select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
+        .collect() // bounded: one label row per touched doc
+      val clusterIds = touchedLab.map(_.getLong(1)).distinct.toSeq
+      val clusterDF = longColDF(spark, "cluster_id", clusterIds)
+      val starProbe = Tiers.collectUpTo(Tiers.MergeStar, lab
           .join(broadcast(clusterDF), Seq("cluster_id"), "left_semi")
-          .select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
-          .limit(smallMergeMaxEdges.toInt + 1).collect()
-        if (starProbe.length <= smallMergeMaxEdges) {
-          val subLabels = unionFindLabels(spark,
-            starProbe.iterator.map(r => (r.getLong(0), r.getLong(1))) ++
-              pairEdges.iterator)
-          return (lab, broadcast(clusterDF), subLabels)
-        }
-        // an affected component outgrew the gate: fall through — the
-        // distributed path recomputes touched/affected from the cached
-        // inputs (the probe collects above are batch-bounded throwaways)
+          .select(col("doc_id").cast("long"), col("cluster_id").cast("long")),
+        Tiers.MergeMaxEdges)
+      if (starProbe.isDefined) {
+        val subLabels = unionFindLabels(spark,
+          starProbe.get.iterator.map(r => (r.getLong(0), r.getLong(1))) ++ pairEdges.iterator)
+        return (lab, broadcast(clusterDF), subLabels)
       }
+      // an affected component outgrew the gate: fall through — the
+      // distributed path recomputes touched/affected from the cached
+      // inputs (the probe collects above are batch-bounded throwaways)
     }
-    val touched = pairs.select(col("u").as("doc_id"))
-      .unionByName(pairs.select(col("v").as("doc_id"))).distinct()
+    // One read of the pairs leaf, not a self-union: Spark re-instances
+    // the second copy of a cached relation without remapping its output
+    // ordering, and a plan holding that copy fails to canonicalize.
+    val touched = pairs.select(explode(array(col("u"), col("v"))).as("doc_id")).distinct()
     val touchedClusters = lab
       .join(touched.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       .select(col("cluster_id")).distinct()
@@ -441,19 +435,14 @@ object Clusters {
     * ~4 s of scheduling rounds for a 1,875-pair graph); the
     * distributed CC path above it, shuffle-hash-hinted.
     */
-  private[graft] def clusterLosers(spark: SparkSession, pairs: DataFrame,
-                                   gate: Long = 1L << 17): DataFrame = {
-    if (gate > 0) {
-      require(gate < Int.MaxValue, "gate must fit an Int")
-      val probe = pairs.limit(gate.toInt + 1).collect()
-      if (probe.length <= gate &&
-          probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-        return broadcast(
-          unionFindLabels(spark,
-            probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
-            .filter(col("doc_id") =!= col("cluster_id"))
-            .select(col("doc_id")))
-    }
+  private[graft] def clusterLosers(spark: SparkSession, pairs: DataFrame): DataFrame = {
+    val probe = Tiers.collectUpTo(Tiers.LosersDriver, pairs, Tiers.LosersMaxPairs)
+    if (probe.exists(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1))))
+      return broadcast(
+        unionFindLabels(spark,
+          probe.get.iterator.map(r => (r.getLong(0), r.getLong(1))))
+          .filter(col("doc_id") =!= col("cluster_id"))
+          .select(col("doc_id")))
     connectedComponents(spark, pairs)
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
@@ -566,8 +555,7 @@ object Clusters {
     */
   private[graft] def serveBatchPairs(spark: SparkSession, dir: String,
                                      tau: Double, batchBucket: Int,
-                                     path: String,
-                                     smallBatchGate: Long = 1L << 17): DataFrame = {
+                                     path: String): DataFrame = {
     val batchSh = Dedup.shingledHashed(spark, dir)
       .filter(Curation.splitBucket(col("doc_id")) >= batchBucket)
       .transform(graft.Caches.scoped(_)) // postings + verification
@@ -592,12 +580,14 @@ object Clusters {
     // fraction, × 4 for parquet-compression + array-layout expansion
     // (shingle arrays ≈ 8 B/word ≈ 1.3 × raw text, raw ≈ 2.5-3 × the
     // compressed file) — and must clear a 64 MB broadcast budget.
-    val nDocs = graft.sources.Tables.parquetRowCount(spark, dir, "documents")
-    val estBatchBytes = graft.sources.Tables
-      .parquetByteSize(spark, dir, "documents") *
-      (100 - batchBucket) / 100 * 4
-    val small = nDocs * (100 - batchBucket) / 100 <= smallBatchGate &&
-      estBatchBytes <= (64L << 20)
+    val small = Tiers.small(Tiers.ServeBatch) {
+      val nDocs = graft.sources.Tables.parquetRowCount(spark, dir, "documents")
+      val estBatchBytes = graft.sources.Tables
+        .parquetByteSize(spark, dir, "documents") *
+        (100 - batchBucket) / 100 * 4
+      nDocs * (100 - batchBucket) / 100 <= Tiers.ServeBatchMaxDocs &&
+        estBatchBytes <= Tiers.ServeBatchMaxBytes
+    }
     def batchSide(df: DataFrame): DataFrame =
       if (small) broadcast(df) else df.hint("shuffle_hash")
     val batchPre = Dedup.prefixPostings(batchSh, tau)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tiers
 import graft.functions.presentSorted
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -172,17 +173,10 @@ object Curation {
     */
   def packShards(spark: SparkSession, dir: String,
                  budgetTokens: Long = 50000L): DataFrame = {
-    val n = Tables.parquetRowCount(spark, dir, "documents")
-    val blockSize = math.max(1000L, n / 10000L)
-    // Numeric-id fast path: blocks derive from the id itself (doc_id DIV
-    // blockSize), no extra shuffle. Requires an ordered NUMERIC doc_id
-    // (dense not needed — the block prefix fixes arbitrary block sizes);
-    // string-keyed corpora use packShardsFrom, which range-partitions any
-    // orderable key instead.
     val toks = Tables.documents(spark, dir)
       .withColumn("ts", TextAnalysis.statsCol)
       .select(col("doc_id"), col("ts.n_tokens").cast("long").as("n_tokens"),
-        (col("doc_id") / blockSize).cast("long").as("blk"))
+        docBlock(spark, dir))
     packCore(toks, budgetTokens)
   }
 
@@ -234,6 +228,18 @@ object Curation {
       .repartitionByRange(nBlocks, col("doc_id"))
       .withColumn("blk", spark_partition_id().cast("long"))
     packCore(toks, budgetTokens)
+  }
+
+  /** The `blk` column of the numeric-id packers: doc_id DIV a block
+    * size adapted to `dir`'s footer documents count, so the block-totals
+    * table stays at ≤ ~10k rows. No extra shuffle; it needs an ordered
+    * NUMERIC doc_id (dense not needed — the block prefix fixes
+    * arbitrary block sizes). String-keyed corpora use packShardsFrom,
+    * which range-partitions any orderable key instead.
+    */
+  private[graft] def docBlock(spark: SparkSession, dir: String): Column = {
+    val blockSize = math.max(1000L, Tables.parquetRowCount(spark, dir, "documents") / 10000L)
+    (col("doc_id") / blockSize).cast("long").as("blk")
   }
 
   /** Two-phase distributed prefix-sum over (doc_id, n_tokens, blk), blk
@@ -326,12 +332,9 @@ object Curation {
     */
   def contamination(spark: SparkSession, dir: String,
                     minContain: Double = 0.3, ngram: Int = 3,
-                    fanout: Int = 32,
-                    vocabMax: Long = TextAnalysis.BroadcastVocabMax,
                     pushdown: String = "auto"): DataFrame =
     contaminationFrom(Tables.documents(spark, dir),
-      Tables.parquetRowCount(spark, dir, "documents"),
-      minContain, ngram, fanout, vocabMax, pushdown)
+      Tables.parquetRowCount(spark, dir, "documents"), minContain, ngram, pushdown)
 
   /** `corpus_contamination_spans` (r14): SPAN-level test-set
     * decontamination — the exact-substring use case Lee et al. 2021
@@ -448,8 +451,6 @@ object Curation {
     */
   def contaminationFrom(docs: DataFrame, nDocs: Long,
                         minContain: Double = 0.3, ngram: Int = 3,
-                        fanout: Int = 32,
-                        vocabMax: Long = TextAnalysis.BroadcastVocabMax,
                         pushdown: String = "auto"): DataFrame = {
     require(Set("auto", "set", "bloom", "none")(pushdown),
       s"pushdown must be auto|set|bloom|none, got '$pushdown'")
@@ -521,9 +522,11 @@ object Curation {
         // the same executor-heap spend), unfiltered beyond — each tier
         // is the cheapest correct plan for its regime, and the output
         // is identical across all three by the FP argument above.
-        if (nDocs <= 2000000L) setPruned
-        else if (nDocs <= 40000000L) bloomPruned
-        else trainPost0
+        val fitsSet = Tiers.small(Tiers.ContaminationSet)(
+          nDocs <= Tiers.ContaminationSetMaxDocs)
+        val fitsBloom = Tiers.small(Tiers.ContaminationBloom)(
+          nDocs <= Tiers.ContaminationBloomMaxDocs)
+        if (fitsSet) setPruned else if (fitsBloom) bloomPruned else trainPost0
     }
     // TWO physical plans, selected by how much the prefix filter can
     // actually prune. The prefix keeps |t| − ⌈c·|t|⌉ + 1 ≈ (1−c)·|t|
@@ -541,7 +544,7 @@ object Curation {
     // doc's most FREQUENT shingles, which contribute the bulk of
     // co-occurrence pairs on skewed corpora.
     val verified =
-      if (minContain < 0.2) {
+      if (Tiers.small(Tiers.ContaminationCount)(minContain < Tiers.CountPlanMaxContain)) {
         test.select(col("doc_id").as("test_id"), size(col("sh")).as("sz"),
             explode(col("sh")).as("s"))
           .hint("shuffle_hash").join(trainPost, Seq("s"))
@@ -572,16 +575,17 @@ object Curation {
         // shingle's whole stream onto one reducer. Gate on the MEASURED
         // vocabulary (dfreq is cached; the count is one bounded job):
         // broadcastable → map-side attach, no shuffle at all; bigger →
-        // Skew.saltedReplicateJoin spreads every hot shingle across
-        // `fanout` reducers. Both branches are row-identical (left join
+        // Skew.saltedReplicateJoin spreads every hot shingle across its
+        // fanout of reducers. Both branches are row-identical (left join
         // semantics preserved — test shingles absent from train keep
         // their null df and sort first), pinned by SkewSpec.
         val testPost = test
           .select(col("doc_id").as("test_id"), size(col("sh")).as("sz"),
             explode(col("sh")).as("s"))
         val withDf =
-          if (dfreq.count() <= vocabMax) testPost.join(broadcast(dfreq), Seq("s"), "left")
-          else Skew.saltedReplicateJoin(testPost, dfreq, "s", fanout, "left")
+          if (Tiers.small(Tiers.ContaminationDf)(dfreq.count() <= Tiers.BroadcastVocabMax))
+            testPost.join(broadcast(dfreq), Seq("s"), "left")
+          else Skew.saltedReplicateJoin(testPost, dfreq, "s", joinType = "left")
         val testPre = withDf
           .withColumn("rn", row_number().over(wByRarity))
           .filter(col("rn") <=
@@ -607,7 +611,8 @@ object Curation {
         // shuffle (~2.7 GB at sf10 vs ~100 MB this way).
         val testArrays = test.select(col("doc_id").as("test_id"), col("sh").as("tsh"))
         val testFetch =
-          if (nDocs <= 2000000L) broadcast(testArrays)
+          if (Tiers.small(Tiers.ContaminationTestArrays)(nDocs <= Tiers.ContaminationSetMaxDocs))
+            broadcast(testArrays)
           else testArrays.hint("shuffle_hash")
         cand
           .join(train.select(col("doc_id").as("train_id"), col("sh").as("rsh"))

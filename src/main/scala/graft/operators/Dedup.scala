@@ -203,18 +203,15 @@ object Dedup {
     * sort runs; above it the parallel range sort returns, paying the
     * sampling round only at the scale that needs it. The estimate
     * reads parquet FOOTER counts (no job): total docs × the
-    * splitBucket fraction ≥ `batchBucket`.
+    * splitBucket fraction ≥ `batchBucket` ([[graft.Tiers.PresentationSort]]).
     */
-  private[graft] def presentationGate(estBatchRows: Long): Boolean =
-    estBatchRows <= (1L << 22)
-
   private def batchPresentation(spark: SparkSession, dir: String,
-                                batchBucket: Int)(df: DataFrame): DataFrame = {
-    val estBatchRows = Tables.parquetRowCount(spark, dir, "documents") *
-      (100 - batchBucket) / 100
-    if (presentationGate(estBatchRows)) graft.functions.presentSorted(df, col("doc_id"))
+                                batchBucket: Int)(df: DataFrame): DataFrame =
+    if (graft.Tiers.small(graft.Tiers.PresentationSort)(
+        Tables.parquetRowCount(spark, dir, "documents") * (100 - batchBucket) / 100 <=
+          graft.Tiers.PresentationMaxRows))
+      graft.functions.presentSorted(df, col("doc_id"))
     else df.orderBy(col("doc_id"))
-  }
 
   /** On-disk standing dedup store for the incremental path: a
     * [[Stores.derived]] store keyed by the documents table's listing

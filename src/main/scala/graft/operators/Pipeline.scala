@@ -208,14 +208,12 @@ object Pipeline {
                  bpeMerges: Option[Array[String]] = None): DataFrame = {
     val mixed = mixedTrain(graft.Sessions.withoutAqe(spark), dir, minQuality, tau, w, weights,
       defaultWeight, budgetPct, bpeMerges)
-    val n = graft.sources.Tables.parquetRowCount(spark, dir, "documents")
-    val blockSize = math.max(1000L, n / 10000L)
     // packAssignments, not packCore (r18): the shard-id frame feeds a
     // hash join on doc_id — packCore's presentation sort was a wasted
     // range exchange + sort here.
     val packed = Curation.packAssignments(
-      mixed.select(col("doc_id"), col("n_tokens"),
-        (col("doc_id") / blockSize).cast("long").as("blk")), budgetTokens)
+      mixed.select(col("doc_id"), col("n_tokens"), Curation.docBlock(spark, dir)),
+      budgetTokens)
     packed.select(col("doc_id"), col("shard_id"))
       .join(mixed.select(col("doc_id"), col("source"), col("clean_text"),
         col("n_tokens")).hint("shuffle_hash"), Seq("doc_id"))

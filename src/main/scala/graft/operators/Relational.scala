@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tiers
 import graft.functions._
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -62,7 +63,8 @@ object Relational {
     * partial-agg-below-join above it).
     */
   def q3JoinAgg(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.parquetRowCount(spark, dir, "orders") <= 30000000L)
+    if (Tiers.small(Tiers.Q3Broadcast)(
+        Tables.parquetRowCount(spark, dir, "orders") <= Tiers.Q3MaxOrders))
       q3BroadcastReduced(spark, dir)
     else q3AggBelowJoin(spark, dir)
 
@@ -81,7 +83,7 @@ object Relational {
     * 3.68 s for the shuffle plan and 4.33 s for r7's post-join
     * aggregation (DuckDB 1.20 s).
     */
-  private[graft] def q3BroadcastReduced(spark: SparkSession, dir: String): DataFrame = {
+  private def q3BroadcastReduced(spark: SparkSession, dir: String): DataFrame = {
     val (cust, ord) = q3Filtered(spark, dir)
     val ordCust = ord.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("o_orderdate"))
@@ -123,7 +125,7 @@ object Relational {
     * the stage ladder are recorded in BASELINE.md ("q3 cluster-tier
     * stage ladder").
     */
-  private[graft] def q3AggBelowJoin(spark: SparkSession, dir: String): DataFrame = {
+  private def q3AggBelowJoin(spark: SparkSession, dir: String): DataFrame = {
     val (cust, ord) = q3Filtered(spark, dir)
     val qual = graft.Caches.scoped(
       ord.join(broadcast(cust), col("o_custkey") === col("c_custkey"))

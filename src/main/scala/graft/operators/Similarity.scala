@@ -231,8 +231,7 @@ object Similarity {
     * the scalable bucket path engages from n≈200k instead of 400k.
     */
   def annLsh(spark: SparkSession, dir: String, k: Int = 10,
-             tables: Int = 16, margin: Int = 16, probes: Int = 96,
-             denseFallback: Boolean = true): DataFrame = {
+             tables: Int = 16, margin: Int = 16, probes: Int = 96): DataFrame = {
     val n = Tables.parquetRowCount(spark, dir, "embeddings")
     val bits = Dedup.adaptiveLshBits(n)
     val effProbes = math.min(probes, graft.functions.LshProbes.probeFamilySize(bits))
@@ -242,7 +241,8 @@ object Similarity {
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
       .transform(graft.Caches.scoped(_))
     val winners =
-      if (denseFallback && (nQueries <= tables || estCandidates * 2L >= n)) {
+      if (graft.Tiers.small(graft.Tiers.LshDense)(
+          nQueries <= tables || estCandidates * 2L >= n)) {
         cosineTopkCandidates(base, k, margin)
       } else {
         val bucketed = base.select(col("vec_id"), col("embedding"), col("nf"),

@@ -167,15 +167,6 @@ object TextAnalysis {
         RollingHash.rolling_fingerprint(col("text"), window).as("fingerprint"))
       .orderBy(col("doc_id"))
 
-  /** Vocabulary size above which the document-frequency dimension stops
-    * being broadcast and the posting join goes salted: 1M words ×
-    * ~40 B ≈ 40 MB is the upper edge of a comfortable per-executor
-    * broadcast. Real web corpora blow past this fast — the token
-    * domain (URLs, numbers, typos, code identifiers) grows with the
-    * corpus, which is exactly why the salted path exists.
-    */
-  val BroadcastVocabMax = 1000000L
-
   /** `text_keywords`: top-k TF-IDF keywords per document — the rarity
     * scoring a curation pipeline uses for keyword extraction and
     * quality weighting. idf is the raw N/df ratio (no log): rank order
@@ -191,11 +182,14 @@ object TextAnalysis {
     * onto one reducer under plain hash partitioning. The plan gates on
     * the MEASURED vocabulary (the df table is cached and counted — one
     * extra bounded job):
-    *   - vocab ≤ [[BroadcastVocabMax]]: broadcast the dictionary; the
-    *     posting stream never shuffles at all (skew vacuously solved).
+    *   - vocab ≤ [[graft.Tiers.BroadcastVocabMax]]: broadcast the
+    *     dictionary; the posting stream never shuffles at all (skew
+    *     vacuously solved). Real web corpora blow past this fast — the
+    *     token domain (URLs, numbers, typos, code identifiers) grows
+    *     with the corpus, which is exactly why the salted path exists.
     *   - bigger: [[Skew.saltedReplicateJoin]] — the dictionary
-    *     replicates `fanout`×, the hot key's postings spread across
-    *     `fanout` reducers, no reducer holds more than ~1/fanout of
+    *     replicates fanout×, the hot key's postings spread across
+    *     fanout reducers, no reducer holds more than ~1/fanout of
     *     any key. AQE's skew-split does not cover this join (it is
     *     hint-pinned shuffle-hash, and aggregation feeds it), so the
     *     salt is structural, not runtime, mitigation.
@@ -207,9 +201,7 @@ object TextAnalysis {
     * filter compiles to a Partial WindowGroupLimit, so only ~k rows
     * per document cross the final shuffle.
     */
-  def keywords(spark: SparkSession, dir: String, k: Int = 5,
-               fanout: Int = 32, vocabMax: Long = BroadcastVocabMax,
-               cacheTf: Boolean = false): DataFrame = {
+  def keywords(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val nDocs = Tables.parquetRowCount(spark, dir, "documents")
     // Distinct (doc, word) term frequencies — read by both the
     // dictionary aggregation and the posting join. Term frequency is a
@@ -219,27 +211,26 @@ object TextAnalysis {
     // plan shuffled the full distinct-pair stream once per consumer
     // (guide §2.4 — the aggregation is logically local to each row, the
     // Exchange was pure overhead), and its df aggregate consumed the
-    // raw token stream instead of distinct pairs. `cacheTf` picks
-    // between persisting the pair frame (one scan, then never again)
-    // and recomputing it per consumer (two scans, no materialization).
-    // The default is RECOMPUTE, from the measured sf10 A/B (BASELINE.md
-    // text_keywords section: recomputed beat cached 7.17 s vs 8.25 s —
-    // the MEMORY_AND_DISK persist of the corpus-scale projection costs
-    // more than the second columnar scan+kernel it saves, and at 100 TB
-    // the persist is a full materialization of the distinct-token
-    // table to local disk). The knob stays for narrow-corpus callers.
-    val tf0 = Tables.documents(spark, dir)
+    // raw token stream instead of distinct pairs. The pair frame is
+    // RECOMPUTED per consumer (two scans), not persisted, from the
+    // measured sf10 A/B (BASELINE.md text_keywords section: recomputed
+    // beat cached 7.17 s vs 8.25 s — the MEMORY_AND_DISK persist of the
+    // corpus-scale projection costs more than the second columnar
+    // scan+kernel it saves, and at 100 TB the persist is a full
+    // materialization of the distinct-token table to local disk).
+    val tf = Tables.documents(spark, dir)
       .select(col("doc_id"),
         explode(graft.functions.WordTf.word_tf(col("text"))).as("wt"))
       .select(col("doc_id"), col("wt.word").as("word"), col("wt.tf").as("tf"))
-    val tf = if (cacheTf) graft.Caches.scoped(tf0) else tf0
     // The dictionary: one row per distinct word. Cached BEFORE the
     // count so the gate's job is also the join side's materialization.
     val df = graft.Caches.scoped(
       tf.groupBy(col("word")).agg(count(lit(1)).as("df")))
     val joined =
-      if (df.count() <= vocabMax) tf.join(broadcast(df), Seq("word"))
-      else Skew.saltedReplicateJoin(tf, df, "word", fanout)
+      if (graft.Tiers.small(graft.Tiers.KeywordsVocab)(
+          df.count() <= graft.Tiers.BroadcastVocabMax))
+        tf.join(broadcast(df), Seq("word"))
+      else Skew.saltedReplicateJoin(tf, df, "word")
     joined
       .select(col("doc_id"), col("word"), col("tf"), col("df"),
         ((col("tf") * nDocs).cast("double") / col("df")).as("score"))

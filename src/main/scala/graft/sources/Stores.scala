@@ -113,9 +113,13 @@ private[graft] object Stores {
     resolved(spark, path, fsFor(spark, path)._2, Tables.listingStamp(spark, path))
 
   // Stamped BEFORE resolving: a rewrite landing meanwhile leaves the
-  // relation under the older stamp. Keyed by the qualified root.
+  // relation under the older stamp. Keyed by the qualified root. The
+  // stamp also rides in the read's options: a file relation compares by
+  // its root paths and options, not by its files, so without it a frame
+  // cached over the old files would stand in for a read of the new ones.
   private def resolved(spark: SparkSession, path: String, root: Path, stamp: Long): DataFrame =
-    GraftCache.sessionRelation(spark, root.toString, stamp)(spark.read.parquet(path))
+    GraftCache.sessionRelation(spark, root.toString, stamp)(
+      spark.read.option("graft.stamp", java.lang.Long.toHexString(stamp)).parquet(path))
 
   /** Per-source scratch location `tmpdir/graft_<kind>_<slug>`, for
     * stores every call rewrites (the metrics round trip). */

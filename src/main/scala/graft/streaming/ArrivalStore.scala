@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tiers
 import graft.sources.Stores
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -127,13 +128,13 @@ private[graft] object ArrivalStore {
     * job and an anti join, which only pays once the base dir
     * dominates the log (the compacted-store regime it exists for) —
     * on a young log of uniform batch dirs the single window is
-    * cheaper, so below a 4× base-vs-deltas byte ratio the reference
-    * window form runs unchanged (measured at sf0.1: the unconditional
-    * tier cost +0.4 s/batch on a 10-tiny-dir log).
+    * cheaper, so below a 4× base-vs-deltas byte ratio
+    * ([[Tiers.LatestWindow]]) the reference window form runs unchanged
+    * (measured at sf0.1: the unconditional tier cost +0.4 s/batch on a
+    * 10-tiny-dir log).
     */
   def latestBatchRows(spark: SparkSession, root: String, dirs: Seq[String],
-                      keyCols: Seq[String], keyGate: Int = 1 << 17,
-                      tierRatio: Long = 4L): DataFrame = {
+                      keyCols: Seq[String]): DataFrame = {
     if (dirs.length <= 1)
       return spark.read.parquet(dirs: _*)
     val minId = dirs.map(batchIdOf).min
@@ -142,19 +143,19 @@ private[graft] object ArrivalStore {
       val (fs, p) = Stores.fsFor(d)
       fs.getContentSummary(p).getLength
     }.sum
-    if (bytesOf(baseDirs) < tierRatio * math.max(1L, bytesOf(deltaDirs)))
+    if (Tiers.small(Tiers.LatestWindow)(
+        bytesOf(baseDirs) < Tiers.LatestTierRatio * math.max(1L, bytesOf(deltaDirs))))
       return latestBatchRowsWindow(spark, root, dirs, keyCols)
     val deltas = latestBatchRowsWindow(spark, root, deltaDirs, keyCols)
       .transform(graft.Caches.scoped(_)) // override keys + output union
     val base = spark.read.parquet(baseDirs: _*) // no batch col: data only
     val keys = deltas.select(keyCols.map(k => col(k).as(s"__k_$k")): _*).distinct()
-    val probe = keys.limit(keyGate + 1).collect()
-    val overridden =
-      if (probe.length <= keyGate)
+    val overridden = Tiers.collectUpTo(Tiers.LatestKeys, keys, Tiers.LatestMaxKeys) match {
+      case Some(probe) =>
         broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(probe.toIndexedSeq, 1),
-          keys.schema))
-      else keys.hint("shuffle_hash")
+          spark.sparkContext.parallelize(probe.toIndexedSeq, 1), keys.schema))
+      case None => keys.hint("shuffle_hash")
+    }
     base.join(overridden,
         keyCols.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _), "left_anti")
       .select(deltas.columns.map(col): _*)
@@ -202,11 +203,17 @@ private[graft] object ArrivalStore {
     * ratio is ~10^6, and a micro-batch is rate-limited far below
     * corpus scale by construction; the measured third ArrivalBench
     * decade (5M docs at 500k docs ≈ 142 MB text per batch) sits
-    * inside this ceiling by design. Deployments with tighter executor
-    * memory size `maxTextBytes` down; above the gate the shuffle tier
-    * is always correct.
+    * inside this ceiling by design, and a driver with less heap gets
+    * a proportionally lower one. Above the gate
+    * ([[Tiers.ArrivalBatch]]) the shuffle tier is always correct.
     */
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  def smallBatch(batch: DataFrame): Boolean = Tiers.small(Tiers.ArrivalBatch) {
+    val r = batch
+      .agg(count(lit(1)).as("n"), sum(octet_length(col("text"))).as("b"))
+      .head()
+    r.getLong(0) <= Tiers.ArrivalBatchMaxRows &&
+      (r.isNullAt(1) || r.getLong(1) <= defaultMaxTextBytes(batch.sparkSession))
+  }
 
   /** Text-byte ceiling derived from the HEAP the broadcast build
     * actually lands on (r17 advice: the old fixed 256 MB encoded this
@@ -220,8 +227,7 @@ private[graft] object ArrivalStore {
     * (below the floor the shuffle tier's constants are negligible
     * anyway; above the cap torrent re-broadcast latency dominates any
     * exchange saving). The driver heap is `spark.driver.memory` when
-    * set, else this JVM's -Xmx (local mode: same JVM). The explicit
-    * `maxTextBytes` knob still overrides everything.
+    * set, else this JVM's -Xmx (local mode: same JVM).
     */
   val BroadcastExpansion = 5L
 
@@ -233,23 +239,6 @@ private[graft] object ArrivalStore {
       .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
       .getOrElse(Runtime.getRuntime.maxMemory())
     deriveMaxTextBytes(heap)
-  }
-
-  def smallBatch(batch: DataFrame, maxRows: Long = 1L << 20,
-                 maxTextBytes: Long = -1L): Boolean = {
-    val maxText =
-      if (maxTextBytes >= 0) maxTextBytes
-      else defaultMaxTextBytes(batch.sparkSession)
-    val r = batch
-      .agg(count(lit(1)).as("n"), sum(octet_length(col("text"))).as("b"))
-      .head()
-    val small =
-      r.getLong(0) <= maxRows && (r.isNullAt(1) || r.getLong(1) <= maxText)
-    // one line per batch so operators can SEE gate flips in the logs
-    log.info(s"arrival batch gate: rows=${r.getLong(0)}/" +
-      s"$maxRows textBytes=${if (r.isNullAt(1)) 0L else r.getLong(1)}/" +
-      s"$maxText -> ${if (small) "broadcast" else "shuffle"} tier")
-    small
   }
 
   /** The tier's join-side pin: broadcast below the gate, the
@@ -277,8 +266,9 @@ private[graft] object ArrivalStore {
     * colliding candidates), and a semi join — even the broadcast tier
     * — still SCANS the whole standing log to probe it. Tiered:
     *
-    *   1. LITERAL IN — below `idGate` the id set is collected (one
-    *      bounded job over the — typically cached — id frame) and
+    *   1. LITERAL IN — below [[Tiers.LiteralInMaxIds]] ids the set is
+    *      collected (one bounded job over the — typically cached — id
+    *      frame) and
     *      pushed as a parquet IN filter, so a key-clustered compacted
     *      log row-group-prunes to the touched rows instead of scanning
     *      (Sessions raise the parquet IN-pushdown threshold to match).
@@ -293,14 +283,11 @@ private[graft] object ArrivalStore {
     * Returns a REUSABLE fetch function — the id set is collected once
     * per batch even when two store subtrees fetch by the same ids.
     */
-  def fetcher(ids: DataFrame, key: String, small: Boolean,
-              idGate: Int = 256): DataFrame => DataFrame = {
+  def fetcher(ids: DataFrame, key: String, small: Boolean): DataFrame => DataFrame = {
     lazy val literal: Option[Seq[Any]] =
       if (!small) None
-      else {
-        val rows = ids.select(col(key)).distinct().limit(idGate + 1).collect()
-        if (rows.length <= idGate) Some(rows.toSeq.map(_.get(0))) else None
-      }
+      else Tiers.collectUpTo(Tiers.LiteralIn, ids.select(col(key)).distinct(),
+        Tiers.LiteralInMaxIds).map(_.toSeq.map(_.get(0)))
     store => literal match {
       case Some(vals) =>
         if (vals.isEmpty) store.filter(lit(false))

@@ -39,16 +39,17 @@ class ClustersSpec extends AnyFunSuite {
     }.toMap
   }
 
-  /** gate = 0 forces the star loop (the scale path) — the structural
-    * tests must keep exercising it now that the default gate routes
-    * every test-sized graph to the driver union-find tier.
+  /** Large forces the star loop (the scale path) — the structural
+    * tests must keep exercising it now that the gate routes every
+    * test-sized graph to the driver union-find tier.
     */
-  private def ccLabels(edges: Seq[(Long, Long)], gate: Long = 0L,
+  private def ccLabels(edges: Seq[(Long, Long)], side: Tiers.Side = Tiers.Large,
                        release: Boolean = true): Map[Long, Long] = {
     import spark.implicits._
-    val labels = Clusters
-      .connectedComponents(spark, edges.toDF("u", "v"), smallGraphMaxEdges = gate)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (labels, _) = Tiers.forcing(Tiers.CcUnionFind -> side) {
+      Clusters.connectedComponents(spark, edges.toDF("u", "v"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     if (release) graft.Caches.release()
     labels
   }
@@ -85,7 +86,7 @@ class ClustersSpec extends AnyFunSuite {
 
   test("small-graph tier equals the star loop on both crafted and random graphs") {
     // The r13 size gate must be a cost change only: below the gate the
-    // driver union-find tier, above it (forced via gate=0) the star
+    // driver union-find tier, above it (forced Large) the star
     // loop — identical labels on every shape either path sees.
     val rnd = new scala.util.Random(31)
     val cases: Seq[Seq[(Long, Long)]] =
@@ -95,7 +96,7 @@ class ClustersSpec extends AnyFunSuite {
         (0 until 3).map(_ => Seq.fill(80)(
           (rnd.nextInt(70).toLong, rnd.nextInt(70).toLong)).filter(e => e._1 != e._2))
     cases.zipWithIndex.foreach { case (edges, i) =>
-      assert(ccLabels(edges, gate = 1L << 20) == ccLabels(edges, gate = 0L),
+      assert(ccLabels(edges, Tiers.Small) == ccLabels(edges, Tiers.Large),
         s"case $i: tiers disagree")
     }
   }
@@ -118,11 +119,12 @@ class ClustersSpec extends AnyFunSuite {
       !small.exists(_.isInstanceOf[UnionExec]),
       "below the gate the labels must come from the driver union-find " +
         "(parallelized RDD leaf), not the star loop or a LocalRelation")
-    // gate=0 forces the distributed star loop: the member∪center union
-    // over the last round's checkpointed leaf
-    val star = ran(Clusters.connectedComponents(spark, edges, smallGraphMaxEdges = 0L))
+    // forced Large runs the distributed star loop: the member∪center
+    // union over the last round's checkpointed leaf
+    val (star, _) = Tiers.forcing(Tiers.CcUnionFind -> Tiers.Large)(
+      ran(Clusters.connectedComponents(spark, edges)))
     assert(star.exists(_.isInstanceOf[UnionExec]) && star.exists(_.isInstanceOf[RDDScanExec]),
-      "gate=0 must force the distributed star loop (member∪center union plan)")
+      "forced Large must run the distributed star loop (member∪center union plan)")
     graft.Caches.release()
   }
 
@@ -273,16 +275,27 @@ class ClustersSpec extends AnyFunSuite {
     * batch is absorbed through the merge; returns the final label map.
     */
   private def mergeSequence(batches: Seq[Seq[(Long, Long)]],
-                            gate: Long = 1L << 17): Map[Long, Long] = {
+                            tier: Seq[(String, Tiers.Side)]): Map[Long, Long] = {
     import spark.implicits._
-    var labels = Clusters.connectedComponents(spark, batches.head.toDF("u", "v"))
-    for (b <- batches.tail)
-      labels = Clusters.mergeIncrementalLabels(spark, labels, b.toDF("u", "v"),
-        smallMergeMaxEdges = gate)
-    val out = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (out, consulted) = Tiers.forcing(tier: _*) {
+      var labels = Clusters.connectedComponents(spark, batches.head.toDF("u", "v"))
+      for (b <- batches.tail)
+        labels = Clusters.mergeIncrementalLabels(spark, labels, b.toDF("u", "v"))
+      labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(batches.size < 2 || tier.forall(g => consulted(g._1)), s"$tier consulted only $consulted")
     graft.Caches.release()
     out
   }
+
+  /** The merge's three paths, which must produce identical labels: the
+    * driver tier, the distributed path, and the driver pair probe
+    * FALLING BACK to the distributed path once a component's star
+    * outgrows the gate. */
+  private val mergeTiers = Seq(
+    Seq(Tiers.MergeDriver -> Tiers.Small, Tiers.MergeStar -> Tiers.Small),
+    Seq(Tiers.MergeDriver -> Tiers.Large),
+    Seq(Tiers.MergeDriver -> Tiers.Small, Tiers.MergeStar -> Tiers.Large))
 
   test("incremental merge equals full recompute on crafted arrival shapes") {
     val shapes = Seq(
@@ -298,27 +311,23 @@ class ClustersSpec extends AnyFunSuite {
       // chain built one edge per arrival — min must propagate across
       // every merge round
       "chain arrivals" -> (1L to 6L).sliding(2).map(s => Seq((s(1), s(0)))).toSeq)
-    for ((name, batches) <- shapes;
-         // gate default = driver merge tier, gate 0 = distributed path,
-         // gate 4 = driver probe FALLING BACK once a component's star
-         // outgrows the gate — all three must produce identical labels
-         gate <- Seq(1L << 17, 0L, 4L)) {
-      val got = mergeSequence(batches, gate)
+    for ((name, batches) <- shapes; tier <- mergeTiers) {
+      val got = mergeSequence(batches, tier)
       val want = unionFindLabels(batches.flatten)
-      assert(got == want, s"$name (gate=$gate): got $got want $want")
+      assert(got == want, s"$name ($tier): got $got want $want")
     }
   }
 
   test("incremental merge equals full recompute on seeded random arrival sequences") {
     val rnd = new scala.util.Random(14)
-    for (trial <- 1 to 3; gate <- Seq(1L << 17, 0L, 4L)) {
+    for (trial <- 1 to 3; tier <- mergeTiers) {
       val n = 60
       val edges = Seq.fill(80)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
       val batches = edges.grouped(edges.size / 3 + 1).toSeq
-      val got = mergeSequence(batches, gate)
+      val got = mergeSequence(batches, tier)
       val want = unionFindLabels(edges)
-      assert(got == want, s"trial $trial (gate=$gate) diverged")
+      assert(got == want, s"trial $trial ($tier) diverged")
     }
   }
 

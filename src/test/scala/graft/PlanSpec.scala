@@ -86,7 +86,7 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
   test("q3 broadcast tier never exchanges the lineitem stream") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val df = Relational.q3BroadcastReduced(spark, dir)
+    val (df, _) = Tiers.forcing(Tiers.Q3Broadcast -> Tiers.Small)(Relational.q3JoinAgg(spark, dir))
     df.collect()
     val all = deepNodes(df.queryExecution.executedPlan)
     assert(all.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 2,
@@ -102,7 +102,7 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
   test("q3 cluster tier pre-aggregates lineitem below the shuffle-hash join") {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    val df = Relational.q3AggBelowJoin(spark, dir)
+    val (df, _) = Tiers.forcing(Tiers.Q3Broadcast -> Tiers.Large)(Relational.q3JoinAgg(spark, dir))
     df.collect()
     val all = deepNodes(df.queryExecution.executedPlan)
     graft.Caches.release() // scoped qual cache — see RelationalSpec's q3 note
@@ -374,12 +374,13 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
   }
 
   test("text_keywords salted branch: no broadcast, shuffle-hash posting join, Partial WindowGroupLimit") {
-    // vocabMax = 0 forces the web-scale branch: the dictionary is by
+    // forced Large takes the web-scale branch: the dictionary is by
     // assumption unbroadcastable, so a BroadcastExchange anywhere in
     // the join path means the gate leaked; the posting join must be
     // the hint-pinned ShuffledHashJoin (sort-merge would sort the
     // corpus-scale posting stream), and the same group-limit pin holds.
-    val df = graft.operators.TextAnalysis.keywords(spark, dir, vocabMax = 0L)
+    val (df, _) = Tiers.forcing(Tiers.KeywordsVocab -> Tiers.Large)(
+      graft.operators.TextAnalysis.keywords(spark, dir))
     df.collect()
     val s = df.queryExecution.executedPlan.toString
     assert(s.contains("ShuffledHashJoin"), s"salted posting join must shuffle-hash:\n$s")
@@ -677,17 +678,17 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     // The batch-pair stage (lazy — auditable): candidates come from the
     // store's POSTING index, verification shingles from the store's
     // shingle table. r16 added the footer-gated SMALL-BATCH broadcast
-    // tier, so BOTH tiers are pinned: above the gate (forced with
-    // gate=0) every join stays hint-pinned hashed with no broadcast at
-    // all; below it (the default at testdata scale) only batch- or
+    // tier, so BOTH tiers are pinned: above the gate (forced Large)
+    // every join stays hint-pinned hashed with no broadcast at
+    // all; below it (the auto side at testdata scale) only batch- or
     // collision-bounded sides broadcast — the store POSTING scan must
     // never sit under a BroadcastExchange in either tier.
     def storeScanLocs(df: org.apache.spark.sql.DataFrame) =
       deepNodes(df.queryExecution.executedPlan)
         .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.metadata.getOrElse("Location", "") }.distinct
-    val pairsBig = graft.operators.Clusters
-      .serveBatchPairs(spark, dir, 0.8, 80, path, smallBatchGate = 0L)
+    val (pairsBig, _) = Tiers.forcing(Tiers.ServeBatch -> Tiers.Large)(
+      graft.operators.Clusters.serveBatchPairs(spark, dir, 0.8, 80, path))
     val scansBig = storeScanLocs(pairsBig)
     assert(scansBig.exists(l => l.contains("graft_clstore") && l.contains("postings")),
       s"candidates must come from the store's posting index: $scansBig")
@@ -917,8 +918,8 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
       "operators/Curation.scala" -> 1,   // corpus_stats (<=5 languages)
       // dedup incremental pair (r18): NOT domain-bounded — batch-volume
       // bounded, so the site is GATED on the footer-estimated batch row
-      // count (presentationGate: <= 2^22 rows through one task, else the
-      // parallel range sort returns). Gate boundary pinned below.
+      // count (Tiers.PresentationSort: <= 2^22 rows through one task,
+      // else the parallel range sort returns). Both sides pinned below.
       "operators/Dedup.scala" -> 1,
       "etl/EtlQueries.scala" -> 2,       // exportDaily, hmacExport (one date x campaign domain)
       "etl/MetricsQueries.scala" -> 2)   // funnelQuery (date range x UTM domain), matches (2 sides)
@@ -955,11 +956,17 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
       assert(n <= cap, s"$name returned $n rows, above its domain ceiling $cap — " +
         "presentSorted would funnel an unbounded result through one task")
     }
-    // The Dedup site's bound is the GATE, not a domain: at or below
-    // 2^22 estimated batch rows the presentation sort runs; above it
-    // the parallel range sort must return. Pin the boundary exactly.
-    assert(graft.operators.Dedup.presentationGate(1L << 22))
-    assert(!graft.operators.Dedup.presentationGate((1L << 22) + 1))
+    // The Dedup site's bound is the GATE, not a domain: on its small
+    // side the presentation sort runs, on its large side the parallel
+    // range sort must return.
+    def incremental(side: Tiers.Side) = finalPlanOnly(planString(
+      Tiers.forcing(Tiers.PresentationSort -> side)(
+        SparkEntry.queries("dedup_incremental_serve")(spark, dir))._1)).toLowerCase
+    assert(!incremental(Tiers.Small).contains("rangepartitioning"),
+      "the presentation gate's small side still range-sorts")
+    assert(incremental(Tiers.Large).contains("rangepartitioning"),
+      "the presentation gate's large side lost the parallel range sort")
+    graft.Caches.release()
   }
 
   test("arrival loops: standing-store scans never shuffle-exchange below the gate") {
@@ -1074,7 +1081,7 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
     // below the single-partition exchange must still be a real
     // (parallel) aggregate.
     // dedup_incremental_serve joins the list in r18: at the spec's test
-    // scale the footer-estimated batch sits far below presentationGate,
+    // scale the footer-estimated batch sits far below the presentation gate,
     // so the registered plan must take the single-partition form.
     for (name <- Seq("q1_agg", "q9_distinct", "q12_case_expr",
         "sketch_distinct", "corpus_stats", "dedup_incremental_serve")) {
@@ -1114,6 +1121,28 @@ class PlanSpec extends AnyFunSuite with TmpDirs {
       assert(sites.forall(_ == "src/main/scala/graft/Caches.scala"),
         s"$needle outside Caches in: ${sites.mkString(", ")}")
     }
+  }
+
+  test("every size probe goes through Tiers") {
+    // One probe form: a gate that collects a bounded frame runs
+    // Tiers.collectUpTo, so a test can force either side of it.
+    val probe = "\\.limit\\([^()]*\\+\\s*1\\)\\s*\\.collect\\(\\)".r
+    val sites = scalaFiles(new java.io.File("src/main")).map(_.getPath).filter(p =>
+      p != "src/main/scala/graft/Tiers.scala" &&
+        probe.findFirstIn(text(new java.io.File(p))).isDefined)
+    assert(sites.isEmpty, s"a limit(n + 1).collect() probe outside Tiers: ${sites.mkString(", ")}")
+  }
+
+  test("no operator signature carries a gate parameter") {
+    // A cost gate's bound is a constant in Tiers' table; tests force a
+    // side with Tiers.forcing, not through an argument.
+    val names = Seq("smallGraphMaxEdges", "smallMergeMaxEdges", "smallBatchGate", "keyGate",
+      "tierRatio", "maxRows", "maxTextBytes", "idGate", "vocabMax", "denseFallback", "cacheTf")
+    val param = names.mkString("\\b(", "|", ")\\s*:").r
+    val sites = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      param.findAllMatchIn(text(f)).map(m => s"${f.getPath}: ${m.group(1)}")
+    }
+    assert(sites.isEmpty, s"gate parameters in signatures: ${sites.mkString(", ")}")
   }
 
   test("the arrival-store layout and stream shell are written only in ArrivalStore") {

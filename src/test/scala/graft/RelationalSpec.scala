@@ -23,8 +23,10 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q3's two cost-gated plans produce identical rows") {
-    val bcast = Relational.q3BroadcastReduced(spark, dir).collect()
-    val shuffle = Relational.q3AggBelowJoin(spark, dir).collect()
+    def q3(side: Tiers.Side) =
+      Tiers.forcing(Tiers.Q3Broadcast -> side)(Relational.q3JoinAgg(spark, dir).collect())._1
+    val bcast = q3(Tiers.Small)
+    val shuffle = q3(Tiers.Large)
     // release the cluster tier's scoped qual cache (the harness calls
     // release() per query; a leaked cache substitutes into the broadcast
     // tier's identical ord⋈cust subtree in later tests)

@@ -80,8 +80,8 @@ class ScaleSpec extends AnyFunSuite {
         .map(v => (v, cos(emb(q), emb(v))))
         .toSeq.sortBy { case (v, c) => (-c, v) }.take(10).map(_._1).toSet
     }.toMap
-    def recallOf(denseFallback: Boolean): Double = {
-      val ann = Similarity.annLsh(spark, dir, denseFallback = denseFallback).collect()
+    def recallOf(forced: (String, Tiers.Side)*): Double = {
+      val ann = Tiers.forcing(forced: _*)(Similarity.annLsh(spark, dir).collect())._1
         .filter(!_.isNullAt(2))
         .groupBy(_.getLong(0))
         .map { case (q, rows) => q -> rows.map(_.getLong(2)).toSet }
@@ -92,7 +92,7 @@ class ScaleSpec extends AnyFunSuite {
     }
     // Default hybrid: at n=50k the probe budget × occupancy reaches the
     // corpus, so annLsh's planner takes the dense-scan path — exact.
-    val hybrid = recallOf(denseFallback = true)
+    val hybrid = recallOf()
     info(s"hybrid (dense path at this n) recall@10 = $hybrid")
     assert(hybrid >= 0.9, s"ANN recall at 50k below bar: $hybrid")
     // Forced bucket path: pins the LSH machinery itself at the 10-bit
@@ -105,7 +105,7 @@ class ScaleSpec extends AnyFunSuite {
     // 10 hash bits, so bounded probing plateaus here — which is the
     // measured case FOR the dense fallback, not a regression. 0.85
     // floor leaves one neighbor of slack.
-    val bucket = recallOf(denseFallback = false)
+    val bucket = recallOf(Tiers.LshDense -> Tiers.Large)
     info(s"forced bucket path recall@10 = $bucket")
     assert(bucket >= 0.85, s"bucket-path LSH recall at 50k collapsed: $bucket")
   }

@@ -71,11 +71,10 @@ class SkewSpec extends AnyFunSuite with TmpDirs {
   test("text_keywords: salted path and broadcast path produce identical rows") {
     import graft.operators.TextAnalysis
     val d01 = "/root/testdata/sf0.01"
-    // vocabMax=0 forces the salted branch; default takes broadcast.
-    val viaBroadcast = TextAnalysis.keywords(spark, d01).collect()
-    Caches.release()
-    val viaSalt = TextAnalysis.keywords(spark, d01, vocabMax = 0L).collect()
-    Caches.release()
+    def keywords(side: Tiers.Side) = try Tiers.forcing(Tiers.KeywordsVocab -> side)(
+      TextAnalysis.keywords(spark, d01).collect())._1 finally Caches.release()
+    val viaBroadcast = keywords(Tiers.Small)
+    val viaSalt = keywords(Tiers.Large)
     assert(viaSalt.length == viaBroadcast.length && viaSalt.length > 0)
     assert(viaSalt.map(_.toString).sorted.sameElements(
       viaBroadcast.map(_.toString).sorted))
@@ -98,17 +97,18 @@ class SkewSpec extends AnyFunSuite with TmpDirs {
     val docs = ((0 until n).map(i => (i.toLong, text(i))) ++
       (0 until n).map(i => ((i + n).toLong, text(i)))).toDF("doc_id", "text")
 
-    // Default gates: vocab ≈ 15k shingles → broadcast branch.
+    // The gates' own rule: vocab ≈ 15k shingles → broadcast branch.
     val viaBroadcast = Curation.contaminationFrom(docs, 2L * n, minContain = 0.3)
     val b = viaBroadcast.collect()
     val bPlan = viaBroadcast.queryExecution.executedPlan.toString
     Caches.release()
-    // vocabMax = 0 forces the web-scale branch: the df attach must be
+    // Forced Large takes the web-scale branch: the df attach must be
     // the salted replicate join (salt visible in the join keys), never
     // a broadcast of the dictionary. (Other broadcasts — the test-
     // vocabulary pushdown, the test-array fetch — are legitimately
     // small-side and stay.)
-    val viaSalt = Curation.contaminationFrom(docs, 2L * n, minContain = 0.3, vocabMax = 0L)
+    val (viaSalt, _) = Tiers.forcing(Tiers.ContaminationDf -> Tiers.Large)(
+      Curation.contaminationFrom(docs, 2L * n, minContain = 0.3))
     val s = viaSalt.collect()
     val sPlan = viaSalt.queryExecution.executedPlan.toString
     Caches.release()

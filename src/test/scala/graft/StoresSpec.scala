@@ -89,6 +89,20 @@ class StoresSpec extends AnyFunSuite with TmpDirs {
     }
   }
 
+  test("a same-session rewrite of documents is read by corpusFull with its caches still held") {
+    // No release between the runs: the first run's cached frames were
+    // built over the old source and must not match the second run's.
+    withSourceCopy("sf0.01") { dir =>
+      try {
+        val before = rows(Pipeline.corpusFull(spark, dir))
+        dropThird(dir, "documents", "doc_id")
+        val after = rows(Pipeline.corpusFull(spark, dir))
+        assert(after != before, "corpusFull served cached rows of the old documents")
+        assert(after == rows(Pipeline.corpusFull(spark.newSession(), dir)))
+      } finally Caches.release()
+    }
+  }
+
   test("a same-session rewrite of events is read by the next feed query") {
     withSourceCopy("sf0.01") { dir =>
       val ads = SparkEntry.queries("etl_ads_extract")

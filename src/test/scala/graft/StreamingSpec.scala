@@ -342,6 +342,25 @@ class StreamingSpec extends AnyFunSuite with TmpDirs {
   }
 
   test("arrival clusters: delta-log labels equal a full batch recompute") {
+    arrivalClustersEqualRecompute()
+  }
+
+  test("arrival clusters: every arrival gate forced large equals the same recompute") {
+    // The arrival gates take no registered query, so the forced-tier
+    // sweep (TiersSpec) leaves them to this case. The literal-IN fetch
+    // is reached only on the batch gate's small side: a second run
+    // forces it large there.
+    val arrival = Seq(Tiers.ArrivalBatch, Tiers.LatestWindow, Tiers.LatestKeys, Tiers.LiteralIn)
+    val (_, large) = Tiers.forcing(arrival.map(_ -> Tiers.Large): _*)(
+      arrivalClustersEqualRecompute())
+    assert(Set(Tiers.ArrivalBatch, Tiers.LatestWindow, Tiers.LatestKeys).subsetOf(large),
+      s"the all-large run consulted only $large")
+    val (_, literal) = Tiers.forcing(Tiers.LiteralIn -> Tiers.Large)(
+      arrivalClustersEqualRecompute())
+    assert(literal.contains(Tiers.LiteralIn), s"the literal-IN run consulted only $literal")
+  }
+
+  private def arrivalClustersEqualRecompute(): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -401,14 +420,15 @@ class StreamingSpec extends AnyFunSuite with TmpDirs {
     val ref = graft.streaming.ArrivalStore
       .latestBatchRowsWindow(spark, s"$store/labels", labelDirs, Seq("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    for (gate <- Seq(1 << 17, 0)) {
-      val tiered = graft.streaming.ArrivalStore
-        .latestBatchRows(spark, s"$store/labels", labelDirs, Seq("doc_id"),
-          keyGate = gate, tierRatio = 0L) // force the tier: the fixture's
-        // uniform tiny dirs sit below the cost gate by design
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // The tier is forced: the fixture's uniform tiny dirs sit below
+    // the cost gate by design.
+    for (keys <- Seq(Tiers.Small, Tiers.Large)) {
+      val (tiered, _) = Tiers.forcing(Tiers.LatestWindow -> Tiers.Large, Tiers.LatestKeys -> keys)(
+        graft.streaming.ArrivalStore
+          .latestBatchRows(spark, s"$store/labels", labelDirs, Seq("doc_id"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
       assert(tiered == ref,
-        s"tiered latest-wins (gate=$gate) diverged from the window reference")
+        s"tiered latest-wins (keys $keys) diverged from the window reference")
     }
   }
 
@@ -1186,12 +1206,15 @@ class StreamingSpec extends AnyFunSuite with TmpDirs {
     // in local mode) and sits inside the clamps
     val d = ArrivalStore.defaultMaxTextBytes(spark)
     assert(d >= (16L << 20) && d <= (4L << 30))
-    // the explicit knob still overrides: a 1-row batch passes any
-    // positive ceiling and fails a zero one
+    // a 1-row batch passes the derived ceiling; forced large, the gate
+    // runs no aggregate over it
     import spark.implicits._
     val one = Seq((1L, "hello")).toDF("doc_id", "text")
     assert(ArrivalStore.smallBatch(one))
-    assert(!ArrivalStore.smallBatch(one, maxTextBytes = 0L))
+    val (forced, jobs) = org.apache.spark.ListenerDrain.jobStarts(spark.sparkContext)(
+      Tiers.forcing(Tiers.ArrivalBatch -> Tiers.Large)(ArrivalStore.smallBatch(one)))
+    assert(forced == (false, Set(Tiers.ArrivalBatch)))
+    assert(jobs.isEmpty, s"a forced gate ran ${jobs.size} job(s)")
   }
 
   // ---- one commit path: markers, committed readers, crash at every commit ----
@@ -1334,10 +1357,10 @@ class StreamingSpec extends AnyFunSuite with TmpDirs {
     val keys = Seq("date", "utm_campaign")
     val want = rowsOf(ArrivalStore.latestBatchRowsWindow(spark, root, dirs, keys))
     assert(want.size == 4, s"window reference: $want")
-    for (gate <- Seq(1 << 17, 0))
-      assert(rowsOf(ArrivalStore.latestBatchRows(spark, root, dirs, keys,
-          keyGate = gate, tierRatio = 0L)) == want,
-        s"tiered latest-wins (gate=$gate) kept a re-stated null-key row")
+    for (side <- Seq(Tiers.Small, Tiers.Large))
+      assert(Tiers.forcing(Tiers.LatestWindow -> Tiers.Large, Tiers.LatestKeys -> side)(
+          rowsOf(ArrivalStore.latestBatchRows(spark, root, dirs, keys)))._1 == want,
+        s"tiered latest-wins (keys $side) kept a re-stated null-key row")
     graft.Caches.release()
   }
 
